@@ -114,6 +114,44 @@ object Bench {
     "q380_data_map",         // perceptron trajectory
     "q298_ops_scorecard")    // ops scorecard sheet
 
+  /** One timed run of `fn`: the elapsed seconds, or None when the query
+    * threw — a failed run has no timing, and its name and message go to
+    * `failed` instead. Caches are cleared inside the timed region; the
+    * stage boundaries are released after it. */
+  private[graft] def timeOnce(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+      failed: scala.collection.mutable.Map[String, String]): Option[Double] = {
+    val t0 = System.nanoTime()
+    val ok =
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed(name) = String.valueOf(e.getMessage)
+        false
+      }
+    // queries that persist multi-consumer intermediates (dedup family)
+    // must not leave them pinned — for memory, for self-contained
+    // timings regardless of run order, and so run 2 re-does the I/O
+    spark.catalog.clearCache()
+    val dt = (System.nanoTime() - t0) / 1e9
+    // stage-boundary localCheckpoint blocks are NOT freed by
+    // clearCache (only by ContextCleaner GC, which lags a 396-query
+    // sweep — ADVICE r10); release them OUTSIDE the timed region so
+    // the timing methodology stays byte-identical to rev 9/10
+    graft.ops.releaseStageBoundaries()
+    if (ok) Some(dt) else None
+  }
+
+  /** The failure fields of the artifact: the full line lists every
+    * failed query, the compact line at most `cap` of them. */
+  private[graft] def failedJson(failed: Iterable[String], cap: Option[Int]): String = {
+    val names = cap.fold(failed)(failed.take(_)).map("\"" + _ + "\"").mkString("[", ",", "]")
+    cap match {
+      case None => s""""failed":$names,"n_failed":${failed.size}"""
+      case Some(_) => s""""n_failed":${failed.size},"failed_sample":$names"""
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val tJvm0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - tJvm0) / 1e9
@@ -198,22 +236,11 @@ object Bench {
       selected.toSeq.sortBy { case (n, _) =>
         (if (prior.contains(n)) 1 else 0, prior.getOrElse(n, 0.0), n)
       }
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-      // queries that persist multi-consumer intermediates (dedup family)
-      // must not leave them pinned — for memory, for self-contained
-      // timings regardless of run order, and so run 2 re-does the I/O
-      spark.catalog.clearCache()
-      val dt = (System.nanoTime() - t0) / 1e9
-      // stage-boundary localCheckpoint blocks are NOT freed by
-      // clearCache (only by ContextCleaner GC, which lags a 396-query
-      // sweep — ADVICE r10); release them OUTSIDE the timed region so
-      // the timing methodology stays byte-identical to rev 9/10
-      graft.ops.releaseStageBoundaries()
-      dt
-    }
+    // a query that throws in ANY run is failed: it is listed here and
+    // contributes no time to any min, total or projection
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] =
+      timeOnce(spark, sfDir, name, fn, failed)
     def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def queriesJson(qs: Iterable[(String, Double)]): String =
       // Locale.ROOT: the default-locale interpolator writes "1,234" under
@@ -277,7 +304,8 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(partial)},""" +
         s""""sf":"$sfDir","bench_rev":10,"runs_per_query":$runs,"truncated":$trunc,""" +
         s""""n_done":${partial.size},"n_selected":${selected.size},"warmed":$warmed,""" +
-        s""""settle_waits":$settleWaits,"probe_sec":${f3(probePre)},"runs":$runsJson$extra}"""
+        s""""settle_waits":$settleWaits,"probe_sec":${f3(probePre)},${failedJson(failed.keys, None)},""" +
+        s""""runs":$runsJson$extra}"""
     }
     // every field bounded: top-10 queries, counts + ≤5-name samples.
     // r9's lesson — the 89-name skipped array in the "compact" line blew
@@ -290,7 +318,7 @@ object Bench {
         s""""sf":"$sfDir","bench_rev":10,"n_queries":${partial.size},"n_selected":${selected.size},""" +
         s""""truncated":${!full},"warmed":$warmed,"settle_waits":$settleWaits,""" +
         s""""n_skipped":${skipped.size},"skipped_sample":${sampleJson(skipped, 5)},""" +
-        s""""probe_sec":${f3(probePre)},"full_out":"$out"}"""
+        s"""${failedJson(failed.keys, Some(5))},"probe_sec":${f3(probePre)},"full_out":"$out"}"""
     }
     // seed the snapshots BEFORE any long-running phase (ADVICE r9): a
     // kill during a minutes-long cold pre-warm previously found
@@ -314,7 +342,7 @@ object Bench {
            elapsedS + sweepReserveEst < budgetS * 0.85 && elapsedS < budgetS * 0.4) {
       val t = once(name, fn)
       warmed += 1
-      System.err.println(s"[bench] warm $name: ${f3(t)}")
+      System.err.println(s"[bench] warm $name: ${t.fold("failed")(f3)}")
     }
     if (warmed == 0 && eligibleBuilders > 0)
       System.err.println(f"[bench] pre-warm skipped: sweep reserve ${sweepReserveEst}%.0f s " +
@@ -351,6 +379,7 @@ object Bench {
     val singleRun = scala.collection.mutable.Set.empty[String]
     val firstPass = ordered.zipWithIndex.flatMap { case ((name, fn), i) =>
       if (elapsedS > hardStopS) { skipped += name; None }
+      else if (failed.contains(name)) None // threw in the untimed pre-warm
       else {
         val reserve = sufPrior(i + 1) * calib + sufUnpriored(i + 1) * avgRun
         val degraded = elapsedS > budgetS ||
@@ -364,32 +393,46 @@ object Bench {
               s"single-run reserve first reached at $i/${ordered.size} — per-query 1-run mode")
           }
         }
-        def timed(): Double = {
-          val t = once(name, fn)
-          runWall += t; runCount += 1
-          t
+        val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+        // false once a run throws: the query stops running and is failed
+        def timed(): Boolean = once(name, fn) match {
+          case Some(t) =>
+            runWall += t; runCount += 1
+            times += t
+            true
+          case None => false
         }
-        val first = timed()
-        if (priorsArr(i) > 0) { priorSumDone += priorsArr(i); priorObsDone += first }
-        val times = scala.collection.mutable.ArrayBuffer(first)
+        var ok = timed()
+        if (ok && priorsArr(i) > 0) { priorSumDone += priorsArr(i); priorObsDone += times.head }
         if (!degraded) {
-          while (times.length < runs) times += timed()
-          while (!corroborated(times.toSeq) && times.length < maxRuns)
-            times += timed()
+          while (ok && times.length < runs) ok = timed()
+          while (ok && !corroborated(times.toSeq) && times.length < maxRuns)
+            ok = timed()
         }
         // per-run breakdown to stderr: shows warm-vs-cold effects (e.g. a
         // first run that builds persisted state) that the min hides
-        System.err.println(s"[bench] $name runs: " + times.map(f3).mkString(", "))
-        partial(name) = times.min
-        allRuns(name) = times.toSeq
+        System.err.println(s"[bench] $name runs: " + times.map(f3).mkString(", ") +
+          (if (ok) "" else " (failed)"))
+        if (ok) {
+          partial(name) = times.min
+          allRuns(name) = times.toSeq
+        }
         snapshotFull = partialJson(trunc = true)
         snapshotCompact = compactOf(full = false)
         writeArtifact(snapshotFull)
         // a SIGKILL leaves no hook — drop a parseable snapshot line in
         // the stdout tail every 50 queries
         if ((i + 1) % 50 == 0) { println(snapshotCompact); System.out.flush() }
-        Some((name, fn, times.toSeq))
+        if (ok) Some((name, fn, times.toSeq)) else None
       }
+    }
+    // drop a query that failed in a later phase from every figure
+    def dropFailed(name: String): Unit = {
+      partial.remove(name)
+      allRuns.remove(name)
+      snapshotFull = partialJson(trunc = true)
+      snapshotCompact = compactOf(full = false)
+      writeArtifact(snapshotFull)
     }
     // RE-QUEUE, don't re-run adjacently: a load burst longer than one
     // query's whole run window owns ALL of its adjacent runs, and no
@@ -398,24 +441,25 @@ object Bench {
     // query that exhausted its budget uncorroborated gets two fresh
     // runs at sweep end — minutes later, when the burst has moved on —
     // and reports the min over all runs. Skipped past the wall budget.
-    val requeued = firstPass.map { case (name, fn, times) =>
-      val all =
-        if (corroborated(times) || times.length < 2 || elapsedS > budgetS) times
+    val requeued = firstPass.flatMap { case (name, fn, times) =>
+      if (corroborated(times) || times.length < 2 || elapsedS > budgetS) Some((name, fn, times.min))
+      else {
+        val retry = Seq.fill(2)(once(name, fn))
+        System.err.println(s"[bench] $name requeued runs: " +
+          retry.map(_.fold("failed")(f3)).mkString(", "))
+        if (retry.exists(_.isEmpty)) { dropFailed(name); None }
         else {
-          val retry = Seq.fill(2)(once(name, fn))
-          System.err.println(s"[bench] $name requeued runs: " + retry.map(f3).mkString(", "))
-          allRuns(name) = allRuns(name) ++ retry
-          times ++ retry
+          val all = times ++ retry.flatten
+          allRuns(name) = allRuns(name) ++ retry.flatten
+          partial(name) = all.min
+          // keep the kill-time snapshot current through this phase too
+          // (ADVICE r9: a SIGTERM during requeue flushed a stale snapshot)
+          snapshotFull = partialJson(trunc = true)
+          snapshotCompact = compactOf(full = false)
+          writeArtifact(snapshotFull)
+          Some((name, fn, all.min))
         }
-      if (all.length > times.length) {
-        partial(name) = all.min
-        // keep the kill-time snapshot current through this phase too
-        // (ADVICE r9: a SIGTERM during requeue flushed a stale snapshot)
-        snapshotFull = partialJson(trunc = true)
-        snapshotCompact = compactOf(full = false)
-        writeArtifact(snapshotFull)
       }
-      (name, fn, all.min)
     }
     // CROSS-ROUND corroboration (bench_rev 8; the r7 verdict's fix for
     // the q207/q234 phantom spikes): within-sweep agreement can't see a
@@ -425,19 +469,25 @@ object Bench {
     // run; whatever still exceeds 2x is listed in "suspect":[...] so a
     // reader chases it with a solo re-measure instead of trusting it.
     // Skipped entirely past the wall budget.
-    val crossChecked = requeued.map { case (name, fn, best) =>
+    val crossChecked = requeued.flatMap { case (name, fn, best) =>
       prior.get(name) match {
         case Some(p) if p > 0 && best > p * 2 && elapsedS < budgetS =>
-          val again = once(name, fn)
-          System.err.println(f"[bench] $name cross-round recheck: $again%.3f " +
-            f"(min was $best%.3f, prior $p%.3f)")
-          allRuns(name) = allRuns(name) :+ again
-          partial(name) = math.min(best, again)
-          snapshotFull = partialJson(trunc = true)
-          snapshotCompact = compactOf(full = false)
-          writeArtifact(snapshotFull)
-          (name, math.min(best, again), p)
-        case _ => (name, best, prior.getOrElse(name, 0.0))
+          once(name, fn) match {
+            case None =>
+              System.err.println(s"[bench] $name cross-round recheck failed")
+              dropFailed(name)
+              None
+            case Some(again) =>
+              System.err.println(f"[bench] $name cross-round recheck: $again%.3f " +
+                f"(min was $best%.3f, prior $p%.3f)")
+              allRuns(name) = allRuns(name) :+ again
+              partial(name) = math.min(best, again)
+              snapshotFull = partialJson(trunc = true)
+              snapshotCompact = compactOf(full = false)
+              writeArtifact(snapshotFull)
+              Some((name, math.min(best, again), p))
+          }
+        case _ => Some((name, best, prior.getOrElse(name, 0.0)))
       }
     }
     // single-run figures are pre-declared lower-confidence (n_single_run
@@ -490,6 +540,7 @@ object Bench {
     val trunc = skipped.nonEmpty
     // full extras (file + full stdout/stderr line): unbounded lists OK
     val extras = s""""eras":$eras,"suspect":$suspectJson,"skipped":$skippedJson,""" +
+      s"""${failedJson(failed.keys, None)},""" +
       s""""truncated":$trunc,"degraded_after":$degradedAfter,"n_single_run":$nSingleRun,""" +
       s""""warmed":$warmed,"wall_sec":${f3(elapsedS)},"runs":$runsJson"""
     // compact extras (the tail-truncation-proof LAST stdout line):
@@ -497,7 +548,8 @@ object Bench {
     // exactly what made BENCH_r09 parse null
     val extrasCompact = s""""eras":$eras,"n_suspect":${suspects.size},""" +
       s""""suspect_sample":${sampleJson(suspects, 5)},"n_skipped":${skipped.size},""" +
-      s""""skipped_sample":${sampleJson(skipped, 5)},"truncated":$trunc,""" +
+      s""""skipped_sample":${sampleJson(skipped, 5)},${failedJson(failed.keys, Some(5))},""" +
+      s""""truncated":$trunc,""" +
       s""""degraded_after":$degradedAfter,"n_single_run":$nSingleRun,""" +
       s""""warmed":$warmed,"wall_sec":${f3(elapsedS)}"""
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(results)},"sf":"$sfDir","bench_rev":10,"runs_per_query":$runs,$probes,$extras}"""

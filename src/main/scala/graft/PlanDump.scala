@@ -30,7 +30,7 @@ object PlanDump {
     def resolve(t: String): String = {
       val keys = SparkEntry.queries.keys.toSeq.sorted
       if (keys.contains(t)) t
-      else keys.filter(k => k.startsWith(t + "_") || k.startsWith(t)) match {
+      else keys.filter(_.startsWith(t)) match {
         case Seq(one) => one
         case Seq() => sys.error(s"[plandump] no such query: $t")
         case many => many.filter(_.startsWith(t + "_")) match {

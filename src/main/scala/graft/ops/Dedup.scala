@@ -1283,7 +1283,7 @@ object Dedup {
       if (!tmp.renameTo(root))
         org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost the race
     }
-    val Seq(sh, bb, cnts, hs) = parts.map(p => s.read.parquet(s"$stateDir/$p"))
+    val Seq(sh, bb, cnts, hs) = parts.map(p => Tables.parquet(s, s"$stateDir/$p"))
     CorpusDedupState(sh, bb, cnts, hs)
   }
 

@@ -383,10 +383,9 @@ object Graph {
       .select(col("w1.a").as("a"), col("w1.b").as("b"),
         (col("w1.w") + col("w2.w")).as("n"))
       .stageBoundary
-    val wi = w.groupBy(col("a").as("src")).agg(sum(col("w")).as("wins"))
-      .stageBoundary
+    val (wi, nSrc) = w.groupBy(col("a").as("src")).agg(sum(col("w")).as("wins"))
+      .stageBoundaryRows
     val gi = n.groupBy(col("a").as("src")).agg(sum(col("n")).as("games"))
-    val nSrc = wi.count() // wi is checkpointed — a cache-read count
     var p = wi.select(col("src"), lit(RankScale).as("p"))
     for (_ <- 1 to rounds) {
       // the strength relation is source-sized — usually dimension-like,
@@ -617,10 +616,9 @@ object Graph {
       .select(col("part_a").as("a"), col("part_b").as("b"))
     val e = pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select(col("a"), col("b"))
-    val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
+    val (deg, nd) = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).cast("long").as("d"))
-      .stageBoundary // core-node-sized; feeds both orient legs + final
-    val nd = deg.count()
+      .stageBoundaryRows // core-node-sized; feeds both orient legs + final
     // degree relation is frequent-core-node-sized but still
     // data-proportional — gate the hint like the walkers above
     val lowFirst = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
@@ -650,7 +648,8 @@ object Graph {
   }
 
   /** Multi-source BFS: exact minimum hop distance from a seed set, bounded
-    * at `maxHops` (the k-hop neighborhood query — crawl-frontier depth,
+    * at `maxHops` — an upper bound on the rounds, since the search stops
+    * early once a round discovers no new node (the k-hop neighborhood query — crawl-frontier depth,
     * "parts within 3 co-purchase hops of this catalog slice", blast-radius
     * analysis on a dependency graph). Unweighted shortest paths need no
     * priority queue: level-synchronous expansion IS Dijkstra here.
@@ -663,8 +662,8 @@ object Graph {
     * accumulated distance relation is node-sized and eagerly
     * localCheckpoint-ed per round so round r's anti-join reads a
     * materialized frame, not an r-deep plan. The frontier join is gated
-    * PER ROUND on the frontier's known size (each round's frontier is
-    * already materialized, so the count is a cache read): a BFS frontier
+    * PER ROUND on the frontier's known size (observed on the frontier's
+    * own boundary, so the count costs no job): a BFS frontier
     * starts seed-sized and can grow to graph-sized in two hops, so a
     * static hint is wrong in both directions — the first over-budget
     * round co-partitions the edges once and later rounds shuffle only
@@ -673,17 +672,17 @@ object Graph {
     val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
     var e = raw
     var parted = false
-    var dist = seeds.distinct()
+    var (dist, frontierRows) = seeds.distinct()
       .select(col("seed").as("node"), lit(0L).as("hops"))
-      .stageBoundary
+      .stageBoundaryRows
     var frontier = dist.select(col("node"))
-    var frontierRows = dist.count()
     // running size of the accumulated relation — every round's frontier
     // count is already measured, so the anti-join side's row count is
     // known without an extra job
     var distRows = frontierRows
     val budget = broadcastNodeBudget(edges.sparkSession)
-    for (h <- 1 to maxHops) {
+    var h = 1
+    while (h <= maxHops && frontierRows > 0) {
       if (!parted && frontierRows > budget) {
         e = copartitionOnce(raw, "src")
         parted = true
@@ -700,23 +699,26 @@ object Graph {
       // back — both orders are exactly equal (the anti predicate is a
       // per-row filter on `node`, so dedup-then-filter ≡ filter-then-
       // dedup).
-      val next = (if (distRows <= budget)
+      val (next, nextRows) = (if (distRows <= budget)
           matched.join(gateBroadcast(dist.select(col("node")), distRows),
             Seq("node"), "left_anti").distinct()
         else
           matched.distinct().join(dist, Seq("node"), "left_anti"))
         .select(col("node"), lit(h.toLong).as("hops"))
-        .stageBoundary
+        .stageBoundaryRows
       frontier = next.select(col("node"))
-      frontierRows = next.count()
+      frontierRows = nextRows
       distRows += frontierRows
       // the accumulated relation re-checkpoints only while another
       // round will anti-join against it; after the LAST hop it has one
       // consumer (the caller's aggregate), and both union legs are
       // already materialized — a final checkpoint was a pure extra
-      // barrier copy (r10)
-      dist = if (h < maxHops) dist.unionAll(next).stageBoundary
-             else dist.unionAll(next)
+      // barrier copy (r10). An empty frontier ends the search: no later
+      // round can discover a node, and the empty hop adds no row.
+      if (frontierRows > 0)
+        dist = if (h < maxHops) dist.unionAll(next).stageBoundary
+               else dist.unionAll(next)
+      h += 1
     }
     dist
   }
@@ -784,9 +786,8 @@ object Graph {
     val e = edges.select(col("a"), col("b")).stageBoundary
     val sym = e.select(col("a").as("u"), col("b").as("v"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v")))
-    val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).cast("long").as("d"))
-      .stageBoundary // node-sized; feeds both endpoint joins
-    val nd = deg.count()
+    val (deg, nd) = sym.groupBy(col("u").as("node")).agg(count(lit(1)).cast("long").as("d"))
+      .stageBoundaryRows // node-sized; feeds both endpoint joins
     // wedge closure keyed on the shared neighbor; the anti join keeps
     // exactly the edges q243's triangle join would drop
     val closed = e
@@ -909,11 +910,10 @@ object Graph {
     val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
     val deg = raw.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = raw.select(col("src").as("part"))
+    val (nodes, nV) = raw.select(col("src").as("part"))
       .unionAll(raw.select(col("dst").as("part")))
       .distinct()
-      .stageBoundary // node-sized; seeds init AND every round's blend
-    val nV = nodes.count()
+      .stageBoundaryRows // node-sized; seeds init AND every round's blend
     val e =
       if (nV <= broadcastNodeBudget(edges.sparkSession)) raw
       else copartitionOnce(raw, "src")
@@ -996,9 +996,8 @@ object Graph {
     val sym = e.select(col("a").as("u"), col("b").as("v"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v")))
       .stageBoundary // core-sized; feeds deg AND the moment join
-    val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).cast("long").as("d"))
-      .stageBoundary // node-sized; feeds both moment-join legs
-    val nd = deg.count()
+    val (deg, nd) = sym.groupBy(col("u").as("node")).agg(count(lit(1)).cast("long").as("d"))
+      .stageBoundaryRows // node-sized; feeds both moment-join legs
     val ed = sym
       .join(gateBroadcast(deg.select(col("node").as("u"), col("d").as("x")), nd), Seq("u"))
       .join(gateBroadcast(deg.select(col("node").as("v"), col("d").as("y")), nd), Seq("v"))
@@ -1040,26 +1039,35 @@ object Graph {
     degreeAssortativity(e)
   }
 
-  /** `rounds` synchronous peel rounds toward the k-core (Seidman Social
-    * Networks 1983; the Batagelj–Zaveršnik peel expressed as whole-
-    * relation rounds): repeatedly delete every node with degree < k and
-    * every edge touching one. Returns the surviving edge relation. The
-    * peel converges in at most diameter-ish rounds on frequent-core
-    * graphs; a fixed round budget keeps the plan static and the result
-    * is IDEMPOTENT at the fixpoint (extra rounds change nothing) —
-    * GraphSpec-style pinning asserts rounds/rounds+1 equality on the
-    * contract graph. Per round: one degree aggregate + two semi-joins,
+  /** At most `rounds` synchronous peel rounds toward the k-core (Seidman
+    * Social Networks 1983; the Batagelj–Zaveršnik peel expressed as
+    * whole-relation rounds): repeatedly delete every node with degree < k
+    * and every edge touching one. Returns the surviving edge relation.
+    * `rounds` is an upper bound, not a fixed count: the loop stops at the
+    * fixpoint, as soon as a round leaves the edge count unchanged or the
+    * edge set is empty. Each round's output is a subset of its input, so
+    * an unchanged count means an unchanged set, and the peel is
+    * IDEMPOTENT there (extra rounds change nothing) — the result equals
+    * the fixed-budget peel's, which RobustStatsSpec pins. The counts come
+    * from the boundaries themselves ([[stageBoundaryRows]]), so the exit
+    * test adds no job. Per round: one degree aggregate + two semi-joins,
     * only the shrinking edge relation moves. */
   def kcoreEdges(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = edges.select(col("a"), col("b")).stageBoundary
-    for (_ <- 1 to rounds) {
+    var (e, n) = edges.select(col("a"), col("b")).stageBoundaryRows
+    var round = 0
+    var changed = true
+    while (round < rounds && changed && n > 0) {
       val keep = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("v"))
-      e = e.join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
+      val (next, nNext) = e.join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-        .stageBoundary
+        .stageBoundaryRows
+      changed = nNext != n
+      e = next
+      n = nNext
+      round += 1
     }
     e
   }
@@ -1246,19 +1254,20 @@ object Graph {
     * so memory is |seeds| × reach — the standard sampled-centrality
     * budget. Same round mechanics: frontier-only expansion, per-round
     * localCheckpoint, gated frontier broadcast with the one-time edge
-    * co-partition fallback above the budget. */
+    * co-partition fallback above the budget, and the empty-frontier
+    * exit before `maxHops`. */
   private[graft] def bfsPerSeed(edges: DataFrame, seeds: DataFrame,
                                 maxHops: Int): DataFrame = {
     val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
     var e = raw
     var parted = false
-    var dist = seeds.distinct()
+    var (dist, frontierRows) = seeds.distinct()
       .select(col("seed"), col("seed").as("node"), lit(0L).as("hops"))
-      .stageBoundary
+      .stageBoundaryRows
     var frontier = dist.select(col("seed"), col("node"))
-    var frontierRows = dist.count()
     val budget = broadcastNodeBudget(edges.sparkSession)
-    for (h <- 1 to maxHops) {
+    var h = 1
+    while (h <= maxHops && frontierRows > 0) {
       if (!parted && frontierRows > budget) {
         e = copartitionOnce(raw, "src")
         parted = true
@@ -1269,20 +1278,22 @@ object Graph {
       // ~|seeds|× larger, so the per-round broadcast build of the
       // growing accumulated relation costs more than the distinct
       // shuffle it saves. Kept in the min-over-set BFS only.
-      val next = e
+      val (next, nextRows) = e
         .join(gateBroadcast(frontier.select(col("seed"), col("node").as("src")),
           frontierRows), Seq("src"))
         .select(col("seed"), col("dst").as("node")).distinct()
         .join(dist, Seq("seed", "node"), "left_anti")
         .select(col("seed"), col("node"), lit(h.toLong).as("hops"))
-        .stageBoundary
+        .stageBoundaryRows
       frontier = next.select(col("seed"), col("node"))
-      frontierRows = next.count()
+      frontierRows = nextRows
 
-      // same last-hop rule as [[bfsDistances]]: no barrier copy after
-      // the final anti-join consumer is gone (r10)
-      dist = if (h < maxHops) dist.unionAll(next).stageBoundary
-             else dist.unionAll(next)
+      // same last-hop and empty-frontier rules as [[bfsDistances]]: no
+      // barrier copy after the final anti-join consumer is gone (r10)
+      if (frontierRows > 0)
+        dist = if (h < maxHops) dist.unionAll(next).stageBoundary
+               else dist.unionAll(next)
+      h += 1
     }
     dist
   }
@@ -1438,11 +1449,11 @@ object Graph {
     val budget = edges.sparkSession.conf
       .getOption("spark.graft.graph.closurePairBudget").map(_.toLong)
       .getOrElse(20000000L)
-    val e0 = edges.select(col("src"), col("dst")).distinct().stageBoundary
-    val e = gateBroadcast(e0.select(col("src").as("m"), col("dst")), e0.count())
+    val (e0, n0) = edges.select(col("src"), col("dst")).distinct().stageBoundaryRows
+    val e = gateBroadcast(e0.select(col("src").as("m"), col("dst")), n0)
     var acc = e0
     var delta = e0
-    var nAcc = e0.count()
+    var nAcc = n0
     var nDelta = nAcc
     var round = 0
     while (round < maxRounds && nDelta > 0) {
@@ -1458,8 +1469,9 @@ object Graph {
       val ext = delta.select(col("src"), col("dst").as("m"))
         .join(e, Seq("m"))
         .select(col("src"), col("dst")).distinct().stageBoundary
-      delta = ext.join(acc, Seq("src", "dst"), "left_anti").stageBoundary
-      nDelta = delta.count()
+      val (d, nd) = ext.join(acc, Seq("src", "dst"), "left_anti").stageBoundaryRows
+      delta = d
+      nDelta = nd
       require(nAcc + nDelta <= budget,
         s"transitive closure would exceed the $budget-pair state budget at round $round " +
           s"($nAcc pairs + $nDelta new) — pair-proportional state does not scale on " +
@@ -1514,7 +1526,7 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val selfLoops = eAll.filter(col("src") === col("dst"))
       .select(col("src").as("node")).distinct().stageBoundary
-    var sub = eAll.filter(col("src") =!= col("dst")).stageBoundary
+    var (sub, nSub) = eAll.filter(col("src") =!= col("dst")).stageBoundaryRows
     val emptyOut = sub.limit(0)
       .select(col("src").as("node"), col("dst").as("scc_id"))
     eAll.unpersist()
@@ -1523,18 +1535,16 @@ object Graph {
     var done = false
     while (!done) {
       // (1) trim to the in-and-out core, to fixpoint
-      var nE = sub.count()
+      var nE = nSub
       var shrunk = true
       while (shrunk && nE > 0) {
         val srcs = sub.select(col("src").as("v")).distinct()
         val dsts = sub.select(col("dst").as("v")).distinct()
-        val core = srcs.join(dsts, Seq("v")).stageBoundary
-        val nCore = core.count()
-        val t = sub
+        val (core, nCore) = srcs.join(dsts, Seq("v")).stageBoundaryRows
+        val (t, n2) = sub
           .join(gateBroadcast(core.select(col("v").as("src")), nCore), Seq("src"), "left_semi")
           .join(gateBroadcast(core.select(col("v").as("dst")), nCore), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")).stageBoundary
-        val n2 = t.count()
+          .select(col("src"), col("dst")).stageBoundaryRows
         shrunk = n2 != nE
         nE = n2
         sub = t
@@ -1544,9 +1554,8 @@ object Graph {
         outer += 1
         require(outer <= maxOuter,
           s"SCC coloring did not converge within $maxOuter outer rounds")
-        val nodes = sub.select(col("src").as("v"))
-          .union(sub.select(col("dst").as("v"))).distinct().stageBoundary
-        val nNodes = nodes.count()
+        val (nodes, nNodes) = sub.select(col("src").as("v"))
+          .union(sub.select(col("dst").as("v"))).distinct().stageBoundaryRows
         val overBudget = nNodes > broadcastNodeBudget(sub.sparkSession)
         val eFwd = if (overBudget) copartitionOnce(sub, "src") else sub
         val eBwd = if (overBudget) copartitionOnce(sub, "dst") else sub
@@ -1563,10 +1572,11 @@ object Graph {
               Seq("src"))
             .groupBy(col("dst")).agg(max(col("cs")).as("cand"))
             .select(col("dst").as("v"), col("cand"))
-          delta = cand.join(colors, Seq("v"))
+          val (d, n) = cand.join(colors, Seq("v"))
             .filter(col("cand") > col("c"))
-            .select(col("v"), col("cand").as("c")).stageBoundary
-          dn = delta.count()
+            .select(col("v"), col("cand").as("c")).stageBoundaryRows
+          delta = d
+          dn = n
           // the recurrence updates colors by ANTI JOIN + UNION, not a
           // left-outer merge: outer/inner joins multiply Catalyst's
           // sizeInBytes estimate, and a recurrence whose stats multiply
@@ -1583,9 +1593,11 @@ object Graph {
               .stageBoundary
         }
         // (3) backward sweep from the roots, restricted to each root's color
-        var reached = colors.filter(col("c") === col("v")).stageBoundary
+        var (reached, bn) = colors.filter(col("c") === col("v")).stageBoundaryRows
         var bd = reached
-        var bn = bd.count()
+        // every delta is disjoint from `reached` (anti join) and holds one
+        // row per node, so the running sum is reached's exact row count
+        var nReached = bn
         inner = 0
         while (bn > 0) {
           inner += 1
@@ -1596,8 +1608,10 @@ object Graph {
             .join(colors.select(col("v"), col("c").as("vc")), Seq("v"))
             .filter(col("c") === col("vc"))
             .select(col("v"), col("c"))
-          bd = preds.join(reached, Seq("v"), "left_anti").stageBoundary
-          bn = bd.count()
+          val (d, n) = preds.join(reached, Seq("v"), "left_anti").stageBoundaryRows
+          bd = d
+          bn = n
+          nReached += bn
           if (bn > 0) reached = reached.unionByName(bd).stageBoundary
         }
         // (4) emit nontrivial classes, peel everything reached
@@ -1606,13 +1620,14 @@ object Graph {
         out += reached
           .join(comps.filter(col("n") > 1).select(col("c"), col("scc_id")), Seq("c"))
           .select(col("v").as("node"), col("scc_id")).stageBoundary
-        val nReached = reached.count()
-        sub = sub
+        val (rest, nRest) = sub
           .join(gateBroadcast(reached.select(col("v").as("src")), nReached),
             Seq("src"), "left_anti")
           .join(gateBroadcast(reached.select(col("v").as("dst")), nReached),
             Seq("dst"), "left_anti")
-          .select(col("src"), col("dst")).stageBoundary
+          .select(col("src"), col("dst")).stageBoundaryRows
+        sub = rest
+        nSub = nRest
         if (overBudget) { eFwd.unpersist(); eBwd.unpersist() }
       }
     }
@@ -1772,9 +1787,8 @@ object Graph {
       .stageBoundary // core-sized; feeds sym, deg, and the anti join
     val sym = e.select(col("a").as("u"), col("b").as("v"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v")))
-    val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
-      .stageBoundary
-    val nd = deg.count()
+    val (deg, nd) = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
+      .stageBoundaryRows
     val wedge = sym.select(col("u").as("x"), col("v").as("a"))
       .join(sym.select(col("u").as("x"), col("v").as("b")), Seq("x"))
       .filter(col("b") > col("a"))
@@ -1861,11 +1875,10 @@ object Graph {
   def hits(edges: DataFrame, rounds: Int): DataFrame = {
     val s = edges.sparkSession
     val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = raw.select(col("src").as("part"))
+    val (nodes, nV) = raw.select(col("src").as("part"))
       .unionAll(raw.select(col("dst").as("part")))
       .distinct()
-      .stageBoundary // node-sized; seeds both score vectors
-    val nV = nodes.count()
+      .stageBoundaryRows // node-sized; seeds both score vectors
     val (eSrc, eDst) =
       if (nV <= broadcastNodeBudget(s)) (raw, raw)
       else {
@@ -1971,10 +1984,9 @@ object Graph {
     adjIdx.count() // materialize once: every step's broadcast build reads it
     val deg = adjDeg.map(_._2).getOrElse(
       e.groupBy(col("src")).agg(count(lit(1)).as("d")))
-    val nSeeds = deg.filter(col("src") % seedMod === 0).count()
-    val w0 = deg.filter(col("src") % seedMod === 0)
+    val (w0, nSeeds) = deg.filter(col("src") % seedMod === 0)
       .select(col("src").as("seed"), col("src").as("node"))
-      .stageBoundary // seed-sized; every step extends it
+      .stageBoundaryRows // seed-sized; every step extends it
     var cur = w0
     val frames = scala.collection.mutable.ArrayBuffer(
       w0.withColumn("step", lit(0)))
@@ -2173,10 +2185,9 @@ object Graph {
     adjIdx.count()
     val deg = adjDeg.map(_._2).getOrElse(
       e.groupBy(col("src")).agg(count(lit(1)).as("d")))
-    val nSeeds = deg.filter(col("src") % seedMod === 0).count()
-    val w0 = deg.filter(col("src") % seedMod === 0)
+    val (w0, nSeeds) = deg.filter(col("src") % seedMod === 0)
       .select(col("src").as("seed"), col("src").as("node"))
-      .stageBoundary
+      .stageBoundaryRows
     val s1 = adjIdx.join(
         gateBroadcast(w0.join(deg, w0("node") === deg("src")).drop("src")
           .withColumn("pick", expr(
@@ -2191,12 +2202,11 @@ object Graph {
       w0.select(col("seed"), col("node"), lit(0).as("step")),
       s1.select(col("seed"), col("node")).withColumn("step", lit(1)))
     for (t <- 2 to steps) {
-      val cand = e.join(
+      val (cand, candN) = e.join(
           gateBroadcast(cur.select(col("seed"), col("prev"), col("node").as("src")), nSeeds),
           Seq("src"))
         .select(col("seed"), col("prev"), col("src").as("node"), col("dst"))
-        .stageBoundary // read by the near-set probe and the pick
-      val candN = cand.count()
+        .stageBoundaryRows // read by the near-set probe and the pick
       // distance-1 test: reduce the EDGE relation to the probed
       // (prev, dst) pairs with a broadcast semi-join — the preserved
       // side of the outer join below then stays candidate-sized on
@@ -2506,8 +2516,7 @@ object Graph {
     * the hand-computed spec. Returns (community, n_members,
     * within_edges, degree_sum, q_micro), unordered. */
   private[graft] def modularityOf(e: DataFrame, labels: DataFrame): DataFrame = {
-    val lab = labels.stageBoundary // node-sized; joins edges twice + degree once
-    val nL = lab.count()
+    val (lab, nL) = labels.stageBoundaryRows // node-sized; joins edges twice + degree once
     e.count() // materialize the caller's persist before the 2 consumers below
     val wi = e
       .join(gateBroadcast(lab.select(col("node").as("src"), col("label").as("la")), nL), Seq("src"))
@@ -2612,8 +2621,8 @@ object Graph {
     * factored for the hand-computed spec. Returns (node,
     * betweenness_micro, n_contribs), unordered. */
   private[graft] def betweennessSampled(edges: DataFrame, seeds: DataFrame): DataFrame = {
-    val b0 = seeds.select(col("seed"), col("seed").as("node"), lit(1L).as("sig"))
-      .stageBoundary
+    val (b0, n0) = seeds.select(col("seed"), col("seed").as("node"), lit(1L).as("sig"))
+      .stageBoundaryRows
     // One edge expansion per level, SHARED by the forward σ aggregation
     // and the backward δ join (the naive form expanded edges×frontier
     // five times; the fused form three times, the two widest reused
@@ -2632,21 +2641,21 @@ object Graph {
           col("node").as("vnode"), col("sig").as("vsig")), rows), Seq("src"))
         .select(col("seed"), col("vnode"), col("vsig"), col("dst").as("node"))
     }
-    def levelOf(ex: DataFrame, excl: Seq[DataFrame]): DataFrame = {
+    def levelOf(ex: DataFrame, excl: Seq[DataFrame]): (DataFrame, Long) = {
       val cand = ex.groupBy(col("seed"), col("node")).agg(sum(col("vsig")).as("sig"))
       // one fused anti-join against the UNION of visited levels, not one
       // join stage per level (measured ~2× on the widest level at sf0.1)
       val seen = excl.map(_.select(col("seed"), col("node"))).reduce(_ unionAll _)
-      cand.join(seen, Seq("seed", "node"), "left_anti").stageBoundary
+      cand.join(seen, Seq("seed", "node"), "left_anti").stageBoundaryRows
     }
-    val ex1 = expandFrom(b0, b0.count())
-    val b1 = levelOf(ex1, Seq(b0))
-    val ex2 = expandFrom(b1, b1.count())
+    val ex1 = expandFrom(b0, n0)
+    val (b1, n1) = levelOf(ex1, Seq(b0))
+    val ex2 = expandFrom(b1, n1)
       .persist(StorageLevel.MEMORY_AND_DISK) // forward b2 + backward d1
-    val b2 = levelOf(ex2, Seq(b0, b1))
-    val ex3 = expandFrom(b2, b2.count())
+    val (b2, n2) = levelOf(ex2, Seq(b0, b1))
+    val ex3 = expandFrom(b2, n2)
       .persist(StorageLevel.MEMORY_AND_DISK) // forward b3 + backward d2
-    val b3 = levelOf(ex3, Seq(b0, b1, b2))
+    val (b3, _) = levelOf(ex3, Seq(b0, b1, b2))
     def deltaDown(ex: DataFrame, upper: DataFrame, upperDelta: Option[DataFrame],
                   checkpoint: Boolean): DataFrame = {
       val up = upperDelta match {
@@ -2718,11 +2727,10 @@ object Graph {
       expr("bit_xor(xxhash64(dst, src))").as("b")).head()
     require(symFp.isNullAt(0) || symFp.getLong(0) == symFp.getLong(1),
       "misByHash requires a symmetric edge relation (fingerprint mismatch)")
-    var act = raw.select(col("src").as("v")).distinct()
+    var (act, nAct) = raw.select(col("src").as("v")).distinct()
       .withColumn("p", expr(
         "CAST(conv(substring(md5(concat('mis:', CAST(v AS STRING))), 1, 15), 16, 10) AS BIGINT)"))
-      .stageBoundary
-    var nAct = act.count()
+      .stageBoundaryRows
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // LIVE edge relation (r10 optimization): after each round, restrict
     // the edges to pairs whose BOTH endpoints are still active. A
@@ -2762,8 +2770,9 @@ object Graph {
         .unionAll(live.join(gateBroadcast(mis.select(col("v").as("src")), nAct), Seq("src"))
           .select(col("dst").as("v")))
         .distinct()
-      act = act.join(rm, Seq("v"), "left_anti").stageBoundary
-      nAct = act.count()
+      val (nextAct, nNext) = act.join(rm, Seq("v"), "left_anti").stageBoundaryRows
+      act = nextAct
+      nAct = nNext
       if (nAct > 0) {
         // both-endpoints-active restriction for the next round; the
         // checkpoint bounds lineage and materializes the shrink so

@@ -115,7 +115,7 @@ object Layout {
       |WHERE lang = 'en'
       |GROUP BY 1
       |ORDER BY 1""".stripMargin) { (s, dir) =>
-    s.read.parquet(partitionedDocsDir(s, dir))
+    Tables.parquet(s, partitionedDocsDir(s, dir))
       .filter(col("lang") === "en")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))

@@ -470,7 +470,7 @@ object Similarity {
     frame.select(col("cid"), col("vec")).write.mode("overwrite").parquet(path)
 
   def loadCentroidFrame(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    Tables.parquet(s, path)
 
   def loadCentroids(s: SparkSession, path: String): Seq[(Long, Seq[Long])] =
     collectCentroids(loadCentroidFrame(s, path))

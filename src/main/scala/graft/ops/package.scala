@@ -30,43 +30,79 @@ package object ops {
     * set on the context yet). */
   val StageBoundaryDirKey = "spark.graft.stageBoundaryDir"
 
-  /** Weak registry of every RDD a stage boundary has pinned in the
-    * block manager. `spark.catalog.clearCache()` frees Dataset persists
-    * but NOT localCheckpoint blocks — those wait for the ContextCleaner
-    * to GC the unreferenced RDD objects, which over a 396-query sweep
-    * on a large driver heap can lag far behind (ADVICE r10).
-    * [[releaseStageBoundaries]] drains the registry and unpersists
-    * explicitly; the references are WEAK so an un-drained registry
-    * (tests, ad-hoc sessions) never blocks the GC path that used to be
-    * the only release. */
-  private val boundaryRdds =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]()
+  /** Registry of every RDD a stage boundary has pinned: the block-manager
+    * blocks of `local` mode and the checkpoint files of `reliable` mode.
+    * `spark.catalog.clearCache()` frees Dataset persists but NOT
+    * localCheckpoint blocks — those wait for the ContextCleaner to GC the
+    * unreferenced RDD objects, which over a 396-query sweep on a large
+    * driver heap can lag far behind (ADVICE r10) — and reliable
+    * checkpoint files outlive the RDD unless the cleaner is configured
+    * to remove them. [[releaseStageBoundaries]] drains the registry,
+    * unpersists explicitly and deletes the checkpoint files. The RDD
+    * references are WEAK so an un-drained registry (tests, ad-hoc
+    * sessions) never blocks the GC path that used to be the only
+    * release; the checkpoint file path is held strongly so a collected
+    * RDD still gets its files deleted.
+    *
+    * Sequential-use contract: the registry is process-global, not scoped
+    * to a query. A drain releases EVERY boundary registered since the
+    * previous drain, whichever query made it, so a caller may only drain
+    * when no query that could still read a boundary is running — the
+    * harnesses drain between queries, one query at a time. Concurrent
+    * queries in one JVM must not call [[releaseStageBoundaries]] while
+    * another is in flight. */
+  private final case class Pinned(
+      rdd: java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]],
+      checkpointFile: Option[String],
+      hadoopConf: org.apache.hadoop.conf.Configuration)
+
+  private val boundaryRdds = new java.util.concurrent.ConcurrentLinkedQueue[Pinned]()
 
   /** Unpersisting a locally-checkpointed RDD is deliberate here (the
     * query's action has consumed it), but each call logs a WARN
     * ("lineage has been truncated…") — ~160 boundaries × 396 queries of
-    * pure noise. Quiet exactly that logger namespace, once. */
+    * pure noise. Quiet exactly the logger that emits it, once: the
+    * message is written by `RDD.unpersist`, but Spark names a logger
+    * after the runtime class, and a Dataset checkpoint's RDD is a
+    * `MapPartitionsRDD`. */
   private lazy val quietRddLogger: Unit =
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () }
 
-  /** Unpersist every stage-boundary block registered since the last
-    * drain (harness calls this between queries, OUTSIDE any timed
-    * region). Blocks are dropped non-blocking; a boundary DataFrame
-    * must not be re-read after its query's action completes. */
+  /** Unpersist every stage-boundary block, and delete every reliable
+    * checkpoint directory, registered since the last drain (harness
+    * calls this between queries, OUTSIDE any timed region; see the
+    * sequential-use contract on the registry). Blocks are dropped
+    * non-blocking; a boundary DataFrame must not be re-read after its
+    * query's action completes. */
   def releaseStageBoundaries(): Unit = {
     quietRddLogger
-    var ref = boundaryRdds.poll()
-    while (ref != null) {
-      val rdd = ref.get()
+    var pin = boundaryRdds.poll()
+    while (pin != null) {
+      val rdd = pin.rdd.get()
       if (rdd != null) {
         try rdd.unpersist(blocking = false)
         catch { case _: Throwable => () }
       }
-      ref = boundaryRdds.poll()
+      pin.checkpointFile.foreach { f =>
+        try {
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(pin.hadoopConf).delete(path, true)
+        } catch { case _: Throwable => () }
+      }
+      pin = boundaryRdds.poll()
     }
+  }
+
+  private def register(out: DataFrame): DataFrame = {
+    out.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        boundaryRdds.add(Pinned(new java.lang.ref.WeakReference(lr.rdd),
+          lr.rdd.getCheckpointFile, out.sparkSession.sparkContext.hadoopConfiguration))
+      case _ => ()
+    }
+    out
   }
 
   /** The engine-wide stage-boundary materializer (r11: one pluggable
@@ -87,17 +123,26 @@ package object ops {
               StageBoundaryDirKey,
               new java.io.File(
                 System.getProperty("java.io.tmpdir"), "graft-stage-boundaries").getPath))
-          df.checkpoint(true)
+          register(df.checkpoint(true))
         case "none" => df
-        case _ =>
-          val out = df.localCheckpoint(true)
-          out.queryExecution.logical match {
-            case lr: org.apache.spark.sql.execution.LogicalRDD =>
-              boundaryRdds.add(new java.lang.ref.WeakReference(lr.rdd))
-            case _ => ()
-          }
-          out
+        case _ => register(df.localCheckpoint(true))
       }
     }
+
+    /** [[stageBoundary]] plus the boundary's row count, without a second
+      * job: a `Dataset.observe` rides the boundary's own eager action and
+      * reports the rows that flowed into it. In `none` mode no action
+      * runs (the observation would never fire and `Observation.get`
+      * would block), so the count falls back to `count()`. */
+    def stageBoundaryRows: (DataFrame, Long) =
+      if (df.sparkSession.conf.get(StageBoundaryModeKey, "local") == "none")
+        (df, df.count())
+      else {
+        val obs = org.apache.spark.sql.Observation()
+        val out = df.observe(obs,
+          org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("rows"))
+          .stageBoundary
+        (out, obs.get("rows").asInstanceOf[Long])
+      }
   }
 }

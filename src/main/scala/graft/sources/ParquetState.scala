@@ -42,7 +42,7 @@ object ParquetState {
       if (!tmp.renameTo(root))
         org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost the race
     }
-    parts.map(p => s.read.parquet(s"$stateDir/$p"))
+    parts.map(p => Tables.parquet(s, s"$stateDir/$p"))
   }
 
   /** The bare commit protocol for callers that REPUBLISH state every

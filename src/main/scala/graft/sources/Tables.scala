@@ -1,11 +1,15 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed table loaders for the driver fixtures
   * (`/root/testdata/sf*`, see TESTDATA.md / FIXTURES.md §B).
   *
-  * All reads go through `spark.read.parquet` so Catalyst handles column
+  * All reads go through [[parquet]] (a `spark.read.parquet` with a
+  * content-keyed schema memo) so Catalyst handles column
   * pruning and predicate pushdown into the scan — at 100 TB these tables
   * would be partitioned/bucketed parquet on distributed storage and the
   * same code holds; nothing here assumes a local filesystem beyond the
@@ -13,7 +17,54 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** A memoized schema, valid while its signature still matches. */
+  private final case class SchemaMemo(signature: String, schema: StructType)
+
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[String, SchemaMemo]()
+
+  /** The one parquet read path for fixture tables and build-once state.
+    *
+    * `spark.read.parquet` infers the schema from the file footers with a
+    * Spark job on every call; repeated reads of an unchanged path ask the
+    * same question again. This memoizes the inferred schema per path and
+    * reads with `.schema(memo)` afterwards, which runs no job. The memo is
+    * keyed by content, never by path alone: its signature hashes every
+    * file's (path, length, mtime) as listed by Spark's own file index for
+    * this read (no second listing), plus the session's parquet-related
+    * confs (`nanosAsLong` changes what a footer infers to). On a signature
+    * mismatch — the path was rewritten, or the confs differ — the schema
+    * is inferred again and the entry replaced. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val confs = spark.conf.getAll.toSeq
+      .filter { case (k, _) => k.contains("parquet") || k.startsWith("spark.sql.sources.partition") }
+      .sorted
+    Option(schemaMemo.get(path))
+      .map(memo => memo -> spark.read.schema(memo.schema).parquet(path))
+      .collect { case (memo, df) if signature(df, confs).contains(memo.signature) => df }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        signature(df, confs).foreach(sig => schemaMemo.put(path, SchemaMemo(sig, df.schema)))
+        df
+      }
+  }
+
+  /** SHA-256 over the scan's file listing and the confs; None when the
+    * read is not backed by a listing file index (never memoized then). */
+  private def signature(df: DataFrame, confs: Seq[(String, String)]): Option[String] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location
+    }.collect { case idx: PartitioningAwareFileIndex =>
+      val files = idx.allFiles()
+        .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}").sorted
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      (files ++ confs.map { case (k, v) => s"$k=$v" }).foreach { line =>
+        md.update(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        md.update('\n'.toByte)
+      }
+      md.digest().map(b => f"$b%02x").mkString
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

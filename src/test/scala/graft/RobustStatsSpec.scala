@@ -301,6 +301,39 @@ class RobustStatsSpec extends SparkSpec {
     assert(edges(6) == Set((1L, 2L), (2L, 3L), (1L, 3L))) // the 6-chain fully unravels
   }
 
+  /** The pre-fixpoint-exit peel: exactly `rounds` rounds, always. */
+  private def fixedRoundPeel(e: Set[(Long, Long)], k: Int, rounds: Int): Set[(Long, Long)] =
+    (1 to rounds).foldLeft(e) { (cur, _) =>
+      val deg = cur.toSeq.flatMap { case (a, b) => Seq(a, b) }
+        .groupBy(identity).map { case (v, vs) => v -> vs.size }
+      cur.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
+    }
+
+  test("kcore: a graph that converges before the round budget equals the fixed-round peel") {
+    // triangle + 2-edge pendant tail: the 2-core is reached after 2 rounds
+    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
+    val e = pairs.toDF("a", "b")
+    def peel(rounds: Int) = countJobs(Graph.kcoreEdges(e, k = 2, rounds)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    val (got, jobsAt10) = peel(10)
+    assert(got == fixedRoundPeel(pairs.toSet, 2, 10))
+    assert(got == Set((1L, 2L), (2L, 3L), (1L, 3L)))
+    // past the fixpoint the budget costs no further rounds
+    val (_, jobsAt4) = peel(4)
+    assert(jobsAt10 == jobsAt4, s"budget 10 ran $jobsAt10 jobs, budget 4 ran $jobsAt4")
+  }
+
+  test("kcore: when the round budget binds, the result equals the fixed-round peel") {
+    // a 6-edge chain hanging off a triangle peels one node per round
+    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+      (6L, 7L), (7L, 8L), (8L, 9L))
+    val got = Graph.kcoreEdges(pairs.toDF("a", "b"), k = 2, rounds = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = fixedRoundPeel(pairs.toSet, 2, 2)
+    assert(got == want)
+    assert(want != fixedRoundPeel(pairs.toSet, 2, 10), "the budget must bind on this graph")
+  }
+
   test("q284 face: stationary mass stays within the flooring leak, alphabet complete") {
     val rows = Temporal.q284MarkovStationary.run(spark, sfDir).collect()
     assert(rows.length == 5)

@@ -7,6 +7,40 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` and counts the Spark jobs it launched. Listener events
+    * arrive asynchronously but in order, so a marker job submitted after
+    * `body` fences the count: once the marker's end event is seen, every
+    * job `body` started has been seen too. */
+  def countJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"count-jobs-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    def groupOf(p: java.util.Properties) =
+      Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id")))
+    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groupOf(e.properties) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => markerJobs.add(e.jobId)
+          case _ => ()
+        }
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) fenced.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener fence timed out")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

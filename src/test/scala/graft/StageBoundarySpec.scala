@@ -72,4 +72,56 @@ class StageBoundarySpec extends SparkSpec {
       assert(still.isEmpty, s"release must unpin boundary blocks, still: $still")
     }
   }
+
+  for (mode <- Seq("local", "reliable", "none"))
+    test(s"stageBoundaryRows returns the count() row count in $mode mode") {
+      withMode(Some(mode)) {
+        val in = df.filter(col("k") =!= 3)
+        val (out, rows) = in.stageBoundaryRows
+        assert(rows == in.count())
+        assert(out.count() == rows)
+        assert(out.collect().map(_.getLong(0)).sorted.toSeq ==
+          (0L until 100L).filter(_ % 7 != 3))
+        releaseStageBoundaries()
+      }
+    }
+
+  test("stageBoundaryRows launches exactly one job in local mode") {
+    withMode(Some("local")) {
+      val in = df.filter(col("k") =!= 3)
+      val ((_, rows), jobs) = countJobs(in.stageBoundaryRows)
+      assert(rows == 86L)
+      assert(jobs == 1, s"expected the boundary's own job only, saw $jobs")
+      // the same boundary plus a separate count() costs more
+      val (_, jobs2) = countJobs { in.stageBoundary.count() }
+      assert(jobs2 > 1, s"boundary + count() should be more than one job, saw $jobs2")
+      releaseStageBoundaries()
+    }
+  }
+
+  test("releaseStageBoundaries deletes reliable-mode checkpoint files") {
+    withMode(Some("reliable")) {
+      releaseStageBoundaries()
+      val out = df.stageBoundary
+      val file = out.queryExecution.logical match {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile
+        case other => fail(s"reliable boundary should read back as a LogicalRDD, got $other")
+      }
+      assert(file.nonEmpty, "a reliable boundary must have written checkpoint files")
+      val path = new org.apache.hadoop.fs.Path(file.get)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.exists(path))
+      out.write.format("noop").mode("overwrite").save()
+      releaseStageBoundaries()
+      assert(!fs.exists(path), s"release must delete $path")
+    }
+  }
+
+  test("release quiets only the logger that warns about truncated lineage") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    releaseStageBoundaries()
+    assert(LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD").getLevel == Level.ERROR)
+    // the rest of the package keeps the session's level
+    assert(LogManager.getLogger("org.apache.spark.rdd.HadoopRDD").getLevel != Level.ERROR)
+  }
 }
