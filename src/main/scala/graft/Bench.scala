@@ -90,8 +90,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *      artifact instead of demanding a re-measure (rev 10).
   */
 object Bench {
-  /** Queries whose FIRST run builds fingerprint-keyed persisted state
-    * ([[graft.sources.ParquetState]]); run once untimed before the
+  /** Queries whose FIRST run builds content-keyed persisted state
+    * ([[graft.sources.StateStore]]); run once untimed before the
     * sweep so every timed run serves from state. One name per state
     * family (the cheapest face that triggers the build); a stale entry
     * here is harmless — it just warms a normal query. */

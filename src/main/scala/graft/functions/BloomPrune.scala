@@ -55,36 +55,6 @@ object BloomPrune {
       .head().getAs[Array[Byte]]("bf")
   }
 
-  /** Build-once / reuse-every-ingest Bloom state: returns the filter
-    * bytes at `stateDir/bloom.bin`, building and atomically publishing
-    * them on first use — the q108 persisted-state pattern applied to the
-    * decontamination filter, so a pipeline pays the eval-gram build once
-    * per eval-set version instead of once per run.
-    *
-    * Callers MUST key `stateDir` by a content FINGERPRINT of the dim
-    * side: a stale Bloom filter prunes WRONG (it can drop true matches
-    * and the exact join can't resurrect them), unlike stale dedup state
-    * which is merely a different corpus. A null (empty-dim) build is
-    * returned but never persisted. Publish protocol matches
-    * `Dedup.persistedCorpusState`: write under a writer-private tmp dir,
-    * rename into place, loser of a concurrent race discards. */
-  def persistedFilter(stateDir: String)(build: => Array[Byte]): Array[Byte] = {
-    val root = new java.io.File(stateDir)
-    val published = new java.io.File(root, "bloom.bin")
-    if (published.exists())
-      return java.nio.file.Files.readAllBytes(published.toPath)
-    val bytes = build
-    if (bytes != null) {
-      val tmp = new java.io.File(root.getParentFile,
-        s"${root.getName}.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}")
-      tmp.mkdirs()
-      java.nio.file.Files.write(new java.io.File(tmp, "bloom.bin").toPath, bytes)
-      if (!tmp.renameTo(root))
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost the race
-    }
-    bytes
-  }
-
   /** `fact LEFT SEMI JOIN dim ON factKey = dimKey`, with the fact side
     * pre-pruned by a Bloom filter of the dim keys. Result is exactly the
     * plain semi-join (false positives fall to the exact join); only the

@@ -2169,7 +2169,7 @@ object Analytics {
       // an adaptive rank pass reads its input three times (stats agg,
       // offsets agg, rank join) — without this checkpoint the second
       // pass re-executes the first's join+window chain per read
-      .localCheckpoint(false)
+      .lazyStageBoundary
     val fRanked = BlockRank.globalRowNumberAdaptive(
       rRanked, col("f_orders"), asc = false,
       Seq(col("f_orders").desc, col("c").asc), "rk_f")

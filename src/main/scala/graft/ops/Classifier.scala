@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StateStore, Tables}
 
 /** Model-based quality/domain classification — the trainable filter of a
   * pretraining curation pipeline (the GPT-3 / LLaMA "quality classifier"
@@ -102,7 +102,7 @@ object Classifier {
   }
 
   /** TRAIN-ONCE / SERVE-MANY weights for the fixture task
-    * ([[graft.sources.ParquetState]] keyed by a content fingerprint of
+    * ([[graft.sources.StateStore]] keyed by the content of
     * (doc_id, lang, text) — the q136 postings-index device applied to
     * model state): the first classifier-family query to run trains the
     * 3-round perceptron and PUBLISHES the (dim, w) relation; q127/q182/
@@ -113,11 +113,10 @@ object Classifier {
     * looked up. PerceptronSpec pins read-state ≡ retrain. */
   private[graft] def trainedTaskWeights(s: SparkSession, dir: String): DataFrame = {
     val (docs, feats, labels) = taskInputs(s, dir)
-    // lang feeds the labels, so it must be inside the fingerprint
-    val fp = TextOps.evalSetFingerprint(docs.select(col("doc_id"),
-      concat_ws("", col("lang"), col("text")).as("text")))
-    val stateDir = s"${System.getProperty("java.io.tmpdir")}/graft_perceptron_en_v1_$fp"
-    graft.sources.ParquetState.getOrBuild(s, stateDir, Seq("weights")) {
+    // lang feeds the labels, so it must be inside the key
+    val key = StateStore.key("perceptron_en_v1",
+      docs.select(col("doc_id"), col("lang"), col("text")))
+    StateStore.parquet(s, key, "weights") {
       val pinned = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val w = perceptronTrain(pinned, labels, rounds = 3)
       pinned.unpersist() // weights are DIMS+1 driver-local rows by now
@@ -953,11 +952,8 @@ object Classifier {
     // per-fold weights persist by corpus fingerprint (the q127 device):
     // the first run pays five trainings, every later run reads five
     // 33-row parquets — train-once/serve-many, per fold
-    val fp = TextOps.evalSetFingerprint(docs.select(col("doc_id"),
-      concat_ws("", col("lang"), col("text")).as("text")))
-    val weights = graft.sources.ParquetState.getOrBuild(s,
-      s"${System.getProperty("java.io.tmpdir")}/graft_cv5_v1_$fp",
-      (0 to 4).map(f => s"w$f")) {
+    val key = StateStore.key("cv5_v1", docs.select(col("doc_id"), col("lang"), col("text")))
+    val weights = StateStore.parquet(s, key, (0 to 4).map(f => s"w$f"): _*) {
       (0 to 4).map { f =>
         val train = docs.filter(col("fold") =!= f)
         val feats = hashedFeatures(train)
@@ -1057,10 +1053,9 @@ object Classifier {
     * the prefixes exist only for the q380 trajectory audit). */
   private def trainedTaskTrajectory(s: SparkSession, dir: String): Seq[DataFrame] = {
     val (docs, feats, labels) = taskInputs(s, dir)
-    val fp = TextOps.evalSetFingerprint(docs.select(col("doc_id"),
-      concat_ws("", col("lang"), col("text")).as("text")))
-    val stateDir = s"${System.getProperty("java.io.tmpdir")}/graft_perceptron_traj_v1_$fp"
-    graft.sources.ParquetState.getOrBuild(s, stateDir, Seq("w1", "w2", "w3")) {
+    val key = StateStore.key("perceptron_traj_v1",
+      docs.select(col("doc_id"), col("lang"), col("text")))
+    StateStore.parquet(s, key, "w1", "w2", "w3") {
       val pinned = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val t = perceptronTrajectory(pinned, labels, rounds = 3)
       pinned.unpersist()

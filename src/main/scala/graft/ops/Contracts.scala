@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StateStore, Tables}
 
 /** Declarative data-contract checking — the Deequ / Great-Expectations
   * shape (Schelter et al. VLDB'18 "Automating large-scale data quality
@@ -416,9 +416,8 @@ object Contracts {
     * actually opens with.
     *
     * Serve-many: the composed 6-row sheet persists via
-    * [[graft.sources.ParquetState]] keyed by a content fingerprint of
-    * the four input tables (xxhash64 over every column, bit_xor-folded
-    * — order-insensitive, one cheap scan per table), so only the FIRST
+    * [[graft.sources.StateStore]] keyed by the content of the four
+    * input tables (one cheap fingerprint scan per table), so only the FIRST
     * run per corpus version pays the six member audits; every later run
     * reads six rows. A changed corpus changes the fingerprint and the
     * stale sheet is simply never looked up (the q127/q132 train-once
@@ -475,14 +474,9 @@ object Contracts {
           .agg((sum(when(col("layout") === "shipdate_clustered", col("skip_micro")).otherwise(0L))
             - sum(when(col("layout") === "hash_scattered", col("skip_micro")).otherwise(0L)))
             .as("v")))
-      def tableFp(df: DataFrame): String = {
-        val r = df.agg(expr(s"bit_xor(xxhash64(${df.columns.mkString(",")}))")).head()
-        if (r.isNullAt(0)) "empty" else java.lang.Long.toHexString(r.getLong(0))
-      }
-      val fp = Seq(Tables.lineitem(s, dir), Tables.orders(s, dir),
-        Tables.customer(s, dir), Tables.documents(s, dir)).map(tableFp).mkString("_")
-      val stateDir = s"${System.getProperty("java.io.tmpdir")}/graft_scorecard_v1_$fp"
-      val Seq(sheet) = graft.sources.ParquetState.getOrBuild(s, stateDir, Seq("scorecard")) {
+      val key = StateStore.key("scorecard_v1", Tables.lineitem(s, dir), Tables.orders(s, dir),
+        Tables.customer(s, dir), Tables.documents(s, dir))
+      val Seq(sheet) = StateStore.parquet(s, key, "scorecard") {
         Seq(bloom.unionAll(enc).unionAll(joinv).unionAll(post).unionAll(skew).unionAll(zone))
       }
       sheet.orderBy(col("audit"))

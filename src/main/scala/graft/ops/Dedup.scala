@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StateStore, Tables}
 
 /** Deduplication operators over `documents` (LLM-pipeline north star):
   * exact (hash-groupBy), MinHash+LSH candidate generation, exact n-gram
@@ -1212,13 +1212,7 @@ object Dedup {
        |WHERE d.doc_id % 10 = 0
        |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
     val docs = Tables.documents(s, dir)
-    val stateTag = java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)
-    val corpus = persistedCorpusState(s,
-      docs.filter(col("doc_id") % 10 =!= 0),
-      // v3: shingles AND band buckets persist as 60-bit hashed BIGINTs —
-      // the version tag in the path keeps old-format state from being
-      // read as current
-      s"${System.getProperty("java.io.tmpdir")}/graft_corpus_state_v3_$stateTag")
+    val corpus = persistedCorpusState(s, docs.filter(col("doc_id") % 10 =!= 0))
     dedupeBatchAgainstCorpus(docs.filter(col("doc_id") % 10 === 0), corpus)
       .orderBy(col("doc_id"))
   }
@@ -1242,50 +1236,29 @@ object Dedup {
     CorpusDedupState(sh, bb, cnts, hs)
   }
 
-  /** Corpus state persisted to STORAGE (parquet under `stateDir`), built
-    * at most once per fixture dir and then only READ by every subsequent
-    * ingest — bench run, Verify run, or micro-batch. This is the literal
-    * production contract ("the state a pipeline persists between runs"):
-    * in-memory `.persist()` handles die with the JVM and with
-    * `catalog.clearCache()`, files don't. Each q108 invocation now costs
-    * one state SCAN plus the batch work, instead of rebuilding
-    * shingles/signatures/bands/hashes for 90% of the corpus every time. */
-  def persistedCorpusState(s: SparkSession, docs: => DataFrame, stateDir: String): CorpusDedupState = {
-    val parts = Seq("shingles", "bands", "counts", "hashes")
-    val root = new java.io.File(stateDir)
-    def complete = new java.io.File(root, s"${parts.last}/_SUCCESS").exists()
-    if (!complete) {
-      // commit protocol: build the whole state under a writer-private tmp
-      // dir, then publish with one directory rename — readers only ever
-      // see absent or fully-written state, a crashed writer leaves no
-      // half-state at the published path, and of two concurrent writers
-      // one wins the rename and the other discards (same shape as a
-      // distributed-FS output-committer; local rename stands in for it)
-      val tmp = new java.io.File(root.getParentFile,
-        s"${root.getName}.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}")
+  /** Corpus state persisted to STORAGE (parquet under the
+    * [[graft.sources.StateStore]], keyed by the corpus (doc_id, text)
+    * content), built at most once per corpus version and then only READ
+    * by every subsequent ingest — bench run, Verify run, or micro-batch.
+    * This is the literal production contract ("the state a pipeline
+    * persists between runs"): in-memory `.persist()` handles die with
+    * the JVM and with `catalog.clearCache()`, files don't. Each q108
+    * invocation costs one fingerprint scan and one state SCAN plus the
+    * batch work, instead of rebuilding shingles/signatures/bands/hashes
+    * for 90% of the corpus every time. A corpus rewritten in place
+    * changes the key, so stale state is never read. */
+  def persistedCorpusState(s: SparkSession, docs: DataFrame): CorpusDedupState = {
+    val Seq(sh, bb, cnts, hs) = StateStore.parquet(s, corpusStateKey(docs),
+        "shingles", "bands", "counts", "hashes") {
       val st = buildCorpusState(docs)
-      val dfs = Seq(st.shingles, st.bands, st.counts, st.hashes)
-      parts.zip(dfs).foreach { case (p, df) =>
-        df.write.mode("overwrite").parquet(s"${tmp.getPath}/$p") }
-      dfs.foreach(_.unpersist())
-      // a stale half-state at the published path (pre-protocol writer
-      // that crashed) blocks the rename — move it aside via an atomic
-      // rename-to-tombstone, NOT an in-place recursive delete: a delete
-      // racing a concurrent writer's publish could tear down freshly-
-      // published complete state file by file (readers would see partial
-      // state mid-delete); a rename only ever moves whole directories
-      if (root.exists() && !complete) {
-        val stale = new java.io.File(root.getParentFile,
-          s"${root.getName}.stale-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}")
-        if (root.renameTo(stale))
-          org.apache.commons.io.FileUtils.deleteDirectory(stale)
-      }
-      if (!tmp.renameTo(root))
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost the race
+      Seq(st.shingles, st.bands, st.counts, st.hashes)
     }
-    val Seq(sh, bb, cnts, hs) = parts.map(p => Tables.parquet(s, s"$stateDir/$p"))
     CorpusDedupState(sh, bb, cnts, hs)
   }
+
+  /** v4: shingles AND band buckets persist as 60-bit hashed BIGINTs. */
+  private[graft] def corpusStateKey(docs: DataFrame): StateStore.StateKey =
+    StateStore.key("corpus_state_v4", docs.select(col("doc_id"), col("text")))
 
   /** One ingest step: decide exact_dup / near_dup / unique for every doc
     * of `batch` against the persisted corpus state. Everything here

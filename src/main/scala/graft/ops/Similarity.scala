@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StateStore, Tables}
 
 /** Vector similarity over the `embeddings` table (LLM-pipeline north
   * star): array math, blocked near-duplicate detection, brute-force
@@ -372,8 +372,8 @@ object Similarity {
     quantizeVectors(Tables.embeddings(s, dir))
 
   /** TRAIN-ONCE / SERVE-MANY coarse-quantizer centroids
-    * ([[graft.sources.ParquetState]] keyed by a content fingerprint of
-    * the quantized embeddings plus (k, iters) — the q136 postings /
+    * ([[graft.sources.StateStore]] keyed by the content of the
+    * quantized embeddings plus (k, iters) — the q136 postings /
     * q127 weights device applied to the IVF index): the first ANN face
     * to run pays the Lloyd rounds and PUBLISHES the (cid, vec)
     * relation; every other face (routing, drift, hubness, silhouette,
@@ -385,11 +385,7 @@ object Similarity {
   private[graft] def trainedCentroids(s: SparkSession, dir: String,
                                       k: Int, iters: Int): DataFrame = {
     val v = quantizedLong(s, dir)
-    val fp = TextOps.evalSetFingerprint(v.select(col("vec_id").as("doc_id"),
-      concat_ws(",", expr("transform(qv, x -> CAST(x AS STRING))")).as("text")))
-    val stateDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_ivf_v1_k${k}_i${iters}_$fp"
-    graft.sources.ParquetState.getOrBuild(s, stateDir, Seq("centroids")) {
+    StateStore.parquet(s, StateStore.key(s"ivf_v1_k${k}_i$iters", v), "centroids") {
       Seq(kmeansCentroidFrame(v, k, iters))
     }.head
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.Decimals._
-import graft.sources.Tables
+import graft.sources.{StateStore, Tables}
 
 /** Streaming operators over `events` (SURVEY.md §2.2 streaming rows).
   *
@@ -24,6 +24,23 @@ import graft.sources.Tables
   * state size; `maxFilesPerTrigger` paces replay.
   */
 object StreamingOps {
+
+  /** The published `v_N` snapshots under `root`, oldest first: a version
+    * counts once its `probe` file exists. */
+  private def snapshotVersions(root: java.io.File, probe: String): Seq[Long] =
+    Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.getName.matches("v_\\d+") && new java.io.File(f, probe).exists())
+      .map(_.getName.stripPrefix("v_").toLong).sorted.toSeq
+
+  /** Publishes the snapshot after the last of `versions` under `root`
+    * through the store's commit step (first writer wins) and returns
+    * its dir. */
+  private def publishSnapshot(root: java.io.File, versions: Seq[Long])(
+      write: java.io.File => Unit): java.io.File = {
+    val published = new java.io.File(root, s"v_${versions.lastOption.getOrElse(-1L) + 1L}")
+    StateStore.commit(published, replace = false)(write)
+    published
+  }
   import QueryDef.sql
 
   /** Tumbling 1-minute windows × event type (batch face). */
@@ -484,10 +501,9 @@ object StreamingOps {
       s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         StructType(Seq(StructField("h", StringType))))
         .write.mode("overwrite").parquet(stateDir)
-    // the eval set is fixed for the stream's lifetime: fingerprint once,
+    // the eval set is fixed for the stream's lifetime: key it once,
     // reuse the persisted reference-gram Bloom across every trigger
-    val bloomDir = s"${System.getProperty("java.io.tmpdir")}/graft_evalbloom_v1_" +
-      TextOps.evalSetFingerprint(evalDocs)
+    val bloomKey = StateStore.key("evalbloom_v1", evalDocs)
     s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(stagedDir)
@@ -509,7 +525,7 @@ object StreamingOps {
         try {
           val (ov, gramsHandle) = TextOps.decontaminateWithHandle(
             ded.select(col("doc_id"), col("text")), evalDocs, 5, 0.5,
-            bloomState = Some(bloomDir))
+            bloomState = Some(bloomKey))
           try {
             val accepted = ded.join(
               ov.filter(!col("contaminated")).select(col("doc_id")), "doc_id")
@@ -532,7 +548,8 @@ object StreamingOps {
     * the persisted MV ([[Analytics.mvMerge]] — literally the batch
     * operator's code, so stream and batch can never drift), then
     * publishes state + ingested-file log together as ONE versioned
-    * snapshot directory (v_N, atomic rename): a merge is NOT
+    * snapshot directory (v_N, the [[graft.sources.StateStore.commit]]
+    * step): a merge is NOT
     * idempotent per row, so the file log must commit in the same
     * atomic unit as the state it is folded into — the two can never
     * tear apart across a crash, and a restarted (uncheckpointed)
@@ -551,10 +568,6 @@ object StreamingOps {
       "o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING"
     val root = new java.io.File(stateDir)
     root.mkdirs()
-    def versions: Seq[Long] = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.startsWith("v_") && !f.getName.contains(".tmp-") &&
-        new java.io.File(f, "files/_SUCCESS").exists())
-      .map(_.getName.stripPrefix("v_").toLong).sorted.toSeq
     def emptyState = s.sql(
       """SELECT CAST(NULL AS DATE) AS mv_month, '' AS o_orderpriority,
         |  0L AS n, 0L AS rev, 0L AS mn, 0L AS mx WHERE false""".stripMargin)
@@ -571,7 +584,7 @@ object StreamingOps {
         val arrived = s.createDataFrame(withFile.rdd, withFile.schema)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val vs = versions
+          val vs = snapshotVersions(root, "files/_SUCCESS")
           val (state, seen) = vs.lastOption match {
             case Some(v) => (s.read.parquet(s"$stateDir/v_$v/mv"),
               s.read.parquet(s"$stateDir/v_$v/files"))
@@ -584,18 +597,14 @@ object StreamingOps {
               case None => Analytics.mvEmit(emptyState)
             })
           } else {
-            val next = vs.lastOption.getOrElse(-1L) + 1L
-            val tmp = new java.io.File(root,
-              s"v_$next.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}")
-            Analytics.mvMerge(state, Analytics.mvState(fresh.drop("src_file")))
-              .write.parquet(s"${tmp.getPath}/mv")
-            seen.select(col("src_file"))
-              .union(fresh.select(col("src_file")).distinct())
-              .distinct()
-              .write.parquet(s"${tmp.getPath}/files")
-            val published = new java.io.File(root, s"v_$next")
-            if (!tmp.renameTo(published))
-              org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost the race
+            val published = publishSnapshot(root, vs) { tmp =>
+              Analytics.mvMerge(state, Analytics.mvState(fresh.drop("src_file")))
+                .write.parquet(s"${tmp.getPath}/mv")
+              seen.select(col("src_file"))
+                .union(fresh.select(col("src_file")).distinct())
+                .distinct()
+                .write.parquet(s"${tmp.getPath}/files")
+            }
             onBatch(id, Analytics.mvEmit(s.read.parquet(s"${published.getPath}/mv")))
           }
         } finally arrived.unpersist()
@@ -659,10 +668,6 @@ object StreamingOps {
     val root = new java.io.File(stateDir)
     root.mkdirs()
     val dim = broadcast(cust.select(col("c_custkey"), col("c_nationkey")))
-    def versions: Seq[Long] = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.startsWith("v_") && !f.getName.contains(".tmp-") &&
-        new java.io.File(f, "files/_SUCCESS").exists())
-      .map(_.getName.stripPrefix("v_").toLong).sorted.toSeq
     def emptyState = s.sql(
       "SELECT 0 AS c_nationkey, '' AS o_orderpriority, 0L AS n, 0L AS sc, 0L AS fp WHERE false")
       .select(col("c_nationkey").cast("int").as("c_nationkey"), col("o_orderpriority"),
@@ -678,7 +683,7 @@ object StreamingOps {
         val arrived = s.createDataFrame(withFile.rdd, withFile.schema)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val vs = versions
+          val vs = snapshotVersions(root, "files/_SUCCESS")
           val (state, seen) = vs.lastOption match {
             case Some(v) => (s.read.parquet(s"$stateDir/v_$v/mv"),
               s.read.parquet(s"$stateDir/v_$v/files"))
@@ -688,19 +693,15 @@ object StreamingOps {
           if (fresh.isEmpty) {
             onBatch(id, Analytics.joinMvEmit(state))
           } else {
-            val next = vs.lastOption.getOrElse(-1L) + 1L
-            val tmp = new java.io.File(root,
-              s"v_$next.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}")
-            Analytics.joinMvMerge(state,
-                Analytics.joinMvState(Analytics.joinMvOrders(fresh.drop("src_file")), dim))
-              .write.parquet(s"${tmp.getPath}/mv")
-            seen.select(col("src_file"))
-              .union(fresh.select(col("src_file")).distinct())
-              .distinct()
-              .write.parquet(s"${tmp.getPath}/files")
-            val published = new java.io.File(root, s"v_$next")
-            if (!tmp.renameTo(published))
-              org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost the race
+            val published = publishSnapshot(root, vs) { tmp =>
+              Analytics.joinMvMerge(state,
+                  Analytics.joinMvState(Analytics.joinMvOrders(fresh.drop("src_file")), dim))
+                .write.parquet(s"${tmp.getPath}/mv")
+              seen.select(col("src_file"))
+                .union(fresh.select(col("src_file")).distinct())
+                .distinct()
+                .write.parquet(s"${tmp.getPath}/files")
+            }
             onBatch(id, Analytics.joinMvEmit(s.read.parquet(s"${published.getPath}/mv")))
           }
         } finally arrived.unpersist()
@@ -725,10 +726,6 @@ object StreamingOps {
     val schema = "o_orderkey LONG, o_custkey LONG"
     val root = new java.io.File(stateDir)
     root.mkdirs()
-    def versions: Seq[Long] = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.startsWith("v_") && !f.getName.contains(".tmp-") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getName.stripPrefix("v_").toLong).sorted.toSeq
     def emptyWords = s.sql("SELECT 0L AS shard, 0L AS w, 0L AS bm WHERE false")
     s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -738,7 +735,7 @@ object StreamingOps {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val arrived = s.createDataFrame(batch.rdd, batch.schema)
           .select(expr("o_orderkey div 200").as("shard"), col("o_custkey").as("k"))
-        val vs = versions
+        val vs = snapshotVersions(root, "_SUCCESS")
         val state = vs.lastOption match {
           case Some(v) => s.read.parquet(s"$stateDir/v_$v")
           case None => emptyWords
@@ -748,13 +745,7 @@ object StreamingOps {
         val merged = state.unionByName(Layout.bloomWords(arrived))
           .groupBy(col("shard"), col("w"))
           .agg(expr("bit_or(bm)").as("bm"))
-        val next = vs.lastOption.getOrElse(-1L) + 1L
-        val tmp = new java.io.File(root,
-          s"v_$next.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}")
-        merged.write.parquet(tmp.getPath)
-        val published = new java.io.File(root, s"v_$next")
-        if (!tmp.renameTo(published))
-          org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost the race
+        val published = publishSnapshot(root, vs)(tmp => merged.write.parquet(tmp.getPath))
         onBatch(id, s.read.parquet(published.getPath))
       }
       .start()
@@ -773,10 +764,6 @@ object StreamingOps {
     val schema = "o_orderkey LONG, o_custkey LONG"
     val root = new java.io.File(stateDir)
     root.mkdirs()
-    def versions: Seq[Long] = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.startsWith("v_") && !f.getName.contains(".tmp-") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getName.stripPrefix("v_").toLong).sorted.toSeq
     def emptyH = s.sql("SELECT 0L AS h WHERE false")
     s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -786,7 +773,7 @@ object StreamingOps {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val arrived = Layout.kmvHashes(
           s.createDataFrame(batch.rdd, batch.schema), "o_custkey")
-        val vs = versions
+        val vs = snapshotVersions(root, "_SUCCESS")
         val state = vs.lastOption match {
           case Some(v) => s.read.parquet(s"$stateDir/v_$v")
           case None => emptyH
@@ -794,13 +781,7 @@ object StreamingOps {
         // idempotent min-fold: union + distinct + re-top-k
         val merged = state.unionByName(arrived).distinct()
           .orderBy(col("h")).limit(k)
-        val next = vs.lastOption.getOrElse(-1L) + 1L
-        val tmp = new java.io.File(root,
-          s"v_$next.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}")
-        merged.write.parquet(tmp.getPath)
-        val published = new java.io.File(root, s"v_$next")
-        if (!tmp.renameTo(published))
-          org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost the race
+        val published = publishSnapshot(root, vs)(tmp => merged.write.parquet(tmp.getPath))
         onBatch(id, s.read.parquet(published.getPath))
       }
       .start()
@@ -829,10 +810,6 @@ object StreamingOps {
     val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
     val root = new java.io.File(stateDir)
     root.mkdirs()
-    def versions: Seq[Long] = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.startsWith("v_") && !f.getName.contains(".tmp-") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getName.stripPrefix("v_").toLong).sorted.toSeq
     def emptyState = s.sql("SELECT '' AS fname, '' AS word, 0L AS est WHERE false")
     // compress exact (grp-keyed) counts to a k-counter MG summary:
     // est = cnt - cnt_(k+1), keep positive — per group `grp`
@@ -859,7 +836,7 @@ object StreamingOps {
           .select(col("fname"), explode(split(col("text"), " ")).as("word"))
           .groupBy(col("fname"), col("word")).agg(count(lit(1)).as("cnt"))
         val arrived = compress(counts, Seq("fname"))
-        val vs = versions
+        val vs = snapshotVersions(root, "_SUCCESS")
         val state = vs.lastOption match {
           case Some(v) => s.read.parquet(s"$stateDir/v_$v")
           case None => emptyState
@@ -867,13 +844,7 @@ object StreamingOps {
         // set union: a replayed file contributes identical rows
         val merged = state.unionByName(arrived)
           .groupBy(col("fname"), col("word")).agg(max(col("est")).as("est"))
-        val next = vs.lastOption.getOrElse(-1L) + 1L
-        val tmp = new java.io.File(root,
-          s"v_$next.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}")
-        merged.write.parquet(tmp.getPath)
-        val published = new java.io.File(root, s"v_$next")
-        if (!tmp.renameTo(published))
-          org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost the race
+        val published = publishSnapshot(root, vs)(tmp => merged.write.parquet(tmp.getPath))
         // serve: sum the per-file summaries, re-compress to k counters
         val summed = s.read.parquet(published.getPath)
           .groupBy(col("word")).agg(sum(col("est")).as("cnt"))
@@ -907,10 +878,6 @@ object StreamingOps {
       onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val root = new java.io.File(stateDir)
     root.mkdirs()
-    def versions: Seq[Long] = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.startsWith("v_") && !f.getName.contains(".tmp-") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getName.stripPrefix("v_").toLong).sorted.toSeq
     def emptyState = s.sql(
       "SELECT '' AS fname, '' AS event_type, 0L AS last_us, 0L AS n_events WHERE false")
     val schema = s.read.parquet(stagedDir).schema
@@ -928,7 +895,7 @@ object StreamingOps {
           .groupBy(col("fname"), col("event_type"))
           .agg(max(expr("unix_micros(ts)")).as("last_us"),
             count(lit(1)).as("n_events"))
-        val vs = versions
+        val vs = snapshotVersions(root, "_SUCCESS")
         val state = vs.lastOption match {
           case Some(v) =>
             val snap = s.read.parquet(s"$stateDir/v_$v")
@@ -951,13 +918,7 @@ object StreamingOps {
         val merged = state.unionByName(arrived)
           .groupBy(col("fname"), col("event_type"))
           .agg(max(col("last_us")).as("last_us"), max(col("n_events")).as("n_events"))
-        val next = vs.lastOption.getOrElse(-1L) + 1L
-        val tmp = new java.io.File(root,
-          s"v_$next.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}")
-        merged.write.parquet(tmp.getPath)
-        val published = new java.io.File(root, s"v_$next")
-        if (!tmp.renameTo(published))
-          org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost the race
+        val published = publishSnapshot(root, vs)(tmp => merged.write.parquet(tmp.getPath))
         // the served marks: per-file state rolled up — counts now sum
         // over DEDUPED files, exact under replay
         onBatch(id, s.read.parquet(published.getPath)
@@ -1035,7 +996,7 @@ object StreamingOps {
     * sequence with a driver-side reference and requires EXACT state
     * equality after every trigger. Production persists `state` between
     * runs via [[Similarity.saveCentroids]]-style parquet behind the
-    * rename commit protocol (Dedup.persistedCorpusState's shape);
+    * [[graft.sources.StateStore.commit]] step;
     * per-trigger cost is one scan of the trigger's file plus a k·d-row
     * aggregate. */
   /** Streaming face of the per-domain cap (q141) — ingest-time
@@ -1150,10 +1111,11 @@ object StreamingOps {
     * (files of (version, shard_id, action, file_hash) rows landing in
     * `stagedDir`) and maintain the LIVE SNAPSHOT incrementally — per
     * trigger, merge arriving actions into the latest-action-per-shard
-    * state by last-version-wins and republish it atomically (the q108
-    * tmp+rename commit protocol; the state is the metadata-plane
-    * checkpoint a Delta-style reader keeps so steady-state cost is the
-    * log TAIL, exactly what q176's docstring promises). The merge is
+    * state by last-version-wins and republish it atomically (the
+    * [[graft.sources.StateStore.commit]] step; the state is the
+    * metadata-plane checkpoint a Delta-style reader keeps so
+    * steady-state cost is the log TAIL, exactly what q176's docstring
+    * promises). The merge is
     * IDEMPOTENT — max version wins, so re-delivered or replayed action
     * files are absorbed without an anti-join dedup log, and a restart
     * over the full staged history converges to the identical snapshot
@@ -1165,9 +1127,7 @@ object StreamingOps {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val root = new java.io.File(stateDir)
     def publish(df: DataFrame): Unit =
-      graft.sources.ParquetState.publishAtomically(root) { tmp =>
-        df.write.mode("overwrite").parquet(tmp.getPath)
-      }
+      StateStore.commit(root, replace = true)(tmp => df.write.parquet(tmp.getPath))
     // initialize an empty snapshot ONLY when none exists — a restart
     // against accumulated state must extend it, not reset it
     if (!new java.io.File(root, "_SUCCESS").exists())
@@ -1203,7 +1163,7 @@ object StreamingOps {
     * retriever runs continuously: document files land in `stagedDir`;
     * per trigger, [[TextOps.extendPostings]] merges the fresh docs into
     * the persisted (tf, dl, df) index under `stateDir`, republished
-    * behind the atomic tmp+rename protocol. Replayed files anti-join
+    * behind the [[graft.sources.StateStore.commit]] step. Replayed files anti-join
     * out against the indexed doc_ids, so restarts never double-count a
     * term (spec-proved: streamed index ≡ one batch build over all
     * arrivals, bit-exact, including after a full restart replay).
@@ -1214,10 +1174,10 @@ object StreamingOps {
     val root = new java.io.File(stateDir)
     def part(p: String) = s"$stateDir/$p"
     def publish(tf: DataFrame, dl: DataFrame, df: DataFrame): Unit =
-      graft.sources.ParquetState.publishAtomically(root) { tmp =>
-        tf.write.mode("overwrite").parquet(s"${tmp.getPath}/tf")
-        dl.write.mode("overwrite").parquet(s"${tmp.getPath}/dl")
-        df.write.mode("overwrite").parquet(s"${tmp.getPath}/df")
+      StateStore.commit(root, replace = true) { tmp =>
+        tf.write.parquet(s"${tmp.getPath}/tf")
+        dl.write.parquet(s"${tmp.getPath}/dl")
+        df.write.parquet(s"${tmp.getPath}/df")
       }
     if (!new java.io.File(part("df"), "_SUCCESS").exists()) {
       def empty(fields: (String, org.apache.spark.sql.types.DataType)*) =

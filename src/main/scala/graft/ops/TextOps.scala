@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StateStore, Tables}
 
 /** Text-analysis operators over the `documents` table (SURVEY.md §2.2 +
   * the LLM-pipeline north star): token statistics, word/bigram frequency,
@@ -557,17 +557,16 @@ object TextOps {
   /** The inverted-index relations the BM25 retrieval family reads: term
     * postings (doc_id, word, tf), doc lengths (doc_id, dl) and doc
     * frequencies (word, df) — built ONCE per corpus version and
-    * persisted ([[graft.sources.ParquetState]], keyed by the corpus
-    * content fingerprint), which is precisely what a production
+    * persisted ([[graft.sources.StateStore]], keyed by the corpus
+    * content), which is precisely what a production
     * retriever does: materialize the index at ingest, serve queries
     * from it. Every query-time run costs three parquet scans instead of
     * a corpus re-tokenization; a changed corpus changes the fingerprint
     * and rebuilds. */
   private[graft] def postingsIndex(s: SparkSession, docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val fp = evalSetFingerprint(docs.select(col("doc_id"), col("text")))
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_postings_v1_$fp"
+    val key = StateStore.key("postings_v1", docs.select(col("doc_id"), col("text")))
     var handle: Option[DataFrame] = None
-    val Seq(tf, dl, df) = graft.sources.ParquetState.getOrBuild(s, dir, Seq("tf", "dl", "df")) {
+    val Seq(tf, dl, df) = StateStore.parquet(s, key, "tf", "dl", "df") {
       val toks = Tables.fanOut(docs)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -894,15 +893,14 @@ object TextOps {
     * never the corpus. */
   /** The position-augmented postings relation (doc_id, word, pos) q175
     * serves from — like [[postingsIndex]], built ONCE per corpus version
-    * and persisted ([[graft.sources.ParquetState]], content-fingerprint
+    * and persisted ([[graft.sources.StateStore]], content
     * keyed): what Lucene stores when positions are enabled. Phrase
     * queries probe the persisted index instead of re-tokenizing the
     * corpus (first build pays one scan + write; every later phrase
     * query costs index scans only). */
   private[graft] def positionalIndex(s: SparkSession, docs: DataFrame): DataFrame = {
-    val fp = evalSetFingerprint(docs.select(col("doc_id"), col("text")))
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_positional_v1_$fp"
-    graft.sources.ParquetState.getOrBuild(s, dir, Seq("pos")) {
+    val key = StateStore.key("positional_v1", docs.select(col("doc_id"), col("text")))
+    StateStore.parquet(s, key, "pos") {
       Seq(Tables.fanOut(docs)
         .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "word"))))
     }.head
@@ -1562,9 +1560,9 @@ object TextOps {
     * training): per q100 shard, document count, id range, token total,
     * and an ORDER-INDEPENDENT content hash (bit_xor of 60-bit md5
     * prefixes — XOR so any partition layout writes the identical
-    * manifest, and overflow-proof under ANSI partial aggregation, the
-    * `evalSetFingerprint` rationale). A consumer re-derives a shard's
-    * hash from its rows and rejects tampered or truncated shards; a
+    * manifest, and overflow-proof under ANSI partial aggregation). A
+    * consumer re-derives a shard's hash from its rows and rejects
+    * tampered or truncated shards; a
     * publisher diffs manifests release-over-release (q145 says which
     * DOCS moved; this says which SHARDS need re-download). All exact
     * integers — the manifest itself hash-verifies. One aggregate over
@@ -2465,11 +2463,9 @@ object TextOps {
       .select(col("doc_id"), col("text"))
     // capstone direction: huge scored corpus, small eval reference — the
     // reference-gram Bloom persists across runs, keyed by eval content
-    val bloomDir = s"${System.getProperty("java.io.tmpdir")}/graft_evalbloom_v1_" +
-      evalSetFingerprint(evalDocs)
     ded.join(
       decontaminate(ded.select(col("doc_id"), col("text")), evalDocs,
-          bloomState = Some(bloomDir))
+          bloomState = Some(StateStore.key("evalbloom_v1", evalDocs)))
         .filter(!col("contaminated")).select(col("doc_id")), "doc_id")
   }
 
@@ -2548,16 +2544,14 @@ object TextOps {
   /** [[contamination]] plus the persisted eval-gram handle, for callers
     * that invoke it repeatedly (the streaming corpus build) and must
     * unpersist per trigger — same leak-avoidance contract as
-    * `Dedup.dedupeBatchWithHandle`. `bloomState` (a directory path)
-    * reuses the eval-gram Bloom filter across runs via
-    * [[graft.functions.BloomPrune.persistedFilter]]; the caller must key
-    * the path by an eval-set content fingerprint (see
-    * [[evalSetFingerprint]]) — pruning with a filter built from a
-    * DIFFERENT eval set would be silently wrong. */
+    * `Dedup.dedupeBatchWithHandle`. `bloomState` reuses the eval-gram
+    * Bloom filter across runs via [[graft.sources.StateStore.bytes]];
+    * the caller must key it by the eval set's content — pruning with a
+    * filter built from a DIFFERENT eval set would be silently wrong. */
   private[graft] def contaminationWithHandle(
       evalDocs: DataFrame, trainDocs: DataFrame,
       n: Int, threshold: Double,
-      bloomState: Option[String] = None): (DataFrame, DataFrame) = {
+      bloomState: Option[StateStore.StateKey] = None): (DataFrame, DataFrame) = {
     def grams(docs: DataFrame): DataFrame = docs
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= n)
@@ -2571,7 +2565,7 @@ object TextOps {
       evalG.select(col("g")).distinct(), "g",
       expectedItems = 1L << 20, fpp = 0.01)
     val bf = bloomState match {
-      case Some(dir) => graft.functions.BloomPrune.persistedFilter(dir)(build)
+      case Some(key) => StateStore.bytes(key)(build)
       case None => build
     }
     val trainPruned =
@@ -2726,21 +2720,6 @@ object TextOps {
         round(col("vtraw"), 6).as("vtime"))
   }
 
-  /** Order-independent content fingerprint of a (doc_id, text) frame —
-    * the key that binds persisted Bloom state to an eval-set VERSION:
-    * XOR of 60-bit md5 prefixes of "id:text" over all rows (XOR, not
-    * SUM — a sum's PARTIAL aggregates can overflow under ANSI mode
-    * depending on row-to-partition layout; XOR is order-independent and
-    * cannot overflow). One cheap scan of the (small) eval set; changing,
-    * adding, or removing any doc changes the value, so stale state is
-    * simply never looked up (it ages out under a different path). */
-  private[graft] def evalSetFingerprint(docs: DataFrame): String = {
-    val r = docs.agg(expr(
-      "bit_xor(CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':', text)), 1, 15), 16, 10) AS BIGINT))").as("fp"))
-      .head()
-    if (r.isNullAt(0)) "empty" else java.lang.Long.toHexString(r.getLong(0))
-  }
-
   /** Decontamination oriented for the CAPSTONE's asymmetry — a huge
     * scored corpus against a SMALL reference (eval/benchmark) set; the
     * mirror of [[contamination]], which scores a small eval set against
@@ -2753,8 +2732,8 @@ object TextOps {
     *     gram stream never shuffles for a distinct;
     *   - candidate grams are pruned IN the scan stage by a Bloom filter
     *     of the reference grams — reusable across runs via `bloomState`
-    *     ([[graft.functions.BloomPrune.persistedFilter]], keyed by
-    *     [[evalSetFingerprint]]) so the build cost is paid once per
+    *     ([[graft.sources.StateStore.bytes]], keyed by the reference
+    *     set's content) so the build cost is paid once per
     *     eval-set version, the GPT-3-style persisted decontamination
     *     filter;
     *   - survivors exact-join the reference gram relation (false
@@ -2764,7 +2743,7 @@ object TextOps {
     */
   private[graft] def decontaminate(scored: DataFrame, refDocs: DataFrame,
       n: Int = 5, threshold: Double = 0.5,
-      bloomState: Option[String] = None): DataFrame =
+      bloomState: Option[StateStore.StateKey] = None): DataFrame =
     decontaminateWithHandle(scored, refDocs, n, threshold, bloomState)._1
 
   /** [[decontaminate]] plus the persisted reference-gram handle (same
@@ -2772,7 +2751,7 @@ object TextOps {
   private[graft] def decontaminateWithHandle(
       scored: DataFrame, refDocs: DataFrame,
       n: Int, threshold: Double,
-      bloomState: Option[String]): (DataFrame, DataFrame) = {
+      bloomState: Option[StateStore.StateKey]): (DataFrame, DataFrame) = {
     val s = scored.sparkSession
     val refG = refDocs
       .withColumn("toks", split(col("text"), " "))
@@ -2785,7 +2764,7 @@ object TextOps {
     def build = graft.functions.BloomPrune.buildFilter(
       refG, "g", expectedItems = 1L << 20, fpp = 0.01)
     val bf = bloomState match {
-      case Some(dir) => graft.functions.BloomPrune.persistedFilter(dir)(build)
+      case Some(key) => StateStore.bytes(key)(build)
       case None => build
     }
     val base = scored.withColumn("toks", split(col("text"), " "))
@@ -6121,10 +6100,9 @@ object TextOps {
     // the trained trigram model persists by corpus fingerprint (the
     // q127/q132 train-once device): markers derive from doc_id, so the
     // corpus fingerprint covers them
-    val mfp = evalSetFingerprint(Tables.documents(s, dir).select(col("doc_id"),
-      concat_ws("", col("lang"), col("text")).as("text")))
-    val train = graft.sources.ParquetState.getOrBuild(s,
-      s"${System.getProperty("java.io.tmpdir")}/graft_trigram_v1_$mfp", Seq("model")) {
+    val key = StateStore.key("trigram_v1",
+      Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("text")))
+    val train = StateStore.parquet(s, key, "model") {
       Seq(tri.filter(col("part") === 0)
         .groupBy(col("lang"), col("t")).agg(count(lit(1)).as("c")))
     }.head.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

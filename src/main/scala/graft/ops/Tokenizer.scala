@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StateStore, Tables}
 
 /** BPE tokenizer training (Sennrich et al. 2016, arXiv:1508.07909) — the
   * pipeline stage that LEARNS the vocabulary a pretraining run tokenizes
@@ -114,7 +114,7 @@ object Tokenizer {
     trainedOf(bpeTrajectory(docs, rounds).last)
 
   /** The q132 training trajectory persisted BY CORPUS FINGERPRINT
-    * ([[graft.sources.ParquetState]] — the q136 postings / q127 weights
+    * ([[graft.sources.StateStore]] — the q136 postings / q127 weights
     * device applied to the tokenizer): the first tokenizer face to run
     * trains once and publishes inventories w0..w`rounds`; q132/q144/
     * q220 then read vocabulary-sized parquet instead of each re-running
@@ -124,11 +124,8 @@ object Tokenizer {
   private[graft] def persistedTrajectory(s: SparkSession, dir: String,
                                          rounds: Int): Seq[DataFrame] = {
     val docs = Tables.fanOut(Tables.documents(s, dir))
-    val fp = TextOps.evalSetFingerprint(docs.select(col("doc_id"), col("text")))
-    val stateDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_bpe_v1_r${rounds}_$fp"
-    graft.sources.ParquetState.getOrBuild(s, stateDir,
-      (0 to rounds).map(m => s"w$m")) {
+    val key = StateStore.key(s"bpe_v1_r$rounds", docs.select(col("doc_id"), col("text")))
+    StateStore.parquet(s, key, (0 to rounds).map(m => s"w$m"): _*) {
       val t = bpeTrajectory(docs, rounds)
       t ++ Seq.fill(rounds + 1 - t.length)(t.last)
     }
@@ -346,11 +343,8 @@ object Tokenizer {
                                          rounds: Int, mod: Int): Seq[DataFrame] = {
     val train = Tables.fanOut(Tables.documents(s, dir))
       .filter(col("doc_id") % mod === 0)
-    val fp = TextOps.evalSetFingerprint(train.select(col("doc_id"), col("text")))
-    val stateDir =
-      s"${System.getProperty("java.io.tmpdir")}/graft_bpeho_v1_r${rounds}_$fp"
-    graft.sources.ParquetState.getOrBuild(s, stateDir,
-      (0 to rounds).map(m => s"w$m")) {
+    val key = StateStore.key(s"bpeho_v1_r$rounds", train.select(col("doc_id"), col("text")))
+    StateStore.parquet(s, key, (0 to rounds).map(m => s"w$m"): _*) {
       val t = bpeTrajectory(train, rounds)
       t ++ Seq.fill(rounds + 1 - t.length)(t.last)
     }

@@ -129,6 +129,12 @@ package object ops {
       }
     }
 
+    /** The lazy local boundary: marks the frame for a local checkpoint
+      * on its first computation (no job now, in every mode) and
+      * registers it, so [[releaseStageBoundaries]] frees its blocks like
+      * an eager boundary's. */
+    def lazyStageBoundary: DataFrame = register(df.localCheckpoint(false))
+
     /** [[stageBoundary]] plus the boundary's row count, without a second
       * job: a `Dataset.observe` rides the boundary's own eager action and
       * reports the rows that flowed into it. In `none` mode no action

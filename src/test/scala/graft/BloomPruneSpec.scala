@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.BloomPrune
-import graft.sources.Tables
+import graft.sources.{StateStore, Tables}
 
 class BloomPruneSpec extends SparkSpec {
 
@@ -85,28 +85,31 @@ class BloomPruneSpec extends SparkSpec {
     assert(BloomPrune.bloomSemiJoin(fact, dim, "l_orderkey", "o_orderkey").isEmpty)
   }
 
+  /** A family no earlier run has used, so the key's state starts absent. */
+  private def freshFamily(name: String): String =
+    s"test_${name}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+
   test("persistedFilter builds once, then serves every later call from disk") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom-state")
-      .resolve("state").toString
     val dim = Tables.orders(spark, sfDir)
       .filter(col("o_orderpriority") === "1-URGENT").select(col("o_orderkey"))
+    val key = StateStore.key(freshFamily("bloom"), dim)
     var builds = 0
     def build: Array[Byte] = { builds += 1; BloomPrune.buildFilter(dim, "o_orderkey", 1L << 20, 0.01) }
-    val first = BloomPrune.persistedFilter(dir)(build)
-    val second = BloomPrune.persistedFilter(dir)(build)
+    val first = StateStore.bytes(key)(build)
+    val second = StateStore.bytes(key)(build)
     assert(builds == 1, s"second call must read the published state, built $builds times")
     assert(java.util.Arrays.equals(first, second))
   }
 
   test("persistedFilter never publishes an empty-dim (null) build") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom-null")
-      .resolve("state").toString
     val empty = Tables.orders(spark, sfDir)
       .filter(col("o_orderkey") < 0).select(col("o_orderkey"))
+    val key = StateStore.key(freshFamily("bloom_null"), empty)
     var builds = 0
     def build: Array[Byte] = { builds += 1; BloomPrune.buildFilter(empty, "o_orderkey", 1L << 20, 0.01) }
-    assert(BloomPrune.persistedFilter(dir)(build) == null)
-    assert(BloomPrune.persistedFilter(dir)(build) == null)
+    assert(StateStore.bytes(key)(build) == null)
+    assert(StateStore.bytes(key)(build) == null)
     assert(builds == 2, "a null build must not be published as reusable state")
+    assert(!key.dir.exists(), s"nothing may appear at ${key.dir}")
   }
 }

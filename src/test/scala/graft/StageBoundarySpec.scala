@@ -117,6 +117,22 @@ class StageBoundarySpec extends SparkSpec {
     }
   }
 
+  test("q253's lazy boundary is registered: release frees every RDD it pinned") {
+    withMode(None) {
+      val sc = spark.sparkContext
+      releaseStageBoundaries()
+      val before = sc.getPersistentRDDs.keySet
+      Analytics.q253RfmSegments.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val pinned = sc.getPersistentRDDs.keySet -- before
+      assert(pinned.nonEmpty, "q253 pins its boundaries")
+      releaseStageBoundaries()
+      def still = sc.getPersistentRDDs.keySet.intersect(pinned)
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (still.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(still.isEmpty, s"release must unpin every RDD q253 pinned, still: $still")
+    }
+  }
+
   test("release quiets only the logger that warns about truncated lineage") {
     import org.apache.logging.log4j.{Level, LogManager}
     releaseStageBoundaries()
