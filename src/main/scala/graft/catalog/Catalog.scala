@@ -2,6 +2,8 @@ package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Tables
+
 /** One row per column of the analyzed schema — the engine's input relation.
   *
   * Mirrors what the reference reflects per column (`/root/reference/app.py:38-44,55,97`):
@@ -38,7 +40,8 @@ final case class FkCol(
 
 /** The catalog snapshot the rule engine runs over: three small relations
   * (SURVEY.md §1.3). At 100 TB-of-data scale these stay tiny (they describe
-  * schemas, not data) — they are always broadcast into the anti-joins.
+  * schemas, not data): the index and FK relations are broadcast into the
+  * rules' existence joins, and a lint report fits one partition.
   */
 final case class Catalog(columns: DataFrame, indexCols: DataFrame, fkCols: DataFrame)
 
@@ -53,11 +56,13 @@ object Catalog {
     Catalog(cols.toDF(), idx.toDF(), fks.toDF())
   }
 
-  /** Offline catalog snapshot (parquet) — same three relations on disk. */
+  /** Offline catalog snapshot (parquet) — same three relations on disk,
+    * read through [[Tables.parquet]], so a repeated lint of an unchanged
+    * snapshot infers no schema again. */
   def fromParquet(spark: SparkSession, dir: String): Catalog = Catalog(
-    spark.read.parquet(s"$dir/columns.parquet"),
-    spark.read.parquet(s"$dir/index_cols.parquet"),
-    spark.read.parquet(s"$dir/fk_cols.parquet"))
+    Tables.parquet(spark, s"$dir/columns.parquet"),
+    Tables.parquet(spark, s"$dir/index_cols.parquet"),
+    Tables.parquet(spark, s"$dir/fk_cols.parquet"))
 
   /** Snapshot a catalog (e.g. one freshly read over JDBC) to the
     * [[fromParquet]] layout, so repeated lint runs don't re-hit the live
@@ -110,7 +115,12 @@ object Catalog {
     * (`app.py:28`) + per-table `get_indexes`/`get_foreign_keys`
     * (`app.py:32-33`): works against ANY JDBC backend with no dialect
     * SQL, through the standard metadata API (getTables / getColumns /
-    * getPrimaryKeys / getIndexInfo / getImportedKeys). Reflection runs
+    * getPrimaryKeys / getIndexInfo / getImportedKeys). Column metadata is
+    * one bulk `getColumns` call for the whole schema pattern, grouped by
+    * exact (schema, table) name: a per-table call would take the table
+    * name as a LIKE pattern, so `A_B` would also return the columns of
+    * `AXB`. The PK, index and FK calls stay per table (their table
+    * argument is an exact name, which Derby requires). Reflection runs
     * on the Spark driver: catalog relations describe schemas, not data —
     * tiny by construction (§1.3) — and land as broadcast-able local
     * relations. JdbcCatalogSpec drives this against a REAL schema
@@ -130,6 +140,17 @@ object Catalog {
       val tables = drain(md.getTables(null, schemaPattern.orNull, "%", Array("TABLE"))) {
         r => (r.getString("TABLE_SCHEM"), r.getString("TABLE_NAME"))
       }.sortBy(_._2)
+      // (name, ordinal, type, length, nullable) per exact (schema, table)
+      val tableCols = drain(md.getColumns(null, schemaPattern.orNull, "%", "%")) { r =>
+        val tpe = r.getString("TYPE_NAME").toUpperCase
+        val size = r.getInt("COLUMN_SIZE")
+        // `type.length` exists only for character types (app.py:43)
+        val len = if (tpe.contains("CHAR") || tpe == "CLOB" || tpe == "TEXT")
+          Some(size).filter(_ > 0) else None
+        (r.getString("TABLE_SCHEM"), r.getString("TABLE_NAME")) ->
+          (r.getString("COLUMN_NAME"), r.getInt("ORDINAL_POSITION"), tpe, len,
+            r.getString("IS_NULLABLE") == "YES")
+      }.groupMap(_._1)(_._2)
       val cols = Vector.newBuilder[ColumnMeta]
       val idxCols = Vector.newBuilder[IndexCol]
       val fkCols = Vector.newBuilder[FkCol]
@@ -158,17 +179,11 @@ object Catalog {
           FkCol(t, r.getString("FK_NAME"), r.getString("FKCOLUMN_NAME"),
             r.getShort("KEY_SEQ").toInt, r.getString("PKTABLE_NAME"))
         }.foreach(fkCols += _)
-        drain(md.getColumns(null, schem, t, "%")) { r =>
-          val tpe = r.getString("TYPE_NAME").toUpperCase
-          val size = r.getInt("COLUMN_SIZE")
-          // `type.length` exists only for character types (app.py:43)
-          val len = if (tpe.contains("CHAR") || tpe == "CLOB" || tpe == "TEXT")
-            Some(size).filter(_ > 0) else None
-          val name = r.getString("COLUMN_NAME")
-          ColumnMeta(t, tableSeq, name, r.getInt("ORDINAL_POSITION"), tpe, len,
-            r.getString("IS_NULLABLE") == "YES", uniqueCols.contains(name),
-            pk.contains(name))
-        }.foreach(cols += _)
+        tableCols.getOrElse((schem, t), Vector.empty).sortBy(_._2).foreach {
+          case (name, ordinal, tpe, len, nullable) =>
+            cols += ColumnMeta(t, tableSeq, name, ordinal, tpe, len, nullable,
+              uniqueCols.contains(name), pk.contains(name))
+        }
       }
       fromRows(spark, cols.result(), idxCols.result(), fkCols.result())
     } finally conn.close()

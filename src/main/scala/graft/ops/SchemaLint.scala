@@ -114,7 +114,8 @@ object SchemaLint {
        |ORDER BY "table", "column", issue_type""".stripMargin
 
   /** Driver-contract entry: report rows re-sorted on the output columns
-    * (unique per (table, column, rule)) so Spark and DuckDB order agree. */
+    * (unique per (table, column, rule)) so Spark and DuckDB order agree.
+    * The report is one partition, so the re-sort needs no exchange. */
   val refSchemaLint: QueryDef = QueryDef.sql("ref_schema_lint", oracle) { (s, _) =>
     report(s).orderBy(col("table"), col("column"), col("issue_type"))
   }

@@ -10,12 +10,14 @@ import graft.catalog.Catalog
   *
   * The reference's per-table nested loop + hand-built membership sets
   * (`app.py:31-38,34-35`) vanish: membership is computed ONCE as two
-  * broadcast marker joins onto the `columns` relation ([[flagged]]), the
-  * R4 expected-type dictionary (`app.py:79-83`) is a literal map lookup,
-  * and all five rules then evaluate as `when(...)` predicates inside a
-  * single codegen'd projection — `all` emits every issue in one pass
-  * (array-of-structs → explode), two broadcast exchanges total, instead of
-  * five rule sub-plans each building its own joins.
+  * correlated `EXISTS` columns on the `columns` relation ([[flagged]]),
+  * which Spark plans as broadcast existence joins; the R4 expected-type
+  * dictionary (`app.py:79-83`) is a literal map lookup, and all five
+  * rules then evaluate as `when(...)` predicates inside a single
+  * codegen'd projection — `all` emits every issue in one pass
+  * (array-of-structs → explode) over one partition, so neither the joins
+  * nor the ordered emission shuffle, instead of five rule sub-plans each
+  * building its own joins.
   *
   * Message strings reproduce the `app.py` f-strings byte-for-byte,
   * including R2's trailing space (`app.py:61-62`) and R4's missing final
@@ -33,29 +35,26 @@ object Rules {
 
   /** `columns` with membership flags, computed once:
     *   - `is_indexed`  — (table, column) appears in `indexed_columns`
-    *     (`app.py:44,55`), via a broadcast left join onto a marker;
+    *     (`app.py:44,55`), as a correlated `EXISTS`;
     *   - `is_fk_first` — (table, column) is the FIRST constrained column
     *     of some FK (`app.py:35,55`), same shape;
     *   - `expected_type` — R4's dictionary (`app.py:79-83`) as a literal
     *     map lookup (null when the name isn't in the dictionary).
-    * The index/FK relations describe schemas, not data — always tiny,
-    * always broadcast. */
+    * `EXISTS` is never null, and Spark plans each one as an existence
+    * join: the index/FK relations describe schemas, not data, so they are
+    * always small enough to broadcast, and need no de-duplication. */
   private def flagged(catalog: Catalog): DataFrame = {
-    val key = Seq("table_name", "column_name")
-    val idx = catalog.indexCols.select(key.map(col): _*).distinct()
-      .withColumn("idx_marker", lit(true))
-    val fk = catalog.fkCols.filter(col("ordinal_position") === 1)
-      .select(key.map(col): _*).distinct()
-      .withColumn("fk_marker", lit(true))
+    // the outer side is qualified: the subquery is analysed on its own
+    // first, and would resolve a bare outer name to its own same-named key
+    def member(rel: DataFrame): Column = rel.where(
+      rel("table_name") === col("c.table_name").outer() &&
+        rel("column_name") === col("c.column_name").outer()).exists()
     val expected = typedLit(Map(
       "rating" -> "FLOAT", "created_at" -> "DATETIME", "order_date" -> "DATETIME"))
-    catalog.columns
-      .join(broadcast(idx), key, "left")
-      .join(broadcast(fk), key, "left")
-      .withColumn("is_indexed", coalesce(col("idx_marker"), lit(false)))
-      .withColumn("is_fk_first", coalesce(col("fk_marker"), lit(false)))
+    catalog.columns.as("c")
+      .withColumn("is_indexed", member(catalog.indexCols))
+      .withColumn("is_fk_first", member(catalog.fkCols.filter(col("ordinal_position") === 1)))
       .withColumn("expected_type", element_at(expected, lower(col("column_name"))))
-      .drop("idx_marker", "fk_marker")
   }
 
   /** Rule 1 (`app.py:42-51`): large VARCHAR/TEXT, not indexed, not unique.
@@ -139,7 +138,11 @@ object Rules {
     * one column can emit several issues). Single pass: each rule is a
     * `when(cond, struct(...))` element of a per-row array; nulls are
     * filtered and the survivors exploded — a row with no issues emits
-    * nothing, a row with several emits them in rule order. */
+    * nothing, a row with several emits them in rule order. The issues are
+    * coalesced to one partition before the sort: a report has at most
+    * five rows per catalog column, and a sort within one partition needs
+    * no range-partition exchange (no sampling job, no shuffle) — also for
+    * any re-sort of the result, such as `ref_schema_lint`'s. */
   def all(catalog: Catalog): DataFrame = {
     val issues = array(ruleDefs.map(r =>
       when(r.cond, struct(
@@ -153,6 +156,7 @@ object Rules {
       .select(col("table_seq"), col("ordinal"), col("r.rule_id").as("rule_id"),
         col("table"), col("column"), col("r.issue_type").as("issue_type"),
         col("r.issue").as("issue"), col("r.recommendation").as("recommendation"))
+      .coalesce(1)
       .orderBy(orderCols.map(col): _*)
       .select(outCols.map(col): _*)
   }

@@ -130,6 +130,21 @@ class JdbcCatalogSpec extends SparkSpec {
     assert(!fired("USERS", "EMAIL", "is not indexed"), "unique column is exempt from R1")
   }
 
+  test("reflection keys columns by exact table name: `_` in A_B is no LIKE wildcard") {
+    val url3 = "jdbc:derby:memory:graftwildcard;create=true"
+    val conn = DriverManager.getConnection(url3)
+    try {
+      val st = conn.createStatement()
+      st.execute("CREATE TABLE A_B (ID INT, X INT)")
+      st.execute("CREATE TABLE AXB (ID INT, Y INT, Z INT)")
+    } finally conn.close()
+    val cat = Catalog.fromReflection(spark, url3, schemaPattern = Some("APP"),
+      driver = Some("org.apache.derby.jdbc.EmbeddedDriver"))
+    val byTable = cat.columns.collect().toSeq
+      .groupMap(_.getAs[String]("table_name"))(_.getAs[String]("column_name"))
+    assert(byTable == Map("A_B" -> Seq("ID", "X"), "AXB" -> Seq("ID", "Y", "Z")))
+  }
+
   // ---- dialect SQL validation -------------------------------------------
   // The MySQL/PostgreSQL information_schema SQL in Dialects cannot run
   // against a live server here (zero egress), so every query string is
@@ -272,6 +287,11 @@ class JdbcCatalogSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
     assert(viaParquet == inMemory)
     assert(viaParquet.length == 18)
+    // a repeated lint of the unchanged snapshot infers no schema again
+    val (again, jobs) = countJobs(Catalog.fromParquet(spark, dir))
+    assert(jobs == 0, s"second fromParquet of the same snapshot ran $jobs jobs")
+    assert(Rules.all(again).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq == inMemory)
   }
 
   test("database name is escaped against SQL injection in dialect SQL") {

@@ -128,6 +128,25 @@ class RulesSpec extends SparkSpec {
     assert(Rules.rule5(c).collect().map(_.getAs[String]("column")).toSeq == Seq("EMAIL"))
   }
 
+  test("Rules.all runs in at most 3 jobs and emits one partition") {
+    val issues = Rules.all(SchemaLint.fixtureCatalog(spark))
+    val (_, jobs) = countJobs(issues.write.format("noop").mode("overwrite").save())
+    assert(jobs <= 3, s"Rules.all over the fixture ran $jobs jobs")
+    assert(issues.rdd.getNumPartitions == 1)
+  }
+
+  test("ref_schema_lint plans existence joins and no shuffle exchange") {
+    val df = SchemaLint.refSchemaLint.run(spark, sfDir)
+    assert(df.collect().length == 18)
+    val plan = df.queryExecution.executedPlan
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val shuffles = helper.collectWithSubqueries(plan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    assert(shuffles.isEmpty, s"ref_schema_lint must not shuffle:\n$plan")
+    assert(plan.toString.contains("ExistenceJoin"), s"membership must be an existence join:\n$plan")
+  }
+
   test("empty catalog → empty report and no-issues console branch") {
     val c = cat(Nil)
     val issues = Rules.all(c)
