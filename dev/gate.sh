@@ -8,8 +8,7 @@ sfs=("${@:-0.001 0.01 0.1}")
 for sf in "${sfs[@]}"; do
   out="/tmp/graft_gate_sf$sf"
   echo "== sf$sf =="
-  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} \
-    sbt -batch "runMain graft.Verify /root/testdata/sf$sf $out" 2>&1 \
+  sbt -batch "runMain graft.Verify /root/testdata/sf$sf $out" 2>&1 \
     | grep "\[verify\]" || true
   python3 dev/compare.py "/root/testdata/sf$sf" "$out" | tail -1
 done

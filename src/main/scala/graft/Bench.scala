@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Per-round benchmark: times every SparkEntry query at the driver's SF.
@@ -114,34 +113,6 @@ object Bench {
     "q380_data_map",         // perceptron trajectory
     "q298_ops_scorecard")    // ops scorecard sheet
 
-  /** One timed run of `fn`: the elapsed seconds, or None when the query
-    * threw — a failed run has no timing, and its name and message go to
-    * `failed` instead. Caches are cleared inside the timed region; the
-    * stage boundaries are released after it. */
-  private[graft] def timeOnce(spark: SparkSession, sfDir: String, name: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-      failed: scala.collection.mutable.Map[String, String]): Option[Double] = {
-    val t0 = System.nanoTime()
-    val ok =
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        failed(name) = String.valueOf(e.getMessage)
-        false
-      }
-    // queries that persist multi-consumer intermediates (dedup family)
-    // must not leave them pinned — for memory, for self-contained
-    // timings regardless of run order, and so run 2 re-does the I/O
-    spark.catalog.clearCache()
-    val dt = (System.nanoTime() - t0) / 1e9
-    // stage-boundary localCheckpoint blocks are NOT freed by
-    // clearCache (only by ContextCleaner GC, which lags a 396-query
-    // sweep — ADVICE r10); release them OUTSIDE the timed region so
-    // the timing methodology stays byte-identical to rev 9/10
-    graft.ops.releaseStageBoundaries()
-    if (ok) Some(dt) else None
-  }
-
   /** The failure fields of the artifact: the full line lists every
     * failed query, the compact line at most `cap` of them. */
   private[graft] def failedJson(failed: Iterable[String], cap: Option[Int]): String = {
@@ -156,17 +127,17 @@ object Bench {
     val tJvm0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - tJvm0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cores
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1200").toDouble
     val hardStopS = budgetS * 1.15
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // parity with Verify
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_BENCH_ONLY=q74,q78 limits the run to the named queries
+    // (Harness.select) — a local profiling aid; the driver never sets it,
+    // so round artifacts always cover the full contract
+    val queries = SparkEntry.queries
+    val selected = Harness.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY").toSeq,
+      queries.keys.toSeq.sorted).map(n => n -> queries(n))
+    val spark = Harness.session(cpus)
     // JVM/codegen/scheduler warmup on synthetic data so the first timed
     // query doesn't absorb session initialization (no fixture data is
     // touched or cached here)
@@ -176,20 +147,10 @@ object Bench {
     // it proportionally, which makes a hot round artifact self-evident.
     def loadProbe(): Double = (1 to 3).map { _ =>
       val t0 = System.nanoTime()
-      spark.range(0, (1L << 21) * cpus.toLong, 1, cpus.toInt)
+      spark.range(0, (1L << 21) * cpus, 1, cpus)
         .selectExpr("sum(pmod(xxhash64(id), 1024))").collect()
       (System.nanoTime() - t0) / 1e9
     }.min
-    // SPARK_GRAFT_BENCH_ONLY=q74,q78 limits the run to queries whose name
-    // contains any listed token — a local profiling aid; the driver never
-    // sets it, so round artifacts always cover the full contract.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
-    val selected = only match {
-      case Some(toks) => SparkEntry.queries.filter { case (n, _) => toks.exists(n.contains) }
-      case None => SparkEntry.queries
-    }
     val maxRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_RUNS", "4").toInt.max(runs)
     // pre-sweep settle: a machine still winding down (the driver's own
     // verify pass, a previous JVM exiting) inflates the first minutes of
@@ -232,15 +193,18 @@ object Bench {
     // cheapest-first by prior. A budget-pressed sweep therefore skips
     // the most expensive well-priored queries (whose priors already
     // document them) instead of whatever the hash order left last.
-    val ordered: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      selected.toSeq.sortBy { case (n, _) =>
+    val ordered: Seq[(String, Harness.Query)] =
+      selected.sortBy { case (n, _) =>
         (if (prior.contains(n)) 1 else 0, prior.getOrElse(n, 0.0), n)
       }
     // a query that throws in ANY run is failed: it is listed here and
     // contributes no time to any min, total or projection
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] =
-      timeOnce(spark, sfDir, name, fn, failed)
+    def once(name: String, fn: Harness.Query): Option[Double] = {
+      val t = Harness.run(spark, name, fn, sfDir, failed)(Harness.noop)
+      if (t.isEmpty) System.err.println(s"[bench] $name failed: ${failed(name)}")
+      t
+    }
     def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def queriesJson(qs: Iterable[(String, Double)]): String =
       // Locale.ROOT: the default-locale interpolator writes "1,234" under

@@ -4,32 +4,152 @@ import java.nio.file.Files
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical scaling smoke (SCALE.md "Empirical scaling smoke"): generate
   * a corpus N× the sf0.1 fixture and time the dedup/ANN pipelines on it,
   * looking for nonlinearities the fixtures are too small to expose.
   *
-  * `runMain graft.ScaleSmoke [mult]` — mult scales the corpus
-  * (default 10 → 50k docs / 20k vectors). Documents are generated as
-  * pure expressions over `spark.range` (fully distributed, deterministic,
-  * no driver-side text building): every ~100th doc is a near-duplicate of
-  * its predecessor with one token changed, mirroring the fixture's
-  * planted-near-dup shape. Embeddings are 8 well-separated clusters like
+  * `runMain graft.ScaleSmoke [mult] [names...]` — mult scales the corpus
+  * (default 10 → 50k docs / 20k vectors); names, resolved by
+  * [[Harness.select]], limit the timed queries to those targets.
+  * Documents are generated as pure expressions over `spark.range` (fully
+  * distributed, deterministic, no driver-side text building): every
+  * ~100th doc is a near-duplicate of its predecessor with one token
+  * changed, mirroring the fixture's planted-near-dup shape. Embeddings are 8 well-separated clusters like
   * AnnQualitySpec, sized up.
   */
 object ScaleSmoke {
+  private val targets = Seq(
+    "q31_minhash_lsh", "q32_neardup_verified", "q33_simhash",
+    "q37_embedding_neardup", "q38_ann_bruteforce", "q39_ann_ivf",
+    "q52_ann_lsh", "q61_ann_quantized",
+    "q74_chunking", "q78_simhash_hamming", "q79_curation_pipeline",
+    "q85_dedup_clusters", "q99_tfidf", "q100_shard_packing",
+    "q107_quality_sample", "q108_incremental_dedup", "q111_simhash_wide",
+    "q116_contamination", "q117_repetition", "q118_source_mix",
+    "q119_kmeans_train", "q120_ann_ivf_trained", "q121_negative_sampling",
+    "q122_semantic_dedup", "q123_corpus_build", "q124_audio_windows",
+    "q126_span_dedup", "q130_sequence_packing", "q131_hard_negatives",
+    // NOTE q132: the smoke corpus is a worst case for BPE — every token
+    // is a distinct md5 prefix, so the "vocab-sized" round relation is
+    // corpus-sized here (real corpora follow Heaps' law); it measures
+    // the upper bound of the round cost, not the typical one
+    "q132_bpe_train", "q133_pq_adc", "q134_unimax_mix",
+    "q135_hard_negatives_ivf", "q136_bm25", "q137_rrf_fusion",
+    "q138_gram_matrix",
+    "q140_knn_classify", "q141_domain_cap", "q142_preference_pairs",
+    "q143_pagerank",
+    // q144 re-trains q132's merges before encoding — it inherits the
+    // same worst-case note (every smoke token a distinct md5 prefix)
+    "q144_bpe_encode", "q145_corpus_diff", "q146_pca_power",
+    "q147_mmr_rerank", "q148_phash_dedup", "q149_corpus_card",
+    "q150_dedup_eval", "q151_corpus_build_pack",
+    "q153_label_prop", "q154_jl_ann", "q155_collocations",
+    "q156_rouge_audit", "q157_domain_cosine", "q158_boilerplate",
+    "q159_quality_quantile_gate", "q160_jl_ivf", "q161_split_leakage",
+    "q162_index_drift", "q163_dedup_savings", "q164_temperature_mix",
+    "q165_shard_manifest", "q166_rag_serve", "q167_manifest_diff",
+    "q168_cdc_shards", "q169_passage_windows", "q170_compaction_plan",
+    "q171_pq_rerank", "q172_retrieval_metrics", "q173_bradley_terry",
+    "q174_component_split", "q175_phrase_search", "q176_time_travel",
+    "q177_containment", "q178_hubness", "q179_embedding_stats",
+    "q180_silhouette", "q181_signal_agreement", "q182_calibration",
+    "q183_source_overlap", "q184_novelty", "q185_word_similarity",
+    "q186_bootstrap_ci", "q187_rm3_expansion", "q188_personalized_pagerank",
+    "q189_weak_labels", "q190_kcenter_coreset", "q191_multiprobe_lsh",
+    "q193_conformal", "q194_canonical_dedup", "q195_k_anonymity",
+    "q196_semantic_decontam", "q197_passage_retrieval", "q198_rrf_sweep",
+    "q199_truncation_audit", "q200_corpus_scorecard", "q201_zipf_audit",
+    "q202_heaps_growth", "q203_annotator_kappa", "q204_budget_select",
+    "q205_ndcg_eval", "q206_collision_entropy", "q207_kneser_ney",
+    "q208_label_noise", "q209_threshold_sweep", "q210_code_switch",
+    "q211_quality_anova", "q212_bitext_mining", "q213_source_jackknife",
+    "q214_nprobe_sweep", "q215_good_turing", "q216_l_diversity",
+    "q217_packing_sweep", "q218_domain_reweight", "q219_length_bias",
+    // q220 inherits the q132/q144 md5-vocab worst-case note
+    "q220_merge_sweep", "q221_brier_decomp", "q222_audio_fingerprint",
+    "q223_robust_scale", "q224_burstiness", "q225_ks_drift",
+    "q228_vacuum_plan", "q232_manifest_pruning", "q233_skyline_select", "q234_prefix_join",
+    "q237_mann_whitney", "q239_quantile_norm", "q240_merkle_diff",
+    "q243_triangles", "q254_association_rules", "q262_pps_sample",
+    // round-7 second wave: the word-graph centralities, the
+    // co-purchase walkers, and the corpus-shaped audits all run on
+    // the smoke tables (documents + the 2-col lineitem + vecs);
+    // q375/q382/q383 need orders/events and sit in the documented
+    // already-covered classes (q375 = one grouped pass + broadcast
+    // totals, the q211 class; q382/q383 = bounded-axis windows over
+    // one daily/hourly aggregate, the q226 class)
+    "q369_hits", "q370_walk_corpus", "q371_welch_screen",
+    "q372_rake_keyphrases", "q373_modularity",
+    "q374_quantization_recall", "q376_aspect_batching",
+    "q377_auc_eval", "q378_betweenness", "q379_percolation",
+    "q380_data_map", "q381_decision_stump", "q384_weighted_kappa",
+    "q386_maximal_independent_set", "q387_wl_refinement",
+    "q388_wasserstein_drift",
+    // round-8: the walk-features chain (q393 consumes the persisted
+    // q370 corpus; q394 is the biased walker) runs on the 2-col
+    // smoke lineitem like the rest of the graph family
+    "q393_walk_ppmi", "q394_node2vec_walks", "q395_walk_context_sim",
+    // round-9: the coverage audit prices the walk budget against the
+    // exact BFS frontier on the same smoke graph; the holdout audit
+    // inherits q132's md5-vocab worst-case note (every smoke token
+    // distinct → a 2% sample leaves ~98% OOV, the fallback-heavy
+    // extreme of the audit's range)
+    // inherits q132's md5-vocab worst-case note; round-10's q398
+    // sweeps three sample rates over the same distinct-token extreme
+    "q396_walk_coverage", "q397_bpe_holdout", "q398_sample_elbow")
+  // q226/q227/q229/q230/q231/q235/q236/q238/q241/q242/q244/q245/q246/q247/q248/q249/q250/q251/q252/q253/q255/q256/q257/q258/q259/q260/q261 are not smoked: the
+  // smoke corpus has
+  // no events/orders tables and only a 2-column lineitem projection,
+  // and their shapes are already-covered classes (q226 = one daily
+  // aggregate + calendar-axis windows, the q96 posture; q227 = count
+  // aggregates + dim anti-joins, the q05/q07 class; q229/q230 = one
+  // stack-unpivot scan + value-keyed hash aggregate, the q22 class;
+  // q235 = two hash aggregates + a state-keyed outer merge, the
+  // q01/q97 class on state-sized inputs; q236 = a user-keyed band
+  // join + purchase-partitioned windows, the q55 interval class;
+  // q238 = two blocking equi-joins + a pair distinct + an 8-row
+  // pattern agg over customer, which the smoke corpus lacks;
+  // q241 = user-partitioned windows + the q204 block-sweep over
+  // events, which the smoke corpus lacks;
+  // q242 = q241's sessionizer + bounded-axis windows + a step-table
+  // driver walk — every corpus-sized stage is an already-smoked class;
+  // q244 = two event-slice aggs + arm aggs over user-sized relations,
+  // the q103 broadcast-stats class, and needs the events table;
+  // q245 needs customer, and its explode + equi-join + pair-agg shape
+  // is the q31 banded-join class with alphabet-bounded buckets;
+  // q246 needs orders + full lineitem and is two per-key count aggs —
+  // the q01 class — with key-sized everything after;
+  // q247 needs full lineitem and is one conditional-agg scan, the
+  // q01 class exactly;
+  // q248 needs events and is one scan agg + bounded-axis metadata
+  // joins, the q225 bounded-value-axis class;
+  // q249 needs events and is q236's band join + an 8-row metadata
+  // game — the q55 interval class feeding a constant-size solve;
+  // q250 needs orders; bloom build is one distinct + BIT_OR agg and
+  // the audit is probes×shards metadata, the q232 manifest class;
+  // q251 needs events; transition counts are the q109 window class
+  // and the chain walks are a ≤ 20-row bounded collect;
+  // q252 needs events; one band semi-join (q55 class) + conditional
+  // aggs + a 4-row broadcast policy;
+  // q253 needs orders; one fact agg to customer grain + customer-
+  // sized windows, the q96 class;
+  // q255 needs orders; first-order agg + a cohort-partitioned
+  // bounded-age window, the q96 class;
+  // q256 needs customer/orders; a semi-join chain + file-grain agg,
+  // the q115 class; q257 needs full lineitem; a rank pass + 16-row
+  // boundary joins, the ANALYZE posture; q258 needs l_suppkey and is
+  // one distinct to a 4096-cell metadata plane; q259 needs events and
+  // is one day-count scan + five 32-slot aggregates; q260 needs
+  // customer and is one distinct + a 9-node broadcast expansion;
+  // q261 needs part and is a 4-leg union + one rank window)
+
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.select(args.drop(1).toSeq, targets)
+    val cpus = Harness.cores
+    val spark = Harness.session(cpus)
 
     val dir = Files.createTempDirectory("graft-smoke").toString
     val nDocs = 5000L * mult
@@ -86,154 +206,23 @@ object ScaleSmoke {
     }
     import spark.implicits._
     rows.toSeq.toDF("vec_id", "embedding", "label")
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
-    val targets = Seq(
-      "q31_minhash_lsh", "q32_neardup_verified", "q33_simhash",
-      "q37_embedding_neardup", "q38_ann_bruteforce", "q39_ann_ivf",
-      "q52_ann_lsh", "q61_ann_quantized",
-      "q74_chunking", "q78_simhash_hamming", "q79_curation_pipeline",
-      "q85_dedup_clusters", "q99_tfidf", "q100_shard_packing",
-      "q107_quality_sample", "q108_incremental_dedup", "q111_simhash_wide",
-      "q116_contamination", "q117_repetition", "q118_source_mix",
-      "q119_kmeans_train", "q120_ann_ivf_trained", "q121_negative_sampling",
-      "q122_semantic_dedup", "q123_corpus_build", "q124_audio_windows",
-      "q126_span_dedup", "q130_sequence_packing", "q131_hard_negatives",
-      // NOTE q132: the smoke corpus is a worst case for BPE — every token
-      // is a distinct md5 prefix, so the "vocab-sized" round relation is
-      // corpus-sized here (real corpora follow Heaps' law); it measures
-      // the upper bound of the round cost, not the typical one
-      "q132_bpe_train", "q133_pq_adc", "q134_unimax_mix",
-      "q135_hard_negatives_ivf", "q136_bm25", "q137_rrf_fusion",
-      "q138_gram_matrix",
-      "q140_knn_classify", "q141_domain_cap", "q142_preference_pairs",
-      "q143_pagerank",
-      // q144 re-trains q132's merges before encoding — it inherits the
-      // same worst-case note (every smoke token a distinct md5 prefix)
-      "q144_bpe_encode", "q145_corpus_diff", "q146_pca_power",
-      "q147_mmr_rerank", "q148_phash_dedup", "q149_corpus_card",
-      "q150_dedup_eval", "q151_corpus_build_pack",
-      "q153_label_prop", "q154_jl_ann", "q155_collocations",
-      "q156_rouge_audit", "q157_domain_cosine", "q158_boilerplate",
-      "q159_quality_quantile_gate", "q160_jl_ivf", "q161_split_leakage",
-      "q162_index_drift", "q163_dedup_savings", "q164_temperature_mix",
-      "q165_shard_manifest", "q166_rag_serve", "q167_manifest_diff",
-      "q168_cdc_shards", "q169_passage_windows", "q170_compaction_plan",
-      "q171_pq_rerank", "q172_retrieval_metrics", "q173_bradley_terry",
-      "q174_component_split", "q175_phrase_search", "q176_time_travel",
-      "q177_containment", "q178_hubness", "q179_embedding_stats",
-      "q180_silhouette", "q181_signal_agreement", "q182_calibration",
-      "q183_source_overlap", "q184_novelty", "q185_word_similarity",
-      "q186_bootstrap_ci", "q187_rm3_expansion", "q188_personalized_pagerank",
-      "q189_weak_labels", "q190_kcenter_coreset", "q191_multiprobe_lsh",
-      "q193_conformal", "q194_canonical_dedup", "q195_k_anonymity",
-      "q196_semantic_decontam", "q197_passage_retrieval", "q198_rrf_sweep",
-      "q199_truncation_audit", "q200_corpus_scorecard", "q201_zipf_audit",
-      "q202_heaps_growth", "q203_annotator_kappa", "q204_budget_select",
-      "q205_ndcg_eval", "q206_collision_entropy", "q207_kneser_ney",
-      "q208_label_noise", "q209_threshold_sweep", "q210_code_switch",
-      "q211_quality_anova", "q212_bitext_mining", "q213_source_jackknife",
-      "q214_nprobe_sweep", "q215_good_turing", "q216_l_diversity",
-      "q217_packing_sweep", "q218_domain_reweight", "q219_length_bias",
-      // q220 inherits the q132/q144 md5-vocab worst-case note
-      "q220_merge_sweep", "q221_brier_decomp", "q222_audio_fingerprint",
-      "q223_robust_scale", "q224_burstiness", "q225_ks_drift",
-      "q228_vacuum_plan", "q232_manifest_pruning", "q233_skyline_select", "q234_prefix_join",
-      "q237_mann_whitney", "q239_quantile_norm", "q240_merkle_diff",
-      "q243_triangles", "q254_association_rules", "q262_pps_sample",
-      // round-7 second wave: the word-graph centralities, the
-      // co-purchase walkers, and the corpus-shaped audits all run on
-      // the smoke tables (documents + the 2-col lineitem + vecs);
-      // q375/q382/q383 need orders/events and sit in the documented
-      // already-covered classes (q375 = one grouped pass + broadcast
-      // totals, the q211 class; q382/q383 = bounded-axis windows over
-      // one daily/hourly aggregate, the q226 class)
-      "q369_hits", "q370_walk_corpus", "q371_welch_screen",
-      "q372_rake_keyphrases", "q373_modularity",
-      "q374_quantization_recall", "q376_aspect_batching",
-      "q377_auc_eval", "q378_betweenness", "q379_percolation",
-      "q380_data_map", "q381_decision_stump", "q384_weighted_kappa",
-      "q386_maximal_independent_set", "q387_wl_refinement",
-      "q388_wasserstein_drift",
-      // round-8: the walk-features chain (q393 consumes the persisted
-      // q370 corpus; q394 is the biased walker) runs on the 2-col
-      // smoke lineitem like the rest of the graph family
-      "q393_walk_ppmi", "q394_node2vec_walks", "q395_walk_context_sim",
-      // round-9: the coverage audit prices the walk budget against the
-      // exact BFS frontier on the same smoke graph; the holdout audit
-      // inherits q132's md5-vocab worst-case note (every smoke token
-      // distinct → a 2% sample leaves ~98% OOV, the fallback-heavy
-      // extreme of the audit's range)
-      // inherits q132's md5-vocab worst-case note; round-10's q398
-      // sweeps three sample rates over the same distinct-token extreme
-      "q396_walk_coverage", "q397_bpe_holdout", "q398_sample_elbow")
-    // q226/q227/q229/q230/q231/q235/q236/q238/q241/q242/q244/q245/q246/q247/q248/q249/q250/q251/q252/q253/q255/q256/q257/q258/q259/q260/q261 are not smoked: the
-    // smoke corpus has
-    // no events/orders tables and only a 2-column lineitem projection,
-    // and their shapes are already-covered classes (q226 = one daily
-    // aggregate + calendar-axis windows, the q96 posture; q227 = count
-    // aggregates + dim anti-joins, the q05/q07 class; q229/q230 = one
-    // stack-unpivot scan + value-keyed hash aggregate, the q22 class;
-    // q235 = two hash aggregates + a state-keyed outer merge, the
-    // q01/q97 class on state-sized inputs; q236 = a user-keyed band
-    // join + purchase-partitioned windows, the q55 interval class;
-    // q238 = two blocking equi-joins + a pair distinct + an 8-row
-    // pattern agg over customer, which the smoke corpus lacks;
-    // q241 = user-partitioned windows + the q204 block-sweep over
-    // events, which the smoke corpus lacks;
-    // q242 = q241's sessionizer + bounded-axis windows + a step-table
-    // driver walk — every corpus-sized stage is an already-smoked class;
-    // q244 = two event-slice aggs + arm aggs over user-sized relations,
-    // the q103 broadcast-stats class, and needs the events table;
-    // q245 needs customer, and its explode + equi-join + pair-agg shape
-    // is the q31 banded-join class with alphabet-bounded buckets;
-    // q246 needs orders + full lineitem and is two per-key count aggs —
-    // the q01 class — with key-sized everything after;
-    // q247 needs full lineitem and is one conditional-agg scan, the
-    // q01 class exactly;
-    // q248 needs events and is one scan agg + bounded-axis metadata
-    // joins, the q225 bounded-value-axis class;
-    // q249 needs events and is q236's band join + an 8-row metadata
-    // game — the q55 interval class feeding a constant-size solve;
-    // q250 needs orders; bloom build is one distinct + BIT_OR agg and
-    // the audit is probes×shards metadata, the q232 manifest class;
-    // q251 needs events; transition counts are the q109 window class
-    // and the chain walks are a ≤ 20-row bounded collect;
-    // q252 needs events; one band semi-join (q55 class) + conditional
-    // aggs + a 4-row broadcast policy;
-    // q253 needs orders; one fact agg to customer grain + customer-
-    // sized windows, the q96 class;
-    // q255 needs orders; first-order agg + a cohort-partitioned
-    // bounded-age window, the q96 class;
-    // q256 needs customer/orders; a semi-join chain + file-grain agg,
-    // the q115 class; q257 needs full lineitem; a rank pass + 16-row
-    // boundary joins, the ANALYZE posture; q258 needs l_suppkey and is
-    // one distinct to a 4096-cell metadata plane; q259 needs events and
-    // is one day-count scan + five 32-slot aggregates; q260 needs
-    // customer and is one distinct + a 9-node broadcast expansion;
-    // q261 needs part and is a 4-leg union + one rank window)
-    // SPARK_GRAFT_SMOKE_ONLY=q123,q124 limits a run to matching targets —
-    // the same local profiling aid as Bench's SPARK_GRAFT_BENCH_ONLY
-    val selected = sys.env.get("SPARK_GRAFT_SMOKE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty) match {
-      case Some(toks) => targets.filter(n => toks.exists(n.contains))
-      case None => targets
-    }
     println(s"== smoke mult=$mult docs=$nDocs vecs=$nVecs dir=$dir ==")
+    val queries = SparkEntry.queries
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     selected.foreach { name =>
       // noop sink, same as Bench: a count() terminal would let Catalyst
       // prune the expression-heavy final projections out of the timing;
-      // the row count for the report is taken outside the timed window
-      val t0 = System.nanoTime()
-      val ok =
-        try { SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => System.err.println(s"$name FAILED: ${e.getMessage}"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val rows = if (ok) SparkEntry.queries(name)(spark, dir).count() else -1L
-      println(f"$name%-24s $dt%8.2f s  ($rows rows)")
-      spark.catalog.clearCache()
+      // the row count for the report is taken by a second, untimed run
+      Harness.run(spark, name, queries(name), dir, failed)(Harness.noop) match {
+        case Some(dt) =>
+          var rows = -1L
+          Harness.run(spark, name, queries(name), dir, failed)(df => rows = df.count())
+          println(f"$name%-24s $dt%8.2f s  ($rows rows)")
+        case None => System.err.println(s"$name FAILED: ${failed(name)}")
+      }
     }
 
     // SemDeDup at the paper's k ∝ N recipe: q122's contract face pins
@@ -242,12 +231,12 @@ object ScaleSmoke {
     // 10× reference (~2.5k vectors), making pair volume linear in N.
     if (nVecs > 20000) {
       val kScaled = math.max(8, (8L * nVecs / 20000L).toInt)
-      val t0k = System.nanoTime()
-      graft.ops.Similarity.semanticDedup(spark, dir, kScaled, 2)
-        .write.format("noop").mode("overwrite").save()
-      val dtk = (System.nanoTime() - t0k) / 1e9
-      println(f"semdedup_k_scaled(k=$kScaled%d) $dtk%8.2f s")
-      spark.catalog.clearCache()
+      val leg = s"semdedup_k_scaled(k=$kScaled)"
+      Harness.run(spark, leg, graft.ops.Similarity.semanticDedup(_, _, kScaled, 2), dir, failed)(
+        Harness.noop) match {
+        case Some(dtk) => println(f"$leg $dtk%8.2f s")
+        case None => System.err.println(s"$leg FAILED: ${failed(leg)}")
+      }
     }
 
     // large-graph walker path: force the node-broadcast budget to 0 so
@@ -267,15 +256,16 @@ object ScaleSmoke {
       println(f"walker_budget derived=$budget%d rows (autoBroadcastJoinThreshold/" +
         f"${graft.ops.Graph.NodeRowBytes}%d B) nodes=$nNodes%d → " +
         (if (nNodes <= budget) "broadcast path" else "co-partitioned shuffle path"))
-      val hinted = SparkEntry.queries("q143_pagerank")(spark, dir)
-        .collect().map(_.toString).toSeq
+      def pagerank(): (Seq[String], Double) = {
+        var rows = Seq.empty[String]
+        val dt = Harness.run(spark, "q143_pagerank", queries("q143_pagerank"), dir, failed)(
+          df => rows = df.collect().map(_.toString).toSeq)
+          .getOrElse(sys.error(s"q143_pagerank failed: ${failed("q143_pagerank")}"))
+        (rows, dt)
+      }
+      val (hinted, _) = pagerank()
       spark.conf.set(key, "0")
-      val t0w = System.nanoTime()
-      val shuffled = SparkEntry.queries("q143_pagerank")(spark, dir)
-        .collect().map(_.toString).toSeq
-      val dtw = (System.nanoTime() - t0w) / 1e9
-      spark.conf.unset(key)
-      spark.catalog.clearCache()
+      val (shuffled, dtw) = try pagerank() finally spark.conf.unset(key)
       println(f"pagerank_shuffle_fallback $dtw%8.2f s  (${shuffled.size} rows)")
       assert(shuffled == hinted, "shuffle-path walker must equal the hinted walker")
     }

@@ -1,37 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional 3rd arg: comma-separated query-name prefixes (dev runs)
-    val only: String => Boolean = args.lift(2) match {
-      case Some(pfx) => { val ps = pfx.split(","); n => ps.exists(n.startsWith) }
-      case None => _ => true
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional 3rd arg: comma-separated query names (dev runs; Harness.select)
+    val queries = SparkEntry.queries
+    val names = Harness.select(args.lift(2).toSeq, queries.keys.toSeq.sorted)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      spark.catalog.clearCache() // release per-query persisted intermediates
-      // clearCache frees persists but NOT stage-boundary localCheckpoint
-      // blocks (ContextCleaner frees those only on GC, which can lag a
-      // 396-query sweep on a big heap — ADVICE r10): drop them eagerly
-      graft.ops.releaseStageBoundaries()
-    }
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    for (name <- names)
+      Harness.run(spark, name, queries(name), sfDir, failed)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+    failed.foreach { case (name, msg) => System.err.println(s"[verify] $name failed: $msg") }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -44,7 +27,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => only(kv._1))
+    val selected = names.toSet
+    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -156,8 +156,7 @@ object StreamingOps {
     * tracks whichever `ts` layout the fixture generation shipped; the
     * column is then normalized exactly like the batch loader. */
   def eventsStream(s: SparkSession, stagedDir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(stagedDir).schema
+    val schema = Tables.withNanosAsLong(s)(s.read.parquet(stagedDir).schema)
     Tables.normalizeEventsTs(
       s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

@@ -78,20 +78,32 @@ object Tables {
     * generations and TIMESTAMP(MICROS, isAdjustedToUTC=false) in others,
     * so the loader adapts to what the footer declares rather than pinning
     * one generation's layout. Nanos would be rejected by Spark 4 outright
-    * (PARQUET_TYPE_ILLEGAL), so the legacy conf reads them as LONG first.
-    * Either way the column lands as a session-tz TIMESTAMP at microsecond
-    * precision — DuckDB reads both layouts as the same naive micros, and
-    * Verify/Bench pin the session zone to UTC, so oracle values agree. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventsTs(load(s, d, "events"))
+    * (PARQUET_TYPE_ILLEGAL), so their schema is inferred as LONG
+    * ([[withNanosAsLong]]). Either way the column lands as a session-tz
+    * TIMESTAMP at microsecond precision — DuckDB reads both layouts as the
+    * same naive micros, and the harness pins the session zone to UTC, so
+    * oracle values agree. */
+  def events(s: SparkSession, d: String): DataFrame =
+    normalizeEventsTs(withNanosAsLong(s)(load(s, d, "events")))
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Runs a footer read (`infer`) with `nanosAsLong` set, then restores
+    * the session's previous setting. Only schema inference needs the
+    * conf: a frame whose schema says `ts long` reads TIMESTAMP(NANOS) as
+    * LONG without it, so reading a table changes no session setting. */
+  private[graft] def withNanosAsLong[A](s: SparkSession)(infer: => A): A = {
+    val prev = s.conf.getAll.get(NanosAsLong)
+    s.conf.set(NanosAsLong, "true")
+    try infer
+    finally prev.fold(s.conf.unset(NanosAsLong))(s.conf.set(NanosAsLong, _))
   }
 
   /** Normalizes an events frame's `ts` to TimestampType: nanos-as-LONG
     * gets the integer-div shim (`div`, NOT `/` — epoch nanos exceed double
     * precision and float division would round the microsecond up on ~half
     * the rows); native timestamp columns (NTZ or not) just cast, which is
-    * the identity under the UTC session zone both harness mains set. */
+    * the identity under the UTC session zone the harness sets. */
   def normalizeEventsTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampType}

@@ -8,15 +8,15 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Runs `body` and counts the Spark jobs it launched. Listener events
-    * arrive asynchronously but in order, so a marker job submitted after
-    * `body` fences the count: once the marker's end event is seen, every
-    * job `body` started has been seen too. */
-  def countJobs[A](body: => A): (A, Int) = {
+  /** Runs `body` and returns the job group (`spark.jobGroup.id`) of every
+    * Spark job started while it ran. Listener events arrive
+    * asynchronously but in order, so a marker job submitted after `body`
+    * fences the list: once the marker's end event is seen, every job
+    * `body` started has been seen too. */
+  def jobGroups[A](body: => A): (A, Seq[Option[String]]) = {
     val sc = spark.sparkContext
-    val group = s"count-jobs-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = s"job-groups-marker-${java.util.UUID.randomUUID()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
     val fenced = new java.util.concurrent.CountDownLatch(1)
     def groupOf(p: java.util.Properties) =
       Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id")))
@@ -24,35 +24,36 @@ trait SparkSpec extends AnyFunSuite {
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         groupOf(e.properties) match {
-          case Some(`group`) => jobs.incrementAndGet()
           case Some(`marker`) => markerJobs.add(e.jobId)
-          case _ => ()
+          case g => groups.add(g)
         }
       override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
         if (markerJobs.contains(e.jobId)) fenced.countDown()
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, group)
-      val out = try body finally sc.clearJobGroup()
+      val out = body
       sc.setJobGroup(marker, marker)
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener fence timed out")
-      (out, jobs.get())
+      (out, groups.toArray(Array.empty[Option[String]]).toSeq)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `body` under its own job group and counts the Spark jobs it
+    * launched. */
+  def countJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"count-jobs-${java.util.UUID.randomUUID()}"
+    val (out, groups) = jobGroups {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    (out, groups.count(_.contains(group)))
   }
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Four cores whatever the box, so test expectations stay fixed. */
+  lazy val session: SparkSession = Harness.session(cores = 4)
 }

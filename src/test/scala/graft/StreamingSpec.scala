@@ -284,8 +284,7 @@ class StreamingSpec extends SparkSpec {
     // raw fixture rows with ts kept in its on-disk layout (inferred — the
     // fixture has shipped both nanos and micros generations) so restaged
     // files look exactly like the driver parquet the stream source expects
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = Tables.withNanosAsLong(spark)(spark.read.parquet(s"$sfDir/events.parquet"))
     val srcDir = Files.createTempDirectory("graft-ckpt-src")
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
     def stage(lo: Long, hi: Long, name: String): Unit = {

@@ -39,14 +39,44 @@ class TablesSpec extends SparkSpec {
     spark.range(4).selectExpr("id").write.parquet(path)
     Tables.parquet(spark, path)
     val key = "spark.sql.parquet.binaryAsString"
-    val old = spark.conf.getOption(key)
+    val old = setting(key)
     spark.conf.set(key, "true")
     try {
       val (_, jobs) = countJobs(Tables.parquet(spark, path))
       assert(jobs >= 1, "a conf change must invalidate the memo")
-    } finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    } finally restore(key, old)
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  /** A conf's session setting: None when it is not set on the session. */
+  private def setting(key: String): Option[String] = spark.conf.getAll.get(key)
+  private def restore(key: String, v: Option[String]): Unit =
+    v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
+  test("loading events leaves the session's nanosAsLong setting as it was") {
+    val saved = setting(NanosAsLong)
+    try for (before <- Seq(None, Some("false"))) {
+      restore(NanosAsLong, before)
+      assert(Tables.events(spark, sfDir).count() > 0)
+      assert(setting(NanosAsLong) == before, s"events changed $NanosAsLong from $before")
+    } finally restore(NanosAsLong, saved)
+  }
+
+  test("a TIMESTAMP(NANOS) events file loads with ts as a timestamp") {
+    // nanos/events.parquet was written with pyarrow 16:
+    //   python3 -c "import pyarrow as pa, pyarrow.parquet as pq; pq.write_table(pa.table({
+    //     'event_id': pa.array([1, 2], pa.int64()),
+    //     'ts': pa.array([1704067200123456789, 1704153600000001999], pa.timestamp('ns'))}),
+    //     'events.parquet')"
+    val dir = new java.io.File(getClass.getResource("/nanos/events.parquet").toURI).getParent
+    val vectorized = "spark.sql.parquet.enableVectorizedReader"
+    val saved = setting(vectorized)
+    try for (reader <- Seq("true", "false")) {
+      spark.conf.set(vectorized, reader)
+      val df = Tables.events(spark, dir)
+      assert(df.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+      val micros = df.orderBy("event_id").selectExpr("unix_micros(ts)").collect().map(_.getLong(0))
+      assert(micros.toSeq == Seq(1704067200123456L, 1704153600000001L), s"vectorized=$reader")
+    } finally restore(vectorized, saved)
   }
 }
