@@ -123,6 +123,18 @@ object Bench {
     }
   }
 
+  /** Idle pin of the load probe, which hashes 2^21 rows per core: 0.08–
+    * 0.15 s on the 32-core reference box. Slower cores read above it when
+    * idle (0.18–0.26 s once warm on a 4-core box). */
+  private val probeIdlePinS = 0.15
+
+  /** The pre-sweep settle's exit rule: the probe reads at or below the
+    * idle pin, or two successive probes agree within 25 %, so the box
+    * has stopped winding down. 25 %, not less: successive warm probes on
+    * an idle 4-core box spread up to 1.2x (0.185–0.223 s). */
+  private[graft] def settled(prev: Double, cur: Double): Boolean =
+    cur <= probeIdlePinS || math.max(prev, cur) <= 1.25 * math.min(prev, cur)
+
   def main(args: Array[String]): Unit = {
     val tJvm0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - tJvm0) / 1e9
@@ -155,19 +167,26 @@ object Bench {
     // pre-sweep settle: a machine still winding down (the driver's own
     // verify pass, a previous JVM exiting) inflates the first minutes of
     // the sweep — r6 opened at probe 0.253 vs the 0.08–0.15 idle pin.
-    // Probe, and while it reads hot, wait 30 s and re-probe (bounded
-    // budget); the artifact records the wait count, so a round that
-    // STILL opened hot is documented rather than silent. Settle time
-    // counts against the wall budget: a round that spent its clock
-    // settling degrades gracefully instead of getting killed mid-sweep.
+    // One probe is discarded (the JVM is still cold for it); then, while
+    // the probe reads hot and successive probes disagree ([[settled]]),
+    // wait 30 s and re-probe (bounded budget); the artifact records the
+    // wait count, so a round that STILL opened unsettled is documented
+    // rather than silent. A box under steady load settles at once and
+    // shows in `probe_sec` instead. Settle time counts against the wall
+    // budget: a round that spent its clock settling degrades gracefully
+    // instead of getting killed mid-sweep.
     val settleLimit = sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_TRIES", "6").toInt
     var settleWaits = 0
+    loadProbe()
+    var probePrev = loadProbe()
     var probePre = loadProbe()
-    while (probePre > 0.15 && settleWaits < settleLimit && elapsedS < budgetS * 0.25) {
-      System.err.println(f"[bench] probe ${probePre}%.3f s > 0.15 idle pin — settling 30 s " +
-        s"(${settleWaits + 1}/$settleLimit)")
+    while (!settled(probePrev, probePre) && settleWaits < settleLimit &&
+        elapsedS < budgetS * 0.25) {
+      System.err.println(f"[bench] probes ${probePrev}%.3f s, ${probePre}%.3f s still moving " +
+        s"— settling 30 s (${settleWaits + 1}/$settleLimit)")
       Thread.sleep(30000)
       settleWaits += 1
+      probePrev = probePre
       probePre = loadProbe()
     }
     // CROSS-ROUND priors (bench_rev 8; loaded before the sweep since
@@ -266,7 +285,7 @@ object Bench {
     def partialJson(trunc: Boolean, extra: String = ""): String = {
       val total = if (partial.nonEmpty) partial.values.sum else 0.0
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(partial)},""" +
-        s""""sf":"$sfDir","bench_rev":10,"runs_per_query":$runs,"truncated":$trunc,""" +
+        s""""sf":"$sfDir","bench_rev":11,"runs_per_query":$runs,"truncated":$trunc,""" +
         s""""n_done":${partial.size},"n_selected":${selected.size},"warmed":$warmed,""" +
         s""""settle_waits":$settleWaits,"probe_sec":${f3(probePre)},${failedJson(failed.keys, None)},""" +
         s""""runs":$runsJson$extra}"""
@@ -279,7 +298,7 @@ object Bench {
       val top10 = partial.toSeq.sortBy(-_._2).take(10)
       val total = if (partial.nonEmpty) partial.values.sum else 0.0
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(top10)},""" +
-        s""""sf":"$sfDir","bench_rev":10,"n_queries":${partial.size},"n_selected":${selected.size},""" +
+        s""""sf":"$sfDir","bench_rev":11,"n_queries":${partial.size},"n_selected":${selected.size},""" +
         s""""truncated":${!full},"warmed":$warmed,"settle_waits":$settleWaits,""" +
         s""""n_skipped":${skipped.size},"skipped_sample":${sampleJson(skipped, 5)},""" +
         s"""${failedJson(failed.keys, Some(5))},"probe_sec":${f3(probePre)},"full_out":"$out"}"""
@@ -475,7 +494,9 @@ object Bench {
     // 9 = incremental artifact + shutdown hook + wall budget + state
     // pre-warm; 10 = value-ordered sweep + prior-priced degrade +
     // cost-aware pre-warm + bounded compact line + atomic writes +
-    // per-query run spreads) — cross-round deltas are only comparable
+    // per-query run spreads; 11 = settle until the probe reads at the
+    // idle pin or two successive warm probes agree within 25 %) —
+    // cross-round deltas are only comparable
     // at equal rev. Per-era decomposition: the number comparable to the
     // r3 baseline (the r4-era s/q) rides the artifact instead of being
     // re-derived from BASELINE.md each round; eras follow the rounds'
@@ -516,9 +537,9 @@ object Bench {
       s""""truncated":$trunc,""" +
       s""""degraded_after":$degradedAfter,"n_single_run":$nSingleRun,""" +
       s""""warmed":$warmed,"wall_sec":${f3(elapsedS)}"""
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(results)},"sf":"$sfDir","bench_rev":10,"runs_per_query":$runs,$probes,$extras}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(results)},"sf":"$sfDir","bench_rev":11,"runs_per_query":$runs,$probes,$extras}"""
     val top10 = results.sortBy(-_._2).take(10)
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(top10)},"sf":"$sfDir","n_queries":${results.size},"runs_per_query":$runs,"bench_rev":10,$probes,$extrasCompact,"full_out":"$out"}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries":${queriesJson(top10)},"sf":"$sfDir","n_queries":${results.size},"runs_per_query":$runs,"bench_rev":11,$probes,$extrasCompact,"full_out":"$out"}"""
     System.err.println(json)
     System.err.flush()
     println(json)

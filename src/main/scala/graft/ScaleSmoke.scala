@@ -6,6 +6,8 @@ import scala.util.Random
 
 import org.apache.spark.sql.functions._
 
+import graft.ops.{StageBoundaryOps, releaseStageBoundaries}
+
 /** Empirical scaling smoke (SCALE.md "Empirical scaling smoke"): generate
   * a corpus N× the sf0.1 fixture and time the dedup/ANN pipelines on it,
   * looking for nonlinearities the fixtures are too small to expose.
@@ -335,8 +337,7 @@ object ScaleSmoke {
       val b6 = keys.filter(col("k") >= 1024 && col("k") % 101 === 0)
         .select(expr("k DIV 1024").as("src"), col("k").as("dst"))
       val t0s = System.nanoTime()
-      val scc = graft.ops.Graph.sccCyclic(fwd.unionByName(b3).unionByName(b6))
-        .persist()
+      val scc = graft.ops.Graph.sccCyclic(fwd.unionByName(b3).unionByName(b6)).cachedStageBoundary
       val nLabels = scc.count()
       val dts = (System.nanoTime() - t0s) / 1e9
       val sizes = scc.groupBy("scc_id").count()
@@ -344,8 +345,7 @@ object ScaleSmoke {
       println(f"scc_coloring(nodes=$nk%d) $dts%8.2f s  " +
         f"($nLabels%d labels — the closure here would be pair-quadratic)")
       assert(minSize > 1, "no self-loops planted: every emitted SCC must be nontrivial")
-      scc.unpersist()
-      spark.catalog.clearCache()
+      releaseStageBoundaries()
     }
 
     // MIS on a star: the degenerate hub shape — either the hub beats
@@ -359,15 +359,14 @@ object ScaleSmoke {
         .select(lit(0L).as("src"), col("id").as("dst"))
       val sym = star.unionByName(star.select(col("dst").as("src"), col("src").as("dst")))
       val t0m = System.nanoTime()
-      val mis = graft.ops.Graph.misByHash(sym).persist()
+      val mis = graft.ops.Graph.misByHash(sym).cachedStageBoundary
       val nMis = mis.count()
       val maxRound = mis.agg(org.apache.spark.sql.functions.max("round_joined")).head().getLong(0)
       val dtm = (System.nanoTime() - t0m) / 1e9
       println(f"mis_star(leaves=$leaves%d) $dtm%8.2f s  ($nMis%d members, $maxRound rounds)")
       assert(maxRound <= 2, s"star MIS must settle in <= 2 rounds, took $maxRound")
       assert(nMis == 1L || nMis == leaves, "star MIS is the hub alone or every leaf")
-      mis.unpersist()
-      spark.catalog.clearCache()
+      releaseStageBoundaries()
     }
 
     // walk corpus on a ring: every node degree 2, maximal step-pick
@@ -385,7 +384,7 @@ object ScaleSmoke {
       val seeds = (rn + 100) / 101
       println(f"walk_ring(n=$rn%d) $dtr%8.2f s  ($nw%d rows)")
       assert(nw == seeds * 5, s"ring walk corpus must be seeds*5 rows, got $nw vs ${seeds * 5}")
-      spark.catalog.clearCache()
+      releaseStageBoundaries()
     }
     spark.stop()
   }

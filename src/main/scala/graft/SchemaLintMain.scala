@@ -1,7 +1,7 @@
 package graft
 
 import graft.catalog.Catalog
-import graft.ops.SchemaLint
+import graft.ops.{SchemaLint, StageBoundaryOps}
 import graft.report.Report
 import graft.rules.Rules
 
@@ -177,7 +177,7 @@ object SchemaLintMain {
     def envOr(key: String, default: String): String =
       sys.env.get(key).orElse(dotenv.get(key)).getOrElse(default)
 
-    val issues = Rules.all(catalog).cache()
+    val issues = Rules.all(catalog).cachedStageBoundary
     print(Report.renderConsole(issues, database))
     if (!issues.isEmpty && envOr("EXPORT_TO_CSV", "NO").trim.toUpperCase == "YES") {
       val path = Report.writeCsv(issues, envOr("EXPORTS_DIR", "exports"), database)

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.StageBoundaryOps
+
 /** Salted equi-join for skewed keys (the manual fallback when AQE's
   * skew-join splitting isn't enough — e.g. a single pathological key that
   * dominates a partition).
@@ -44,8 +46,7 @@ object SkewJoin {
       seed: Long = 42L): Seq[Any] = {
     val sampled = df.select(col(key)).where(col(key).isNotNull)
       .sample(withReplacement = false, sampleFraction, seed)
-      .groupBy(col(key)).count()
-      .persist()
+      .groupBy(col(key)).count().cachedStageBoundary
     try {
       val agg = sampled.agg(sum(col("count")), count(lit(1))).head()
       if (agg.isNullAt(0)) return Seq.empty

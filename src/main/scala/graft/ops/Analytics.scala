@@ -1633,8 +1633,7 @@ object Analytics {
   private def gapFilled(s: SparkSession, dir: String): DataFrame = {
     val daily = Tables.events(s, dir)
       .select(col("event_type"), to_date(date_trunc("day", col("ts"))).as("day"))
-      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n_events"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n_events")).cachedStageBoundary
     val days = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .select(explode(expr("sequence(d0, d1)")).as("day"))
     val types = daily.select(col("event_type")).distinct()
@@ -1700,8 +1699,7 @@ object Analytics {
       |WHERE pc.n_ab >= 2
       |ORDER BY cosine DESC, part_a, part_b
       |LIMIT 20""".stripMargin) { (s, dir) =>
-    val b = baskets(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val b = baskets(s, dir).cachedStageBoundary
     val pc = pairsOf(b)
       .groupBy(col("part_a"), col("part_b")).agg(count(lit(1)).as("n_ab"))
       .filter(col("n_ab") >= 2)
@@ -3451,8 +3449,7 @@ object Analytics {
     val dels = o.filter(col("o_orderkey") % 8 === 7)
       .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
         (col("o_orderkey") + 1L).as("version"), lit("D").as("op"))
-    val log = base.unionAll(ups).unionAll(dels)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val log = base.unionAll(ups).unionAll(dels).cachedStageBoundary
     val latest = log.withColumn("rn", row_number().over(
         Window.partitionBy(col("k")).orderBy(col("version").desc, col("op").desc)))
       .filter(col("rn") === 1)

@@ -117,7 +117,7 @@ object Classifier {
     val key = StateStore.key("perceptron_en_v1",
       docs.select(col("doc_id"), col("lang"), col("text")))
     StateStore.parquet(s, key, "weights") {
-      val pinned = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pinned = feats.cachedStageBoundary
       val w = perceptronTrain(pinned, labels, rounds = 3)
       pinned.unpersist() // weights are DIMS+1 driver-local rows by now
       Seq(w)
@@ -278,8 +278,7 @@ object Classifier {
        |FROM served s, kth k
        |WHERE s.doc_id % 2 = 1
        |ORDER BY s.doc_id""".stripMargin) { (s, dir) =>
-    val served = servedMargins(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val served = servedMargins(s, dir).cachedStageBoundary
     val cal = served.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), (-col("y") * col("margin")).as("score"))
     val n = cal.count()
@@ -948,7 +947,7 @@ object Classifier {
     val docs = Tables.fanOut(Tables.documents(s, dir))
       .withColumn("fold",
         expr("CAST(conv(substring(md5(concat('cv:', CAST(doc_id AS STRING))), 1, 4), 16, 10) AS INT) % 5"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     // per-fold weights persist by corpus fingerprint (the q127 device):
     // the first run pays five trainings, every later run reads five
     // 33-row parquets — train-once/serve-many, per fold
@@ -956,8 +955,7 @@ object Classifier {
     val weights = StateStore.parquet(s, key, (0 to 4).map(f => s"w$f"): _*) {
       (0 to 4).map { f =>
         val train = docs.filter(col("fold") =!= f)
-        val feats = hashedFeatures(train)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val feats = hashedFeatures(train).cachedStageBoundary
         val labels = train.select(col("doc_id"),
           when(col("lang") === "en", 1L).otherwise(-1L).as("y"))
         val w = perceptronTrain(feats, labels, rounds = 3)
@@ -984,8 +982,7 @@ object Classifier {
         .select(lit(f.toLong).as("fold"), lit(nTrain).as("n_train"),
           col("n_eval"), col("n_correct"))
     }
-    val allf = folds.reduce(_ unionAll _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val allf = folds.reduce(_ unionAll _).cachedStageBoundary
     allf.select(col("fold"), col("n_train"), col("n_eval"), col("n_correct"),
         expr("n_correct * 1000000L DIV n_eval").as("acc_micro"))
       .unionAll(allf.agg(sum(col("n_train")).as("n_train"), sum(col("n_eval")).as("n_eval"),
@@ -1056,7 +1053,7 @@ object Classifier {
     val key = StateStore.key("perceptron_traj_v1",
       docs.select(col("doc_id"), col("lang"), col("text")))
     StateStore.parquet(s, key, "w1", "w2", "w3") {
-      val pinned = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pinned = feats.cachedStageBoundary
       val t = perceptronTrajectory(pinned, labels, rounds = 3)
       pinned.unpersist()
       t
@@ -1100,7 +1097,7 @@ object Classifier {
        |FROM per GROUP BY 1, 2
        |ORDER BY lang, n_correct_rounds""".stripMargin) { (s, dir) =>
     val (docs, feats0, labels) = taskInputs(s, dir)
-    val feats = feats0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val feats = feats0.cachedStageBoundary
     val snaps = trainedTaskTrajectory(s, dir)
     val rnds = snaps.zipWithIndex.map { case (w, i) =>
       perceptronScore(feats, w).withColumn("r", lit(i + 1L))

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.sources.{StateStore, Tables}
 
@@ -90,7 +89,7 @@ object Graph {
     * round's node-relation join reuses the edge partitioning and
     * shuffles only the node-sized side. */
   private def copartitionOnce(raw: DataFrame, key: String): DataFrame = {
-    val p = raw.repartition(col(key)).persist(StorageLevel.MEMORY_AND_DISK)
+    val p = raw.repartition(col(key)).cachedStageBoundary
     p.count()
     raw.unpersist()
     p
@@ -104,9 +103,8 @@ object Graph {
     * side (one shuffle per round of the SMALL side, never the edges). */
   private[graft] def pinEdges(edges: DataFrame, key: String = "src"):
       (DataFrame, DataFrame, Long) = {
-    val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = raw.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val raw = edges.cachedStageBoundary
+    val deg = raw.groupBy(col("src")).agg(count(lit(1)).as("d")).cachedStageBoundary
     val n = deg.count() // also materializes both persists before round 1
     val e =
       if (n <= broadcastNodeBudget(edges.sparkSession)) raw
@@ -436,8 +434,7 @@ object Graph {
     // even when a caller passes ids with no edges (off-graph seeds are
     // ignored, not silently deducted from the teleport budget)
     val inGraph = seeds.distinct().select(col("seed").as("part"))
-      .join(nodes, Seq("part"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .join(nodes, Seq("part"), "left_semi").cachedStageBoundary
     val nS = inGraph.count()
     require(nS > 0, "personalizedPagerank needs at least one seed present in the graph")
     val tele = (150000L * nV) / nS
@@ -445,8 +442,7 @@ object Graph {
     // its own count anyway — a caller may personalize on half the graph
     val seeded = nodes.join(gateBroadcast(inGraph.withColumn("t", lit(tele)), nS),
         Seq("part"), "left")
-      .select(col("part"), coalesce(col("t"), lit(0L)).as("tele"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("part"), coalesce(col("t"), lit(0L)).as("tele")).cachedStageBoundary
     walkRounds(e, deg, seeded, seeded.select(col("part"), col("tele").as("rank")), rounds, nV)
   }
 
@@ -658,7 +654,7 @@ object Graph {
     * round co-partitions the edges once and later rounds shuffle only
     * the frontier. */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val raw = edges.cachedStageBoundary
     var e = raw
     var parted = false
     var (dist, frontierRows) = seeds.distinct()
@@ -896,9 +892,8 @@ object Graph {
     * redistribution adds no corpus-scale stage. Returns
     * (part, rank, out_degree) with out_degree = 0 for dangling nodes. */
   def pagerankDirected(edges: DataFrame, rounds: Int): DataFrame = {
-    val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = raw.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val raw = edges.cachedStageBoundary
+    val deg = raw.groupBy(col("src")).agg(count(lit(1)).as("d")).cachedStageBoundary
     val (nodes, nV) = raw.select(col("src").as("part"))
       .unionAll(raw.select(col("dst").as("part")))
       .distinct()
@@ -1247,7 +1242,7 @@ object Graph {
     * exit before `maxHops`. */
   private[graft] def bfsPerSeed(edges: DataFrame, seeds: DataFrame,
                                 maxHops: Int): DataFrame = {
-    val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val raw = edges.cachedStageBoundary
     var e = raw
     var parted = false
     var (dist, frontierRows) = seeds.distinct()
@@ -1511,8 +1506,7 @@ object Graph {
     * discipline), so every inner round shuffles only the shrinking
     * label relation. */
   def sccCyclic(edges: DataFrame, maxOuter: Int = 64, maxInner: Int = 300): DataFrame = {
-    val eAll = edges.select(col("src"), col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val eAll = edges.select(col("src"), col("dst")).distinct().cachedStageBoundary
     val selfLoops = eAll.filter(col("src") === col("dst"))
       .select(col("src").as("node")).distinct().stageBoundary
     var (sub, nSub) = eAll.filter(col("src") =!= col("dst")).stageBoundaryRows
@@ -1860,7 +1854,7 @@ object Graph {
     * degree. */
   def hits(edges: DataFrame, rounds: Int): DataFrame = {
     val s = edges.sparkSession
-    val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val raw = edges.cachedStageBoundary
     val (nodes, nV) = raw.select(col("src").as("part"))
       .unionAll(raw.select(col("dst").as("part")))
       .distinct()
@@ -1870,7 +1864,7 @@ object Graph {
       else {
         // build the dst copy while raw is still cached: copartitionOnce
         // unpersists raw as its last act
-        val d = raw.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
+        val d = raw.repartition(col("dst")).cachedStageBoundary
         d.count()
         (copartitionOnce(raw, "src"), d)
       }
@@ -1963,10 +1957,10 @@ object Graph {
     * function of the edge set). */
   def walkCorpus(edges: DataFrame, steps: Int, seedMod: Int,
                  adjDeg: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val e = edges.cachedStageBoundary
     val adjIdx = adjDeg.map(_._1).getOrElse(
         e.withColumn("rn", expr("row_number() OVER (PARTITION BY src ORDER BY dst)")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     adjIdx.count() // materialize once: every step's broadcast build reads it
     val deg = adjDeg.map(_._2).getOrElse(
       e.groupBy(col("src")).agg(count(lit(1)).as("d")))
@@ -2161,11 +2155,10 @@ object Graph {
     * previous node yet). */
   def node2vecWalks(edges: DataFrame, steps: Int, seedMod: Int,
                     adjDeg: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = edges.select(col("src"), col("dst")).distinct().cachedStageBoundary
     val adjIdx = adjDeg.map(_._1).getOrElse(
         e.withColumn("rn", expr("row_number() OVER (PARTITION BY src ORDER BY dst)")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     adjIdx.count()
     val deg = adjDeg.map(_._2).getOrElse(
       e.groupBy(col("src")).agg(count(lit(1)).as("d")))
@@ -2487,7 +2480,7 @@ object Graph {
        |FROM dc LEFT JOIN wi ON wi.community = dc.community, te
        |ORDER BY dc.n_members DESC, dc.community
        |LIMIT 20""".stripMargin) { (s, dir) =>
-    val e = copurchaseEdges(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
+    val e = copurchaseEdges(s, dir).cachedStageBoundary
     modularityOf(e, persistedLpaLabels(s, dir))
       .orderBy(col("n_members").desc, col("community"))
       .limit(20)
@@ -2591,7 +2584,7 @@ object Graph {
        |FROM al GROUP BY 1
        |ORDER BY betweenness_micro DESC, node
        |LIMIT 50""".stripMargin) { (s, dir) =>
-    val edges = copurchaseEdges(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = copurchaseEdges(s, dir).cachedStageBoundary
     val seeds = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .orderBy(col("src")).limit(10).select(col("src").as("seed"))
     betweennessSampled(edges, seeds)
@@ -2632,11 +2625,9 @@ object Graph {
     }
     val ex1 = expandFrom(b0, n0)
     val (b1, n1) = levelOf(ex1, Seq(b0))
-    val ex2 = expandFrom(b1, n1)
-      .persist(StorageLevel.MEMORY_AND_DISK) // forward b2 + backward d1
+    val ex2 = expandFrom(b1, n1).cachedStageBoundary // forward b2 + backward d1
     val (b2, n2) = levelOf(ex2, Seq(b0, b1))
-    val ex3 = expandFrom(b2, n2)
-      .persist(StorageLevel.MEMORY_AND_DISK) // forward b3 + backward d2
+    val ex3 = expandFrom(b2, n2).cachedStageBoundary // forward b3 + backward d2
     val (b3, _) = levelOf(ex3, Seq(b0, b1, b2))
     def deltaDown(ex: DataFrame, upper: DataFrame, upperDelta: Option[DataFrame],
                   checkpoint: Boolean): DataFrame = {
@@ -2698,7 +2689,7 @@ object Graph {
     * grow ~O(log n), so the constant's margin over the measured 7
     * covers a ~32× fixture). Returns (node, round_joined). */
   def misByHash(edges: DataFrame, maxRounds: Int = 40): DataFrame = {
-    val raw = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val raw = edges.cachedStageBoundary
     // fingerprint DISTINCT edges: the XOR cancels any even-multiplicity
     // row, so a duplicated one-directional edge would otherwise slip the
     // guard and then be silently skipped by the src-only seeding (ADVICE

@@ -1277,8 +1277,7 @@ object Layout {
       |FROM est e, ex
       |ORDER BY estimator""".stripMargin) { (s, dir) =>
     val c = Tables.orders(s, dir).groupBy(col("o_custkey").as("k"))
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("c")).cachedStageBoundary
     val ex = c.agg(sum(col("c") * col("c")).as("v"))
     val st = c.agg(sum(col("c")).as("n"), count(lit(1)).as("ndv"))
     val hs = c.select(((((col("k") % 3000000000L) * 2654435761L) % 4294967296L) % 32).as("b"), col("c"))
@@ -1337,8 +1336,7 @@ object Layout {
     val mem = cust.filter(col("key") % 2 === 0)
     val probe = cust.filter(col("key") % 2 === 1)
     val bits = mem.select(pos("b1").as("pos"))
-      .union(mem.select(pos("b2").as("pos"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .union(mem.select(pos("b2").as("pos"))).distinct().cachedStageBoundary
     val ph = probe.select(col("key"), pos("b1").as("p1"), pos("b2").as("p2"))
     val fp = ph
       .join(broadcast(bits.select(col("pos").as("p1"))), Seq("p1"))
@@ -1610,12 +1608,11 @@ object Layout {
     val o = Tables.orders(s, dir)
     def aud(p: String) = o.filter(col("o_orderpriority") === p)
       .select(col("o_custkey").as("k")).distinct()
-    val a = aud("1-URGENT").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val b = aud("2-HIGH").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ha = kmvHashes(a, "k").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hb = kmvHashes(b, "k").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hu = ha.union(hb).distinct().orderBy(col("h")).limit(64)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val a = aud("1-URGENT").cachedStageBoundary
+    val b = aud("2-HIGH").cachedStageBoundary
+    val ha = kmvHashes(a, "k").cachedStageBoundary
+    val hb = kmvHashes(b, "k").cachedStageBoundary
+    val hu = ha.union(hb).distinct().orderBy(col("h")).limit(64).cachedStageBoundary
     val uk = hu.agg(max(col("h")).as("rk"), count(lit(1)).as("kk"))
     val both = hu.join(broadcast(ha), "h").join(broadcast(hb), "h")
       .agg(count(lit(1)).as("nb"))
@@ -1665,8 +1662,7 @@ object Layout {
       |ORDER BY width_hex""".stripMargin) { (s, dir) =>
     import s.implicits._
     val h = Tables.documents(s, dir)
-      .select(md5(concat(lit("hw:"), col("doc_id").cast("string"))).as("m"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(md5(concat(lit("hw:"), col("doc_id").cast("string"))).as("m")).cachedStageBoundary
     val n = h.agg(count(lit(1)).as("n"))
     val w = broadcast(Seq(4, 6, 8, 12).toDF("k"))
     val grp = h.crossJoin(w)

@@ -671,8 +671,7 @@ object Multimodal {
       |FROM cand
       |WHERE bit_count(xor(ph_a, ph_b)) <= 12
       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-    val sig = phashTable(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sig = phashTable(s, dir).cachedStageBoundary
     val parts = sig.select(col("doc_id"), col("phash"),
         explode(expr("transform(sequence(0, 5), " +
           "p -> struct(p AS pidx, shiftright(phash, 10 * p) & 1023 AS pval))")).as("p"))
@@ -826,8 +825,7 @@ object Multimodal {
        |FROM dt LEFT JOIN agg USING (doc_id)
        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val aw = extractAudioWindows(s, dir).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val aw = extractAudioWindows(s, dir).toDF().cachedStageBoundary
     val dt = aw.groupBy(col("doc_id"))
       .agg(sum(col("sum_sq")).as("tot_sq"), sum(col("n_samples")).as("tot_n"),
         count(lit(1)).as("n_windows"))

@@ -414,7 +414,7 @@ object Similarity {
     * at cluster scale use a reliable checkpoint dir) so round r's plan
     * does not replay rounds 1..r-1. */
   def kmeansCentroidFrame(vectors: DataFrame, k: Int, iters: Int): DataFrame = {
-    val pinned = vectors.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pinned = vectors.cachedStageBoundary
     def update(assigned: DataFrame): DataFrame =
       assigned.select(col("cid"), posexplode(col("qv")).as(Seq("pos", "v")))
         .groupBy(col("cid"), col("pos"))
@@ -460,10 +460,6 @@ object Similarity {
     * train-then-assign (spec-pinned in AnnQualitySpec). */
   def saveCentroids(s: SparkSession, cents: Seq[(Long, Seq[Long])], path: String): Unit =
     centroidRelation(s, cents).repartition(1).write.mode("overwrite").parquet(path)
-
-  /** Frame-to-frame persist: the large-k path (no driver round-trip). */
-  def saveCentroidFrame(frame: DataFrame, path: String): Unit =
-    frame.select(col("cid"), col("vec")).write.mode("overwrite").parquet(path)
 
   def loadCentroidFrame(s: SparkSession, path: String): DataFrame =
     Tables.parquet(s, path)
@@ -864,7 +860,7 @@ object Similarity {
     * lowest vec_ids' slices — same floor-mean, same tie-breaks as
     * [[kmeansCentroidFrame]]). Returns (m, cid, vec). */
   def pqTrainCodebooks(v: DataFrame, k: Int = PqK, iters: Int = PqIters): DataFrame = {
-    val sub = pqSub(v).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sub = pqSub(v).cachedStageBoundary
     def update(assigned: DataFrame): DataFrame =
       assigned.select(col("m"), col("cid"), posexplode(col("sv")).as(Seq("pos", "sv_v")))
         .groupBy(col("m"), col("cid"), col("pos"))
@@ -942,7 +938,7 @@ object Similarity {
          |LIMIT 10""".stripMargin) { (s, dir) =>
       val v = quantizedLong(s, dir)
       val books = pqTrainCodebooks(v)
-      val sub = pqSub(v).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sub = pqSub(v).cachedStageBoundary
       val enc = pqAssign(sub, books).select(col("vec_id"), col("m"), col("cid"))
       val lut = sub.filter(col("vec_id") === QueryVec)
         .select(col("m"), col("sv"))
@@ -1021,7 +1017,7 @@ object Similarity {
       graft.functions.CosineSimilarity.register(s)
       val v = quantizedLong(s, dir)
       val books = pqTrainCodebooks(v)
-      val sub = pqSub(v).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sub = pqSub(v).cachedStageBoundary
       val enc = pqAssign(sub, books).select(col("vec_id"), col("m"), col("cid"))
       val lut = sub.filter(col("vec_id") === QueryVec)
         .select(col("m"), col("sv"))
@@ -1112,7 +1108,7 @@ object Similarity {
       .select(col("j").as("i"), col("i").as("j"), col("gram")))
     val g = full.select(col("i"), col("j"),
         expr("CAST(FLOOR(CAST(gram AS DOUBLE) / 1000000000.0D) AS BIGINT)").as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     var vec = g.select(col("i").as("dim")).distinct()
       .withColumn("w", lit(1000000L))
     for (_ <- 1 to rounds) {
@@ -1203,15 +1199,13 @@ object Similarity {
     val s = qv.sparkSession
     import s.implicits._
     def idot(a: String, b: String) = relDot(a, b)
-    val cand = cand0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = cand0.cachedStageBoundary
     val candV = cand.join(qv, "vec_id")
     val sim = candV.select(col("vec_id").as("i"), col("qv").as("vi"))
       .crossJoin(broadcast(candV.select(col("vec_id").as("j"), col("qv").as("vj"))))
       .filter(col("i") =!= col("j"))
       .withColumn("s", idot("vi", "vj"))
-      .select(col("i"), col("j"), col("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("i"), col("j"), col("s")).cachedStageBoundary
     val first = cand.orderBy(col("rel").desc, col("vec_id")).limit(1).collect()(0)
     var picks = Vector((1, first.getLong(0), first.getLong(1), 2L * first.getLong(1)))
     for (r <- 2 to k) {
@@ -1713,8 +1707,7 @@ object Similarity {
         (coalesce(lit(1.0) / (lit(60) + col("lex_rank")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(60) + col("sem_rank")), lit(0.0))).as("raw"))
       .withColumn("rnk", row_number().over(Window.orderBy(col("raw").desc, col("doc_id"))))
-      .filter(col("rnk") <= 10)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("rnk") <= 10).cachedStageBoundary
     val qv = quantizeVectors(emb)
     val qrow = qv.filter(col("vec_id") === QueryVec).select(col("qv").as("tq"))
     val rel = qv.join(pool.select(col("doc_id").as("vec_id")), "vec_id")
@@ -1767,8 +1760,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val v = quantizedLong(s, dir)
     val assigned = assignToCentroids(v, trainedCentroids(s, dir, k = 8, iters = 2))
-      .select(col("vec_id"), col("qv"), col("cid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("vec_id"), col("qv"), col("cid")).cachedStageBoundary
     val a = assigned.select(col("vec_id").as("va"), col("qv").as("qa"), col("cid"))
     val b = assigned.select(col("vec_id").as("vb"), col("qv").as("qb"), col("cid"))
     a.join(b, "cid").filter(col("va") =!= col("vb"))
@@ -1935,8 +1927,7 @@ object Similarity {
     val assigned = assignToCentroids(v, trainedCentroids(s, dir, k = 8, iters = 2))
       .select(col("vec_id"), col("cid"))
     val m = Tables.embeddings(s, dir).join(assigned, "vec_id")
-      .select(col("vec_id"), col("cid"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("vec_id"), col("cid"), col("embedding")).cachedStageBoundary
     val ev = m.filter(col("vec_id") % 50 === 0)
       .select(col("cid"), col("embedding").as("ee"))
     val tr = m.filter(col("vec_id") % 50 =!= 0)
@@ -2006,7 +1997,7 @@ object Similarity {
       .select(col("query_id"), col("doc_id"),
         expr("aggregate(zip_with(qv, query_v, (x, y) -> x * y), 0L, (a, x) -> a + x)").as("dot_full"),
         expr("aggregate(zip_with(slice(qv, 1, 16), slice(query_v, 1, 16), (x, y) -> x * y), 0L, (a, x) -> a + x)").as("dot_t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     def top(dcol: String) = dots
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col(dcol).desc, col("doc_id"))))
@@ -2109,8 +2100,7 @@ object Similarity {
   def kcenterGreedy(vectors: DataFrame, k: Int): DataFrame = {
     val s = vectors.sparkSession
     import s.implicits._
-    val v = vectors.select(col("vec_id"), col("qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = vectors.select(col("vec_id"), col("qv")).cachedStageBoundary
     val seed = v.orderBy(col("vec_id")).limit(1)
     var picks = Vector((0, seed.collect()(0).getLong(0), 0L))
     // running min-distance to the selected set, updated per round
@@ -2395,8 +2385,7 @@ object Similarity {
        |  CAST(COALESCE(ov.n_overlap, 0) * 100000 AS BIGINT) AS recall_micro
        |FROM qs LEFT JOIN ov ON ov.qid = qs.qid
        |ORDER BY query_vec""".stripMargin) { (s, dir) =>
-    val n = withNorm(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val n = withNorm(s, dir).cachedStageBoundary
     val qs = n.filter(col("vec_id") % 97 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
     val byQ = Window.partitionBy(col("qid"))
@@ -2409,8 +2398,7 @@ object Similarity {
       """SQRT(aggregate(transform(codes, p ->
         |  (mn + CAST(p AS DOUBLE) * scale) * (mn + CAST(p AS DOUBLE) * scale)),
         |CAST(0 AS DOUBLE), (a, x) -> a + x))""".stripMargin)
-    val dq = quantized(s, dir).withColumn("dnrm", dqNorm)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dq = quantized(s, dir).withColumn("dnrm", dqNorm).cachedStageBoundary
     val qq = dq.filter(col("vec_id") % 97 === 0)
       .select(col("vec_id").as("qid"), col("mn").as("qmn"), col("scale").as("qsc"),
         col("codes").as("qc"), col("dnrm").as("qdn"))

@@ -519,8 +519,7 @@ object StreamingOps {
         val ded = gated.withColumn("h", md5(col("text")))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1).drop("rn")
-          .join(s.read.parquet(stateDir), Seq("h"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .join(s.read.parquet(stateDir), Seq("h"), "left_anti").cachedStageBoundary
         try {
           val (ov, gramsHandle) = TextOps.decontaminateWithHandle(
             ded.select(col("doc_id"), col("text")), evalDocs, 5, 0.5,
@@ -580,8 +579,7 @@ object StreamingOps {
         // capture provenance BEFORE re-basing: input_file_name() resolves
         // against the file scan, not against a re-created frame
         val withFile = batch.withColumn("src_file", input_file_name())
-        val arrived = s.createDataFrame(withFile.rdd, withFile.schema)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val arrived = s.createDataFrame(withFile.rdd, withFile.schema).cachedStageBoundary
         try {
           val vs = snapshotVersions(root, "files/_SUCCESS")
           val (state, seen) = vs.lastOption match {
@@ -679,8 +677,7 @@ object StreamingOps {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val withFile = batch.withColumn("src_file", input_file_name())
-        val arrived = s.createDataFrame(withFile.rdd, withFile.schema)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val arrived = s.createDataFrame(withFile.rdd, withFile.schema).cachedStageBoundary
         try {
           val vs = snapshotVersions(root, "files/_SUCCESS")
           val (state, seen) = vs.lastOption match {
@@ -968,8 +965,7 @@ object StreamingOps {
       .writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val b = s.createDataFrame(batch.rdd, batch.schema)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val b = s.createDataFrame(batch.rdd, batch.schema).cachedStageBoundary
         try {
           val base = readOffset()
           onBatch(id, TextOps.packSequences(
@@ -1047,8 +1043,7 @@ object StreamingOps {
             Window.partitionBy(col("domain")).orderBy(col("doc_id"))))
           .join(broadcast(used), Seq("domain"), "left")
           .filter(coalesce(col("used"), lit(0L)) + col("rk") <= cap)
-          .select(col("domain"), col("doc_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select(col("domain"), col("doc_id")).cachedStageBoundary
         try {
           onBatch(id, admitted)
           // append LAST: the admission decision anti-depends on the
@@ -1093,8 +1088,7 @@ object StreamingOps {
         val fresh = b.join(log.select(col("vec_id")), Seq("vec_id"), "left_anti")
         val assigned = Similarity.assignToCentroids(
             Similarity.quantizeVectors(fresh), cents)
-          .select(col("vec_id"), col("cid"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select(col("vec_id"), col("cid")).cachedStageBoundary
         try {
           val counts = log.select(col("cid")).union(assigned.select(col("cid")))
             .groupBy(col("cid")).agg(count(lit(1)).as("n"))
@@ -1203,9 +1197,9 @@ object StreamingOps {
         val vocab = df2.count()
         // cache the merged frames so the publish doesn't re-read the
         // state dirs mid-rename
-        val tfC = tf2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val dlC = dl2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val dfC = df2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val tfC = tf2.cachedStageBoundary
+        val dlC = dl2.cachedStageBoundary
+        val dfC = df2.cachedStageBoundary
         try {
           tfC.count(); dlC.count(); dfC.count()
           publish(tfC, dlC, dfC)

@@ -1413,7 +1413,7 @@ object Temporal {
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("event_type")).orderBy(col("late_us"), col("event_id"))))
       .withColumn("n", count(lit(1)).over(Window.partitionBy(col("event_type"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     val agg = r.groupBy(col("event_type"))
       .agg(max(col("n")).as("n_events"),
         sum(when(col("late_us") > 0, 1L).otherwise(0L)).as("n_late"),
@@ -1481,8 +1481,7 @@ object Temporal {
     val daily = Tables.events(s, dir)
       .groupBy(col("event_type"),
         expr("unix_micros(date_trunc('day', ts)) div 86400000000L").as("d"))
-      .agg(count(lit(1)).as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("y")).cachedStageBoundary
     val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
       .collect()(0)
     val (lo, hi) = (span.getLong(0), span.getLong(1))
@@ -1492,8 +1491,7 @@ object Temporal {
       .crossJoin(broadcast(s.range(lo, hi + 1).toDF("d")))
     val g = grid.join(daily, Seq("event_type", "d"), "left")
       .select(col("event_type"), (col("d") - lo + 1).as("t"),
-        coalesce(col("y"), lit(0L)).as("y"), lit(hi - lo + 1).as("nt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        coalesce(col("y"), lit(0L)).as("y"), lit(hi - lo + 1).as("nt")).cachedStageBoundary
     def lagJoin(k: Int) = g.select(col("event_type"), col("t"), col("y"), col("nt"))
       .join(g.select(col("event_type"), (col("t") + k).as("t"), col("y").as("py")),
         Seq("event_type", "t"))
@@ -1567,8 +1565,7 @@ object Temporal {
     val daily = Tables.events(s, dir)
       .groupBy(col("event_type"),
         expr("unix_micros(date_trunc('day', ts)) div 86400000000L").as("d"))
-      .agg(count(lit(1)).as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("y")).cachedStageBoundary
     val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi")).collect()(0)
     val (lo, hi) = (span.getLong(0), span.getLong(1))
     val grid = daily.select(col("event_type")).distinct()
@@ -1689,8 +1686,7 @@ object Temporal {
     val daily = Tables.events(s, dir)
       .groupBy(col("event_type"),
         expr("unix_micros(date_trunc('day', ts)) div 86400000000L").as("d"))
-      .agg(count(lit(1)).as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("y")).cachedStageBoundary
     val grid = daily.select(col("event_type")).distinct()
       .crossJoin(broadcast(daily.select(col("d")).distinct()))
     val g = grid.join(daily, Seq("event_type", "d"), "left")

@@ -397,8 +397,7 @@ object TextOps {
     val need = docs.select(col("doc_id"),
       (size(split(col("text"), " ")) + 1).cast("long").as("need"))
     val parted = need.repartitionByRange(nParts, col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("pid", spark_partition_id()).cachedStageBoundary
     val local = parted.withColumn("run",
       sum(col("need")).over(Window.partitionBy(col("pid")).orderBy(col("doc_id"))))
     val totals = parted.groupBy(col("pid")).agg(sum(col("need")).as("tot"))
@@ -568,8 +567,7 @@ object TextOps {
     var handle: Option[DataFrame] = None
     val Seq(tf, dl, df) = StateStore.parquet(s, key, "tf", "dl", "df") {
       val toks = Tables.fanOut(docs)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("word")).cachedStageBoundary
       handle = Some(toks)
       Seq(
         toks.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf")),
@@ -606,7 +604,7 @@ object TextOps {
       batch: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val fresh = batch.join(dl.select(col("doc_id")), Seq("doc_id"), "left_anti")
     val toks = fresh.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     val btf = toks.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
     val bdl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
     val bdf = toks.distinct().groupBy(col("word")).agg(count(lit(1)).as("df"))
@@ -949,8 +947,7 @@ object TextOps {
     val roles = phrases.select(col("phrase"), col("w1").as("word"), lit(1).as("role"))
       .union(phrases.select(col("phrase"), col("w2").as("word"), lit(2).as("role")))
     val hits = pos.join(broadcast(roles), "word")
-      .select(col("phrase"), col("role"), col("doc_id"), col("pos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("phrase"), col("role"), col("doc_id"), col("pos")).cachedStageBoundary
     val p1 = hits.filter(col("role") === 1).select(col("phrase"), col("doc_id"), col("pos"))
     val p2 = hits.filter(col("role") === 2)
       .select(col("phrase"), col("doc_id"), col("pos").as("pos2"))
@@ -1014,8 +1011,7 @@ object TextOps {
     val roles = phrases.select(col("phrase"), col("w1").as("word"), lit(1).as("role"))
       .union(phrases.select(col("phrase"), col("w2").as("word"), lit(2).as("role")))
     val hits = pos.join(broadcast(roles), "word")
-      .select(col("phrase"), col("role"), col("doc_id"), col("pos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("phrase"), col("role"), col("doc_id"), col("pos")).cachedStageBoundary
     val p1 = hits.filter(col("role") === 1).select(col("phrase"), col("doc_id"), col("pos"))
     val p2 = hits.filter(col("role") === 2)
       .select(col("phrase"), col("doc_id"), col("pos").as("pos2"))
@@ -1263,8 +1259,7 @@ object TextOps {
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("source")).orderBy(col("doc_id"))).cast("long"))
     val samp = sc.filter(col("rn") <= 200)
-      .select(col("source"), col("rn"), col("score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("source"), col("rn"), col("score")).cachedStageBoundary
     val m = samp.groupBy(col("source")).agg(count(lit(1)).as("m"))
     val grid = m
       .select(col("source"), col("m"), explode(expr("sequence(1L, 50L)")).as("r"))
@@ -1335,13 +1330,11 @@ object TextOps {
     val (tf, dl, df) = postingsIndex(s, Tables.documents(s, dir))
     val stats = dl.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
     val qt = tf.filter(col("doc_id") % 100 === 0)
-      .select(col("doc_id").as("query_id"), col("word"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id").as("query_id"), col("word")).cachedStageBoundary
     // both passes score against the same length-joined posting relation
     // — materialize it once so the doc_id-keyed tf⋈dl shuffle is paid
     // once, not per pass
-    val posting = tf.join(dl, Seq("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val posting = tf.join(dl, Seq("doc_id")).cachedStageBoundary
     val term = log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
       (col("tf") * lit(2.2)) /
       (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
@@ -1449,8 +1442,7 @@ object TextOps {
       .withColumn("v2", coalesce(col("v2"), lit(-1L)))
       .join(mark, "doc_id")
       .withColumn("m", when(col("v1") + col("v2") + col("v3") > 0, 1L)
-        .when(col("v1") + col("v2") + col("v3") < 0, -1L).otherwise(0L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .when(col("v1") + col("v2") + col("v3") < 0, -1L).otherwise(0L)).cachedStageBoundary
     // a never-firing LF (or an all-abstain majority) gets weight 0, not a
     // division error — the smoke corpus has no marker word at all
     val w = maj.agg(
@@ -1793,7 +1785,7 @@ object TextOps {
       .select(col("doc_id"), (col("doc_id") * 1000 + col("k")).as("pid"),
         expr(s"slice(toks, CAST(k * $PassageStride + 1 AS INT), CAST(LEAST($PassageWidth, len - k * $PassageStride) AS INT))").as("ptoks"))
     val ptok = pass.select(col("doc_id"), col("pid"), explode(col("ptoks")).as("word"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     val ptf = ptok.groupBy(col("doc_id"), col("pid"), col("word")).agg(count(lit(1)).as("tf"))
     val pdl = ptok.groupBy(col("pid")).agg(count(lit(1)).as("dl"))
     val pdf = ptok.select(col("pid"), col("word")).distinct()
@@ -1914,7 +1906,7 @@ object TextOps {
       .withColumn("cosine", expr("cosine_sim_native(embedding, qv)"))
       .withColumn("sem_rank", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("doc_id"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     val truth = srankAll.filter(col("sem_rank") <= 10)
       .select(col("query_id"), col("doc_id"))
     val legs = brank
@@ -1983,8 +1975,7 @@ object TextOps {
       |  UNION ALL SELECT 'n_risky_qi_classes', CAST(SUM(CASE WHEN n < 5 THEN 1 ELSE 0 END) AS BIGINT) FROM qi)
       |ORDER BY metric""".stripMargin) { (s, dir) =>
     import s.implicits._
-    val docs = Tables.fanOut(Tables.documents(s, dir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = Tables.fanOut(Tables.documents(s, dir)).cachedStageBoundary
     val per = docs.withColumn("toks", split(col("text"), " "))
       .select(
         expr("CAST(FLOOR((CAST(size(array_distinct(toks)) AS DOUBLE) / size(toks)) * (1.0D - CAST(size(filter(toks, x -> x = 'the' OR x = 'a')) AS DOUBLE) / size(toks)) * LEAST(1.0D, CAST(size(toks) AS DOUBLE) / 50.0D) * 1000000.0D) AS BIGINT)").as("q_micro"),
@@ -2324,8 +2315,7 @@ object TextOps {
       |FROM o JOIN r USING (lang) JOIN c USING (source) CROSS JOIN n
       |ORDER BY lang, source""".stripMargin) { (s, dir) =>
     val o = Tables.documents(s, dir)
-      .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("obs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("obs")).cachedStageBoundary
     val r = o.groupBy(col("lang")).agg(sum(col("obs")).as("rt"))
     val c = o.groupBy(col("source")).agg(sum(col("obs")).as("ct"))
     val n = o.agg(sum(col("obs")).as("total"))
@@ -2558,8 +2548,7 @@ object TextOps {
       .select(col("doc_id"), explode(expr(
         s"transform(sequence(1, size(toks) - ${n - 1}), i -> concat_ws(' ', slice(toks, i, $n)))")).as("g"))
       .distinct()
-    val evalG = grams(evalDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val evalG = grams(evalDocs).cachedStageBoundary
     graft.functions.BloomPrune.register(evalDocs.sparkSession)
     def build = graft.functions.BloomPrune.buildFilter(
       evalG.select(col("g")).distinct(), "g",
@@ -2758,8 +2747,7 @@ object TextOps {
       .filter(size(col("toks")) >= n)
       .select(explode(expr(
         s"transform(sequence(1, size(toks) - ${n - 1}), i -> concat_ws(' ', slice(toks, i, $n)))")).as("g"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct().cachedStageBoundary
     graft.functions.BloomPrune.register(s)
     def build = graft.functions.BloomPrune.buildFilter(
       refG, "g", expectedItems = 1L << 20, fpp = 0.01)
@@ -3498,8 +3486,7 @@ object TextOps {
       |ORDER BY src_a, src_b""".stripMargin) { (s, dir) =>
     val tf = docsWithTokens(s, dir)
       .select(col("source"), explode(col("toks")).as("w"))
-      .groupBy(col("source"), col("w")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("source"), col("w")).agg(count(lit(1)).as("tf")).cachedStageBoundary
     val nrm = tf.groupBy(col("source"))
       .agg(sqrt(sum(col("tf") * col("tf")).cast("double")).as("nrm"))
     val dots = tf.select(col("source").as("src_a"), col("w"), col("tf").as("tfa"))
@@ -3548,7 +3535,7 @@ object TextOps {
     val sh = docsWithTokens(s, dir)
       .select(col("doc_id"), explode(expr(
         "CASE WHEN size(toks) >= 3 THEN transform(sequence(0, size(toks) - 3), i -> concat_ws(' ', slice(toks, i + 1, 3))) ELSE array() END")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     val df = sh.groupBy(col("sh")).agg(countDistinct(col("doc_id")).as("df"))
     sh.join(df, "sh")
       .groupBy(col("doc_id"))
@@ -5056,7 +5043,7 @@ object TextOps {
        |ORDER BY p.shard_id, p.version""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
     val log = commitLog(Tables.documents(s, dir).select(col("doc_id"), col("text")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     val puts = log.filter(col("action") === "put")
       .select(col("version"), col("shard_id"), col("file_hash"))
     val asOf = s.range(4, 6).select(col("id").as("as_of"))
@@ -5574,8 +5561,7 @@ object TextOps {
     val aug = raw.unionByName(raw.filter(col("doc_id") % 31 === 0)
       .select((col("doc_id") + 3000000L).as("doc_id"), lit("reingest").as("source"),
         concat(array(lit("copy"), lit("notice:")), col("toks")).as("toks")))
-    val base = aug.filter(size(col("toks")) >= 8)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = aug.filter(size(col("toks")) >= 8).cachedStageBoundary
     val sh = base.select(col("doc_id"), posexplode(expr(
         "transform(sequence(0, size(toks) - 5), i -> " +
         "CAST(conv(substring(md5(concat_ws(' ', slice(toks, i + 1, 5))), 1, 12), 16, 10) AS BIGINT))")))
@@ -5585,14 +5571,12 @@ object TextOps {
       .withColumn("wmin", min(col("h")).over(byP.rowsBetween(0, 3)))
       .withColumn("n_sh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
       .filter(col("p") <= col("n_sh") - 4)
-      .select(col("doc_id"), col("wmin").as("h")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("wmin").as("h")).distinct().cachedStageBoundary
     // hot-fingerprint cap: a boilerplate shingle shared by thousands of
     // docs must not quadratically explode the candidate join (q102)
     val hd = fp.groupBy(col("h")).agg(count(lit(1)).as("dfh"))
       .filter(col("dfh") <= 50).select(col("h"))
-    val fpc = fp.join(hd, "h")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fpc = fp.join(hd, "h").cachedStageBoundary
     val cnt = fpc.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
     val srcRel = base.select(col("doc_id"), col("source"))
     val pairs = fpc.select(col("doc_id").as("doc_a"), col("h"))
@@ -5829,8 +5813,7 @@ object TextOps {
         Window.partitionBy(col("lang")).orderBy(col("c").desc, col("word"))))
       .withColumn("k", least(lit(100L), count(lit(1)).over(
         Window.partitionBy(col("lang"))) - 1))
-      .filter(col("k") >= 10 && col("rk") <= col("k") + 1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("k") >= 10 && col("rk") <= col("k") + 1).cachedStageBoundary
     val kv = r.filter(col("rk") === col("k") + 1).select(col("lang"), col("c").as("ck"))
     r.filter(col("rk") <= col("k")).select(col("lang"), col("c"))
       .join(kv, "lang")
@@ -5895,7 +5878,7 @@ object TextOps {
           .as("half"),
         least(expr("n_chars DIV 200"), lit(9L)).as("bin"))
       .groupBy(col("source"), col("half"), col("bin")).agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     val tot = c.groupBy(col("source"), col("half")).agg(sum(col("n")).as("t"))
     val grid = c.select(col("source")).distinct()
       .crossJoin(broadcast((0L to 9L).toDF("bin")))
@@ -6095,8 +6078,7 @@ object TextOps {
         explode(expr(
           // CASE guard: Spark's sequence(1, 0) counts DOWN, not empty
           "CASE WHEN length(text) >= 3 THEN transform(sequence(1, length(text) - 2), i -> substring(text, i, 3)) ELSE array() END"))
-          .as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .as("t")).cachedStageBoundary
     // the trained trigram model persists by corpus fingerprint (the
     // q127/q132 train-once device): markers derive from doc_id, so the
     // corpus fingerprint covers them
@@ -6105,13 +6087,12 @@ object TextOps {
     val train = StateStore.parquet(s, key, "model") {
       Seq(tri.filter(col("part") === 0)
         .groupBy(col("lang"), col("t")).agg(count(lit(1)).as("c")))
-    }.head.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }.head.cachedStageBoundary
     val tot = train.groupBy(col("lang")).agg(sum(col("c")).as("tot"))
     val vocab = train.agg(countDistinct(col("t")).as("v"))
     val test = tri.filter(col("part") === 1)
       .groupBy(col("doc_id"), col("lang").as("true_lang"), col("t"))
-      .agg(count(lit(1)).as("m"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("m")).cachedStageBoundary
     val tm = test.groupBy(col("doc_id")).agg(sum(col("m")).as("mm"))
     val hit = test.join(broadcast(train.withColumnRenamed("lang", "mlang")), "t")
       .groupBy(col("doc_id"), col("mlang").as("lang"))
@@ -6190,10 +6171,8 @@ object TextOps {
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .toDF("doc_id", "p", "word")
       .select(col("doc_id"), expr("p DIV 20").as("blk"), col("word"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bsz = bw.groupBy(col("doc_id"), col("blk")).agg(count(lit(1)).as("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct().cachedStageBoundary
+    val bsz = bw.groupBy(col("doc_id"), col("blk")).agg(count(lit(1)).as("sz")).cachedStageBoundary
     val inter = bw.select(col("doc_id"), col("blk").as("b0"), col("word"))
       .join(bw.select(col("doc_id"), (col("blk") - 1).as("b0"), col("word")),
         Seq("doc_id", "b0", "word"))
@@ -6203,8 +6182,7 @@ object TextOps {
         Seq("doc_id", "b0"))
       .join(inter, Seq("doc_id", "b0"), "left")
       .select(col("doc_id"), col("b0"), coalesce(col("ix"), lit(0L)).as("ix"),
-        (col("sz0") + col("sz1") - coalesce(col("ix"), lit(0L))).as("un"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (col("sz0") + col("sz1") - coalesce(col("ix"), lit(0L))).as("un")).cachedStageBoundary
     val byDoc = Window.partitionBy(col("doc_id"))
     val med = bound
       .withColumn("rk", row_number().over(
@@ -6341,12 +6319,11 @@ object TextOps {
     val seg = toks.withColumn("pid",
       sum(col("stop")).over(Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
     val mem = seg.filter(col("stop") === 0)
-      .select(col("doc_id"), col("pid"), col("pos"), col("word"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("pid"), col("pos"), col("word")).cachedStageBoundary
     val plen = mem.groupBy(col("doc_id"), col("pid"))
       .agg(count(lit(1)).as("plen"),
         concat_ws(" ", expr("transform(array_sort(collect_list(struct(pos, word))), x -> x.word)")).as("phrase"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     val wsc = mem.join(plen.select(col("doc_id"), col("pid"), col("plen")), Seq("doc_id", "pid"))
       .groupBy(col("word"))
       .agg(expr("CAST(SUM(plen) * 1000000L DIV COUNT(*) AS BIGINT)").as("ws"))

@@ -81,19 +81,18 @@ object Tokenizer {
     * Intermediate inventories stay persisted — [[q220MergeSweep]] reads
     * all of them; [[bpeTrain]] reads only the last. */
   def bpeTrajectory(docs: DataFrame, rounds: Int): Seq[DataFrame] = {
-    import org.apache.spark.storage.StorageLevel
     val words = docs.select(explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
     val w0 = words.withColumn("syms",
         expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .cachedStageBoundary
     val traj = Seq.newBuilder[DataFrame]
     traj += w0
     var w = w0
     for (_ <- 1 to rounds)
       bestPair(w).foreach { case (s1, s2, _) =>
-        val next = mergeRound(w, s1, s2).persist(StorageLevel.MEMORY_AND_DISK)
+        val next = mergeRound(w, s1, s2).cachedStageBoundary
         next.count() // materialize before the parent's plan goes cold
         w = next
         traj += next

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Shared devices for every operator registry in `graft.ops`. */
 package object ops {
@@ -32,22 +33,24 @@ package object ops {
 
   /** Registry of every RDD a stage boundary has pinned: the block-manager
     * blocks of `local` mode and the checkpoint files of `reliable` mode.
-    * `spark.catalog.clearCache()` frees Dataset persists but NOT
+    * `spark.catalog.clearCache()` frees Dataset persists (every
+    * [[StageBoundaryOps.cachedStageBoundary]]) but NOT
     * localCheckpoint blocks — those wait for the ContextCleaner to GC the
     * unreferenced RDD objects, which over a 396-query sweep on a large
     * driver heap can lag far behind (ADVICE r10) — and reliable
     * checkpoint files outlive the RDD unless the cleaner is configured
     * to remove them. [[releaseStageBoundaries]] drains the registry,
-    * unpersists explicitly and deletes the checkpoint files. The RDD
+    * unpersists explicitly, deletes the checkpoint files and then clears
+    * the cache, so one call frees every pin the device made. The RDD
     * references are WEAK so an un-drained registry (tests, ad-hoc
     * sessions) never blocks the GC path that used to be the only
     * release; the checkpoint file path is held strongly so a collected
     * RDD still gets its files deleted.
     *
     * Sequential-use contract: the registry is process-global, not scoped
-    * to a query. A drain releases EVERY boundary registered since the
+    * to a query. A drain releases EVERY pin registered since the
     * previous drain, whichever query made it, so a caller may only drain
-    * when no query that could still read a boundary is running — the
+    * when no query that could still read a pin is running — the
     * harnesses drain between queries, one query at a time. Concurrent
     * queries in one JVM must not call [[releaseStageBoundaries]] while
     * another is in flight. */
@@ -71,11 +74,11 @@ package object ops {
     catch { case _: Throwable => () }
 
   /** Unpersist every stage-boundary block, and delete every reliable
-    * checkpoint directory, registered since the last drain (harness
-    * calls this between queries, OUTSIDE any timed region; see the
-    * sequential-use contract on the registry). Blocks are dropped
-    * non-blocking; a boundary DataFrame must not be re-read after its
-    * query's action completes. */
+    * checkpoint directory, registered since the last drain, then clear
+    * the cache of every cached frame (harness calls this between
+    * queries, OUTSIDE any timed region; see the sequential-use contract
+    * on the registry). Blocks are dropped non-blocking; a pinned
+    * DataFrame must not be re-read after its query's action completes. */
   def releaseStageBoundaries(): Unit = {
     quietRddLogger
     var pin = boundaryRdds.poll()
@@ -93,6 +96,8 @@ package object ops {
       }
       pin = boundaryRdds.poll()
     }
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(_.catalog.clearCache())
   }
 
   private def register(out: DataFrame): DataFrame = {
@@ -134,6 +139,13 @@ package object ops {
       * registers it, so [[releaseStageBoundaries]] frees its blocks like
       * an eager boundary's. */
     def lazyStageBoundary: DataFrame = register(df.localCheckpoint(false))
+
+    /** The lazy cached boundary: `persist(MEMORY_AND_DISK)`, the one
+      * storage level the engine caches at. No job now; lineage is kept,
+      * so the frame plans as an `InMemoryRelation` and a lost block
+      * recomputes. [[releaseStageBoundaries]] uncaches it; a caller may
+      * still `unpersist()` early (a streaming trigger's `finally`). */
+    def cachedStageBoundary: DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
 
     /** [[stageBoundary]] plus the boundary's row count, without a second
       * job: a `Dataset.observe` rides the boundary's own eager action and

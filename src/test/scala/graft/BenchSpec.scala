@@ -25,4 +25,18 @@ class BenchSpec extends SparkSpec {
     assert(Bench.failedJson(names, Some(5)) ==
       """"n_failed":9,"failed_sample":["q1","q2","q3","q4","q5"]""")
   }
+
+  test("the settle loop exits at the idle pin or once two successive probes agree within 25%") {
+    // an idle 4-core box: warm probes above the 0.15 s pin, flat within noise
+    assert(Bench.settled(0.192, 0.219))
+    assert(Bench.settled(0.234, 0.192))
+    assert(Bench.settled(1.00, 1.25))
+    // at or below the pin: settled however far the previous probe was
+    assert(Bench.settled(0.253, 0.15))
+    assert(Bench.settled(0.30, 0.09))
+    // still winding down (or spiking) above the pin: keep settling
+    assert(!Bench.settled(0.15, 0.253))
+    assert(!Bench.settled(0.294, 0.216))
+    assert(!Bench.settled(1.00, 1.26))
+  }
 }

@@ -1,12 +1,19 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
 import graft.ops._
 
 /** The pluggable stage-boundary materializer (r11): conf-selected
   * local/reliable/none modes, identical data under every mode, plan
-  * truncation under the materializing modes, and the explicit
-  * block-release path the harnesses call between queries. */
+  * truncation under the materializing modes, the lazy cached variant,
+  * and the explicit release path the harnesses call between queries. */
 class StageBoundarySpec extends SparkSpec {
   import spark.implicits._
 
@@ -139,5 +146,53 @@ class StageBoundarySpec extends SparkSpec {
     assert(LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD").getLevel == Level.ERROR)
     // the rest of the package keeps the session's level
     assert(LogManager.getLogger("org.apache.spark.rdd.HadoopRDD").getLevel != Level.ERROR)
+  }
+
+  test("the cached boundary runs no job and plans as persist(MEMORY_AND_DISK) does") {
+    releaseStageBoundaries()
+    val in = df.filter(col("k") =!= 3)
+    val (out, jobs) = countJobs(in.cachedStageBoundary)
+    assert(jobs == 0, s"a lazy cache must not run a job when called, saw $jobs")
+    assert(out eq in)
+    val rel = out.queryExecution.withCachedData.collectFirst { case r: InMemoryRelation => r }
+    assert(rel.map(_.cacheBuilder.storageLevel) == Some(StorageLevel.MEMORY_AND_DISK))
+    // lineage is kept: the cached plan is the frame's own, not a LogicalRDD
+    assert(out.queryExecution.logical eq in.queryExecution.logical)
+    assert(out.collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L).filter(_ % 7 != 3))
+    releaseStageBoundaries()
+  }
+
+  test("release alone uncaches a cached boundary nothing references any more") {
+    val sc = spark.sparkContext
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    releaseStageBoundaries()
+    val before = sc.getPersistentRDDs.keySet
+    // the frame is unreachable once this returns; its cache entry is not
+    def pinAndDrop(): Long = df.filter(col("k") =!= 5).cachedStageBoundary.count()
+    assert(pinAndDrop() == 86L)
+    System.gc()
+    assert(!cache.isEmpty, "a dropped Dataset must not take its cache entry with it")
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, "the count materialized the cache")
+    releaseStageBoundaries()
+    assert(cache.isEmpty, "release must empty the CacheManager without clearCache")
+    def still = sc.getPersistentRDDs.keySet -- before
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (still.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(still.isEmpty, s"release must unpersist the cached RDD, still: $still")
+  }
+
+  test("one materialization device: src/main pins only through ops/package.scala") {
+    val main = new File("src/main/scala")
+    assert(main.isDirectory, s"run from the project root: ${main.getAbsolutePath}")
+    val pins = Seq(".persist(", ".cache()", ".localCheckpoint(", ".checkpoint(", "StorageLevel")
+    val offenders = FileUtils.listFiles(main, Array("scala"), true).toArray(Array.empty[File]).toSeq
+      .filter { f =>
+        val src = new String(Files.readAllBytes(f.toPath), java.nio.charset.StandardCharsets.UTF_8)
+        pins.exists(src.contains)
+      }
+      .map(f => main.toPath.relativize(f.toPath).toString)
+      .filterNot(_ == "graft/ops/package.scala")
+    assert(offenders.isEmpty, s"pin through the stageBoundary device: $offenders")
   }
 }
