@@ -417,7 +417,7 @@ object Contracts {
     *
     * Serve-many: the composed 6-row sheet persists via
     * [[graft.sources.StateStore]] keyed by the content of the four
-    * input tables (one cheap fingerprint scan per table), so only the FIRST
+    * input tables (one fingerprint scan per table per session), so only the FIRST
     * run per corpus version pays the six member audits; every later run
     * reads six rows. A changed corpus changes the fingerprint and the
     * stale sheet is simply never looked up (the q127/q132 train-once

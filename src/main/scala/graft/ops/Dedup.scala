@@ -26,7 +26,11 @@ object Dedup {
   private val NumHashes = 8
   private val BandSize = 2 // 4 bands of 2 → P(candidate) = 1-(1-j²)⁴
 
-  /** Exact content dedup via hash-groupBy. */
+  /** Exact content dedup via hash-groupBy: one group-by on md5(text)
+    * into per-hash counts `c`, then one global aggregate over the groups
+    * — the rows are their count's sum, the unique texts their number,
+    * the largest group their max. No distinct-count, no second group-by
+    * of the documents, no cross join. */
   val q30DedupExact: QueryDef = sql(
     "q30_dedup_exact",
     """SELECT COUNT(*) AS n_docs,
@@ -34,14 +38,11 @@ object Dedup {
       |  COUNT(*) - COUNT(DISTINCT md5(text)) AS n_exact_dupes,
       |  MAX(cnt) AS max_group
       |FROM documents, (SELECT MAX(c) AS cnt FROM (SELECT COUNT(*) AS c FROM documents GROUP BY md5(text)))""".stripMargin) { (s, dir) =>
-    val docs = Tables.fanOut(Tables.documents(s, dir))
-    val maxGroup = docs.groupBy(md5(col("text"))).agg(count(lit(1)).as("c"))
-      .agg(max(col("c")).as("cnt"))
-    docs.agg(
-      count(lit(1)).as("n_docs"),
-      countDistinct(md5(col("text"))).as("n_unique"),
-      (count(lit(1)) - countDistinct(md5(col("text")))).as("n_exact_dupes"))
-      .crossJoin(maxGroup.select(col("cnt").as("max_group")))
+    val n = coalesce(sum(col("c")), lit(0L))
+    Tables.fanOut(Tables.documents(s, dir))
+      .groupBy(md5(col("text"))).agg(count(lit(1)).as("c"))
+      .agg(n.as("n_docs"), count(lit(1)).as("n_unique"),
+        (n - count(lit(1))).as("n_exact_dupes"), max(col("c")).as("max_group"))
   }
 
   // ---- shared shingle/signature pipeline ----
@@ -1237,8 +1238,9 @@ object Dedup {
     * This is the literal production contract ("the state a pipeline
     * persists between runs"): in-memory cached handles die with
     * the JVM and with `catalog.clearCache()`, files don't. Each q108
-    * invocation costs one fingerprint scan and one state SCAN plus the
-    * batch work, instead of rebuilding shingles/signatures/bands/hashes
+    * invocation costs one state SCAN plus the batch work (the corpus
+    * fingerprint is scanned once per session while the corpus files are
+    * unchanged), instead of rebuilding shingles/signatures/bands/hashes
     * for 90% of the corpus every time. A corpus rewritten in place
     * changes the key, so stale state is never read. */
   def persistedCorpusState(s: SparkSession, docs: DataFrame): CorpusDedupState = {

@@ -175,10 +175,12 @@ object Temporal {
     def step(typ: String, prev: Option[org.apache.spark.sql.DataFrame],
         tOut: String): org.apache.spark.sql.DataFrame = {
       val base = ev.filter(col("event_type") === typ)
+      // both sides derive from `ev`, so their user_id columns share one
+      // attribute: the aliases make the join key name the two sides
       val bounded = prev match {
-        case Some(p) => base.join(p, base("user_id") === p("user_id") &&
-            base("ts") > p(p.columns.last), "inner")
-          .select(base("user_id").as("user_id"), base("ts").as("ts"))
+        case Some(p) => base.as("e").join(p.as("p"), col("e.user_id") === col("p.user_id") &&
+            col("e.ts") > col(s"p.${p.columns.last}"), "inner")
+          .select(col("e.user_id").as("user_id"), col("e.ts").as("ts"))
         case None => base.select(col("user_id"), col("ts"))
       }
       bounded.groupBy(col("user_id")).agg(min(col("ts")).as(tOut))

@@ -3,6 +3,8 @@ package graft.sources
 import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 
 /** The one home of persisted state: build-once artifacts (postings,
@@ -39,26 +41,65 @@ object StateStore {
 
   private val TwoTo64 = java.math.BigInteger.ONE.shiftLeft(64)
 
+  /** A memoized input fingerprint (`<rows>:<hash sum, hex>`), valid
+    * while its signature still matches. */
+  private final case class FingerprintMemo(signature: String, fingerprint: String)
+
+  /** Keyed by the input's canonicalized plan (expression ids
+    * normalized, so two separate builds of the same frame share one
+    * entry). JVM-wide, like the schema memo: an entry is content-keyed,
+    * so which session made it does not matter. */
+  private val fingerprintMemo =
+    new java.util.concurrent.ConcurrentHashMap[LogicalPlan, FingerprintMemo]()
+
   /** The key of `family`'s state derived from `inputs`. Each input's
     * fingerprint is its row count plus the exact sum of `xxhash64` over
     * all its columns, reduced mod 2^64: a multiset hash, so it ignores
     * row order and partitioning but not duplicates (an XOR fold cancels
     * a duplicated pair; a sum does not). The sum runs as DECIMAL(38,0),
-    * which no partial aggregate can overflow under ANSI mode. All
-    * inputs are fingerprinted in one query. */
+    * which no partial aggregate can overflow under ANSI mode.
+    *
+    * A fingerprint is memoized under the input's canonicalized plan and
+    * [[Tables.signature]] (the path, length and mtime of every file the
+    * plan scans, plus the parquet confs), so a warm state read does not
+    * scan its whole input again to find its key. It is re-scanned when
+    * the signature no longer matches (a file was rewritten, added or
+    * removed, or a conf changed) and on every call for an input that is
+    * not deterministic or has a leaf other than a listed file relation
+    * (a `LocalRelation`, a `Range`, a boundary, a cached frame). The
+    * inputs that need a scan are fingerprinted in one query. Only the
+    * fingerprint is memoized: the key's dir follows `java.io.tmpdir` on
+    * every call. */
   def key(family: String, inputs: DataFrame*): StateKey = {
     require(family.matches("[A-Za-z0-9_]+"), s"state family must be an identifier: $family")
     require(inputs.nonEmpty, "a state key needs at least one input frame")
-    val row = inputs.zipWithIndex.map { case (df, i) =>
-      val cols = df.columns.map(c => col(s"`${c.replace("`", "``")}`"))
-      df.agg(count(lit(1)).as(s"n$i"),
-        sum(xxhash64(cols.toIndexedSeq: _*).cast("decimal(38,0)")).as(s"h$i"))
-    }.reduce(_ crossJoin _).head()
-    val material = (family +: inputs.indices.map { i =>
-      val h = Option(row.getDecimal(2 * i + 1))
-        .map(_.toBigInteger.mod(TwoTo64)).getOrElse(java.math.BigInteger.ZERO)
-      s"${row.getLong(2 * i)}:${h.toString(16)}"
-    }).mkString("\n")
+    // (canonical plan, signature) of each input the memo may serve;
+    // cached sub-plans are substituted now, not when the frame was planned
+    val memoKeys = inputs.map { df =>
+      val qe = df.queryExecution
+      val plan = new QueryExecution(qe.sparkSession, qe.analyzed).withCachedData
+      Option.when(plan.deterministic)(plan)
+        .flatMap(p => Tables.signature(qe.sparkSession, p).map(p.canonicalized -> _))
+    }
+    val memo = memoKeys.map(_.flatMap { case (plan, sig) =>
+      Option(fingerprintMemo.get(plan)).filter(_.signature == sig).map(_.fingerprint)
+    })
+    val missing = inputs.indices.filter(memo(_).isEmpty)
+    val scanned = if (missing.isEmpty) Map.empty[Int, String] else {
+      val row = missing.map { i =>
+        val cols = inputs(i).columns.map(c => col(s"`${c.replace("`", "``")}`"))
+        inputs(i).agg(count(lit(1)).as(s"n$i"),
+          sum(xxhash64(cols.toIndexedSeq: _*).cast("decimal(38,0)")).as(s"h$i"))
+      }.reduce(_ crossJoin _).head()
+      missing.zipWithIndex.map { case (i, j) =>
+        val h = Option(row.getDecimal(2 * j + 1))
+          .map(_.toBigInteger.mod(TwoTo64)).getOrElse(java.math.BigInteger.ZERO)
+        val fp = s"${row.getLong(2 * j)}:${h.toString(16)}"
+        memoKeys(i).foreach { case (plan, sig) => fingerprintMemo.put(plan, FingerprintMemo(sig, fp)) }
+        i -> fp
+      }.toMap
+    }
+    val material = (family +: inputs.indices.map(i => memo(i).getOrElse(scanned(i)))).mkString("\n")
     val hash = java.security.MessageDigest.getInstance("SHA-256")
       .digest(material.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .take(8).map(b => f"$b%02x").mkString

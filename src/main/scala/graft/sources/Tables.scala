@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
@@ -30,34 +31,44 @@ object Tables {
     * Spark job on every call; repeated reads of an unchanged path ask the
     * same question again. This memoizes the inferred schema per path and
     * reads with `.schema(memo)` afterwards, which runs no job. The memo is
-    * keyed by content, never by path alone: its signature hashes every
+    * keyed by content, never by path alone: its [[signature]] hashes every
     * file's (path, length, mtime) as listed by Spark's own file index for
     * this read (no second listing), plus the session's parquet-related
     * confs (`nanosAsLong` changes what a footer infers to). On a signature
     * mismatch — the path was rewritten, or the confs differ — the schema
     * is inferred again and the entry replaced. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    val confs = spark.conf.getAll.toSeq
-      .filter { case (k, _) => k.contains("parquet") || k.startsWith("spark.sql.sources.partition") }
-      .sorted
+    def sign(df: DataFrame) = signature(spark, df.queryExecution.analyzed)
     Option(schemaMemo.get(path))
       .map(memo => memo -> spark.read.schema(memo.schema).parquet(path))
-      .collect { case (memo, df) if signature(df, confs).contains(memo.signature) => df }
+      .collect { case (memo, df) if sign(df).contains(memo.signature) => df }
       .getOrElse {
         val df = spark.read.parquet(path)
-        signature(df, confs).foreach(sig => schemaMemo.put(path, SchemaMemo(sig, df.schema)))
+        sign(df).foreach(sig => schemaMemo.put(path, SchemaMemo(sig, df.schema)))
         df
       }
   }
 
-  /** SHA-256 over the scan's file listing and the confs; None when the
-    * read is not backed by a listing file index (never memoized then). */
-  private def signature(df: DataFrame, confs: Seq[(String, String)]): Option[String] =
-    df.queryExecution.analyzed.collectFirst {
+  /** The one content signature of a file-backed plan, shared by the
+    * schema memo above and [[StateStore.key]]'s fingerprint memo: SHA-256
+    * over the (path, length, mtime) of every file any leaf of `plan`
+    * scans (subquery plans included), each read from the leaf's own file
+    * index, so no second listing, plus the session's parquet-related
+    * confs. None unless every leaf is a file relation over a listing file
+    * index (a `LocalRelation`, a `Range`, a boundary's `LogicalRDD` or a
+    * cached frame's `InMemoryRelation` has no listing to sign, and is
+    * never memoized). */
+  private[graft] def signature(spark: SparkSession, plan: LogicalPlan): Option[String] = {
+    val leaves = plan.collectWithSubqueries { case leaf: LeafNode => leaf }
+    val indexes = leaves.collect {
       case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location
-    }.collect { case idx: PartitioningAwareFileIndex =>
-      val files = idx.allFiles()
+    }.collect { case idx: PartitioningAwareFileIndex => idx }
+    Option.when(indexes.size == leaves.size) {
+      val files = indexes.flatMap(_.allFiles())
         .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}").sorted
+      val confs = spark.conf.getAll.toSeq
+        .filter { case (k, _) => k.contains("parquet") || k.startsWith("spark.sql.sources.partition") }
+        .sorted
       val md = java.security.MessageDigest.getInstance("SHA-256")
       (files ++ confs.map { case (k, v) => s"$k=$v" }).foreach { line =>
         md.update(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -65,6 +76,7 @@ object Tables {
       }
       md.digest().map(b => f"$b%02x").mkString
     }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

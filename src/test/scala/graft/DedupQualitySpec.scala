@@ -57,6 +57,38 @@ class DedupQualitySpec extends SparkSpec {
     assert(r.getAs[Long]("max_group") == 2L)
   }
 
+  /** q30 as it was: two distinct-counts, a second group-by, a cross join. */
+  private def q30ThreeAggregates(dir: String) = {
+    import org.apache.spark.sql.functions._
+    val docs = graft.sources.Tables.documents(spark, dir)
+    val maxGroup = docs.groupBy(md5(col("text"))).agg(count(lit(1)).as("c"))
+      .agg(max(col("c")).as("cnt"))
+    docs.agg(
+      count(lit(1)).as("n_docs"),
+      countDistinct(md5(col("text"))).as("n_unique"),
+      (count(lit(1)) - countDistinct(md5(col("text")))).as("n_exact_dupes"))
+      .crossJoin(maxGroup.select(col("cnt").as("max_group")))
+  }
+
+  test("q30 is one aggregate: its row equals the three-aggregate formulation in at most 4 jobs") {
+    val old = q30ThreeAggregates(sfDir).collect().toSeq
+    Dedup.q30DedupExact.run(spark, sfDir).collect() // warm the schema memo
+    val (_, jobs) = countJobs(
+      Dedup.q30DedupExact.run(spark, sfDir).write.format("noop").mode("overwrite").save())
+    assert(jobs <= 4, s"q30 ran $jobs jobs")
+    val now = Dedup.q30DedupExact.run(spark, sfDir)
+    assert(now.columns.toSeq == Seq("n_docs", "n_unique", "n_exact_dupes", "max_group"))
+    assert(now.collect().toSeq == old)
+  }
+
+  test("q30 on an empty documents table is (0, 0, 0, null)") {
+    val dir = Files.createTempDirectory("graft-q30-empty").toString
+    graft.sources.Tables.documents(spark, sfDir).limit(0).write.parquet(s"$dir/documents.parquet")
+    val Seq(r) = Dedup.q30DedupExact.run(spark, dir).collect().toSeq
+    assert(r.toSeq == Seq(0L, 0L, 0L, null))
+    assert(q30ThreeAggregates(dir).collect().toSeq == Seq(r))
+  }
+
   test("verified pairs have exact jaccard above threshold (no false positives)") {
     val (dir, _, _) = generateCorpus()
     Dedup.q32NeardupVerified.run(spark, dir).collect().foreach { r =>

@@ -7,8 +7,8 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, Layout, TextOps}
-import graft.sources.StateStore
+import graft.ops.{Dedup, Layout, Similarity, StageBoundaryOps, TextOps, releaseStageBoundaries}
+import graft.sources.{StateStore, Tables}
 
 /** The content-keyed state store: what the key sees, the commit step's
   * guarantees, that no state-backed query answers from stale state, and
@@ -49,6 +49,82 @@ class StateStoreSpec extends SparkSpec {
     assert(a.dir != b.dir)
     assert(a.dir.getName.startsWith("graft_fam_a_") && b.dir.getName.startsWith("graft_fam_b_"))
     assert(a.dir.getParentFile == new File(System.getProperty("java.io.tmpdir")))
+  }
+
+  /** A fresh parquet copy of `df` in its own temp dir: a path no earlier
+    * key has fingerprinted. */
+  private def freshParquet(df: DataFrame): String = {
+    val path = new File(Files.createTempDirectory("graft-memo").toFile, "t.parquet").getPath
+    df.write.parquet(path)
+    path
+  }
+
+  test("memo: a second key over an unchanged file-backed input runs no job") {
+    val path = freshParquet(base)
+    def input = Tables.parquet(spark, path).select(col("id"), col("s"))
+    val (first, coldJobs) = countJobs(StateStore.key("t", input))
+    val (second, warmJobs) = countJobs(StateStore.key("t", input))
+    assert(coldJobs >= 1, "the first key scans its input")
+    assert(warmJobs == 0, s"an unchanged input is fingerprinted once: $warmJobs jobs")
+    assert(second.hash == first.hash)
+    assert(first.hash == StateStore.key("t", base.select(col("id"), col("s"))).hash,
+      "the memoized fingerprint is the scanned one")
+    FileUtils.deleteDirectory(new File(path).getParentFile)
+  }
+
+  test("memo: two builds of q120's quantized input share one fingerprint, lambdas and all") {
+    val dir = Files.createTempDirectory("graft-memo").toFile
+    FileUtils.copyFile(new File(sfDir, "embeddings.parquet"), new File(dir, "embeddings.parquet"))
+    def input = Similarity.quantizeVectors(Tables.embeddings(spark, dir.getPath))
+    val (first, coldJobs) = countJobs(StateStore.key("ivf", input))
+    val (second, warmJobs) = countJobs(StateStore.key("ivf", input))
+    assert(coldJobs >= 1 && warmJobs == 0, s"cold $coldJobs, warm $warmJobs jobs")
+    assert(second.hash == first.hash)
+    FileUtils.deleteDirectory(dir)
+  }
+
+  test("memo: a file rewritten in place is scanned again and changes the key") {
+    val path = freshParquet(base)
+    val before = StateStore.key("t", Tables.parquet(spark, path))
+    FileUtils.deleteDirectory(new File(path))
+    base.withColumn("s", when(col("id") === 17, lit("seventeen")).otherwise(col("s")))
+      .write.parquet(path)
+    val (after, jobs) = countJobs(StateStore.key("t", Tables.parquet(spark, path)))
+    assert(jobs >= 1, "a changed listing invalidates the memo")
+    assert(after.hash != before.hash)
+    FileUtils.deleteDirectory(new File(path).getParentFile)
+  }
+
+  test("memo: inputs without a file listing, or not deterministic, are scanned on every call") {
+    val path = freshParquet(base)
+    val file = Tables.parquet(spark, path)
+    val inputs = Seq(
+      "range" -> (() => spark.range(0, 50).toDF()),
+      "boundary" -> (() => file.stageBoundary),
+      "cached" -> (() => file.cachedStageBoundary),
+      "rand" -> (() => file.withColumn("r", rand(7))))
+    inputs.foreach { case (name, input) =>
+      val frame = input()
+      val jobs = (1 to 2).map(_ => countJobs(StateStore.key("t", frame))._2)
+      assert(jobs.forall(_ >= 1), s"$name: every call must scan, jobs per call $jobs")
+    }
+    releaseStageBoundaries()
+    FileUtils.deleteDirectory(new File(path).getParentFile)
+  }
+
+  test("memo: a moved java.io.tmpdir still yields a cold dir") {
+    val path = freshParquet(base)
+    val warm = StateStore.key("t", Tables.parquet(spark, path))
+    val tmpdir = System.getProperty("java.io.tmpdir")
+    val moved = Files.createTempDirectory("graft-moved").toFile
+    System.setProperty("java.io.tmpdir", moved.getPath)
+    val (cold, jobs) = try countJobs(StateStore.key("t", Tables.parquet(spark, path)))
+      finally System.setProperty("java.io.tmpdir", tmpdir)
+    assert(jobs == 0, "the fingerprint is memoized")
+    assert(cold.hash == warm.hash)
+    assert(cold.dir.getParentFile == moved && !cold.dir.exists(), "the dir follows the tmpdir")
+    FileUtils.deleteDirectory(moved)
+    FileUtils.deleteDirectory(new File(path).getParentFile)
   }
 
   test("a half-state at the published path is moved aside and rebuilt, never read") {
@@ -154,18 +230,30 @@ class StateStoreSpec extends SparkSpec {
     } finally FileUtils.deleteDirectory(work)
   }
 
-  test("one device per job: no state path or rename outside the state store") {
+  /** `src/main` files that mention a word outside the files allowed it. */
+  private def offenders(allowed: Map[String, Set[String]]): Seq[String] = {
     val main = new File("src/main/scala")
     assert(main.isDirectory, s"run from the project root: ${main.getAbsolutePath}")
-    val allowed = Map(
-      "java.io.tmpdir" -> Set("graft/sources/StateStore.scala", "graft/ops/package.scala"),
-      "renameTo" -> Set("graft/sources/StateStore.scala"))
-    val offenders = FileUtils.listFiles(main, Array("scala"), true).toArray(Array.empty[File]).toSeq
+    FileUtils.listFiles(main, Array("scala"), true).toArray(Array.empty[File]).toSeq
       .flatMap { f =>
         val rel = main.toPath.relativize(f.toPath).toString
         val text = new String(Files.readAllBytes(f.toPath), java.nio.charset.StandardCharsets.UTF_8)
         allowed.collect { case (word, ok) if text.contains(word) && !ok(rel) => s"$rel: $word" }
       }
-    assert(offenders.isEmpty, s"state paths and renames belong to StateStore: $offenders")
+  }
+
+  test("one device per job: no state path or rename outside the state store") {
+    val found = offenders(Map(
+      "java.io.tmpdir" -> Set("graft/sources/StateStore.scala", "graft/ops/package.scala"),
+      "renameTo" -> Set("graft/sources/StateStore.scala")))
+    assert(found.isEmpty, s"state paths and renames belong to StateStore: $found")
+  }
+
+  test("one device per job: one input fingerprint, one file-listing signature") {
+    val found = offenders(Map(
+      "sum(xxhash64(" -> Set("graft/sources/StateStore.scala"),
+      "allFiles(" -> Set("graft/sources/Tables.scala"),
+      "getModificationTime" -> Set("graft/sources/Tables.scala")))
+    assert(found.isEmpty, s"fingerprints belong to StateStore, listing signatures to Tables: $found")
   }
 }
