@@ -31,13 +31,10 @@ object BloomPrune {
   /** Register the catalyst Bloom expression pair under session function
     * names (they ship in Spark but are not in the public registry). */
   def register(s: SparkSession): Unit = {
-    val reg = s.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
+    registerOnce(s, "graft_bloom_agg")(exprs =>
+      new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)))
+    registerOnce(s, "graft_might_contain")(exprs =>
+      BloomFilterMightContain(exprs(0), exprs(1)))
   }
 
   /** Serialized Bloom filter over `dim`'s `dimKey` values (xxhash64'd —

@@ -78,8 +78,5 @@ case class CosineSimilarity(left: Expression, right: Expression)
 object CosineSimilarity {
   /** Register as a SQL function for the session (name: cosine_sim_native). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim_native",
-      exprs => CosineSimilarity(exprs.head, exprs(1)),
-      "built-in")
+    registerOnce(spark, "cosine_sim_native")(exprs => CosineSimilarity(exprs.head, exprs(1)))
 }

@@ -79,8 +79,5 @@ object L2Distance {
 
   /** Register as a SQL function for the session (name: int_l2_native). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int_l2_native",
-      exprs => L2Distance(exprs.head, exprs(1)),
-      "built-in")
+    registerOnce(spark, "int_l2_native")(exprs => L2Distance(exprs.head, exprs(1)))
 }

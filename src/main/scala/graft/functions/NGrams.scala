@@ -59,8 +59,5 @@ case class NGrams(text: Expression, n: Expression)
 object NGrams {
   /** Register as a SQL generator function for the session (name: ngrams). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngrams",
-      exprs => NGrams(exprs.head, exprs(1)),
-      "built-in")
+    registerOnce(spark, "ngrams")(exprs => NGrams(exprs.head, exprs(1)))
 }

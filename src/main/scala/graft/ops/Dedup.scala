@@ -12,18 +12,19 @@ import graft.sources.{StateStore, Tables}
   * Scale posture (100 TB):
   *   - Exact dedup never compares texts pairwise — it hash-aggregates on
   *     md5(text) (constant-width key, map-side partials).
-  *   - Near-dup NEVER does an all-pairs join. MinHash signatures are one
-  *     explode + one aggregate; LSH banding turns "compare everything"
-  *     into equi-joins on band buckets, so candidate generation shuffles
-  *     on bucket keys only. Exact Jaccard runs on the (tiny) candidate
-  *     set, not the corpus.
-  *   - All hashes are md5 hex strings compared lexicographically — the
-  *     same bits in Spark and DuckDB, so every stage is oracle-checkable.
+  *   - Near-dup NEVER does an all-pairs join. A MinHash signature is one
+  *     per-row native expression over the text ([[graft.functions.MinHash]]):
+  *     no explode, no aggregate, no exchange beyond the fan-out. LSH
+  *     banding turns "compare everything" into equi-joins on band
+  *     buckets, so candidate generation shuffles on bucket keys only.
+  *     Exact Jaccard runs on the (tiny) candidate set, not the corpus.
+  *   - Every hash is md5-derived — the same bits in Spark and DuckDB, so
+  *     every stage is oracle-checkable.
   */
 object Dedup {
   import QueryDef.sql
 
-  private val NumHashes = 8
+  private val NumHashes = graft.functions.MinHash.NumHashes
   private val BandSize = 2 // 4 bands of 2 → P(candidate) = 1-(1-j²)⁴
 
   /** Exact content dedup via hash-groupBy: one group-by on md5(text)
@@ -70,7 +71,7 @@ object Dedup {
       .distinct()
 
   /** Distinct word-3-gram shingles per doc. */
-  private def shingles(s: SparkSession, dir: String): DataFrame =
+  private[graft] def shingles(s: SparkSession, dir: String): DataFrame =
     shinglesOf(Tables.documents(s, dir))
 
   private val shinglesSql =
@@ -80,24 +81,18 @@ object Dedup {
       |           LATERAL (SELECT generate_subscripts(t.toks, 1) AS i)
       |      WHERE i <= len(t.toks) - 2)""".stripMargin
 
-  /** MinHash signature: [[NumHashes]] independent 32-bit hash components
-    * carved out of two md5 digests per shingle (8 hex chars each), parsed
-    * to BIGINT — the numeric min of each component per doc. Fixed-length
-    * lowercase hex sorts identically to its numeric value, so the same
-    * shingle wins each component as in the hex-string formulation, but
-    * the aggregation buffer is 8 longs (fixed width → HashAggregate with
-    * map-side partials) instead of 8 variable-length strings (which force
-    * a SortAggregate). Two md5 evaluations per shingle instead of eight. */
-  private def signatures(s: SparkSession, dir: String): DataFrame = {
-    val withH = shingles(s, dir)
-      .withColumn("ha", md5(concat(lit("a:"), col("sh").cast("string"))))
-      .withColumn("hb", md5(concat(lit("b:"), col("sh").cast("string"))))
-    val aggs = (0 until NumHashes).map { k =>
-      val (src, off) = if (k < 4) ("ha", k * 8 + 1) else ("hb", (k - 4) * 8 + 1)
-      min(expr(s"CAST(conv(substring($src, $off, 8), 16, 10) AS BIGINT)")).as(s"s$k")
-    }
-    withH.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
+  /** MinHash signature: [[NumHashes]] independent 32-bit components per
+    * document, `s0..s7`, from the native [[graft.functions.MinHash]]
+    * kernel — one per-row expression over the text after the fan-out:
+    * no shingle explode, no per-gram strings, no aggregate and no
+    * exchange. The values equal the oracle's per-doc MIN over distinct
+    * shingles of the 8-hex-digit slices of md5('a:'||sh) / md5('b:'||sh).
+    * A document with fewer than 3 tokens keeps its row with null
+    * components; [[bands]] drops it. */
+  private def signaturesOf(docs: DataFrame): DataFrame =
+    Tables.fanOut(docs)
+      .select(col("doc_id"), graft.functions.MinHash.signature(col("text")).as("sig"))
+      .select(col("doc_id") +: (0 until NumHashes).map(k => col(s"sig.s$k")): _*)
 
   private val signaturesSql: String = {
     val aggs = (0 until NumHashes).map { k =>
@@ -116,13 +111,16 @@ object Dedup {
     * candidate self-join shuffles on (band, bucket), and an 8-byte key
     * beats a 32-char hex string at every scale; both engines compute the
     * identical value, so parity survives even hash collisions. */
-  private def bands(sig: DataFrame): DataFrame = {
+  private[graft] def bands(sig: DataFrame): DataFrame = {
     val bandCols = (0 until NumHashes / BandSize).map { b =>
       struct(lit(b).as("band"),
         expr(s"CAST(conv(substring(md5(concat_ws(':', CAST(s${b * BandSize} AS STRING), CAST(s${b * BandSize + 1} AS STRING))), 1, 15), 16, 10) AS BIGINT)")
           .as("bucket"))
     }
-    sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
+    // a signature-less doc explodes null: no rows. A filter on s0 instead
+    // would be pushed below the fan-out's exchange and run the kernel twice.
+    sig.select(col("doc_id"),
+        explode(when(col("s0").isNotNull, array(bandCols: _*))).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
@@ -139,15 +137,17 @@ object Dedup {
       |         FROM bands a JOIN bands b
       |           ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id)""".stripMargin
 
-  private def candidates(s: SparkSession, dir: String): DataFrame = {
-    // The band relation feeds BOTH sides of the self-join. Without an
-    // explicit materialization Spark recomputes the whole
-    // shingle→signature→band chain per side (the shuffles differ, so
-    // ReuseExchange can't kick in). At 100 TB this intermediate is the
-    // thing you'd write to storage between pipeline stages; locally
-    // MEMORY_AND_DISK persist states the same plan property.
-    val bb = bands(signatures(s, dir))
-      .stageBoundary // (doc × band)-sized; both self-join sides
+  private def candidates(s: SparkSession, dir: String): DataFrame =
+    candidatePairs(bands(signaturesOf(Tables.documents(s, dir))))
+
+  /** Distinct (doc_a < doc_b) pairs sharing a (band, bucket). The band
+    * relation feeds BOTH sides of the self-join. Without an explicit
+    * materialization Spark recomputes the whole fan-out→signature→band
+    * chain per side (the shuffles differ, so ReuseExchange can't kick
+    * in). At 100 TB this intermediate is the thing you'd write to
+    * storage between pipeline stages. */
+  private[graft] def candidatePairs(bands: DataFrame): DataFrame = {
+    val bb = bands.stageBoundary // (doc × band)-sized; both self-join sides
     val a = bb.select(col("doc_id").as("doc_a"), col("band"), col("bucket"))
     val b = bb.select(col("doc_id").as("doc_b"), col("band"), col("bucket"))
     a.join(b, Seq("band", "bucket")).filter(col("doc_a") < col("doc_b"))
@@ -249,17 +249,14 @@ object Dedup {
        |JOIN cnts ca ON ca.doc_id = m.doc_a
        |JOIN cnts cb ON cb.doc_id = m.doc_b
        |ORDER BY m.doc_a, m.doc_b""".stripMargin) { (s, dir) =>
-    val sh = shingles(s, dir)
-      .stageBoundary
-    val sig = signatures(s, dir)
-      .stageBoundary
-    val cand = {
-      val bb = bands(sig).stageBoundary
-      val a = bb.select(col("doc_id").as("doc_a"), col("band"), col("bucket"))
-      val b = bb.select(col("doc_id").as("doc_b"), col("band"), col("bucket"))
-      a.join(b, Seq("band", "bucket")).filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
-    }
+    minhashAudit(shingles(s, dir).stageBoundary,
+      signaturesOf(Tables.documents(s, dir)).stageBoundary)
+  }
+
+  /** q283 over given (doc_id, sh) shingles and (doc_id, s0..s7)
+    * signatures, each read several times (materialize them first). */
+  private[graft] def minhashAudit(sh: DataFrame, sig: DataFrame): DataFrame = {
+    val cand = candidatePairs(bands(sig))
     val matchExpr = (0 until NumHashes)
       .map(k => s"(CASE WHEN a.s$k = b.s$k THEN 1 ELSE 0 END)").mkString(" + ")
     val m = cand
@@ -414,15 +411,9 @@ object Dedup {
        |ORDER BY m.doc_a, m.doc_b""".stripMargin) { (s, dir) =>
     val sh = shingles(s, dir)
       .stageBoundary
-    val sig = signatures(s, dir)
+    val sig = signaturesOf(Tables.documents(s, dir))
       .stageBoundary
-    val cand = {
-      val bb = bands(sig).stageBoundary
-      val a = bb.select(col("doc_id").as("doc_a"), col("band"), col("bucket"))
-      val b = bb.select(col("doc_id").as("doc_b"), col("band"), col("bucket"))
-      a.join(b, Seq("band", "bucket")).filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
-    }
+    val cand = candidatePairs(bands(sig))
     val bbitExpr = (0 until NumHashes)
       .map(k => s"(CASE WHEN a.s$k % 4 = b.s$k % 4 THEN 1 ELSE 0 END)").mkString(" + ")
     val fullExpr = (0 until NumHashes)
@@ -1225,7 +1216,7 @@ object Dedup {
 
   def buildCorpusState(docs: DataFrame): CorpusDedupState = {
     val sh = shinglesOf(docs).cachedStageBoundary
-    val bb = bands(signatures2(sh)).cachedStageBoundary
+    val bb = bands(signaturesOf(docs)).cachedStageBoundary
     val cnts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n")).cachedStageBoundary
     val hs = Tables.fanOut(docs).select(col("doc_id"), md5(col("text")).as("h")).cachedStageBoundary
     CorpusDedupState(sh, bb, cnts, hs)
@@ -1273,9 +1264,9 @@ object Dedup {
     * the stream. */
   private[graft] def dedupeBatchWithHandle(
       batch: DataFrame, corpus: CorpusDedupState): (DataFrame, DataFrame) = {
-    // three consumers (bands, intersection, counts) — materialize once
+    // two consumers (intersection, counts) — materialize once
     val bsh = shinglesOf(batch).cachedStageBoundary
-    val candx = bands(signatures2(bsh))
+    val candx = bands(signaturesOf(batch))
       .select(col("doc_id").as("batch_id"), col("band"), col("bucket"))
       .join(corpus.bands
         .select(col("doc_id").as("corpus_id"), col("band"), col("bucket")),
@@ -1453,20 +1444,6 @@ object Dedup {
         expr("GREATEST(0L, (n_a + 1) * (n_b + 1) DIV (n_both + 1) - 1 - n_union)").as("est_missed"),
         expr("n_union * 1000000L DIV GREATEST(1L, (n_a + 1) * (n_b + 1) DIV (n_both + 1) - 1)")
           .as("coverage_micro"))
-  }
-
-  /** [[signatures]] over an externally-supplied (already persisted)
-    * shingle relation — lets q108 share one shingle materialization
-    * across the signature, intersection, and count consumers. */
-  private def signatures2(sh: DataFrame): DataFrame = {
-    val withH = sh
-      .withColumn("ha", md5(concat(lit("a:"), col("sh").cast("string"))))
-      .withColumn("hb", md5(concat(lit("b:"), col("sh").cast("string"))))
-    val aggs = (0 until NumHashes).map { k =>
-      val (src, off) = if (k < 4) ("ha", k * 8 + 1) else ("hb", (k - 4) * 8 + 1)
-      min(expr(s"CAST(conv(substring($src, $off, 8), 16, 10) AS BIGINT)")).as(s"s$k")
-    }
-    withH.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Exact substring-span deduplication (the ExactSubstr variant of Lee

@@ -365,11 +365,20 @@ object Similarity {
   /** Quantize an (vec_id, embedding array<float>) frame to (vec_id, qv
     * array<bigint>) — the integer domain every k-means face works in. */
   def quantizeVectors(df: DataFrame): DataFrame =
-    df.select(col("vec_id"), expr(
-      "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0D + 0.5D) AS BIGINT))").as("qv"))
+    df.select(col("vec_id"), quantizedVector.as("qv"))
+
+  private val quantizedVector = expr(
+    "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0D + 0.5D) AS BIGINT))")
 
   private def quantizedLong(s: SparkSession, dir: String): DataFrame =
     quantizeVectors(Tables.embeddings(s, dir))
+
+  /** The embeddings scan quantized IN PLACE: every column kept, `qv`
+    * added. An IVF face assigns this frame directly, so the cluster id
+    * lands on the row that carries the embedding and label — no join of
+    * the corpus back to an assignment derived from the same scan. */
+  private def quantizedScan(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir).withColumn("qv", quantizedVector)
 
   /** TRAIN-ONCE / SERVE-MANY coarse-quantizer centroids
     * ([[graft.sources.StateStore]] keyed by the content of the
@@ -482,7 +491,12 @@ object Similarity {
     * no plan literal, no driver collect, no shuffle of the vectors.
     * Adds `cid` and `dist`. */
   def assignToCentroids(vectors: DataFrame, cents: DataFrame): DataFrame =
-    vectors.join(broadcast(packCentroids(cents)))
+    nearestCentroid(vectors.join(broadcast(packCentroids(cents))))
+
+  /** The argmin of [[assignToCentroids]] over rows that already carry
+    * the packed `cs` (and `qv`): adds `cid` and `dist`, drops `cs`. */
+  private def nearestCentroid(withCs: DataFrame): DataFrame =
+    withCs
       // the argmin walks a LONG array, not an array of structs: struct
       // ordering goes through the interpreted comparator per element,
       // measured ~80% slower end-to-end on the k-means smoke. cs is
@@ -588,18 +602,19 @@ object Similarity {
        |ORDER BY cosine DESC, n.vec_id
        |LIMIT 10""".stripMargin) { (s, dir) =>
     graft.functions.CosineSimilarity.register(s)
-    val v = quantizedLong(s, dir)
-    val centsF = trainedCentroids(s, dir, k = 8, iters = 2)
-    val assigned = assignToCentroids(v, centsF).select(col("vec_id"), col("cid"))
-    // query-time routing: the same exact metric over the same relation,
-    // top-NumProbe centroids for the single query vector
-    val probe = centroidDistances(v.filter(col("vec_id") === QueryVec), centsF)
-      .orderBy(col("cdist"), col("cid")).limit(NumProbe).select(col("cid"))
-    val n = Tables.embeddings(s, dir)
-    val q = n.filter(col("vec_id") === QueryVec).select(col("embedding").as("qe"))
-    n.join(assigned, "vec_id").join(broadcast(probe), "cid")
-      .filter(col("vec_id") =!= QueryVec)
-      .crossJoin(broadcast(q))
+    val e = quantizedScan(s, dir)
+    // one broadcast row: the packed centroids, the query embedding, and
+    // the query's top-NumProbe centroids by the same exact metric (ties
+    // to the lower cid, as the assignment's argmin)
+    val query = e.filter(col("vec_id") === QueryVec)
+      .crossJoin(packCentroids(trainedCentroids(s, dir, k = 8, iters = 2)))
+      .select(col("cs"), col("embedding").as("qe"),
+        transform(slice(array_sort(transform(col("cs"), c => struct(
+            graft.functions.L2Distance.l2(col("qv"), c.getField("vec")).as("d"),
+            c.getField("cid").as("cid")))), 1, NumProbe),
+          p => p.getField("cid")).as("probe"))
+    nearestCentroid(e.filter(col("vec_id") =!= QueryVec).crossJoin(broadcast(query)))
+      .filter(array_contains(col("probe"), col("cid")))
       .select(col("vec_id"), expr("cosine_sim_native(embedding, qe)").as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(10)
@@ -653,10 +668,7 @@ object Similarity {
                     threshold: Double = 0.35,
                     keepBy: SemDedupKeep = KeepLowestId): DataFrame = {
     graft.functions.CosineSimilarity.register(s)
-    val v = quantizedLong(s, dir)
-    val assigned = assignToCentroids(v, trainedCentroids(s, dir, k, iters))
-      .select(col("vec_id"), col("cid"), col("dist"))
-    val m = Tables.embeddings(s, dir).join(assigned, "vec_id")
+    val m = assignToCentroids(quantizedScan(s, dir), trainedCentroids(s, dir, k, iters))
       .select(col("vec_id"), col("cid"), col("dist"), col("embedding"))
     val a = m.select(col("vec_id").as("va"), col("cid"),
       col("dist").as("da"), col("embedding").as("ea"))
@@ -793,24 +805,22 @@ object Similarity {
        |ORDER BY anchor_id, rnk""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
     graft.functions.CosineSimilarity.register(s)
-    val v = quantizedLong(s, dir)
+    val e = quantizedScan(s, dir)
     val centsF = trainedCentroids(s, dir, k = 8, iters = 2)
-    val assigned = assignToCentroids(v, centsF).select(col("vec_id"), col("cid"))
-    val emb = Tables.embeddings(s, dir)
-    val anchors = emb.filter(col("vec_id") % 50 === 0)
+    val anchorRows = e.filter(col("vec_id") % 50 === 0)
+    val anchors = anchorRows
       .select(col("vec_id").as("anchor_id"), col("label").as("alabel"),
         col("embedding").as("ae"))
     // per-anchor probe: exact distances to the trained centroids, top
     // NumProbe — anchors are the bounded side, so this whole relation
     // (anchors × NumProbe rows) broadcasts
-    val probe = centroidDistances(
-        v.join(anchors.select(col("anchor_id").as("vec_id")), "vec_id"), centsF)
+    val probe = centroidDistances(anchorRows, centsF)
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("cdist"), col("cid"))))
       .filter(col("rn") <= NumProbe)
       .select(col("vec_id").as("anchor_id"), col("cid"))
-    emb.select(col("vec_id"), col("label"), col("embedding"))
-      .join(assigned, "vec_id")
+    assignToCentroids(e, centsF)
+      .select(col("vec_id"), col("label"), col("embedding"), col("cid"))
       .join(broadcast(probe), "cid")
       .join(broadcast(anchors), Seq("anchor_id"))
       .filter(col("label") =!= col("alabel") && col("vec_id") =!= col("anchor_id"))
@@ -1367,23 +1377,18 @@ object Similarity {
        |FROM w WHERE vr = 1
        |ORDER BY test_id""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val v = quantizedLong(s, dir)
+    val e = quantizedScan(s, dir)
     val centsF = trainedCentroids(s, dir, k = 8, iters = 2)
-    val assigned = assignToCentroids(v, centsF).select(col("vec_id"), col("cid"))
-    val emb = Tables.embeddings(s, dir)
-    val test = emb.filter(col("vec_id") % 10 === 0)
-      .select(col("vec_id").as("test_id"), col("label").as("true_label"))
-    val probe = centroidDistances(
-        v.join(test.select(col("test_id").as("vec_id")), "vec_id"), centsF)
+    val test = e.filter(col("vec_id") % 10 === 0)
+    val probe = centroidDistances(test, centsF)
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("cdist"), col("cid"))))
       .filter(col("rn") <= NumProbe)
       .select(col("vec_id").as("test_id"), col("cid"))
-    val tq = v.join(test, v("vec_id") === test("test_id"))
-      .select(col("test_id"), col("true_label"), col("qv").as("tq"))
-    v.join(assigned, "vec_id")
-      .filter(col("vec_id") % 10 =!= 0)
-      .join(emb.select(col("vec_id"), col("label")), "vec_id")
+    val tq = test.select(col("vec_id").as("test_id"), col("label").as("true_label"),
+      col("qv").as("tq"))
+    assignToCentroids(e.filter(col("vec_id") % 10 =!= 0), centsF)
+      .select(col("vec_id"), col("qv"), col("label"), col("cid"))
       .join(broadcast(probe), "cid")
       .join(broadcast(tq), "test_id")
       .withColumn("dist", graft.functions.L2Distance.l2(col("qv"), col("tq")))
@@ -1517,15 +1522,18 @@ object Similarity {
        |ORDER BY cosine DESC, n.vec_id
        |LIMIT 10""".stripMargin) { (s, dir) =>
     graft.functions.CosineSimilarity.register(s)
-    val p = jlProject(quantizedLong(s, dir), jlSignMatrix(s, JlSrcDim, JlOutDim))
-      .select(col("vec_id"), col("pv").as("qv"))
-    val centsF = kmeansCentroidFrame(p, k = NumCentroids, iters = 2)
-    val assigned = assignToCentroids(p, centsF).select(col("vec_id"), col("cid"))
+    // the projection carries the embedding, so assignment lands on the
+    // row that is ranked — no join back to the embeddings scan
+    val p = jlProject(quantizedScan(s, dir), jlSignMatrix(s, JlSrcDim, JlOutDim))
+      .select(col("vec_id"), col("embedding"), col("pv").as("qv"))
+    val centsF = kmeansCentroidFrame(p.select(col("vec_id"), col("qv")),
+      k = NumCentroids, iters = 2)
     val probe = centroidDistances(p.filter(col("vec_id") === QueryVec), centsF)
       .orderBy(col("cdist"), col("cid")).limit(NumProbe).select(col("cid"))
-    val n = Tables.embeddings(s, dir)
-    val q = n.filter(col("vec_id") === QueryVec).select(col("embedding").as("qe"))
-    n.join(assigned, "vec_id").join(broadcast(probe), "cid")
+    val q = Tables.embeddings(s, dir).filter(col("vec_id") === QueryVec)
+      .select(col("embedding").as("qe"))
+    assignToCentroids(p, centsF).select(col("vec_id"), col("embedding"), col("cid"))
+      .join(broadcast(probe), "cid")
       .filter(col("vec_id") =!= QueryVec)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), expr("cosine_sim_native(embedding, qe)").as("cosine"))
@@ -1923,10 +1931,7 @@ object Similarity {
        |FROM tr t LEFT JOIN hit h ON h.vec_id = t.vec_id
        |ORDER BY t.vec_id""".stripMargin) { (s, dir) =>
     graft.functions.CosineSimilarity.register(s)
-    val v = quantizedLong(s, dir)
-    val assigned = assignToCentroids(v, trainedCentroids(s, dir, k = 8, iters = 2))
-      .select(col("vec_id"), col("cid"))
-    val m = Tables.embeddings(s, dir).join(assigned, "vec_id")
+    val m = assignToCentroids(quantizedScan(s, dir), trainedCentroids(s, dir, k = 8, iters = 2))
       .select(col("vec_id"), col("cid"), col("embedding")).cachedStageBoundary
     val ev = m.filter(col("vec_id") % 50 === 0)
       .select(col("cid"), col("embedding").as("ee"))
@@ -2225,10 +2230,9 @@ object Similarity {
        |ORDER BY nprobe, b.query_id""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
     graft.functions.CosineSimilarity.register(s)
-    val v = quantizedLong(s, dir)
+    val e = quantizedScan(s, dir)
     val centsF = trainedCentroids(s, dir, k = 8, iters = 2)
-    val assigned = assignToCentroids(v, centsF).select(col("vec_id"), col("cid"))
-    val route = centroidDistances(v.filter(col("vec_id") % 100 === 0), centsF)
+    val route = centroidDistances(e.filter(col("vec_id") % 100 === 0), centsF)
       .withColumn("crank", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("cdist"), col("cid"))))
       .select(col("vec_id").as("query_id"), col("cid"), col("crank"))
@@ -2238,7 +2242,8 @@ object Similarity {
     val emb = Tables.embeddings(s, dir)
     val qe = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv2"))
-    val cand = emb.join(assigned, "vec_id")
+    val cand = assignToCentroids(e, centsF)
+      .select(col("vec_id"), col("embedding"), col("cid"))
       .join(broadcast(routes), "cid")
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(qe), "query_id")

@@ -151,6 +151,9 @@ object Tables {
     * md5 / regex per character) and the q97 pair-enumeration join. */
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    // the physical plan's own RDD: `df.rdd` would plan a
+    // DeserializeToObject and post a whole SQL execution per call
+    val parts = df.queryExecution.executedPlan.execute().getNumPartitions
+    if (parts < target) df.repartition(target) else df
   }
 }

@@ -41,4 +41,39 @@ class FanOutSpec extends SparkSpec {
     assert(scans.contains("PushedFilters") && scans.contains("lang"),
       "predicate must reach the parquet scan below the repartition:\n" + scans)
   }
+
+  /** Names of the SQL executions `body` posts, fenced by one `collect`
+    * whose listener event arrives after every earlier one. */
+  private def executionsOf(body: => Unit): Seq[String] = {
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val fence = s"fence-${java.util.UUID.randomUUID()}"
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        names.add(if (qe.analyzed.toString.contains(fence)) fence else funcName)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
+        names.add(funcName)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(fence)).collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!names.contains(fence) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(names.contains(fence), "listener fence timed out")
+      names.toArray(Array.empty[String]).toSeq.filter(_ != fence)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a 1-partition scan fans out without posting an `rdd` execution") {
+    val one = Tables.documents(spark, sfDir).coalesce(1)
+    // control: asking the Dataset for its RDD posts one
+    assert(executionsOf(one.rdd.getNumPartitions).contains("rdd"))
+    var fanned: org.apache.spark.sql.DataFrame = null
+    val seen = executionsOf { fanned = Tables.fanOut(one) }
+    assert(seen.isEmpty, s"fan-out posted SQL executions: $seen")
+    assert(fanned.queryExecution.executedPlan.execute().getNumPartitions ==
+      spark.sparkContext.defaultParallelism)
+  }
 }

@@ -35,6 +35,26 @@ class FunctionsSpec extends SparkSpec {
     q.collect().foreach(r => assert(math.abs(r.getDouble(0) - 1.0) < 1e-9))
   }
 
+  test("registering a session function twice leaves the first registry entry in place") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = spark.sessionState.functionRegistry
+    def entries = Seq("cosine_sim_native", "int_l2_native", "ngrams",
+        "graft_bloom_agg", "graft_might_contain")
+      .map(n => reg.lookupFunctionBuilder(FunctionIdentifier(n)))
+    def registerAll(): Unit = {
+      CosineSimilarity.register(spark)
+      graft.functions.L2Distance.register(spark)
+      graft.functions.NGrams.register(spark)
+      graft.functions.BloomPrune.register(spark)
+    }
+    registerAll()
+    val first = entries
+    assert(first.forall(_.isDefined))
+    registerAll()
+    assert(entries.zip(first).forall { case (now, was) => now.get eq was.get },
+      "a second register must not replace the session's entry")
+  }
+
   test("native integer-L2 expression equals the HOF fold and rides codegen") {
     graft.functions.L2Distance.register(spark)
     // quantized fixture vectors (negatives included), pairwise over a slice

@@ -91,11 +91,53 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("partial_weightedmean") || p.contains("Partial"), p)
   }
 
-  test("q31: minhash signature aggregation is hash-based (fixed-width long buffer)") {
-    val p = planOf(Dedup.q31MinhashLsh.run(spark, sfDir))
-    val sigAgg = p.linesIterator.filter(l => l.contains("Aggregate") && l.contains("min(")).mkString("\n")
-    assert(!sigAgg.contains("SortAggregate"),
-      s"numeric minhash components must hash-aggregate, not sort:\n$sigAgg")
+  test("q31: signatures are one kernel call, no Generate or Aggregate") {
+    import org.apache.spark.sql.execution.{GenerateExec, ProjectExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    // lineage through the stage boundaries, so the band relation's own
+    // plan is in q31's
+    val old = spark.conf.getOption(graft.ops.StageBoundaryModeKey)
+    spark.conf.set(graft.ops.StageBoundaryModeKey, "none")
+    val plan = try Dedup.q31MinhashLsh.run(spark, sfDir).queryExecution.sparkPlan
+      finally old match {
+        case Some(m) => spark.conf.set(graft.ops.StageBoundaryModeKey, m)
+        case None => spark.conf.unset(graft.ops.StageBoundaryModeKey)
+      }
+    def kernelCalls(p: SparkPlan): Int =
+      p.expressions.map(_.collect { case m: graft.functions.MinHash => m }.size).sum
+    // the band explode: one per self-join side
+    val bandGens = plan.collect { case g: GenerateExec => g }
+    assert(bandGens.nonEmpty, plan.toString)
+    bandGens.foreach { g =>
+      val below = g.child
+      assert(below.collect { case x: GenerateExec => x }.isEmpty &&
+        below.collect { case x: BaseAggregateExec => x }.isEmpty,
+        s"no explode or aggregate between the scan and the bands:\n$below")
+      assert(below.collect { case p => kernelCalls(p) }.sum == 1,
+        s"the kernel must run exactly once per doc:\n$below")
+      val host = below.collect { case p: ProjectExec if kernelCalls(p) == 1 => p }
+      assert(host.size == 1 && host.head.collect {
+        case x: ShuffleExchangeExec if x.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => x
+      }.nonEmpty, s"the kernel must run above the fan-out's exchange:\n$below")
+    }
+  }
+
+  test("Dedup.scala parses hex with conv(substring(...)) only in the shingle, band and split-hash code") {
+    val src = scala.io.Source.fromFile("src/main/scala/graft/ops/Dedup.scala", "UTF-8")
+    val lines = try src.getLines().toVector finally src.close()
+    // the enclosing member of `object Dedup` (two-space indent)
+    val definition = """^  (?:private(?:\[\w+\])? )?(?:def|val) (\w+).*""".r
+    val sites = lines.zipWithIndex.filter(_._1.contains("conv(substring(")).map { case (l, i) =>
+      val owner = lines.take(i + 1).reverseIterator
+        .collectFirst { case definition(name) => name }.getOrElse("?")
+      owner -> l.trim
+    }
+    assert(sites.nonEmpty)
+    val allowed = Set("shinglesOf", "bands", "componentSplit", "q161SplitLeakage")
+    assert(sites.forall { case (owner, _) => allowed(owner) }, sites.mkString("\n"))
+    assert(!sites.exists(_._2.contains("min(")), "no MIN over parsed hex slices")
   }
 
   test("q66: full-outer join is a shuffle join (both sides preserved, no broadcast)") {
