@@ -1410,9 +1410,9 @@ object Graph {
     * SCALE GATE: the closure's STATE is pair-proportional — ~quadratic
     * in nodes on dense graphs — so this is a METADATA-SCALE device
     * (FK/workflow graphs, catalogs), not a corpus-scale one. The
-    * accumulated pair count is checked every round against
-    * `spark.graft.graph.closurePairBudget` (default 20M pairs ≈ the
-    * measured 5.6M-pair dense fixture with 3–4× headroom) and RAISES
+    * accumulated pair count is checked every round against `pairBudget`
+    * (default 20M pairs ≈ the measured 5.6M-pair dense fixture with 3–4×
+    * headroom) and RAISES
     * on breach, naming [[sccCyclic]] — which answers the cycle /
     * condensation questions with O(V) state — as the scale path.
     *
@@ -1429,10 +1429,8 @@ object Graph {
     * co-partitioned shuffle join above it. Convergence = empty delta;
     * `maxRounds` is a runaway backstop that raises rather than
     * silently under-reporting. */
-  def transitiveClosureFixpoint(edges: DataFrame, maxRounds: Int = 100): DataFrame = {
-    val budget = edges.sparkSession.conf
-      .getOption("spark.graft.graph.closurePairBudget").map(_.toLong)
-      .getOrElse(20000000L)
+  def transitiveClosureFixpoint(edges: DataFrame, maxRounds: Int = 100,
+      pairBudget: Long = 20000000L): DataFrame = {
     val (e0, n0) = edges.select(col("src"), col("dst")).distinct().stageBoundaryRows
     val e = gateBroadcast(e0.select(col("src").as("m"), col("dst")), n0)
     var acc = e0
@@ -1456,8 +1454,8 @@ object Graph {
       val (d, nd) = ext.join(acc, Seq("src", "dst"), "left_anti").stageBoundaryRows
       delta = d
       nDelta = nd
-      require(nAcc + nDelta <= budget,
-        s"transitive closure would exceed the $budget-pair state budget at round $round " +
+      require(nAcc + nDelta <= pairBudget,
+        s"transitive closure would exceed the $pairBudget-pair state budget at round $round " +
           s"($nAcc pairs + $nDelta new) — pair-proportional state does not scale on " +
           "dense graphs; for cycle membership / SCC condensation use sccCyclic (O(V) label state)")
       // delta is disjoint from acc by the anti join — no distinct needed

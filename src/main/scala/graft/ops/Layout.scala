@@ -122,6 +122,26 @@ object Layout {
       .orderBy(col("source"))
   }
 
+  // Declared-hot keys memoized per lineitem content: production hot-key
+  // lists are configuration refreshed out-of-band (a tenant registry, a
+  // daily frequency sweep), not an exact corpus count re-run inside
+  // every query — so the probe is paid once per content and reused, same
+  // amortization contract as the layout writes above. The key is the
+  // scan's `Tables.signature` (path, length and mtime of every file), so
+  // a fixture rewritten in place is probed again, and no session is held.
+  private val hotKeyCache = scala.collection.concurrent.TrieMap.empty[String, Seq[Any]]
+
+  /** q114's declared-hot keys: the 5 orderkeys with the most lines in
+    * `li`, memoized by its content signature; probed on every call when
+    * `li` has no file listing to sign. */
+  private[graft] def declaredHotKeys(li: DataFrame): Seq[Any] = {
+    def probe = li.groupBy(col("l_orderkey")).count()
+      .orderBy(col("count").desc, col("l_orderkey"))
+      .limit(5).collect().map(_.get(0)).toSeq
+    Tables.signature(li.sparkSession, li.queryExecution.analyzed)
+      .fold(probe)(sig => hotKeyCache.getOrElseUpdate(sig, probe))
+  }
+
   /** Salted skew-join in the contract: the fact join runs through
     * [[graft.functions.SkewJoin.saltedJoin]] with the top-5 orderkeys
     * DECLARED hot (an exact frequency probe — the production pattern for
@@ -134,14 +154,6 @@ object Layout {
     * (SkewJoinSpec pins the (key, salt) shuffle, the no-cold-replication
     * invariant, sampling-based detection, and the AQE runtime skew-split
     * alternative). */
-  // Declared-hot keys memoized per (session, dir): production hot-key
-  // lists are configuration refreshed out-of-band (a tenant registry, a
-  // daily frequency sweep), not an exact corpus count re-run inside
-  // every query — so the probe is paid once and reused, same
-  // amortization contract as the layout writes above.
-  private val hotKeyCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Any]]
-
   val q114SaltedJoin: QueryDef = sql(
     "q114_salted_join",
     """SELECT o.o_orderpriority, COUNT(*) AS n_lines,
@@ -150,16 +162,12 @@ object Layout {
       |GROUP BY 1
       |ORDER BY 1""".stripMargin) { (s, dir) =>
     val li = Tables.lineitem(s, dir)
-    val declaredHot = hotKeyCache.getOrElseUpdate((s, dir),
-      li.groupBy(col("l_orderkey")).count()
-        .orderBy(col("count").desc, col("l_orderkey"))
-        .limit(5).collect().map(_.get(0)).toSeq)
     graft.functions.SkewJoin.saltedJoin(
         li,
         Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderpriority")),
         "l_orderkey", "o_orderkey",
         saltSource = col("l_linenumber"), saltFactor = 8,
-        hotKeys = Some(declaredHot))
+        hotKeys = Some(declaredHotKeys(li)))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_lines"), dsum(qty(col("l_quantity"))).as("sum_qty"))
       .orderBy(col("o_orderpriority"))

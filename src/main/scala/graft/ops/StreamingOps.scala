@@ -1,9 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.File
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Decimals._
 import graft.sources.{StateStore, Tables}
@@ -19,28 +22,30 @@ import graft.sources.{StateStore, Tables}
   *     asserting stream == batch on the same data (self-oracle) plus
   *     watermark late-drop behavior.
   *
+  * One device per job on the streaming side:
+  *   - **Source.** [[fileSource]] is the one file source: staged parquet
+  *     files, one per trigger. [[eventsStream]] and
+  *     [[tumblingCountsStream]] read it directly.
+  *   - **Loop.** [[eachFile]] is the one micro-batch loop: every
+  *     `foreachBatch` face runs its per-trigger body through it, on the
+  *     batch re-based onto a fresh plan.
+  *   - **Republished state.** State a face rewrites every trigger is a
+  *     [[StateStore.publishNext]] snapshot (a version is never written
+  *     twice; the latest two are kept), read back through
+  *     [[StateStore.latest]]: the six folds (MV, join-MV, Bloom, KMV,
+  *     top-k, freshness), the log-tail and postings snapshots, and the
+  *     packing offset.
+  *   - **Append-only logs.** [[corpusBuildStream]], [[admissionCapStream]]
+  *     and [[driftStream]] append each trigger's new rows to one parquet
+  *     log, so per-trigger cost stays proportional to the new rows; they
+  *     share only the empty-log initializer.
+  *
   * Scale posture: all streaming state is keyed (window × type, user
   * session, dedup key) so it partitions across executors; watermarks bound
   * state size; `maxFilesPerTrigger` paces replay.
   */
 object StreamingOps {
 
-  /** The published `v_N` snapshots under `root`, oldest first: a version
-    * counts once its `probe` file exists. */
-  private def snapshotVersions(root: java.io.File, probe: String): Seq[Long] =
-    Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.matches("v_\\d+") && new java.io.File(f, probe).exists())
-      .map(_.getName.stripPrefix("v_").toLong).sorted.toSeq
-
-  /** Publishes the snapshot after the last of `versions` under `root`
-    * through the store's commit step (first writer wins) and returns
-    * its dir. */
-  private def publishSnapshot(root: java.io.File, versions: Seq[Long])(
-      write: java.io.File => Unit): java.io.File = {
-    val published = new java.io.File(root, s"v_${versions.lastOption.getOrElse(-1L) + 1L}")
-    StateStore.commit(published, replace = false)(write)
-    published
-  }
   import QueryDef.sql
 
   /** Tumbling 1-minute windows × event type (batch face). */
@@ -149,19 +154,68 @@ object StreamingOps {
 
   // ---- streaming faces (unbounded DataFrames) ----
 
+  private val DocsSchema =
+    StructType.fromDDL("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+  private val OrdersSchema = StructType.fromDDL("o_orderkey LONG, o_custkey LONG, " +
+    "o_orderstatus STRING, o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING")
+  private val KeysSchema = StructType.fromDDL("o_orderkey LONG, o_custkey LONG")
+  private val VectorsSchema = StructType.fromDDL("vec_id LONG, embedding ARRAY<FLOAT>")
+
+  /** The one file source of the streaming faces: the parquet files staged
+    * in `stagedDir`, read as a stream of one file per trigger. */
+  private def fileSource(s: SparkSession, stagedDir: String, schema: StructType): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(stagedDir)
+
+  /** The one micro-batch loop: [[fileSource]] under
+    * `Trigger.AvailableNow`, `body` called once per staged file with the
+    * trigger id and the batch. The batch is re-based: the sink-provided
+    * frame carries fixed attribute ids that the analyzer can't
+    * deduplicate through self-joins (aggregates of the batch joined back
+    * to the batch). With `fileCol`, `input_file_name()` is captured under
+    * that name BEFORE re-basing: it resolves against the file scan, not
+    * against a re-created frame. */
+  private def eachFile(s: SparkSession, stagedDir: String, schema: StructType,
+      fileCol: Option[String] = None)(body: (Long, DataFrame) => Unit): StreamingQuery =
+    fileSource(s, stagedDir, schema).writeStream
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val named = fileCol.fold(batch)(c => batch.withColumn(c, input_file_name()))
+        body(id, s.createDataFrame(named.rdd, named.schema))
+      }
+      .start()
+
+  /** An empty frame with the columns of `ddl`: a state before its first
+    * trigger. */
+  private def emptyFrame(s: SparkSession, ddl: String): DataFrame =
+    s.createDataFrame(java.util.Collections.emptyList[Row](), StructType.fromDDL(ddl))
+
+  /** Creates the append-only log at `dir`, empty under `ddl`, ONLY when
+    * none exists — a restart against accumulated state must EXTEND it
+    * (that is the persisted-state contract), not silently reset it. */
+  private def initLog(s: SparkSession, dir: String, ddl: String): Unit =
+    if (!new File(dir, "_SUCCESS").exists())
+      emptyFrame(s, ddl).write.mode("overwrite").parquet(dir)
+
+  /** One trigger's fold into a one-part snapshot state: `merge` of the
+    * latest snapshot under `stateDir` (empty under `ddl` before the
+    * first) publishes as the next snapshot, returned read back. */
+  private def republish(s: SparkSession, stateDir: String, ddl: String)(
+      merge: DataFrame => DataFrame): DataFrame = {
+    val root = new File(stateDir)
+    val state = StateStore.latest(root).fold(emptyFrame(s, ddl))(v => s.read.parquet(v.getPath))
+    val published = StateStore.publishNext(root)(tmp => merge(state).write.parquet(tmp.getPath))
+    s.read.parquet(published.getPath)
+  }
+
   /** File-source replay of an events parquet fixture: the file is staged
     * into a directory and read as a stream (one file per trigger). The
     * stream schema is inferred from the already-staged files (one footer
     * read — a stream source needs an explicit schema), so the source
     * tracks whichever `ts` layout the fixture generation shipped; the
     * column is then normalized exactly like the batch loader. */
-  def eventsStream(s: SparkSession, stagedDir: String): DataFrame = {
-    val schema = Tables.withNanosAsLong(s)(s.read.parquet(stagedDir).schema)
-    Tables.normalizeEventsTs(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stagedDir))
-  }
+  def eventsStream(s: SparkSession, stagedDir: String): DataFrame =
+    Tables.normalizeEventsTs(fileSource(s, stagedDir,
+      Tables.withNanosAsLong(s)(s.read.parquet(stagedDir).schema)))
 
   /** Tumbling-window counts with a watermark: rows later than 10 minutes
     * behind the max event time are dropped from state. */
@@ -445,21 +499,13 @@ object StreamingOps {
     * equality with the batch face. */
   def incrementalDedupStream(s: SparkSession, stagedDir: String,
       corpus: Dedup.CorpusDedupState)(
-      onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // unpersist the per-trigger shingle cache once the consumer is
-        // done — a long-lived stream must not accumulate cached blocks
-        val (decisions, bsh) = Dedup.dedupeBatchWithHandle(batch, corpus)
-        try onBatch(id, decisions) finally bsh.unpersist()
-      }
-      .start()
-  }
+      onBatch: (Long, DataFrame) => Unit): StreamingQuery =
+    eachFile(s, stagedDir, DocsSchema) { (id, b) =>
+      // unpersist the per-trigger shingle cache once the consumer is
+      // done — a long-lived stream must not accumulate cached blocks
+      val (decisions, bsh) = Dedup.dedupeBatchWithHandle(b, corpus)
+      try onBatch(id, decisions) finally bsh.unpersist()
+    }
 
   /** Streaming face of the corpus-build capstone (q123) — the actual
     * 100 TB ingest loop: document files arrive staged IN doc_id ORDER
@@ -475,9 +521,9 @@ object StreamingOps {
     * [[TextOps.decontaminate]] operator (the trigger's grams are pruned
     * by the PERSISTED eval-gram bloom — built once per eval-set version,
     * read from disk every trigger). Accepted rows flow to
-    * `onBatch`; their hashes append to `stateDir` (parquet — the state a
-    * pipeline persists between runs, same posture as
-    * `Dedup.persistedCorpusState`). The mixture rebalance (q118) is
+    * `onBatch`; their hashes append to `stateDir` (an append-only
+    * parquet log — the state a pipeline persists between runs). The
+    * mixture rebalance (q118) is
     * inherently corpus-global — rates depend on FINAL per-source
     * survivor counts — so it stays a batch post-pass over the
     * accumulated survivors; StreamingSpec proves stream survivors +
@@ -490,54 +536,35 @@ object StreamingOps {
     * grows, at 32 bytes/doc. */
   def corpusBuildStream(s: SparkSession, stagedDir: String,
       evalDocs: DataFrame, stateDir: String)(
-      onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.types.{StructField, StructType, StringType}
-    val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-    // initialize an empty hash state ONLY when none exists — a restart
-    // against accumulated state must EXTEND it (that is the persisted-
-    // state contract), not silently re-admit previously-seen duplicates
-    if (!new java.io.File(stateDir, "_SUCCESS").exists())
-      s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField("h", StringType))))
-        .write.mode("overwrite").parquet(stateDir)
+      onBatch: (Long, DataFrame) => Unit): StreamingQuery = {
+    initLog(s, stateDir, "h STRING")
     // the eval set is fixed for the stream's lifetime: key it once,
     // reuse the persisted reference-gram Bloom across every trigger
     val bloomKey = StateStore.key("evalbloom_v1", evalDocs)
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // re-base the micro-batch: the sink-provided frame carries fixed
-        // attribute ids that the analyzer can't deduplicate through the
-        // gate prefix's self-joins (aggregates of the batch joined back
-        // to the batch)
-        val b = s.createDataFrame(batch.rdd, batch.schema)
-        val gated = TextOps.curationGates(b)
-        val w = Window.partitionBy(col("h")).orderBy(col("doc_id"))
-        val ded = gated.withColumn("h", md5(col("text")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn")
-          .join(s.read.parquet(stateDir), Seq("h"), "left_anti").cachedStageBoundary
+    eachFile(s, stagedDir, DocsSchema) { (id, b) =>
+      val gated = TextOps.curationGates(b)
+      val w = Window.partitionBy(col("h")).orderBy(col("doc_id"))
+      val ded = gated.withColumn("h", md5(col("text")))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).drop("rn")
+        .join(s.read.parquet(stateDir), Seq("h"), "left_anti").cachedStageBoundary
+      try {
+        val (ov, gramsHandle) = TextOps.decontaminateWithHandle(
+          ded.select(col("doc_id"), col("text")), evalDocs, 5, 0.5,
+          bloomState = Some(bloomKey))
         try {
-          val (ov, gramsHandle) = TextOps.decontaminateWithHandle(
-            ded.select(col("doc_id"), col("text")), evalDocs, 5, 0.5,
-            bloomState = Some(bloomKey))
-          try {
-            val accepted = ded.join(
-              ov.filter(!col("contaminated")).select(col("doc_id")), "doc_id")
-              .select(col("doc_id"), col("lang"), col("source"),
-                size(col("toks")).cast("long").as("n_tokens"))
-            onBatch(id, accepted)
-          } finally gramsHandle.unpersist()
-          // append LAST: ded's lineage anti-joins the state it reads, so
-          // every in-trigger action must see the pre-append snapshot —
-          // even if the persisted handle is dropped and ded recomputes
-          ded.select(col("h")).write.mode("append").parquet(stateDir)
-        } finally ded.unpersist()
-      }
-      .start()
+          val accepted = ded.join(
+            ov.filter(!col("contaminated")).select(col("doc_id")), "doc_id")
+            .select(col("doc_id"), col("lang"), col("source"),
+              size(col("toks")).cast("long").as("n_tokens"))
+          onBatch(id, accepted)
+        } finally gramsHandle.unpersist()
+        // append LAST: ded's lineage anti-joins the state it reads, so
+        // every in-trigger action must see the pre-append snapshot —
+        // even if the persisted handle is dropped and ded recomputes
+        ded.select(col("h")).write.mode("append").parquet(stateDir)
+      } finally ded.unpersist()
+    }
   }
 
   /** Streaming face of q235's incremental MV maintenance — the refresh
@@ -545,69 +572,24 @@ object StreamingOps {
     * newly-arrived order files ([[Analytics.mvState]]) and merges into
     * the persisted MV ([[Analytics.mvMerge]] — literally the batch
     * operator's code, so stream and batch can never drift), then
-    * publishes state + ingested-file log together as ONE versioned
-    * snapshot directory (v_N, the [[graft.sources.StateStore.commit]]
-    * step): a merge is NOT
-    * idempotent per row, so the file log must commit in the same
-    * atomic unit as the state it is folded into — the two can never
-    * tear apart across a crash, and a restarted (uncheckpointed)
-    * stream that replays staged files anti-joins them out of the
-    * fresh set and re-emits the same MV without double-counting.
-    * Triggers that bring nothing new publish nothing (no version
-    * churn). `onBatch` sees [[Analytics.mvEmit]] of the post-merge
-    * state, read back from the written snapshot.
+    * publishes state + ingested-file log together as ONE snapshot
+    * ([[fileLoggedStream]]): a merge is NOT idempotent per row, so the
+    * file log must commit in the same atomic unit as the state it is
+    * folded into — the two can never tear apart across a crash, and a
+    * restarted (uncheckpointed) stream that replays staged files
+    * anti-joins them out of the fresh set and re-emits the same MV
+    * without double-counting. `onBatch` sees [[Analytics.mvEmit]] of
+    * the post-merge state, read back from the written snapshot.
     *
     * Per-trigger cost: one scan of the trigger's files + a merge of
     * two STATE-sized relations — history is never re-scanned, which
     * is the entire point of the MV algebra at 100 TB. */
   def mvMaintainStream(s: SparkSession, stagedDir: String, stateDir: String)(
-      onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = "o_orderkey LONG, o_custkey LONG, o_orderstatus STRING, " +
-      "o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING"
-    val root = new java.io.File(stateDir)
-    root.mkdirs()
-    def emptyState = s.sql(
-      """SELECT CAST(NULL AS DATE) AS mv_month, '' AS o_orderpriority,
-        |  0L AS n, 0L AS rev, 0L AS mn, 0L AS mx WHERE false""".stripMargin)
-    def emptyFiles = s.sql("SELECT '' AS src_file WHERE false")
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // capture provenance BEFORE re-basing: input_file_name() resolves
-        // against the file scan, not against a re-created frame
-        val withFile = batch.withColumn("src_file", input_file_name())
-        val arrived = s.createDataFrame(withFile.rdd, withFile.schema).cachedStageBoundary
-        try {
-          val vs = snapshotVersions(root, "files/_SUCCESS")
-          val (state, seen) = vs.lastOption match {
-            case Some(v) => (s.read.parquet(s"$stateDir/v_$v/mv"),
-              s.read.parquet(s"$stateDir/v_$v/files"))
-            case None => (emptyState, emptyFiles)
-          }
-          val fresh = arrived.join(seen, Seq("src_file"), "left_anti")
-          if (fresh.isEmpty) {
-            onBatch(id, vs.lastOption match {
-              case Some(v) => Analytics.mvEmit(s.read.parquet(s"$stateDir/v_$v/mv"))
-              case None => Analytics.mvEmit(emptyState)
-            })
-          } else {
-            val published = publishSnapshot(root, vs) { tmp =>
-              Analytics.mvMerge(state, Analytics.mvState(fresh.drop("src_file")))
-                .write.parquet(s"${tmp.getPath}/mv")
-              seen.select(col("src_file"))
-                .union(fresh.select(col("src_file")).distinct())
-                .distinct()
-                .write.parquet(s"${tmp.getPath}/files")
-            }
-            onBatch(id, Analytics.mvEmit(s.read.parquet(s"${published.getPath}/mv")))
-          }
-        } finally arrived.unpersist()
-      }
-      .start()
-  }
+      onBatch: (Long, DataFrame) => Unit): StreamingQuery =
+    fileLoggedStream(s, stagedDir, stateDir,
+      "mv_month DATE, o_orderpriority STRING, n BIGINT, rev BIGINT, mn BIGINT, mx BIGINT")(
+      (state, fresh) => Analytics.mvMerge(state, Analytics.mvState(fresh)),
+      Analytics.mvEmit)(onBatch)
 
   /** Event-time tumbling DAY counts under a REAL watermark — the face
     * that closes the loop on q341's lateness audit: q341 measures the
@@ -625,22 +607,18 @@ object StreamingOps {
     * never emit windows still open at AvailableNow termination — the
     * classic watermark-test trap). */
   def tumblingCountsStream(s: SparkSession, stagedDir: String, delay: String,
-      sinkName: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = s.read.parquet(stagedDir).schema
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
+      sinkName: String): StreamingQuery =
+    fileSource(s, stagedDir, s.read.parquet(stagedDir).schema)
       .withWatermark("ts", delay)
       .groupBy(window(col("ts"), "1 day"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("window.start").as("win_start"), col("n_events"))
       .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .outputMode("update")
       .format("memory")
       .queryName(sinkName)
       .start()
-  }
 
   /** Streaming face of q332's JOIN-view maintenance — the stream-static
     * delta rule: orders arrive as staged files, the customer dimension
@@ -659,50 +637,46 @@ object StreamingOps {
     * the delta rule's 100 TB point. `onBatch` sees the emitted view. */
   def joinMvMaintainStream(s: SparkSession, stagedDir: String, cust: DataFrame,
       stateDir: String)(
-      onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = "o_orderkey LONG, o_custkey LONG, o_orderstatus STRING, " +
-      "o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING"
-    val root = new java.io.File(stateDir)
-    root.mkdirs()
+      onBatch: (Long, DataFrame) => Unit): StreamingQuery = {
     val dim = broadcast(cust.select(col("c_custkey"), col("c_nationkey")))
-    def emptyState = s.sql(
-      "SELECT 0 AS c_nationkey, '' AS o_orderpriority, 0L AS n, 0L AS sc, 0L AS fp WHERE false")
-      .select(col("c_nationkey").cast("int").as("c_nationkey"), col("o_orderpriority"),
-        col("n"), col("sc"), col("fp"))
-    def emptyFiles = s.sql("SELECT '' AS src_file WHERE false")
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val withFile = batch.withColumn("src_file", input_file_name())
-        val arrived = s.createDataFrame(withFile.rdd, withFile.schema).cachedStageBoundary
-        try {
-          val vs = snapshotVersions(root, "files/_SUCCESS")
-          val (state, seen) = vs.lastOption match {
-            case Some(v) => (s.read.parquet(s"$stateDir/v_$v/mv"),
-              s.read.parquet(s"$stateDir/v_$v/files"))
-            case None => (emptyState, emptyFiles)
+    fileLoggedStream(s, stagedDir, stateDir,
+      "c_nationkey INT, o_orderpriority STRING, n BIGINT, sc BIGINT, fp BIGINT")(
+      (state, fresh) => Analytics.joinMvMerge(state,
+        Analytics.joinMvState(Analytics.joinMvOrders(fresh), dim)),
+      Analytics.joinMvEmit)(onBatch)
+  }
+
+  /** The file-logged fold of the two MV faces: each trigger's order
+    * file, tagged `src_file`, is anti-joined against the ingested-file
+    * log; the fresh rows are `merge`d into the state, and the merged
+    * state (part `mv`, empty under `stateDdl` before the first trigger)
+    * and the grown file log (part `files`) publish as ONE snapshot.
+    * Triggers that bring nothing new publish nothing (no version
+    * churn). `onBatch` sees `emit` of the current state. */
+  private def fileLoggedStream(s: SparkSession, stagedDir: String, stateDir: String,
+      stateDdl: String)(merge: (DataFrame, DataFrame) => DataFrame,
+      emit: DataFrame => DataFrame)(onBatch: (Long, DataFrame) => Unit): StreamingQuery = {
+    val root = new File(stateDir)
+    eachFile(s, stagedDir, OrdersSchema, fileCol = Some("src_file")) { (id, b) =>
+      val arrived = b.cachedStageBoundary
+      try {
+        val last = StateStore.latest(root)
+        val state = last.fold(emptyFrame(s, stateDdl))(v => s.read.parquet(s"$v/mv"))
+        val seen = last.fold(emptyFrame(s, "src_file STRING"))(v => s.read.parquet(s"$v/files"))
+        val fresh = arrived.join(seen, Seq("src_file"), "left_anti")
+        val current = if (fresh.isEmpty) state else {
+          val published = StateStore.publishNext(root) { tmp =>
+            merge(state, fresh.drop("src_file")).write.parquet(s"$tmp/mv")
+            seen.select(col("src_file"))
+              .union(fresh.select(col("src_file")).distinct())
+              .distinct()
+              .write.parquet(s"$tmp/files")
           }
-          val fresh = arrived.join(seen, Seq("src_file"), "left_anti")
-          if (fresh.isEmpty) {
-            onBatch(id, Analytics.joinMvEmit(state))
-          } else {
-            val published = publishSnapshot(root, vs) { tmp =>
-              Analytics.joinMvMerge(state,
-                  Analytics.joinMvState(Analytics.joinMvOrders(fresh.drop("src_file")), dim))
-                .write.parquet(s"${tmp.getPath}/mv")
-              seen.select(col("src_file"))
-                .union(fresh.select(col("src_file")).distinct())
-                .distinct()
-                .write.parquet(s"${tmp.getPath}/files")
-            }
-            onBatch(id, Analytics.joinMvEmit(s.read.parquet(s"${published.getPath}/mv")))
-          }
-        } finally arrived.unpersist()
-      }
-      .start()
+          s.read.parquet(s"$published/mv")
+        }
+        onBatch(id, emit(current))
+      } finally arrived.unpersist()
+    }
   }
 
   /** Streaming face of q250's Bloom zone maps — skipping metadata
@@ -710,7 +684,7 @@ object StreamingOps {
     * table format keeps its column indexes current: each trigger
     * builds [[Layout.bloomWords]] over only the arriving order files
     * and BIT_ORs them into the persisted words relation, published as
-    * a versioned atomic snapshot. The contrast with
+    * a snapshot ([[republish]]). The contrast with
     * [[mvMaintainStream]] is the point: BIT_OR is IDEMPOTENT, so a
     * replayed file folds to a no-op and NO ingested-file log is
     * needed — merge algebra decides durability protocol. Bits are
@@ -718,70 +692,35 @@ object StreamingOps {
     * guarantee under any replay/ordering. `onBatch` sees the
     * post-merge words relation. */
   def bloomZoneMapStream(s: SparkSession, stagedDir: String, stateDir: String)(
-      onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = "o_orderkey LONG, o_custkey LONG"
-    val root = new java.io.File(stateDir)
-    root.mkdirs()
-    def emptyWords = s.sql("SELECT 0L AS shard, 0L AS w, 0L AS bm WHERE false")
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val arrived = s.createDataFrame(batch.rdd, batch.schema)
-          .select(expr("o_orderkey div 200").as("shard"), col("o_custkey").as("k"))
-        val vs = snapshotVersions(root, "_SUCCESS")
-        val state = vs.lastOption match {
-          case Some(v) => s.read.parquet(s"$stateDir/v_$v")
-          case None => emptyWords
-        }
-        // idempotent merge: same-key words BIT_OR together, so a replayed
-        // file changes nothing and arrival order never matters
-        val merged = state.unionByName(Layout.bloomWords(arrived))
+      onBatch: (Long, DataFrame) => Unit): StreamingQuery =
+    eachFile(s, stagedDir, KeysSchema) { (id, b) =>
+      val arrived = b.select(expr("o_orderkey div 200").as("shard"), col("o_custkey").as("k"))
+      // idempotent merge: same-key words BIT_OR together, so a replayed
+      // file changes nothing and arrival order never matters
+      onBatch(id, republish(s, stateDir, "shard BIGINT, w BIGINT, bm BIGINT") { state =>
+        state.unionByName(Layout.bloomWords(arrived))
           .groupBy(col("shard"), col("w"))
           .agg(expr("bit_or(bm)").as("bm"))
-        val published = publishSnapshot(root, vs)(tmp => merged.write.parquet(tmp.getPath))
-        onBatch(id, s.read.parquet(published.getPath))
-      }
-      .start()
-  }
+      })
+    }
 
   /** Streaming face of q278 (KMV distinct sketch): per trigger, hash the
     * arriving keys, union with the persisted k smallest, keep the k
-    * smallest again, publish a versioned snapshot. KMV state is a
+    * smallest again, publish a snapshot. KMV state is a
     * MIN-SEMILATTICE exactly like q250's Bloom BIT_OR: the fold is
     * idempotent and commutative, so a replayed file is a no-op and
     * arrival order never matters — no file log, no offset, no
     * checkpoint needed for correctness (the q250 argument, on the
     * second synopsis family). `onBatch` sees the post-merge sketch. */
   def kmvStream(s: SparkSession, stagedDir: String, stateDir: String, k: Int = 64)(
-      onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = "o_orderkey LONG, o_custkey LONG"
-    val root = new java.io.File(stateDir)
-    root.mkdirs()
-    def emptyH = s.sql("SELECT 0L AS h WHERE false")
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val arrived = Layout.kmvHashes(
-          s.createDataFrame(batch.rdd, batch.schema), "o_custkey")
-        val vs = snapshotVersions(root, "_SUCCESS")
-        val state = vs.lastOption match {
-          case Some(v) => s.read.parquet(s"$stateDir/v_$v")
-          case None => emptyH
-        }
-        // idempotent min-fold: union + distinct + re-top-k
-        val merged = state.unionByName(arrived).distinct()
-          .orderBy(col("h")).limit(k)
-        val published = publishSnapshot(root, vs)(tmp => merged.write.parquet(tmp.getPath))
-        onBatch(id, s.read.parquet(published.getPath))
-      }
-      .start()
-  }
+      onBatch: (Long, DataFrame) => Unit): StreamingQuery =
+    eachFile(s, stagedDir, KeysSchema) { (id, b) =>
+      val arrived = Layout.kmvHashes(b, "o_custkey")
+      // idempotent min-fold: union + distinct + re-top-k
+      onBatch(id, republish(s, stateDir, "h BIGINT") { state =>
+        state.unionByName(arrived).distinct().orderBy(col("h")).limit(k)
+      })
+    }
 
   /** Streaming face of q102 (heavy hitters): per arriving FILE, an
     * exact-counts-then-compress Misra–Gries summary — top k words by
@@ -802,54 +741,37 @@ object StreamingOps {
     * board: one bounded summary per arriving shard, one bounded merge
     * to serve. */
   def topkStream(s: SparkSession, stagedDir: String, stateDir: String, k: Int = 64)(
-      onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-    val root = new java.io.File(stateDir)
-    root.mkdirs()
-    def emptyState = s.sql("SELECT '' AS fname, '' AS word, 0L AS est WHERE false")
+      onBatch: (Long, DataFrame) => Unit): StreamingQuery = {
     // compress exact (grp-keyed) counts to a k-counter MG summary:
     // est = cnt - cnt_(k+1), keep positive — per group `grp`
     def compress(counts: DataFrame, grp: Seq[String]): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(grp.map(col): _*).orderBy(col("cnt").desc, col("word"))
+      val w = Window.partitionBy(grp.map(col): _*).orderBy(col("cnt").desc, col("word"))
       counts
         .withColumn("rk", row_number().over(w))
         .withColumn("off", coalesce(
-          max(when(col("rk") === k + 1, col("cnt"))).over(
-            org.apache.spark.sql.expressions.Window.partitionBy(grp.map(col): _*)),
+          max(when(col("rk") === k + 1, col("cnt"))).over(Window.partitionBy(grp.map(col): _*)),
           lit(0L)))
         .filter(col("rk") <= k && col("cnt") > col("off"))
         .select(grp.map(col) :+ col("word") :+ (col("cnt") - col("off")).as("est"): _*)
     }
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val named = batch.withColumn("fname", input_file_name())
-        val counts = s.createDataFrame(named.rdd, named.schema)
-          .select(col("fname"), explode(split(col("text"), " ")).as("word"))
-          .groupBy(col("fname"), col("word")).agg(count(lit(1)).as("cnt"))
-        val arrived = compress(counts, Seq("fname"))
-        val vs = snapshotVersions(root, "_SUCCESS")
-        val state = vs.lastOption match {
-          case Some(v) => s.read.parquet(s"$stateDir/v_$v")
-          case None => emptyState
-        }
-        // set union: a replayed file contributes identical rows
-        val merged = state.unionByName(arrived)
+    eachFile(s, stagedDir, DocsSchema, fileCol = Some("fname")) { (id, b) =>
+      val counts = b
+        .select(col("fname"), explode(split(col("text"), " ")).as("word"))
+        .groupBy(col("fname"), col("word")).agg(count(lit(1)).as("cnt"))
+      val arrived = compress(counts, Seq("fname"))
+      // set union: a replayed file contributes identical rows
+      val state = republish(s, stateDir, "fname STRING, word STRING, est BIGINT") { state =>
+        state.unionByName(arrived)
           .groupBy(col("fname"), col("word")).agg(max(col("est")).as("est"))
-        val published = publishSnapshot(root, vs)(tmp => merged.write.parquet(tmp.getPath))
-        // serve: sum the per-file summaries, re-compress to k counters
-        val summed = s.read.parquet(published.getPath)
-          .groupBy(col("word")).agg(sum(col("est")).as("cnt"))
-          .withColumn("tag", lit(1))
-        onBatch(id, compress(summed, Seq("tag"))
-          .select(col("word"), col("est"))
-          .orderBy(col("est").desc, col("word")))
       }
-      .start()
+      // serve: sum the per-file summaries, re-compress to k counters
+      val summed = state
+        .groupBy(col("word")).agg(sum(col("est")).as("cnt"))
+        .withColumn("tag", lit(1))
+      onBatch(id, compress(summed, Seq("tag"))
+        .select(col("word"), col("est"))
+        .orderBy(col("est").desc, col("word")))
+    }
   }
 
   /** Streaming face of q307 (feed freshness): per trigger, fold the
@@ -871,64 +793,44 @@ object StreamingOps {
     * files × feeds — manifest-sized, not row-sized — and compactable by
     * the same snapshot versioning. */
   def freshnessStream(s: SparkSession, stagedDir: String, stateDir: String)(
-      onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val root = new java.io.File(stateDir)
-    root.mkdirs()
-    def emptyState = s.sql(
-      "SELECT '' AS fname, '' AS event_type, 0L AS last_us, 0L AS n_events WHERE false")
-    val schema = s.read.parquet(stagedDir).schema
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // file identity must ride along BEFORE the detach: it only
-        // exists while the rows still belong to the file-source scan
-        val named = batch.withColumn("fname", input_file_name())
-        val arrived = Tables.normalizeEventsTs(
-            s.createDataFrame(named.rdd, named.schema))
-          .groupBy(col("fname"), col("event_type"))
-          .agg(max(expr("unix_micros(ts)")).as("last_us"),
-            count(lit(1)).as("n_events"))
-        val vs = snapshotVersions(root, "_SUCCESS")
-        val state = vs.lastOption match {
-          case Some(v) =>
-            val snap = s.read.parquet(s"$stateDir/v_$v")
-            // schema gate: a pre-file-keyed snapshot (event_type,
-            // last_us, n_events — no fname) CANNOT be upgraded exactly:
-            // its counts are un-attributed to files, so any replayed
-            // file would double-count against them. Reject the restart
-            // cleanly with the remedy instead of dying inside
-            // unionByName with a missing-column AnalysisException.
-            require(snap.columns.contains("fname"),
-              s"freshness state at $stateDir/v_$v predates the file-keyed " +
-                "schema (no fname column) and cannot be migrated exactly; " +
-                "delete the state dir and re-run — the stream rebuilds it " +
-                "from the staged files")
-            snap
-          case None => emptyState
-        }
+      onBatch: (Long, DataFrame) => Unit): StreamingQuery =
+    eachFile(s, stagedDir, s.read.parquet(stagedDir).schema, fileCol = Some("fname")) { (id, b) =>
+      val arrived = Tables.normalizeEventsTs(b)
+        .groupBy(col("fname"), col("event_type"))
+        .agg(max(expr("unix_micros(ts)")).as("last_us"),
+          count(lit(1)).as("n_events"))
+      val state = republish(s, stateDir,
+          "fname STRING, event_type STRING, last_us BIGINT, n_events BIGINT") { state =>
+        // schema gate: a pre-file-keyed snapshot (event_type,
+        // last_us, n_events — no fname) CANNOT be upgraded exactly:
+        // its counts are un-attributed to files, so any replayed
+        // file would double-count against them. Reject the restart
+        // cleanly with the remedy instead of dying inside
+        // unionByName with a missing-column AnalysisException.
+        require(state.columns.contains("fname"),
+          s"freshness state under $stateDir predates the file-keyed " +
+            "schema (no fname column) and cannot be migrated exactly; " +
+            "delete the state dir and re-run — the stream rebuilds it " +
+            "from the staged files")
         // set-union merge: a replayed file re-derives the SAME
         // (fname, event_type) rows, so MAX over equal values = no-op
-        val merged = state.unionByName(arrived)
+        state.unionByName(arrived)
           .groupBy(col("fname"), col("event_type"))
           .agg(max(col("last_us")).as("last_us"), max(col("n_events")).as("n_events"))
-        val published = publishSnapshot(root, vs)(tmp => merged.write.parquet(tmp.getPath))
-        // the served marks: per-file state rolled up — counts now sum
-        // over DEDUPED files, exact under replay
-        onBatch(id, s.read.parquet(published.getPath)
-          .groupBy(col("event_type"))
-          .agg(max(col("last_us")).as("last_us"), sum(col("n_events")).as("n_events")))
       }
-      .start()
-  }
+      // the served marks: per-file state rolled up — counts now sum
+      // over DEDUPED files, exact under replay
+      onBatch(id, state
+        .groupBy(col("event_type"))
+        .agg(max(col("last_us")).as("last_us"), sum(col("n_events")).as("n_events")))
+    }
 
   /** Streaming face of q130's sequence packing — the ingest loop that
     * packs ARRIVING documents into the SAME global token layout the
     * batch operator computes: the corpus-wide token offset persists
-    * between triggers (one long, published with the write-tmp + atomic
-    * rename protocol), so each trigger lays its docs out continuing
+    * between triggers (one long, published as a one-file snapshot
+    * through [[StateStore.publishNext]] — no Spark job), so each trigger
+    * lays its docs out continuing
     * exactly where the previous one stopped, windows straddle trigger
     * boundaries the way they straddle doc boundaries, and a restart
     * resumes from the last COMMITTED offset (state publishes only after
@@ -942,58 +844,26 @@ object StreamingOps {
     * dependency. */
   def packingStream(s: SparkSession, stagedDir: String, stateDir: String,
       contextLen: Int = 128)(
-      onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-    val root = new java.io.File(stateDir)
-    root.mkdirs()
-    def offsetFile = new java.io.File(root, "offset.txt")
-    def readOffset(): Long =
-      if (offsetFile.exists())
-        new String(java.nio.file.Files.readAllBytes(offsetFile.toPath)).trim.toLong
-      else 0L
-    def publishOffset(v: Long): Unit = {
-      val tmp = new java.io.File(root,
-        s"offset.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}")
-      java.nio.file.Files.write(tmp.toPath, v.toString.getBytes)
-      java.nio.file.Files.move(tmp.toPath, offsetFile.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      onBatch: (Long, DataFrame) => Unit): StreamingQuery = {
+    val root = new File(stateDir)
+    eachFile(s, stagedDir, DocsSchema) { (id, batch) =>
+      val b = batch.cachedStageBoundary
+      try {
+        val base = StateStore.latest(root).fold(0L)(v =>
+          new String(java.nio.file.Files.readAllBytes(new File(v, "offset").toPath)).trim.toLong)
+        onBatch(id, TextOps.packSequences(
+          b.select(col("doc_id"), col("text")), contextLen, baseOffset = base))
+        val consumed = b.agg(coalesce(
+            sum(size(split(col("text"), " ")) + 1), lit(0)).cast("long"))
+          .head().getLong(0)
+        StateStore.publishNext(root) { tmp =>
+          tmp.mkdirs()
+          java.nio.file.Files.write(new File(tmp, "offset").toPath, (base + consumed).toString.getBytes)
+        }
+      } finally b.unpersist()
     }
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val b = s.createDataFrame(batch.rdd, batch.schema).cachedStageBoundary
-        try {
-          val base = readOffset()
-          onBatch(id, TextOps.packSequences(
-            b.select(col("doc_id"), col("text")), contextLen, baseOffset = base))
-          val consumed = b.agg(coalesce(
-              sum(size(split(col("text"), " ")) + 1), lit(0)).cast("long"))
-            .head().getLong(0)
-          publishOffset(base + consumed)
-        } finally b.unpersist()
-      }
-      .start()
   }
 
-  /** Streaming mini-batch k-means (Sculley, WWW'10 §3): vector files
-    * arrive as a file-source stream; each micro-batch assigns to the
-    * CURRENT centroids (one distributed scan through
-    * [[Similarity.assignToCentroids]] — the same fused HOF argmin as the
-    * batch trainer) and centroids then move by exact integer running
-    * sums: state is (cid, n, Σvec) longs, centroid = floor(Σ/n). The
-    * online counterpart of q119 — how a served IVF index (q120) absorbs
-    * corpus growth without retraining from scratch. Integer state makes
-    * the stream bit-deterministic: StreamingSpec replays the same batch
-    * sequence with a driver-side reference and requires EXACT state
-    * equality after every trigger. Production persists `state` between
-    * runs via [[Similarity.saveCentroids]]-style parquet behind the
-    * [[graft.sources.StateStore.commit]] step;
-    * per-trigger cost is one scan of the trigger's file plus a k·d-row
-    * aggregate. */
   /** Streaming face of the per-domain cap (q141) — ingest-time
     * admission control: a domain's quota is consumed in ARRIVAL order.
     * The batch face ranks by keep-preference (longest-first) across the
@@ -1013,45 +883,30 @@ object StreamingOps {
     * one scan of the trigger's file — never a pass over the corpus. */
   def admissionCapStream(s: SparkSession, stagedDir: String, stateDir: String,
       cap: Int)(
-      onBatch: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-    // initialize an empty admission log ONLY when none exists — a
-    // restart against accumulated state must EXTEND the consumed quota
-    if (!new java.io.File(stateDir, "_SUCCESS").exists())
-      s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField("domain", StringType),
-          StructField("doc_id", LongType))))
-        .write.mode("overwrite").parquet(stateDir)
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val b = s.createDataFrame(batch.rdd, batch.schema)
-        val log = s.read.parquet(stateDir)
-        val used = log.groupBy(col("domain")).agg(count(lit(1)).as("used"))
-        // anti-join the log first: an uncheckpointed RESTART replays
-        // already-processed files, and replayed admitted docs must
-        // neither re-emit nor re-consume quota (idempotence under
-        // replay — the same content-keyed discipline that makes the
-        // dedup stream's restart self-healing)
-        val admitted = b.join(log.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .withColumn("domain", col("source"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("domain")).orderBy(col("doc_id"))))
-          .join(broadcast(used), Seq("domain"), "left")
-          .filter(coalesce(col("used"), lit(0L)) + col("rk") <= cap)
-          .select(col("domain"), col("doc_id")).cachedStageBoundary
-        try {
-          onBatch(id, admitted)
-          // append LAST: the admission decision anti-depends on the
-          // pre-append state snapshot (same discipline as q108)
-          admitted.write.mode("append").parquet(stateDir)
-        } finally admitted.unpersist()
-      }
-      .start()
+      onBatch: (Long, DataFrame) => Unit): StreamingQuery = {
+    initLog(s, stateDir, "domain STRING, doc_id BIGINT")
+    eachFile(s, stagedDir, DocsSchema) { (id, b) =>
+      val log = s.read.parquet(stateDir)
+      val used = log.groupBy(col("domain")).agg(count(lit(1)).as("used"))
+      // anti-join the log first: an uncheckpointed RESTART replays
+      // already-processed files, and replayed admitted docs must
+      // neither re-emit nor re-consume quota (idempotence under
+      // replay — the same content-keyed discipline that makes the
+      // dedup stream's restart self-healing)
+      val admitted = b.join(log.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .withColumn("domain", col("source"))
+        .withColumn("rk", row_number().over(
+          Window.partitionBy(col("domain")).orderBy(col("doc_id"))))
+        .join(broadcast(used), Seq("domain"), "left")
+        .filter(coalesce(col("used"), lit(0L)) + col("rk") <= cap)
+        .select(col("domain"), col("doc_id")).cachedStageBoundary
+      try {
+        onBatch(id, admitted)
+        // append LAST: the admission decision anti-depends on the
+        // pre-append state snapshot (same discipline as q108)
+        admitted.write.mode("append").parquet(stateDir)
+      } finally admitted.unpersist()
+    }
   }
 
   /** q162's ingest-time face: an IVF serving index watching its arrival
@@ -1068,44 +923,30 @@ object StreamingOps {
     * serves from), so the monitor rides the maintenance write for free. */
   def driftStream(s: SparkSession, stagedDir: String, stateDir: String,
       cents: Seq[(Long, Seq[Long])])(
-      onBatch: (Long, Seq[(Long, Long)]) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    // initialize an empty assignment log ONLY when none exists — a
-    // restart against accumulated state must extend it, not reset it
-    if (!new java.io.File(stateDir, "_SUCCESS").exists())
-      s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField("vec_id", LongType),
-          StructField("cid", LongType))))
-        .write.mode("overwrite").parquet(stateDir)
-    s.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val b = s.createDataFrame(batch.rdd, batch.schema)
-        val log = s.read.parquet(stateDir)
-        val fresh = b.join(log.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        val assigned = Similarity.assignToCentroids(
-            Similarity.quantizeVectors(fresh), cents)
-          .select(col("vec_id"), col("cid")).cachedStageBoundary
-        try {
-          val counts = log.select(col("cid")).union(assigned.select(col("cid")))
-            .groupBy(col("cid")).agg(count(lit(1)).as("n"))
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
-          onBatch(id, counts)
-          assigned.write.mode("append").parquet(stateDir)
-        } finally assigned.unpersist()
-      }
-      .start()
+      onBatch: (Long, Seq[(Long, Long)]) => Unit): StreamingQuery = {
+    initLog(s, stateDir, "vec_id BIGINT, cid BIGINT")
+    eachFile(s, stagedDir, VectorsSchema) { (id, b) =>
+      val log = s.read.parquet(stateDir)
+      val fresh = b.join(log.select(col("vec_id")), Seq("vec_id"), "left_anti")
+      val assigned = Similarity.assignToCentroids(
+          Similarity.quantizeVectors(fresh), cents)
+        .select(col("vec_id"), col("cid")).cachedStageBoundary
+      try {
+        val counts = log.select(col("cid")).union(assigned.select(col("cid")))
+          .groupBy(col("cid")).agg(count(lit(1)).as("n"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
+        onBatch(id, counts)
+        assigned.write.mode("append").parquet(stateDir)
+      } finally assigned.unpersist()
+    }
   }
 
   /** Streaming face of q176's commit-log replay: tail the action log
     * (files of (version, shard_id, action, file_hash) rows landing in
     * `stagedDir`) and maintain the LIVE SNAPSHOT incrementally — per
     * trigger, merge arriving actions into the latest-action-per-shard
-    * state by last-version-wins and republish it atomically (the
-    * [[graft.sources.StateStore.commit]] step; the state is the
+    * state by last-version-wins and publish it as the next snapshot
+    * ([[republish]]; the state is the
     * metadata-plane checkpoint a Delta-style reader keeps so
     * steady-state cost is the log TAIL, exactly what q176's docstring
     * promises). The merge is
@@ -1116,133 +957,98 @@ object StreamingOps {
     * `onBatch` receives the live (shard_id, file_hash) set after each
     * publish. */
   def logTailStream(s: SparkSession, stagedDir: String, stateDir: String)(
-      onBatch: (Long, Seq[(Long, Long)]) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val root = new java.io.File(stateDir)
-    def publish(df: DataFrame): Unit =
-      StateStore.commit(root, replace = true)(tmp => df.write.parquet(tmp.getPath))
-    // initialize an empty snapshot ONLY when none exists — a restart
-    // against accumulated state must extend it, not reset it
-    if (!new java.io.File(root, "_SUCCESS").exists())
-      publish(s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField("shard_id", LongType), StructField("version", LongType),
-          StructField("action", StringType), StructField("file_hash", LongType)))))
-    s.readStream.schema("version LONG, shard_id LONG, action STRING, file_hash LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val b = s.createDataFrame(batch.rdd, batch.schema)
-        val state = s.read.parquet(stateDir)
-        val merged = state
+      onBatch: (Long, Seq[(Long, Long)]) => Unit): StreamingQuery =
+    eachFile(s, stagedDir, StructType.fromDDL(
+        "version LONG, shard_id LONG, action STRING, file_hash LONG")) { (id, b) =>
+      val snapshot = republish(s, stateDir,
+          "shard_id BIGINT, version BIGINT, action STRING, file_hash BIGINT") { state =>
+        state
           .unionByName(b.select(col("shard_id"), col("version"), col("action"), col("file_hash")))
           .withColumn("rn", row_number().over(
             Window.partitionBy(col("shard_id"))
               .orderBy(col("version").desc, col("action"), col("file_hash"))))
           .filter(col("rn") === 1).drop("rn")
-        // the snapshot is shard-count-sized (metadata plane): collect the
-        // report before republishing over the state we just read
-        val live = merged.filter(col("action") === "put")
-          .select(col("shard_id"), col("file_hash")).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
-        publish(merged)
-        onBatch(id, live)
       }
-      .start()
-  }
+      // the snapshot is shard-count-sized (metadata plane)
+      onBatch(id, snapshot.filter(col("action") === "put")
+        .select(col("shard_id"), col("file_hash")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq)
+    }
 
   /** Streaming postings-index maintenance — the ingest loop a lexical
     * retriever runs continuously: document files land in `stagedDir`;
     * per trigger, [[TextOps.extendPostings]] merges the fresh docs into
-    * the persisted (tf, dl, df) index under `stateDir`, republished
-    * behind the [[graft.sources.StateStore.commit]] step. Replayed files anti-join
+    * the persisted (tf, dl, df) index under `stateDir`, published as the
+    * next snapshot (parts `tf`, `dl`, `df`) through
+    * [[StateStore.publishNext]]. Replayed files anti-join
     * out against the indexed doc_ids, so restarts never double-count a
     * term (spec-proved: streamed index ≡ one batch build over all
     * arrivals, bit-exact, including after a full restart replay).
-    * `onBatch` receives (n_docs_indexed, vocab_size) per trigger. */
+    * `onBatch` receives (n_docs_indexed, vocab_size) per trigger, counted
+    * off the published snapshot. */
   def postingsStream(s: SparkSession, stagedDir: String, stateDir: String)(
-      onBatch: (Long, Long, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val root = new java.io.File(stateDir)
-    def part(p: String) = s"$stateDir/$p"
-    def publish(tf: DataFrame, dl: DataFrame, df: DataFrame): Unit =
-      StateStore.commit(root, replace = true) { tmp =>
-        tf.write.parquet(s"${tmp.getPath}/tf")
-        dl.write.parquet(s"${tmp.getPath}/dl")
-        df.write.parquet(s"${tmp.getPath}/df")
-      }
-    if (!new java.io.File(part("df"), "_SUCCESS").exists()) {
-      def empty(fields: (String, org.apache.spark.sql.types.DataType)*) =
-        s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(fields.map { case (n, t) => StructField(n, t) }))
-      publish(
-        empty("doc_id" -> LongType, "word" -> StringType, "tf" -> LongType),
-        empty("doc_id" -> LongType, "dl" -> LongType),
-        empty("word" -> StringType, "df" -> LongType))
-    }
-    s.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val b = s.createDataFrame(batch.rdd, batch.schema)
-        val tf = s.read.parquet(part("tf"))
-        val dl = s.read.parquet(part("dl"))
-        val df = s.read.parquet(part("df"))
-        val (tf2, dl2, df2, toks) = TextOps.extendPostingsWithHandle(tf, dl, df, b)
-        // materialize the report before republishing over the inputs
-        val nDocs = dl2.count()
-        val vocab = df2.count()
-        // cache the merged frames so the publish doesn't re-read the
-        // state dirs mid-rename
-        val tfC = tf2.cachedStageBoundary
-        val dlC = dl2.cachedStageBoundary
-        val dfC = df2.cachedStageBoundary
-        try {
-          tfC.count(); dlC.count(); dfC.count()
-          publish(tfC, dlC, dfC)
-          onBatch(id, nDocs, vocab)
-        } finally {
-          tfC.unpersist(); dlC.unpersist(); dfC.unpersist(); toks.unpersist()
+      onBatch: (Long, Long, Long) => Unit): StreamingQuery = {
+    val root = new File(stateDir)
+    eachFile(s, stagedDir, StructType.fromDDL("doc_id LONG, text STRING")) { (id, b) =>
+      val last = StateStore.latest(root)
+      def part(p: String, ddl: String) = last.fold(emptyFrame(s, ddl))(v => s.read.parquet(s"$v/$p"))
+      val (tf, dl, df, toks) = TextOps.extendPostingsWithHandle(
+        part("tf", "doc_id BIGINT, word STRING, tf BIGINT"), part("dl", "doc_id BIGINT, dl BIGINT"),
+        part("df", "word STRING, df BIGINT"), b)
+      try {
+        val published = StateStore.publishNext(root) { tmp =>
+          tf.write.parquet(s"$tmp/tf")
+          dl.write.parquet(s"$tmp/dl")
+          df.write.parquet(s"$tmp/df")
         }
-      }
-      .start()
+        onBatch(id, s.read.parquet(s"$published/dl").count(),
+          s.read.parquet(s"$published/df").count())
+      } finally toks.unpersist()
+    }
   }
 
+  /** Streaming mini-batch k-means (Sculley, WWW'10 §3): vector files
+    * arrive as a file-source stream; each micro-batch assigns to the
+    * CURRENT centroids (one distributed scan through
+    * [[Similarity.assignToCentroids]] — the same fused HOF argmin as the
+    * batch trainer) and centroids then move by exact integer running
+    * sums: state is (cid, n, Σvec) longs, centroid = floor(Σ/n). The
+    * online counterpart of q119 — how a served IVF index (q120) absorbs
+    * corpus growth without retraining from scratch. Integer state makes
+    * the stream bit-deterministic: StreamingSpec replays the same batch
+    * sequence with a driver-side reference and requires EXACT state
+    * equality after every trigger. The state (k·d longs) is held in
+    * memory for the stream's lifetime; a stream that must survive a
+    * restart would publish it each trigger as a one-file snapshot
+    * through [[StateStore.publishNext]], as [[packingStream]] does its
+    * offset. Per-trigger cost is one scan of the trigger's file plus a
+    * k·d-row aggregate. */
   def kmeansStream(s: SparkSession, stagedDir: String,
       init: Seq[(Long, Seq[Long])])(
-      onBatch: (Long, DataFrame, Seq[(Long, Long, Seq[Long])]) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      onBatch: (Long, DataFrame, Seq[(Long, Long, Seq[Long])]) => Unit): StreamingQuery = {
     // (cid, n, sums): each init centroid is a 1-vector cluster
     @volatile var state: Seq[(Long, Long, Seq[Long])] =
       init.map { case (cid, v) => (cid, 1L, v) }
-    s.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val cents = state.map { case (cid, n, sums) =>
-          cid -> sums.map(x => math.floor(x.toDouble / n).toLong) }
-        val upd = Similarity.assignToCentroids(Similarity.quantizeVectors(batch), cents)
-          .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "v")))
-          .groupBy(col("cid"), col("pos"))
-          .agg(sum(col("v")).as("sv"), count(lit(1)).as("c"))
-          .collect()
-          .groupBy(_.getLong(0))
-        state = state.map { case (cid, n, sums) =>
-          upd.get(cid) match {
-            case Some(rows) =>
-              val dn = rows.head.getLong(3)
-              val svByPos = rows.map(r => r.getInt(1) -> r.getLong(2)).toMap
-              (cid, n + dn, sums.indices.map(i => sums(i) + svByPos(i)))
-            case None => (cid, n, sums)
-          }
+    eachFile(s, stagedDir, VectorsSchema) { (id, batch) =>
+      val cents = state.map { case (cid, n, sums) =>
+        cid -> sums.map(x => math.floor(x.toDouble / n).toLong) }
+      val upd = Similarity.assignToCentroids(Similarity.quantizeVectors(batch), cents)
+        .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "v")))
+        .groupBy(col("cid"), col("pos"))
+        .agg(sum(col("v")).as("sv"), count(lit(1)).as("c"))
+        .collect()
+        .groupBy(_.getLong(0))
+      state = state.map { case (cid, n, sums) =>
+        upd.get(cid) match {
+          case Some(rows) =>
+            val dn = rows.head.getLong(3)
+            val svByPos = rows.map(r => r.getInt(1) -> r.getLong(2)).toMap
+            (cid, n + dn, sums.indices.map(i => sums(i) + svByPos(i)))
+          case None => (cid, n, sums)
         }
-        onBatch(id, batch, state)
       }
-      .start()
+      onBatch(id, batch, state)
+    }
   }
 
   /** Custom state: running per-user event count + max value via

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 
 /** The one home of persisted state: build-once artifacts (postings,
   * centroids, trained weights, graph state, Bloom filters, layouts) and
-  * the streaming snapshots. It owns three decisions no caller makes:
+  * the streaming snapshots. It owns four decisions no caller makes:
   *
   *   - **Key.** A [[StateKey]] combines the family string (name,
   *     version and parameters) with a content fingerprint of the frames
@@ -19,12 +19,23 @@ import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
   *   - **Path.** State lives at `<java.io.tmpdir>/graft_<family>_<hash>`.
   *     The tmpdir is read on every [[key]] call, so a harness that moves
   *     it between set-ups gets cold builds.
-  *   - **Commit step.** [[commit]]: the writer fills a private tmp dir,
-  *     stamps it complete, and renames it into place. Readers see either
-  *     no state or complete state; a crashed writer leaves nothing at the
-  *     published path; of two racing writers one wins the rename and the
-  *     other discards its tmp dir; a half-state is moved aside by rename,
-  *     never deleted in place (a racing reader could see it mid-delete).
+  *   - **Commit step.** The private `commit`: the writer fills a private
+  *     tmp dir, stamps it complete, and renames it into place. Readers
+  *     see either no state or complete state; a crashed writer leaves
+  *     nothing at the published path; of two racing writers one wins the
+  *     rename and the other discards its tmp dir; a half-state is moved
+  *     aside by rename, never deleted in place (a racing reader could see
+  *     it mid-delete). Every write goes through it: keyed state through
+  *     [[dir]], [[parquet]] and [[bytes]], streaming state through
+  *     [[publishNext]].
+  *   - **Snapshots.** State a stream republishes every trigger is a
+  *     sequence of `v_N` dirs under its root: [[latest]] finds the newest
+  *     complete one and [[publishNext]] commits `v_(N+1)` next to it.
+  *     A published version is never written again, so a writer that dies
+  *     mid-write leaves the previous version latest and readable, and a
+  *     reader never sees a version change under it. After each publish
+  *     only the latest two versions are kept; older ones are moved aside,
+  *     then deleted.
   */
 object StateStore {
 
@@ -110,10 +121,10 @@ object StateStore {
   private def complete(dir: File): Boolean = new File(dir, Marker).exists()
 
   /** Build-once state under `key`: if it is not published yet, `write`
-    * fills a tmp dir (a path that does not exist yet) which [[commit]]
-    * publishes, first writer wins. Returns the published dir. */
+    * fills a tmp dir (a path that does not exist yet) which the commit
+    * step publishes, first writer wins. Returns the published dir. */
   def dir(key: StateKey)(write: File => Unit): File = {
-    if (!complete(key.dir)) commit(key.dir, replace = false)(write)
+    if (!complete(key.dir)) commit(key.dir)(write)
     key.dir
   }
 
@@ -141,7 +152,7 @@ object StateStore {
     if (complete(key.dir)) java.nio.file.Files.readAllBytes(file.toPath)
     else {
       val b = build
-      if (b != null) commit(key.dir, replace = false) { tmp =>
+      if (b != null) commit(key.dir) { tmp =>
         tmp.mkdirs()
         java.nio.file.Files.write(new File(tmp, file.getName).toPath, b)
       }
@@ -149,17 +160,54 @@ object StateStore {
     }
   }
 
+  /** The newest complete `v_N` snapshot under `root`, if any. A version
+    * is complete once the commit step has stamped it; a version Spark
+    * wrote in place (no stamp) counts once its `_SUCCESS` exists. */
+  def latest(root: File): Option[File] = versions(root).filter(published).lastOption
+
+  /** Publishes the snapshot after [[latest]] under `root`: `write` fills
+    * a tmp dir (a path that does not exist yet) that the commit step
+    * publishes as `v_(N+1)`, first writer wins. Then every version older
+    * than the latest two is moved aside and deleted, so a reader of the
+    * previous version can still finish. Returns the published dir. */
+  def publishNext(root: File)(write: File => Unit): File = {
+    val next = new File(root, s"v_${latest(root).fold(0L)(versionOf(_) + 1L)}")
+    commit(next)(write)
+    val all = versions(root)
+    val oldestKept = all.filter(published).takeRight(2).headOption.fold(0L)(versionOf)
+    all.filter(versionOf(_) < oldestKept).foreach(discard)
+    next
+  }
+
+  /** The `v_N` dirs under `root`, oldest first. */
+  private def versions(root: File): Seq[File] =
+    Option(root.listFiles()).getOrElse(Array.empty[File]).toSeq
+      .filter(f => f.isDirectory && f.getName.matches("v_\\d+"))
+      .sortBy(versionOf)
+
+  private def published(version: File): Boolean =
+    complete(version) || new File(version, "_SUCCESS").exists()
+
+  private def versionOf(dir: File): Long = dir.getName.stripPrefix("v_").toLong
+
+  /** This writer's tag: process and thread, so two writers never share a
+    * tmp or stale dir. */
+  private def tag: String = s"${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
+
+  /** Moves `dir` aside by rename, then deletes it: a racing reader never
+    * sees a half-deleted dir at a published path. */
+  private def discard(dir: File): Unit = {
+    val stale = new File(s"${dir.getAbsolutePath}.stale-$tag")
+    if (dir.renameTo(stale)) org.apache.commons.io.FileUtils.deleteDirectory(stale)
+  }
+
   /** The one commit step. `write` fills a writer-private tmp dir next to
-    * `target`; the dir is stamped complete and renamed to `target`.
-    * With `replace` (a state republished every cycle), a previous
-    * `target` is moved aside first; without it, a complete `target`
-    * wins and this writer's tmp dir is discarded. A half-state at
-    * `target` is always moved aside. Returns whether this writer
-    * published. */
-  def commit(target: File, replace: Boolean)(write: File => Unit): Boolean = {
+    * `target`; the dir is stamped complete and renamed to `target`. A
+    * complete `target` wins and this writer's tmp dir is discarded; a
+    * half-state at `target` is moved aside first. */
+  private def commit(target: File)(write: File => Unit): Unit = {
     val parent = target.getAbsoluteFile.getParentFile
     parent.mkdirs()
-    val tag = s"${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
     val tmp = new File(parent, s"${target.getName}.tmp-$tag")
     org.apache.commons.io.FileUtils.deleteQuietly(tmp) // a crashed earlier write of this thread
     try {
@@ -170,12 +218,7 @@ object StateStore {
       org.apache.commons.io.FileUtils.deleteQuietly(tmp)
       throw e
     }
-    if (target.exists() && (replace || !complete(target))) {
-      val stale = new File(parent, s"${target.getName}.stale-$tag")
-      if (target.renameTo(stale)) org.apache.commons.io.FileUtils.deleteDirectory(stale)
-    }
-    val won = tmp.renameTo(target)
-    if (!won) org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost the race
-    won
+    if (target.exists() && !complete(target)) discard(target)
+    if (!tmp.renameTo(target)) org.apache.commons.io.FileUtils.deleteDirectory(tmp) // lost the race
   }
 }

@@ -254,19 +254,11 @@ class GraphSpec extends SparkSpec {
   }
 
   test("transitive closure: breaching the pair budget raises and names the scale path") {
-    val key = "spark.graft.graph.closurePairBudget"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "10")
-      // a 20-node chain closes to 190 pairs > 10
-      val chain = (1L to 20L).map(i => (i, i + 1)).toDF("src", "dst")
-      val ex = intercept[IllegalArgumentException](
-        Graph.transitiveClosureFixpoint(chain).count())
-      assert(ex.getMessage.contains("sccCyclic"))
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    // a 20-node chain closes to 190 pairs > 10
+    val chain = (1L to 20L).map(i => (i, i + 1)).toDF("src", "dst")
+    val ex = intercept[IllegalArgumentException](
+      Graph.transitiveClosureFixpoint(chain, pairBudget = 10).count())
+    assert(ex.getMessage.contains("sccCyclic"))
   }
 
   test("SCC coloring: two cycles, a connector, a self-loop, an acyclic tail — hand-computed") {

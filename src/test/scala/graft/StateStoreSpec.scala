@@ -156,17 +156,90 @@ class StateStoreSpec extends SparkSpec {
     assert(builds == 1, "once published, the state is built no more")
   }
 
-  test("a republish replaces the previous version; a snapshot keeps its first writer") {
-    val root = Files.createTempDirectory("graft-commit").toFile
-    val target = new File(root, "state")
-    def write(n: Long)(tmp: File): Unit = spark.range(n).write.parquet(tmp.getPath)
-    assert(StateStore.commit(target, replace = true)(write(3)))
-    assert(StateStore.commit(target, replace = true)(write(5)))
-    assert(spark.read.parquet(target.getPath).count() == 5L)
-    assert(!StateStore.commit(target, replace = false)(write(7)), "an existing snapshot wins")
-    assert(spark.read.parquet(target.getPath).count() == 5L)
-    assert(root.listFiles().map(_.getName).toSeq == Seq("state"))
-    FileUtils.deleteDirectory(root)
+  /** Runs `body` on a fresh snapshot root, deleted afterwards. */
+  private def withRoot(body: File => Unit): Unit = {
+    val root = Files.createTempDirectory("graft-snapshot").toFile
+    try body(root) finally FileUtils.deleteDirectory(root)
+  }
+
+  private def writeRange(n: Long)(tmp: File): Unit = spark.range(n).write.parquet(tmp.getPath)
+
+  private def rowsIn(v: File): Long = spark.read.parquet(v.getPath).count()
+
+  private def names(root: File): Seq[String] = root.listFiles().map(_.getName).toSeq.sorted
+
+  test("snapshot: a writer that throws mid-write leaves the previous version latest and readable") {
+    withRoot { root =>
+      val v0 = StateStore.publishNext(root)(writeRange(3))
+      intercept[IllegalStateException] {
+        StateStore.publishNext(root) { tmp =>
+          spark.range(5).write.parquet(tmp.getPath)
+          throw new IllegalStateException("writer died")
+        }
+      }
+      assert(StateStore.latest(root).contains(v0))
+      assert(rowsIn(v0) == 3L)
+      assert(names(root) == Seq("v_0"), "no tmp dir may be left")
+    }
+  }
+
+  test("snapshot: the first writer of a version wins") {
+    withRoot { root =>
+      StateStore.publishNext(root)(writeRange(3))
+      // both writers see v_0 as latest; the racer publishes v_1 while
+      // this writer is still writing it
+      val v1 = StateStore.publishNext(root) { tmp =>
+        val racer = new Thread(() => StateStore.publishNext(root)(writeRange(5)))
+        racer.start()
+        racer.join()
+        writeRange(7)(tmp)
+      }
+      assert(v1.getName == "v_1")
+      assert(rowsIn(v1) == 5L, "an existing version wins")
+      assert(names(root) == Seq("v_0", "v_1"))
+    }
+  }
+
+  test("snapshot: after 5 publishes only the latest 2 versions remain") {
+    withRoot { root =>
+      (1L to 5L).foreach(n => StateStore.publishNext(root)(writeRange(n)))
+      assert(names(root) == Seq("v_3", "v_4"))
+      assert(StateStore.latest(root).map(rowsIn).contains(5L))
+      assert(rowsIn(new File(root, "v_3")) == 4L, "the previous version stays readable")
+    }
+  }
+
+  test("snapshot: a version Spark wrote in place, with only its _SUCCESS, counts") {
+    withRoot { root =>
+      spark.range(2).write.parquet(new File(root, "v_0").getPath)
+      assert(StateStore.latest(root).map(_.getName).contains("v_0"))
+      assert(StateStore.publishNext(root)(writeRange(4)).getName == "v_1")
+      assert(StateStore.latest(root).map(rowsIn).contains(4L))
+    }
+  }
+
+  test("q114's hot-key memo is keyed by lineitem content, not by session or path") {
+    val work = Files.createTempDirectory("graft-hotkeys").toFile
+    try {
+      FileUtils.copyFile(new File(sfDir, "lineitem.parquet"), new File(work, "lineitem.parquet"))
+      def probe(li: DataFrame): Seq[Any] = li.groupBy(col("l_orderkey")).count()
+        .orderBy(col("count").desc, col("l_orderkey")).limit(5).collect().map(_.get(0)).toSeq
+      val li = Tables.lineitem(spark, work.getPath)
+      val hot = Layout.declaredHotKeys(li)
+      assert(hot == probe(li))
+      assert(countJobs(Layout.declaredHotKeys(li))._2 == 0, "an unchanged input is served from the memo")
+      // rewrite the copy in place without its hot keys: the memo must not
+      // serve the old list at the same path
+      rewrite(work, "lineitem")(_.filter(!col("l_orderkey").isin(hot: _*)))
+      val rewritten = Tables.lineitem(spark, work.getPath)
+      val again = Layout.declaredHotKeys(rewritten)
+      assert(again == probe(rewritten), "a rewritten fixture is probed again")
+      assert(again.intersect(hot).isEmpty)
+    } finally FileUtils.deleteDirectory(work)
+    val memoTypes = Layout.getClass.getDeclaredFields.toSeq
+      .map(_.getGenericType.getTypeName).filter(_.contains("TrieMap"))
+    assert(memoTypes.nonEmpty && memoTypes.forall(!_.contains("SparkSession")),
+      s"the memo must not hold a session: $memoTypes")
   }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
@@ -230,17 +303,24 @@ class StateStoreSpec extends SparkSpec {
     } finally FileUtils.deleteDirectory(work)
   }
 
-  /** `src/main` files that mention a word outside the files allowed it. */
-  private def offenders(allowed: Map[String, Set[String]]): Seq[String] = {
+  /** How often `word` appears in each `src/main` file that mentions it,
+    * by path under `src/main/scala`. */
+  private def occurrences(word: String): Map[String, Int] = {
     val main = new File("src/main/scala")
     assert(main.isDirectory, s"run from the project root: ${main.getAbsolutePath}")
     FileUtils.listFiles(main, Array("scala"), true).toArray(Array.empty[File]).toSeq
       .flatMap { f =>
-        val rel = main.toPath.relativize(f.toPath).toString
         val text = new String(Files.readAllBytes(f.toPath), java.nio.charset.StandardCharsets.UTF_8)
-        allowed.collect { case (word, ok) if text.contains(word) && !ok(rel) => s"$rel: $word" }
-      }
+        val n = text.split(java.util.regex.Pattern.quote(word), -1).length - 1
+        Option.when(n > 0)(main.toPath.relativize(f.toPath).toString -> n)
+      }.toMap
   }
+
+  /** `src/main` files that mention a word outside the files allowed it. */
+  private def offenders(allowed: Map[String, Set[String]]): Seq[String] =
+    allowed.toSeq.flatMap { case (word, ok) =>
+      occurrences(word).keys.filterNot(ok).map(rel => s"$rel: $word")
+    }
 
   test("one device per job: no state path or rename outside the state store") {
     val found = offenders(Map(
@@ -255,5 +335,19 @@ class StateStoreSpec extends SparkSpec {
       "allFiles(" -> Set("graft/sources/Tables.scala"),
       "getModificationTime" -> Set("graft/sources/Tables.scala")))
     assert(found.isEmpty, s"fingerprints belong to StateStore, listing signatures to Tables: $found")
+  }
+
+  test("one device per job: one micro-batch loop, one snapshot protocol") {
+    val streaming = "graft/ops/StreamingOps.scala"
+    assert(occurrences(".foreachBatch") == Map(streaming -> 1),
+      "every foreachBatch face runs through StreamingOps.eachFile")
+    assert(occurrences("\"maxFilesPerTrigger\"") == Map(streaming -> 1),
+      "the file-source options are set once, in StreamingOps.fileSource")
+    // Bench's one move publishes its own timing artifact, not state
+    val found = offenders(Map(
+      "Files.move" -> Set("graft/Bench.scala"),
+      "ATOMIC_MOVE" -> Set("graft/Bench.scala"),
+      "replace =" -> Set.empty[String]))
+    assert(found.isEmpty, s"republished state goes through StateStore.publishNext: $found")
   }
 }

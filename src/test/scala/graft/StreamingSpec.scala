@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Similarity, StreamingOps, TextOps}
-import graft.sources.Tables
+import graft.sources.{StateStore, Tables}
 
 /** Streaming self-oracles: file-source replay of the events fixture into a
   * memory sink must equal the batch computation on the same data
@@ -1105,12 +1105,14 @@ class StreamingSpec extends SparkSpec {
     // final streamed state == a from-scratch batch build over ALL docs
     def norm(df: org.apache.spark.sql.DataFrame, keys: String*) =
       df.orderBy(keys.map(col): _*).collect().toSeq
+    def part(p: String) =
+      spark.read.parquet(s"${StateStore.latest(new java.io.File(stateDir)).get}/$p")
     val (btf, bdl, bdf) = TextOps.postingsIndex(spark, docs)
-    assert(norm(spark.read.parquet(s"$stateDir/tf"), "doc_id", "word") ==
+    assert(norm(part("tf"), "doc_id", "word") ==
       norm(btf, "doc_id", "word"), "tf mismatch vs batch build")
-    assert(norm(spark.read.parquet(s"$stateDir/dl"), "doc_id") ==
+    assert(norm(part("dl"), "doc_id") ==
       norm(bdl, "doc_id"), "dl mismatch vs batch build")
-    assert(norm(spark.read.parquet(s"$stateDir/df"), "word") ==
+    assert(norm(part("df"), "word") ==
       norm(bdf, "word"), "df mismatch vs batch build")
     // the doc count only grows across triggers
     val ns = rec.toSeq.sortBy(_._1).map(_._2._1)
@@ -1122,7 +1124,33 @@ class StreamingSpec extends SparkSpec {
       (id, n, v) => rec2(id) = (n, v)
     }
     assert(q2.awaitTermination(180000), "restarted postings stream did not finish")
-    assert(norm(spark.read.parquet(s"$stateDir/df"), "word") == norm(bdf, "word"),
+    assert(norm(part("df"), "word") == norm(bdf, "word"),
       "replay must not change the index")
+  }
+
+  test("republished stream state keeps at most 2 versions after every trigger") {
+    import scala.collection.concurrent.TrieMap
+    val orders = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_custkey"))
+    val stateDir = Files.createTempDirectory("graft-evict-state").resolve("s")
+    val srcDir = Files.createTempDirectory("graft-evict-src")
+    (0 until 4).foreach { k =>
+      val tmp = Files.createTempDirectory("graft-evict-stage").toString
+      orders.filter(col("o_orderkey") % 4 === k).coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      Files.copy(part, srcDir.resolve(s"f$k.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      stampStaged(srcDir.resolve(s"f$k.parquet"))
+    }
+    val seen = TrieMap.empty[Long, Seq[String]]
+    val q = StreamingOps.kmvStream(spark, srcDir.toString, stateDir.toString, k = 16) { (id, _) =>
+      seen(id) = stateDir.toFile.listFiles().map(_.getName).toSeq.sorted
+    }
+    assert(q.awaitTermination(180000), "kmv stream did not finish")
+    assert(seen.size == 4, s"one trigger per staged file: ${seen.keys}")
+    seen.foreach { case (id, dirs) =>
+      assert(dirs.size <= 2 && dirs.forall(_.matches("v_\\d+")),
+        s"trigger $id left more than the latest two versions: $dirs")
+    }
+    assert(seen(3L) == Seq("v_2", "v_3"))
   }
 }
