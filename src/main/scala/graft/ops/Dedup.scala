@@ -849,9 +849,10 @@ object Dedup {
     *      pass: exact, O(E α(E)), no per-round job overhead. Near-dup
     *      pair graphs of a DEDUPLICATED corpus are tiny relative to the
     *      corpus, so production mostly lands here too.
-    *   2. Above the threshold: min-label propagation — rounds bounded by
-    *      the largest component's DIAMETER (shallow for near-dup
-    *      graphs), one join + one agg per round.
+    *   2. Above the threshold: semi-naive min-label propagation — rounds
+    *      bounded by the largest component's DIAMETER (shallow for
+    *      near-dup graphs), one join + one agg per round over the labels
+    *      that dropped the round before.
     *   3. If the graph defeats the round cap (a long chain of
     *      incremental edits), it does NOT silently return unconverged
     *      labels (r2 advice): it logs loudly and switches to
@@ -866,32 +867,34 @@ object Dedup {
       return finishLabels(nodes, unionFindLabels(pairs))
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))).cachedStageBoundary
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      .stageBoundary
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < propagationRounds) {
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("dst"), col("cluster_id").as("nl")), "dst")
-        .groupBy(col("src")).agg(min(col("nl")).as("nbr_min"))
-        .withColumnRenamed("src", "doc_id")
-      // carry prev alongside next so convergence is a filter over the
-      // checkpointed frame, not another join stage per round
-      val combined = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("cluster_id").as("prev"),
-          least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id"))).as("cluster_id"))
-        .stageBoundary
-      val changed = combined.filter(col("cluster_id") < col("prev")).count()
-      labels = combined.select(col("doc_id"), col("cluster_id"))
-      converged = changed == 0
-      rounds += 1
+    // semi-naive: only the labels that dropped last round are offered to
+    // their neighbors — the same trajectory as re-offering every label
+    // each round, since an unchanged label was already offered the round
+    // it last dropped. One boundary per round: the merged labels, with
+    // the number that dropped (the next delta, and the exit test)
+    // observed on it, so no round runs a separate count job.
+    val init = Graph.counted(edges.select(col("src").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("cluster_id")))
+    val fp = Graph.iterate(Graph.Seen(init, init), propagationRounds)(_.delta.rows == 0) {
+      (seen, _) =>
+        val nbrMin = edges
+          .join(seen.delta.df.select(col("doc_id").as("dst"), col("cluster_id").as("nl")), "dst")
+          .groupBy(col("src")).agg(min(col("nl")).as("nbr_min"))
+          .withColumnRenamed("src", "doc_id")
+        val dropped = col("cluster_id") < col("prev")
+        val (merged, nDropped) = seen.all.df.join(nbrMin, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("cluster_id").as("prev"),
+            least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id"))).as("cluster_id"))
+          .stageBoundaryRowsWhere(dropped)
+        val labels = merged.select(col("doc_id"), col("cluster_id"))
+        Graph.Seen(Graph.Counted(labels, seen.all.rows),
+          Graph.Counted(merged.filter(dropped).select(col("doc_id"), col("cluster_id")), nDropped))
     }
-    if (!converged) {
+    val labels = if (fp.converged) fp.state.all.df else {
       System.err.println(s"[dedup] min-label propagation NOT converged after " +
         s"$propagationRounds rounds (component diameter exceeds cap) — " +
         "switching to large-star/small-star contraction")
-      labels = starLabels(pairs)
+      starLabels(pairs)
     }
     finishLabels(nodes, labels)
   }
@@ -983,24 +986,19 @@ object Dedup {
     * labels — at the documented O(log n) rate, `maxRounds` failing means
     * the input is malformed, not that more rounds are needed. */
   private def starLabels(pairs: DataFrame, maxRounds: Int = 60): DataFrame = {
-    var e = pairs
-      .select(greatest(col("doc_a"), col("doc_b")).as("u"),
-        least(col("doc_a"), col("doc_b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .stageBoundary
-    var converged = e.isEmpty
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      val next = smallStar(largeStar(e).stageBoundary).stageBoundary
-      // both sides are DISTINCT sets: equal counts + empty one-way diff ⇒ equal
-      converged = next.count() == e.count() && next.except(e).isEmpty
-      e = next
-      rounds += 1
+    // both sides are DISTINCT sets: equal counts + empty one-way diff ⇒ equal
+    val fp = Graph.converge(Graph.counted(pairs
+        .select(greatest(col("doc_a"), col("doc_b")).as("u"),
+          least(col("doc_a"), col("doc_b")).as("v"))
+        .filter(col("u") =!= col("v")).distinct()), maxRounds,
+        same = (prev, next) => next.rows == prev.rows && next.df.except(prev.df).isEmpty) {
+      (e, _) => smallStar(largeStar(e.df).stageBoundary)
     }
-    if (!converged)
+    if (!fp.converged)
       throw new IllegalStateException(
         s"large-star/small-star did not reach its fixpoint in $maxRounds rounds")
     // fixpoint is a star forest: u→root edges, plus each root labels itself
+    val e = fp.state.df
     e.select(col("u").as("doc_id"), col("v").as("cluster_id"))
       .union(e.select(col("v").as("doc_id"), col("v").as("cluster_id")).distinct())
       .distinct()

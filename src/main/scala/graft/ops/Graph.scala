@@ -47,7 +47,7 @@ object Graph {
     * the simhash-vocabulary OOM class. Under the budget the hint keeps
     * the per-round join shuffle-free; above it the walkers fall back to
     * a plain key-partitioned join against an edge relation
-    * CO-PARTITIONED ONCE on the join key ([[pinEdges]]), so each round
+    * CO-PARTITIONED ONCE on the join key ([[EdgePin]]), so each round
     * still shuffles only the node-sized side. The default is DERIVED,
     * not a constant: `spark.sql.autoBroadcastJoinThreshold` ÷
     * [[NodeRowBytes]], so the ONE conf every Spark operator already
@@ -82,35 +82,125 @@ object Graph {
   private[graft] def gateBroadcast(df: DataFrame, rows: Long): DataFrame =
     if (rows <= broadcastNodeBudget(df.sparkSession)) broadcast(df) else df
 
-  /** Re-materialize an already-persisted relation hash-partitioned on
-    * `key` ONCE (count() forces the partitioned cache before any round
-    * reads it, then the unpartitioned copy is released) — the shared
-    * over-budget fallback of every round loop: after this, each
-    * round's node-relation join reuses the edge partitioning and
-    * shuffles only the node-sized side. */
-  private def copartitionOnce(raw: DataFrame, key: String): DataFrame = {
-    val p = raw.repartition(col(key)).cachedStageBoundary
-    p.count()
-    raw.unpersist()
-    p
+  /** An edge relation pinned for a round loop, with the join keys its
+    * rounds may need — the ONE place that decides broadcast vs
+    * co-partitioned edges. [[on]] returns the edges a round joins its
+    * node-sized relation against: the cached edges while that relation
+    * fits the broadcast budget (no job), otherwise the edges
+    * hash-partitioned on `key`, built ONCE on the first over-budget
+    * round (a count forces the partitioned cache before any round reads
+    * it), so every later round reuses the edge partitioning and
+    * shuffles only the node-sized side. A key keeps its copy once built;
+    * the unpartitioned relation is freed only after every key has one. */
+  private[graft] final class EdgePin(raw: DataFrame, keys: String*) {
+    private val budget = broadcastNodeBudget(raw.sparkSession)
+    private val copies = scala.collection.mutable.Map.empty[String, DataFrame]
+
+    /** Whether a node relation of `rows` rows fits the broadcast budget. */
+    def fits(rows: Long): Boolean = rows <= budget
+
+    def on(key: String, rows: Long): DataFrame = {
+      require(keys.contains(key), s"edge pin has no key $key")
+      copies.getOrElse(key, if (fits(rows)) raw else {
+        val p = raw.repartition(col(key)).cachedStageBoundary
+        p.count()
+        copies(key) = p
+        if (keys.forall(copies.contains)) raw.unpersist()
+        p
+      })
+    }
+
+    /** Free the partitioned copies (a loop that re-pins per outer round). */
+    def release(): Unit = copies.values.foreach(_.unpersist())
   }
 
-  /** Pin an edge relation for a round loop: persist it, derive the
-    * src-keyed degree relation and the node count, and — when the node
-    * relation exceeds the broadcast budget — re-materialize the edges
-    * hash-partitioned on `key` ONCE, so every round's node-relation
-    * join reuses the edge partitioning and shuffles only the node-sized
-    * side (one shuffle per round of the SMALL side, never the edges). */
+  /** Pin an edge relation for a walker: persist it, derive the src-keyed
+    * degree relation and the node count, and pin the edges on `key`
+    * against that node count ([[EdgePin]]). */
   private[graft] def pinEdges(edges: DataFrame, key: String = "src"):
       (DataFrame, DataFrame, Long) = {
     val raw = edges.cachedStageBoundary
     val deg = raw.groupBy(col("src")).agg(count(lit(1)).as("d")).cachedStageBoundary
     val n = deg.count() // also materializes both persists before round 1
-    val e =
-      if (n <= broadcastNodeBudget(edges.sparkSession)) raw
-      else copartitionOnce(raw, key)
-    (e, deg, n)
+    (new EdgePin(raw, key).on(key, n), deg, n)
   }
+
+  /** A relation materialized at a stage boundary, with the row count
+    * observed on that boundary. */
+  private[graft] final case class Counted(df: DataFrame, rows: Long)
+
+  private[graft] def counted(df: DataFrame): Counted = {
+    val (out, rows) = df.stageBoundaryRows
+    Counted(out, rows)
+  }
+
+  /** Where a capped loop stopped: its last state, and whether its exit
+    * test held there (false: the cap cut it off). */
+  private[graft] final case class Fixpoint[S](state: S, converged: Boolean) {
+    /** The state; raises `msg` when the cap cut the loop off. */
+    def orRaise(msg: => String): S = { require(converged, msg); state }
+  }
+
+  /** THE round driver of every convergent loop: run `round` (numbered
+    * from 1) until `done` holds or `cap` rounds have run. `done` must
+    * read only counts the rounds already observed, so the exit test
+    * runs no job. [[converge]] and [[seminaive]] are its two shapes. */
+  private[graft] def iterate[S](init: S, cap: Int)(done: S => Boolean)
+                               (round: (S, Int) => S): Fixpoint[S] = {
+    var s = init
+    var r = 0
+    while (!done(s) && r < cap) {
+      r += 1
+      s = round(s, r)
+    }
+    Fixpoint(s, done(s))
+  }
+
+  /** A loop that replaces one relation each round: the round's output is
+    * materialized and counted at its boundary, and the loop stops when
+    * it is empty or `same(prev, next)` holds. The default test fits the
+    * loops that only ever shrink their relation (a subset with an equal
+    * count is the same set). */
+  private[graft] def converge(init: Counted, cap: Int,
+                              same: (Counted, Counted) => Boolean = _.rows == _.rows)
+                             (round: (Counted, Int) => DataFrame): Fixpoint[Counted] = {
+    var settled = init.rows == 0
+    iterate(init, cap)(_ => settled) { (prev, r) =>
+      val next = counted(round(prev, r))
+      settled = next.rows == 0 || same(prev, next)
+      next
+    }
+  }
+
+  /** State of a semi-naive loop: everything seen so far and the last
+    * round's delta, each with its exact row count. */
+  private[graft] final case class Seen(all: Counted, delta: Counted)
+
+  /** The semi-naive (Datalog delta rule) shape of [[iterate]]: each round
+    * turns the state into a delta — with no `keys`, rows NEW to `all`
+    * (the round anti-joins them itself, where its plan wants it); with
+    * `keys`, replacements for the rows of `all` with those keys. The
+    * delta is materialized and counted at its boundary, `check`ed, and
+    * folded into `all`: an anti-join on `keys` plus a union, and the
+    * exact running count (new rows add, replacements do not). An empty
+    * delta is the fixpoint and is not folded. The union after the cap
+    * round has one consumer, the caller's action, so it gets no barrier
+    * (r10); every earlier one is re-read next round and does. */
+  private[graft] def seminaive(init: Counted, cap: Int, keys: Seq[String] = Nil,
+                               check: (Seen, Counted) => Unit = (_, _) => ())
+                              (round: (Seen, Int) => DataFrame): Fixpoint[Seen] =
+    iterate(Seen(init, init), cap)(_.delta.rows == 0) { (s, r) =>
+      val delta = counted(round(s, r))
+      check(s, delta)
+      if (delta.rows == 0) Seen(s.all, delta)
+      else {
+        val kept = if (keys.isEmpty) s.all.df
+          else s.all.df.join(delta.df.select(keys.map(col): _*), keys, "left_anti")
+        val all = kept.unionByName(delta.df)
+        Seen(Counted(if (r < cap) all.stageBoundary else all,
+          if (keys.isEmpty) s.all.rows + delta.rows else s.all.rows), delta)
+      }
+    }
 
   /** One-hop co-occurrence edges of `df`: distinct (src, dst) pairs of
     * `idCol` values sharing a `groupCol` value, src ≠ dst. Symmetric by
@@ -651,29 +741,15 @@ object Graph {
     * own boundary, so the count costs no job): a BFS frontier
     * starts seed-sized and can grow to graph-sized in two hops, so a
     * static hint is wrong in both directions — the first over-budget
-    * round co-partitions the edges once and later rounds shuffle only
-    * the frontier. */
+    * round co-partitions the edges once ([[EdgePin]]) and later rounds
+    * shuffle only the frontier. */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val raw = edges.cachedStageBoundary
-    var e = raw
-    var parted = false
-    var (dist, frontierRows) = seeds.distinct()
-      .select(col("seed").as("node"), lit(0L).as("hops"))
-      .stageBoundaryRows
-    var frontier = dist.select(col("node"))
-    // running size of the accumulated relation — every round's frontier
-    // count is already measured, so the anti-join side's row count is
-    // known without an extra job
-    var distRows = frontierRows
-    val budget = broadcastNodeBudget(edges.sparkSession)
-    var h = 1
-    while (h <= maxHops && frontierRows > 0) {
-      if (!parted && frontierRows > budget) {
-        e = copartitionOnce(raw, "src")
-        parted = true
-      }
-      val matched = e
-        .join(gateBroadcast(frontier.select(col("node").as("src")), frontierRows), Seq("src"))
+    val pin = new EdgePin(edges.cachedStageBoundary, "src")
+    seminaive(counted(seeds.distinct().select(col("seed").as("node"), lit(0L).as("hops"))),
+        maxHops) { (seen, h) =>
+      val frontier = seen.delta
+      val matched = pin.on("src", frontier.rows)
+        .join(gateBroadcast(frontier.df.select(col("node").as("src")), frontier.rows), Seq("src"))
         .select(col("dst").as("node"))
       // r11 (guide §2.3 prune before the exchange): while the seen set
       // fits the broadcast budget, anti-join it BELOW the distinct — in
@@ -684,28 +760,13 @@ object Graph {
       // back — both orders are exactly equal (the anti predicate is a
       // per-row filter on `node`, so dedup-then-filter ≡ filter-then-
       // dedup).
-      val (next, nextRows) = (if (distRows <= budget)
-          matched.join(gateBroadcast(dist.select(col("node")), distRows),
+      (if (pin.fits(seen.all.rows))
+          matched.join(gateBroadcast(seen.all.df.select(col("node")), seen.all.rows),
             Seq("node"), "left_anti").distinct()
         else
-          matched.distinct().join(dist, Seq("node"), "left_anti"))
+          matched.distinct().join(seen.all.df, Seq("node"), "left_anti"))
         .select(col("node"), lit(h.toLong).as("hops"))
-        .stageBoundaryRows
-      frontier = next.select(col("node"))
-      frontierRows = nextRows
-      distRows += frontierRows
-      // the accumulated relation re-checkpoints only while another
-      // round will anti-join against it; after the LAST hop it has one
-      // consumer (the caller's aggregate), and both union legs are
-      // already materialized — a final checkpoint was a pure extra
-      // barrier copy (r10). An empty frontier ends the search: no later
-      // round can discover a node, and the empty hop adds no row.
-      if (frontierRows > 0)
-        dist = if (h < maxHops) dist.unionAll(next).stageBoundary
-               else dist.unionAll(next)
-      h += 1
-    }
-    dist
+    }.state.all.df
   }
 
   /** One unrolled oracle BFS round k over CTEs e/d{k-1}: the full-union
@@ -898,9 +959,7 @@ object Graph {
       .unionAll(raw.select(col("dst").as("part")))
       .distinct()
       .stageBoundaryRows // node-sized; seeds init AND every round's blend
-    val e =
-      if (nV <= broadcastNodeBudget(edges.sparkSession)) raw
-      else copartitionOnce(raw, "src")
+    val e = new EdgePin(raw, "src").on("src", nV)
     var rank = nodes.withColumn("rank", lit(RankScale))
     for (_ <- 1 to rounds) {
       val withDeg = rank.join(deg, rank("part") === deg("src"), "left")
@@ -1033,28 +1092,18 @@ object Graph {
     * an unchanged count means an unchanged set, and the peel is
     * IDEMPOTENT there (extra rounds change nothing) — the result equals
     * the fixed-budget peel's, which RobustStatsSpec pins. The counts come
-    * from the boundaries themselves ([[stageBoundaryRows]]), so the exit
-    * test adds no job. Per round: one degree aggregate + two semi-joins,
+    * from the boundaries themselves ([[converge]]), so the exit test
+    * adds no job. Per round: one degree aggregate + two semi-joins,
     * only the shrinking edge relation moves. */
-  def kcoreEdges(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var (e, n) = edges.select(col("a"), col("b")).stageBoundaryRows
-    var round = 0
-    var changed = true
-    while (round < rounds && changed && n > 0) {
-      val keep = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
+  def kcoreEdges(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    converge(counted(edges.select(col("a"), col("b"))), rounds) { (e, _) =>
+      val keep = e.df.select(col("a").as("v")).unionAll(e.df.select(col("b").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("v"))
-      val (next, nNext) = e.join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
+      e.df.join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-        .stageBoundaryRows
-      changed = nNext != n
-      e = next
-      n = nNext
-      round += 1
-    }
-    e
-  }
+    }.state.df
 
   /** One unrolled oracle peel round r over CTEs e{r-1} at threshold k. */
   private def kcoreRoundSql(r: Int, k: Int): String = {
@@ -1236,50 +1285,29 @@ object Graph {
   /** PER-SEED BFS ([[bfsDistances]] generalized from min-over-the-set
     * to per-seed distances): state and frontier are (seed, node) keyed,
     * so memory is |seeds| × reach — the standard sampled-centrality
-    * budget. Same round mechanics: frontier-only expansion, per-round
-    * localCheckpoint, gated frontier broadcast with the one-time edge
-    * co-partition fallback above the budget, and the empty-frontier
-    * exit before `maxHops`. */
+    * budget. Same round mechanics: the semi-naive driver
+    * ([[seminaive]]: frontier-only expansion, per-round
+    * localCheckpoint, the empty-frontier exit before `maxHops`) and the
+    * gated frontier broadcast against the edge pin ([[EdgePin]]). */
   private[graft] def bfsPerSeed(edges: DataFrame, seeds: DataFrame,
                                 maxHops: Int): DataFrame = {
-    val raw = edges.cachedStageBoundary
-    var e = raw
-    var parted = false
-    var (dist, frontierRows) = seeds.distinct()
-      .select(col("seed"), col("seed").as("node"), lit(0L).as("hops"))
-      .stageBoundaryRows
-    var frontier = dist.select(col("seed"), col("node"))
-    val budget = broadcastNodeBudget(edges.sparkSession)
-    var h = 1
-    while (h <= maxHops && frontierRows > 0) {
-      if (!parted && frontierRows > budget) {
-        e = copartitionOnce(raw, "src")
-        parted = true
-      }
+    val pin = new EdgePin(edges.cachedStageBoundary, "src")
+    seminaive(counted(seeds.distinct()
+        .select(col("seed"), col("seed").as("node"), lit(0L).as("hops"))), maxHops) { (seen, h) =>
       // NOTE (r11 A/B): the bfsDistances prune-below-the-distinct device
       // was tried here too and measured WORSE (5.14 → 5.63 s at sf0.1,
       // corroborated) — the per-seed anti side is (seed, node)-keyed and
       // ~|seeds|× larger, so the per-round broadcast build of the
       // growing accumulated relation costs more than the distinct
       // shuffle it saves. Kept in the min-over-set BFS only.
-      val (next, nextRows) = e
-        .join(gateBroadcast(frontier.select(col("seed"), col("node").as("src")),
-          frontierRows), Seq("src"))
+      val frontier = seen.delta
+      pin.on("src", frontier.rows)
+        .join(gateBroadcast(frontier.df.select(col("seed"), col("node").as("src")),
+          frontier.rows), Seq("src"))
         .select(col("seed"), col("dst").as("node")).distinct()
-        .join(dist, Seq("seed", "node"), "left_anti")
+        .join(seen.all.df, Seq("seed", "node"), "left_anti")
         .select(col("seed"), col("node"), lit(h.toLong).as("hops"))
-        .stageBoundaryRows
-      frontier = next.select(col("seed"), col("node"))
-      frontierRows = nextRows
-
-      // same last-hop and empty-frontier rules as [[bfsDistances]]: no
-      // barrier copy after the final anti-join consumer is gone (r10)
-      if (frontierRows > 0)
-        dist = if (h < maxHops) dist.unionAll(next).stageBoundary
-               else dist.unionAll(next)
-      h += 1
-    }
-    dist
+    }.state.all.df
   }
 
   /** One unrolled per-seed oracle BFS round k over CTEs e/h{k−1}. */
@@ -1431,40 +1459,29 @@ object Graph {
     * silently under-reporting. */
   def transitiveClosureFixpoint(edges: DataFrame, maxRounds: Int = 100,
       pairBudget: Long = 20000000L): DataFrame = {
-    val (e0, n0) = edges.select(col("src"), col("dst")).distinct().stageBoundaryRows
-    val e = gateBroadcast(e0.select(col("src").as("m"), col("dst")), n0)
-    var acc = e0
-    var delta = e0
-    var nAcc = n0
-    var nDelta = nAcc
-    var round = 0
-    while (round < maxRounds && nDelta > 0) {
-      // the budget check fires BEFORE the acc union is materialized
-      // (ADVICE r8), and since r10 it counts the anti-joined DELTA —
-      // disjoint from acc by construction, so nAcc + nDelta is the
-      // EXACT post-union pair count (ADVICE r9: the previous nAcc +
-      // nExt bound over-counted by the ext∩acc overlap, so a dense
-      // late round rediscovering known pairs could abort a closure
-      // whose true final size fits the budget). The materialized
-      // breach footprint stays bounded: one checkpointed extension
-      // set plus its anti-join subset, never the over-budget union.
-      val ext = delta.select(col("src"), col("dst").as("m"))
+    val e0 = counted(edges.select(col("src"), col("dst")).distinct())
+    val e = gateBroadcast(e0.df.select(col("src").as("m"), col("dst")), e0.rows)
+    // the budget check fires BEFORE the delta is folded into the closure
+    // (ADVICE r8), and since r10 it counts the anti-joined DELTA —
+    // disjoint from the closure by construction, so the two counts sum
+    // to the EXACT post-union pair count (ADVICE r9: the previous bound
+    // over-counted by the extension's overlap with known pairs, so a
+    // dense late round rediscovering known pairs could abort a closure
+    // whose true final size fits the budget). The materialized breach
+    // footprint stays bounded: one checkpointed extension set plus its
+    // anti-join subset, never the over-budget union.
+    def withinBudget(seen: Seen, delta: Counted): Unit =
+      require(seen.all.rows + delta.rows <= pairBudget,
+        s"transitive closure would exceed the $pairBudget-pair state budget " +
+          s"(${seen.all.rows} pairs + ${delta.rows} new) — pair-proportional state does not " +
+          "scale on dense graphs; for cycle membership / SCC condensation use sccCyclic " +
+          "(O(V) label state)")
+    seminaive(e0, maxRounds, check = withinBudget) { (seen, _) =>
+      val ext = seen.delta.df.select(col("src"), col("dst").as("m"))
         .join(e, Seq("m"))
         .select(col("src"), col("dst")).distinct().stageBoundary
-      val (d, nd) = ext.join(acc, Seq("src", "dst"), "left_anti").stageBoundaryRows
-      delta = d
-      nDelta = nd
-      require(nAcc + nDelta <= pairBudget,
-        s"transitive closure would exceed the $pairBudget-pair state budget at round $round " +
-          s"($nAcc pairs + $nDelta new) — pair-proportional state does not scale on " +
-          "dense graphs; for cycle membership / SCC condensation use sccCyclic (O(V) label state)")
-      // delta is disjoint from acc by the anti join — no distinct needed
-      acc = acc.unionByName(delta).stageBoundary
-      nAcc += nDelta
-      round += 1
-    }
-    require(nDelta == 0, s"closure did not fixpoint within $maxRounds rounds")
-    acc
+      ext.join(seen.all.df, Seq("src", "dst"), "left_anti")
+    }.orRaise(s"closure did not fixpoint within $maxRounds rounds").all.df
   }
 
   /** Strongly connected components by forward–backward reachability
@@ -1498,120 +1515,85 @@ object Graph {
     *
     * Scale posture: trim and sweep joins put the NODE-sized relation
     * (core set, color delta, backward frontier) on the build side via
-    * [[gateBroadcast]]; over budget the subgraph is co-partitioned
-    * once per outer round on each join key (src for the forward
-    * color join, dst for the backward sweep — the MIS/HITS both-keys
-    * discipline), so every inner round shuffles only the shrinking
-    * label relation. */
+    * [[gateBroadcast]]; over budget the edge pin ([[EdgePin]], one per
+    * outer round) co-partitions the subgraph on each join key (src for
+    * the forward color join, dst for the backward sweep), so every
+    * inner round shuffles only the shrinking label relation. */
   def sccCyclic(edges: DataFrame, maxOuter: Int = 64, maxInner: Int = 300): DataFrame = {
     val eAll = edges.select(col("src"), col("dst")).distinct().cachedStageBoundary
     val selfLoops = eAll.filter(col("src") === col("dst"))
       .select(col("src").as("node")).distinct().stageBoundary
-    var (sub, nSub) = eAll.filter(col("src") =!= col("dst")).stageBoundaryRows
-    val emptyOut = sub.limit(0)
+    val sub0 = counted(eAll.filter(col("src") =!= col("dst")))
+    val emptyOut = sub0.df.limit(0)
       .select(col("src").as("node"), col("dst").as("scc_id"))
     eAll.unpersist()
+    // (1) trim to the in-and-out core, to fixpoint
+    def trim(sub: Counted): Counted = converge(sub, Int.MaxValue) { (t, _) =>
+      val srcs = t.df.select(col("src").as("v")).distinct()
+      val dsts = t.df.select(col("dst").as("v")).distinct()
+      val (core, nCore) = srcs.join(dsts, Seq("v")).stageBoundaryRows
+      t.df
+        .join(gateBroadcast(core.select(col("v").as("src")), nCore), Seq("src"), "left_semi")
+        .join(gateBroadcast(core.select(col("v").as("dst")), nCore), Seq("dst"), "left_semi")
+        .select(col("src"), col("dst"))
+    }.state
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var outer = 0
-    var done = false
-    while (!done) {
-      // (1) trim to the in-and-out core, to fixpoint
-      var nE = nSub
-      var shrunk = true
-      while (shrunk && nE > 0) {
-        val srcs = sub.select(col("src").as("v")).distinct()
-        val dsts = sub.select(col("dst").as("v")).distinct()
-        val (core, nCore) = srcs.join(dsts, Seq("v")).stageBoundaryRows
-        val (t, n2) = sub
-          .join(gateBroadcast(core.select(col("v").as("src")), nCore), Seq("src"), "left_semi")
-          .join(gateBroadcast(core.select(col("v").as("dst")), nCore), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")).stageBoundaryRows
-        shrunk = n2 != nE
-        nE = n2
-        sub = t
-      }
-      if (nE == 0) done = true
-      else {
-        outer += 1
-        require(outer <= maxOuter,
-          s"SCC coloring did not converge within $maxOuter outer rounds")
-        val (nodes, nNodes) = sub.select(col("src").as("v"))
-          .union(sub.select(col("dst").as("v"))).distinct().stageBoundaryRows
-        val overBudget = nNodes > broadcastNodeBudget(sub.sparkSession)
-        val eFwd = if (overBudget) copartitionOnce(sub, "src") else sub
-        val eBwd = if (overBudget) copartitionOnce(sub, "dst") else sub
-        // (2) forward max-color propagation, semi-naive
-        var colors = nodes.select(col("v"), col("v").as("c")).stageBoundary
-        var delta = colors
-        var dn = nNodes
-        var inner = 0
-        while (dn > 0) {
-          inner += 1
-          require(inner <= maxInner, s"color propagation exceeded $maxInner rounds")
-          val cand = eFwd
-            .join(gateBroadcast(delta.select(col("v").as("src"), col("c").as("cs")), dn),
-              Seq("src"))
-            .groupBy(col("dst")).agg(max(col("cs")).as("cand"))
-            .select(col("dst").as("v"), col("cand"))
-          val (d, n) = cand.join(colors, Seq("v"))
-            .filter(col("cand") > col("c"))
-            .select(col("v"), col("cand").as("c")).stageBoundaryRows
-          delta = d
-          dn = n
-          // the recurrence updates colors by ANTI JOIN + UNION, not a
-          // left-outer merge: outer/inner joins multiply Catalyst's
-          // sizeInBytes estimate, and a recurrence whose stats multiply
-          // by its own prior stats compounds into a 3^k-digit BigInt
-          // tower that the driver then grinds through inside every
-          // checkpoint's stats capture (measured: the 10x smoke leg
-          // pinned one core for >20 min in BigInteger.multiply before
-          // this rewrite; anti joins carry the LEFT side's stats, so
-          // bits grow linearly instead)
-          if (dn > 0)
-            colors = colors
-              .join(delta.select(col("v")), Seq("v"), "left_anti")
-              .unionByName(delta)
-              .stageBoundary
-        }
-        // (3) backward sweep from the roots, restricted to each root's color
-        var (reached, bn) = colors.filter(col("c") === col("v")).stageBoundaryRows
-        var bd = reached
-        // every delta is disjoint from `reached` (anti join) and holds one
-        // row per node, so the running sum is reached's exact row count
-        var nReached = bn
-        inner = 0
-        while (bn > 0) {
-          inner += 1
-          require(inner <= maxInner, s"backward sweep exceeded $maxInner rounds")
-          val preds = eBwd
-            .join(gateBroadcast(bd.select(col("v").as("dst"), col("c")), bn), Seq("dst"))
-            .select(col("src").as("v"), col("c")).distinct()
-            .join(colors.select(col("v"), col("c").as("vc")), Seq("v"))
-            .filter(col("c") === col("vc"))
-            .select(col("v"), col("c"))
-          val (d, n) = preds.join(reached, Seq("v"), "left_anti").stageBoundaryRows
-          bd = d
-          bn = n
-          nReached += bn
-          if (bn > 0) reached = reached.unionByName(bd).stageBoundary
-        }
-        // (4) emit nontrivial classes, peel everything reached
-        val comps = reached.groupBy(col("c"))
-          .agg(count(lit(1)).as("n"), min(col("v")).as("scc_id"))
-        out += reached
-          .join(comps.filter(col("n") > 1).select(col("c"), col("scc_id")), Seq("c"))
-          .select(col("v").as("node"), col("scc_id")).stageBoundary
-        val (rest, nRest) = sub
-          .join(gateBroadcast(reached.select(col("v").as("src")), nReached),
-            Seq("src"), "left_anti")
-          .join(gateBroadcast(reached.select(col("v").as("dst")), nReached),
-            Seq("dst"), "left_anti")
-          .select(col("src"), col("dst")).stageBoundaryRows
-        sub = rest
-        nSub = nRest
-        if (overBudget) { eFwd.unpersist(); eBwd.unpersist() }
-      }
-    }
+    iterate(trim(sub0), maxOuter)(_.rows == 0) { (sub, _) =>
+      val nodes = counted(sub.df.select(col("src").as("v"))
+        .union(sub.df.select(col("dst").as("v"))).distinct())
+      val pin = new EdgePin(sub.df, "src", "dst")
+      val eFwd = pin.on("src", nodes.rows)
+      val eBwd = pin.on("dst", nodes.rows)
+      // (2) forward max-color propagation, semi-naive. The colors fold
+      // each delta in by ANTI JOIN + UNION, not a left-outer merge:
+      // outer/inner joins multiply Catalyst's sizeInBytes estimate, and a
+      // recurrence whose stats multiply by its own prior stats compounds
+      // into a 3^k-digit BigInt tower that the driver then grinds through
+      // inside every checkpoint's stats capture (measured: the 10x smoke
+      // leg pinned one core for >20 min in BigInteger.multiply before
+      // this rewrite; anti joins carry the LEFT side's stats, so bits
+      // grow linearly instead)
+      val colors = seminaive(
+          Counted(nodes.df.select(col("v"), col("v").as("c")).stageBoundary, nodes.rows),
+          maxInner, keys = Seq("v")) { (seen, _) =>
+        eFwd
+          .join(gateBroadcast(seen.delta.df.select(col("v").as("src"), col("c").as("cs")),
+            seen.delta.rows), Seq("src"))
+          .groupBy(col("dst")).agg(max(col("cs")).as("cand"))
+          .select(col("dst").as("v"), col("cand"))
+          .join(seen.all.df, Seq("v"))
+          .filter(col("cand") > col("c"))
+          .select(col("v"), col("cand").as("c"))
+      }.orRaise(s"color propagation exceeded $maxInner rounds").all.df
+      // (3) backward sweep from the roots, restricted to each root's
+      // color; every delta is disjoint from the reached set (anti join)
+      // and holds one row per node, so its running count is exact
+      val reached = seminaive(counted(colors.filter(col("c") === col("v"))), maxInner) {
+          (seen, _) =>
+        eBwd
+          .join(gateBroadcast(seen.delta.df.select(col("v").as("dst"), col("c")),
+            seen.delta.rows), Seq("dst"))
+          .select(col("src").as("v"), col("c")).distinct()
+          .join(colors.select(col("v"), col("c").as("vc")), Seq("v"))
+          .filter(col("c") === col("vc"))
+          .select(col("v"), col("c"))
+          .join(seen.all.df, Seq("v"), "left_anti")
+      }.orRaise(s"backward sweep exceeded $maxInner rounds").all
+      // (4) emit nontrivial classes, peel everything reached
+      val comps = reached.df.groupBy(col("c"))
+        .agg(count(lit(1)).as("n"), min(col("v")).as("scc_id"))
+      out += reached.df
+        .join(comps.filter(col("n") > 1).select(col("c"), col("scc_id")), Seq("c"))
+        .select(col("v").as("node"), col("scc_id")).stageBoundary
+      val rest = counted(sub.df
+        .join(gateBroadcast(reached.df.select(col("v").as("src")), reached.rows),
+          Seq("src"), "left_anti")
+        .join(gateBroadcast(reached.df.select(col("v").as("dst")), reached.rows),
+          Seq("dst"), "left_anti")
+        .select(col("src"), col("dst")))
+      pin.release()
+      trim(rest)
+    }.orRaise(s"SCC coloring did not converge within $maxOuter outer rounds")
     val nontrivial = if (out.isEmpty) emptyOut else out.reduce(_ unionByName _)
     val selfOnly = selfLoops
       .join(nontrivial.select(col("node")), Seq("node"), "left_anti")
@@ -1851,21 +1833,14 @@ object Graph {
     * sums stay ≤ 2·10⁶ · max-degree — no overflow at any realistic
     * degree. */
   def hits(edges: DataFrame, rounds: Int): DataFrame = {
-    val s = edges.sparkSession
     val raw = edges.cachedStageBoundary
     val (nodes, nV) = raw.select(col("src").as("part"))
       .unionAll(raw.select(col("dst").as("part")))
       .distinct()
       .stageBoundaryRows // node-sized; seeds both score vectors
-    val (eSrc, eDst) =
-      if (nV <= broadcastNodeBudget(s)) (raw, raw)
-      else {
-        // build the dst copy while raw is still cached: copartitionOnce
-        // unpersists raw as its last act
-        val d = raw.repartition(col("dst")).cachedStageBoundary
-        d.count()
-        (copartitionOnce(raw, "src"), d)
-      }
+    val pin = new EdgePin(raw, "src", "dst")
+    val eDst = pin.on("dst", nV)
+    val eSrc = pin.on("src", nV)
     var hub = nodes.withColumn("h", lit(RankScale))
     var auth = nodes.withColumn("a", lit(0L))
     for (_ <- 1 to rounds) {
@@ -2600,20 +2575,14 @@ object Graph {
     // and the backward δ join (the naive form expanded edges×frontier
     // five times; the fused form three times, the two widest reused
     // from cache — measured ~30% at sf0.1). Frontiers grow to
-    // |seeds|×reach, so past the broadcast budget the edges re-pin
-    // src-co-partitioned ONCE (the bfsPerSeed discipline) and every
-    // later expansion shuffles only the frontier side.
-    var e = edges
-    var parted = false
-    def expandFrom(lower: DataFrame, rows: Long): DataFrame = {
-      if (!parted && rows > broadcastNodeBudget(edges.sparkSession)) {
-        e = copartitionOnce(edges, "src")
-        parted = true
-      }
-      e.join(gateBroadcast(lower.select(col("seed"), col("node").as("src"),
+    // |seeds|×reach, so past the broadcast budget the edge pin
+    // ([[EdgePin]]) co-partitions the edges on src ONCE and every later
+    // expansion shuffles only the frontier side.
+    val pin = new EdgePin(edges, "src")
+    def expandFrom(lower: DataFrame, rows: Long): DataFrame =
+      pin.on("src", rows).join(gateBroadcast(lower.select(col("seed"), col("node").as("src"),
           col("node").as("vnode"), col("sig").as("vsig")), rows), Seq("src"))
         .select(col("seed"), col("vnode"), col("vsig"), col("dst").as("node"))
-    }
     def levelOf(ex: DataFrame, excl: Seq[DataFrame]): (DataFrame, Long) = {
       val cand = ex.groupBy(col("seed"), col("node")).agg(sum(col("vsig")).as("sig"))
       // one fused anti-join against the UNION of visited levels, not one
@@ -2698,14 +2667,13 @@ object Graph {
       expr("bit_xor(xxhash64(dst, src))").as("b")).head()
     require(symFp.isNullAt(0) || symFp.getLong(0) == symFp.getLong(1),
       "misByHash requires a symmetric edge relation (fingerprint mismatch)")
-    var (act, nAct) = raw.select(col("src").as("v")).distinct()
+    val act0 = counted(raw.select(col("src").as("v")).distinct()
       .withColumn("p", expr(
-        "CAST(conv(substring(md5(concat('mis:', CAST(v AS STRING))), 1, 15), 16, 10) AS BIGINT)"))
-      .stageBoundaryRows
+        "CAST(conv(substring(md5(concat('mis:', CAST(v AS STRING))), 1, 15), 16, 10) AS BIGINT)")))
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // LIVE edge relation (r10 optimization): after each round, restrict
-    // the edges to pairs whose BOTH endpoints are still active. A
-    // retired node never influences another round (Luby competition is
+    // LIVE edge relation (r10 optimization): before each later round,
+    // restrict the edges to pairs whose BOTH endpoints are still active.
+    // A retired node never influences another round (Luby competition is
     // among active neighbors only), yet the previous form probed the
     // FULL persisted edge set twice per round (neighbor-min + retire)
     // while the active set shrank geometrically — at sf0.1 that was
@@ -2724,13 +2692,20 @@ object Graph {
     var live = raw
     val dstPrio = expr(
       "CAST(conv(substring(md5(concat('mis:', CAST(dst AS STRING))), 1, 15), 16, 10) AS BIGINT)")
-    var round = 1
-    while (nAct > 0 && round <= maxRounds) {
+    val last = converge(act0, maxRounds, same = (_, _) => false) { (act, round) =>
+      // both-endpoints-active restriction; the checkpoint bounds lineage
+      // and materializes the shrink, so a round scans the live edges,
+      // not a semi-join chain as deep as the rounds before it
+      if (round > 1)
+        live = live
+          .join(gateBroadcast(act.df.select(col("v").as("src")), act.rows), Seq("src"), "left_semi")
+          .join(gateBroadcast(act.df.select(col("v").as("dst")), act.rows), Seq("dst"), "left_semi")
+          .stageBoundary
       // join-free neighbor minimum: every edge in `live` has an active
       // dst, and the priority computes map-side from the id
       val nbrMin = live.select(col("src"), dstPrio.as("np"), col("dst").as("nv"))
         .groupBy(col("src")).agg(min(struct(col("np"), col("nv"))).as("m"))
-      val mis = act
+      val mis = act.df
         .join(nbrMin.withColumnRenamed("src", "v"), Seq("v"), "left")
         .filter(col("m").isNull || col("p") < col("m.np") ||
           (col("p") === col("m.np") && col("v") < col("m.nv")))
@@ -2738,27 +2713,15 @@ object Graph {
         .stageBoundary // round-sized; feeds output, retire, next act
       out += mis.select(col("v").as("node"), lit(round.toLong).as("round_joined"))
       val rm = mis.select(col("v"))
-        .unionAll(live.join(gateBroadcast(mis.select(col("v").as("src")), nAct), Seq("src"))
+        .unionAll(live.join(gateBroadcast(mis.select(col("v").as("src")), act.rows), Seq("src"))
           .select(col("dst").as("v")))
         .distinct()
-      val (nextAct, nNext) = act.join(rm, Seq("v"), "left_anti").stageBoundaryRows
-      act = nextAct
-      nAct = nNext
-      if (nAct > 0) {
-        // both-endpoints-active restriction for the next round; the
-        // checkpoint bounds lineage and materializes the shrink so
-        // round k+1 scans live_k, not a k-deep semi-join chain
-        live = live
-          .join(gateBroadcast(act.select(col("v").as("src")), nAct), Seq("src"), "left_semi")
-          .join(gateBroadcast(act.select(col("v").as("dst")), nAct), Seq("dst"), "left_semi")
-          .stageBoundary
-      }
-      round += 1
+      act.df.join(rm, Seq("v"), "left_anti")
     }
-    require(nAct == 0,
-      s"MIS did not reach the empty fixpoint within $maxRounds rounds ($nAct still active)")
+    last.orRaise(s"MIS did not reach the empty fixpoint within $maxRounds rounds " +
+      s"(${last.state.rows} still active)")
     if (out.isEmpty) // edgeless input: no rounds ran
-      act.select(col("v").as("node"), lit(0L).as("round_joined")).limit(0)
+      act0.df.select(col("v").as("node"), lit(0L).as("round_joined")).limit(0)
     else out.reduce(_ unionByName _)
   }
 
@@ -2826,7 +2789,7 @@ object Graph {
     * what graph-ML libraries ship). */
   def wlColors(edges: DataFrame, rounds: Int): DataFrame = {
     // the per-round edge join keys on dst (neighbor colors), so the
-    // over-budget co-partition must be dst-keyed
+    // edges pin on dst
     val (e, deg, n) = pinEdges(edges, key = "dst")
     var color = deg.select(col("src").as("v"), col("d").cast("long").as("c"))
       .stageBoundary

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Shared devices for every operator registry in `graft.ops`. */
@@ -153,13 +153,16 @@ package object ops {
       * runs (the observation would never fire and `Observation.get`
       * would block), so the count falls back to `count()`. */
     def stageBoundaryRows: (DataFrame, Long) =
+      stageBoundaryRowsWhere(org.apache.spark.sql.functions.lit(true))
+
+    /** [[stageBoundaryRows]] counting only the rows where `where` holds. */
+    def stageBoundaryRowsWhere(where: Column): (DataFrame, Long) =
       if (df.sparkSession.conf.get(StageBoundaryModeKey, "local") == "none")
-        (df, df.count())
+        (df, df.filter(where).count())
       else {
         val obs = org.apache.spark.sql.Observation()
-        val out = df.observe(obs,
-          org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-          .stageBoundary
+        val out = df.observe(obs, org.apache.spark.sql.functions.count(
+          org.apache.spark.sql.functions.when(where, 1)).as("rows")).stageBoundary
         (out, obs.get("rows").asInstanceOf[Long])
       }
   }

@@ -140,7 +140,7 @@ class AnalyticsSpec extends SparkSpec {
     // only in the delta slice, and a key spanning both — the three outer-join
     // branches the merge must fold correctly
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-mv").toString
+    val dir = tempDir("graft-mv").toString
     Seq(
       (1L, "P_BASE", "2024-01-05 00:00:00", 10.00),
       (10L, "P_DELTA", "2024-02-05 00:00:00", 20.00),
@@ -172,7 +172,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("q253: planted quintiles land every customer in the hand-computed segment") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rfm").toString
+    val dir = tempDir("graft-rfm").toString
     // customer i: last order 2024-02-01 minus (i-1) days (recency rank =
     // id order), order count by a permutation that exercises all six
     // segments, price i dollars per order
@@ -209,7 +209,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("q254: planted baskets produce hand-computed support/confidence/lift in both directions") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rules").toString
+    val dir = tempDir("graft-rules").toString
     // N=5 orders; {1,2} together twice (qualifies), {1,3} once (below
     // the support floor); n(1)=3, n(2)=3, n(3)=2
     Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L), (3L, 1L), (3L, 3L), (4L, 3L), (5L, 2L))
@@ -237,7 +237,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("q255: planted cohorts accumulate to hand-computed LTV; corpus cents conserve") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ltv").toString
+    val dir = tempDir("graft-ltv").toString
     def ts(v: String) = java.sql.Timestamp.valueOf(v + " 00:00:00")
     Seq(
       (1L, 1L, ts("1995-01-15"), 10.0), (2L, 1L, ts("1995-05-10"), 5.0),
@@ -280,7 +280,7 @@ class AnalyticsSpec extends SparkSpec {
       """SELECT id FROM range(1, 2000)
         |WHERE CAST(conv(substring(md5(concat('gdpr:', CAST(id AS STRING))), 1, 4), 16, 10) AS INT) % 50 <> 0
         |ORDER BY id""".stripMargin).head.getLong(0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-gdpr").toString
+    val dir = tempDir("graft-gdpr").toString
     Seq((sel, "a"), (non, "b")).toDF("c_custkey", "c_name")
       .write.parquet(s"$dir/customer.parquet")
     // requested customer owns orders 100 and 300 (files 0 and 1);
@@ -310,7 +310,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("q257: ties deviate, unique values balance, and every row lands in one bucket") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-eqd").toString
+    val dir = tempDir("graft-eqd").toString
     // 32 rows: prices all distinct (perfect equi-depth), quantities in
     // two tied runs of 20 and 12 (boundaries cannot split a tie)
     (1 to 32).map(i => (i.toDouble, if (i <= 20) 1.0 else 2.0))
@@ -333,7 +333,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("q261: the tx3 reading differs from tx1 by exactly the retroactive corrections") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-bitemp").toString
+    val dir = tempDir("graft-bitemp").toString
     (1L to 140L).map(k => (k, 10.0)).toDF("p_partkey", "p_retailprice")
       .write.parquet(s"$dir/part.parquet")
     val corrected = spark.sql(

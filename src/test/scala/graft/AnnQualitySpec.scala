@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.util.Random
 
 import graft.ops.Similarity
@@ -31,7 +29,7 @@ class AnnQualitySpec extends SparkSpec {
       }
     }
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-annq").toString
+    val dir = tempDir("graft-annq").toString
     rows.toSeq.toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
     dir
@@ -96,7 +94,7 @@ class AnnQualitySpec extends SparkSpec {
     val v = graft.sources.Tables.embeddings(spark, dir).select(col("vec_id"), expr(
       "transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0D + 0.5D) AS BIGINT))").as("qv"))
     val cents = Similarity.kmeansCentroids(v, k = 8, iters = 2)
-    val path = java.nio.file.Files.createTempDirectory("graft-cent").toString + "/centroids.parquet"
+    val path = tempDir("graft-cent").toString + "/centroids.parquet"
     Similarity.saveCentroids(spark, cents, path)
     assert(Similarity.loadCentroids(spark, path) == cents)
   }
@@ -404,7 +402,7 @@ class AnnQualitySpec extends SparkSpec {
       rows += ((id, v, if (id % 10 == 9 || id % 2 != 0) 1 else 0))
     }
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift").toString
+    val dir = tempDir("graft-drift").toString
     rows.toSeq.toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
     val drifts = Similarity.q162IndexDrift.run(spark, dir).collect()

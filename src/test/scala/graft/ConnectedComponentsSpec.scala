@@ -82,6 +82,25 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got.values.toSet == Set(0L), "fallback must deliver the true fixpoint")
   }
 
+  test("semi-naive propagation converging exactly at its cap equals union-find and star") {
+    // a 0..7 chain drops node 7's label in round 7, and round 8 drops
+    // none: a cap of 8 converges on its last round, with no fallback
+    val nodes = (0L until 50L).toSeq
+    val pairs = (0L until 7L).map(i => (i, i + 1)) ++
+      Seq((20L, 21L), (20L, 22L), (20L, 23L), (30L, 31L), (31L, 32L), (32L, 30L), (41L, 40L))
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val prop = try labelsOf(Dedup.connectedComponents(nodesDf(nodes), pairsDf(pairs),
+        propagationRounds = 8, localEdgeThreshold = 0).select("doc_id", "cluster_id"))
+      finally System.setErr(stderr)
+    assert(!err.toString.contains("NOT converged"), "propagation must converge under its cap")
+    val star = labelsOf(Dedup.connectedComponentsStar(nodesDf(nodes), pairsDf(pairs))
+      .select("doc_id", "cluster_id"))
+    assert(prop == unionFind(nodes, pairs))
+    assert(star == prop)
+  }
+
   test("cluster sizes are consistent with labels") {
     val nodes = (0L until 40L).toSeq
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L))

@@ -13,7 +13,7 @@ class CurationAuditSpec extends SparkSpec {
   import spark.implicits._
 
   private def plantedDir(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-audit").toString
+    val dir = tempDir("graft-audit").toString
     rows.toDF("doc_id", "text", "lang")
       .withColumn("source", lit("gen"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -162,7 +162,7 @@ class CurationAuditSpec extends SparkSpec {
         (21L to 40L).map(i => (i, Seq.fill(55 + (i % 5).toInt)("spam").mkString(" "), "en")))
     val sep = spark.read.parquet(s"$dir/documents.parquet")
       .withColumn("source", when(col("doc_id") <= 20, "good").otherwise("bad"))
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-anova").toString
+    val dir2 = tempDir("graft-anova").toString
     sep.write.parquet(s"$dir2/documents.parquet")
     val f2 = TextOps.q211QualityAnova.run(spark, dir2).collect().head.getDouble(6)
     assert(f2 > 100.0, s"a perfectly separated pair of sources must give a huge F, got $f2")
@@ -380,7 +380,7 @@ class CurationAuditSpec extends SparkSpec {
         (41L to 60L).map(i => (i, "short doc", "en")))
     val sep = spark.read.parquet(s"$dir/documents.parquet").drop("source")
       .withColumn("source", when(col("doc_id") <= 40, "web").otherwise("truncated"))
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-ks").toString
+    val dir2 = tempDir("graft-ks").toString
     sep.write.parquet(s"$dir2/documents.parquet")
     val rows = TextOps.q225KsDrift.run(spark, dir2).collect()
       .map(r => r.getString(0) -> r).toMap
@@ -458,7 +458,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q246: planted skew makes the histogram beat System-R; PK-FK estimates are exact; actual is always err 0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-card").toString
+    val dir = tempDir("graft-card").toString
     // part key 1 is hot (10 rows, 5 returned) and alone in bucket 1;
     // keys 2 and 66 share bucket 2 — the histogram isolates the hot key,
     // the uniform System-R formula averages it away
@@ -659,7 +659,7 @@ class CurationAuditSpec extends SparkSpec {
     // average-rank tie convention, pinned
     import spark.implicits._
     def write(rows: Seq[(Long, String, String)], tag: String): String = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-mw-$tag").toString
+      val dir = tempDir(s"graft-mw-$tag").toString
       rows.toDF("doc_id", "text", "source")
         .withColumn("lang", lit("en"))
         .withColumn("n_chars", length(col("text")).cast("long"))
@@ -706,7 +706,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q241: planted sessions peak correctly and the midnight carry rides the day offset") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sweep").toString
+    val dir = tempDir("graft-sweep").toString
     // user 1: a two-event session then a separate one 70 min later;
     // user 2: a single-event session overlapping user 1's first;
     // user 3: a session SPANNING midnight (15-min gap across days)
@@ -740,7 +740,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q242: planted sessions walk the exact KM recurrence; censored sessions stay in risk sets only") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-km").toString
+    val dir = tempDir("graft-km").toString
     // five sessions: deaths at durations 0/5/10 min; one session censored
     // at 10 (ends within 30 min of corpus max) and one censored at 0 (IS
     // the corpus max)
@@ -776,7 +776,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q244: a perfect covariate adjusts both arms to the same mean; every user lands in an arm") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cuped").toString
+    val dir = tempDir("graft-cuped").toString
     // y == x for every user → theta is exactly 1e6 and CUPED removes
     // ALL between-arm covariate imbalance: both adjusted means equal
     // the pooled mean (25 dollars)
@@ -817,7 +817,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q262: planted weights dictate multiplicity exactly; the draw always totals k") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pps").toString
+    val dir = tempDir("graft-pps").toString
     // W = 400, step = 4: the 3:1 weight split yields exactly 75/25
     // selections for ANY offset in [0, 4)
     Seq((1L, "A", 300L), (2L, "B", 100L))
@@ -837,7 +837,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q260: rendezvous moves exactly the new node's winnings; mod-N reshuffles nearly everything") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-hrw").toString
+    val dir = tempDir("graft-hrw").toString
     (1L to 900L).map(k => (k, s"c$k")).toDF("c_custkey", "c_name")
       .write.parquet(s"$dir/customer.parquet")
     val got = graft.ops.Layout.q260RebalanceAudit.run(spark, dir).collect()
@@ -872,7 +872,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q259: a planted spike's coefficient chain reconstructs exactly; dropped details never move the total") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-haar").toString
+    val dir = tempDir("graft-haar").toString
     // flat 10/day over all 32 days with a +32 spike on day 5: exactly
     // 5 nonzero details (the spike's chain), all kept by top-8, so the
     // compressed reconstruction is EXACT at every day
@@ -904,7 +904,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q258: planted grid travel is exact; on the fixture Z-order balances the axes row-major can't") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sfc").toString
+    val dir = tempDir("graft-sfc").toString
     // complete 4x4 grid: row-major travel = 4 rows x 3 + 3 wraps x 4 = 24,
     // and 4x4 Morton traversal also totals 24; a random order can only tie
     // or lose
@@ -933,7 +933,7 @@ class CurationAuditSpec extends SparkSpec {
     import spark.implicits._
     // planted: three 200-order shards, each holding one custkey; probes
     // are the %97 keys 0 (shard 0) and 97 (shard 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-bzm").toString
+    val dir = tempDir("graft-bzm").toString
     ((0L until 200L).map(i => (i, 0L)) ++ (200L until 400L).map(i => (i, 97L)) ++
       (400L until 600L).map(i => (i, 5L)))
       .toDF("o_orderkey", "o_custkey")
@@ -969,7 +969,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q248: a planted violator pools to the hand-walked PAV solution; fixture fit is antitonic and bounded") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-iso").toString
+    val dir = tempDir("graft-iso").toString
     // raw rates 0.5, 0.8, 0.2 by bucket — buckets 0 and 1 violate the
     // non-increasing order and pool to 13/20 = 0.65; bucket 2 stands
     val rows =
@@ -999,7 +999,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q252: a trained policy replays to perfect reward on planted logs; accounting identities hold") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
+    val dir = tempDir("graft-replay").toString
     // seg 0 (u4): view converts, click doesn't; seg 1 (u1): the reverse.
     // Trained greedy should match 2 eval events and collect both rewards
     Seq(
@@ -1040,7 +1040,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q251: hand-walked removal effects on planted journeys; drops are non-negative on the fixture") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-markov").toString
+    val dir = tempDir("graft-markov").toString
     // start→view (2/3), start→click (1/3); view→conv (1/2), view→null
     // (1/2); click→conv (1). Hand-walk: full chain absorbs 666666 micro;
     // removing view OR click each drops 333333; signup drops 0; $6 of
@@ -1082,7 +1082,7 @@ class CurationAuditSpec extends SparkSpec {
 
   test("q249: hand-walked Shapley sixths on planted journeys; efficiency conserves 6x purchase volume") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-shap").toString
+    val dir = tempDir("graft-shap").toString
     // u1 touched by view+click, u2 by view only, u3 untouched; $6 each.
     // Hand-walked: view 9 sixths (u2 alone: 6; u1 split: 3), click 3,
     // signup 0, unattributed 6
@@ -1131,7 +1131,7 @@ class CurationAuditSpec extends SparkSpec {
       s"sample fraction ${sampleTot.toDouble / trueTot} strays from 1/16")
     // constant-quantity fixture: the qty estimate must equal qty x the
     // row estimate — the estimator has no second degree of freedom
-    val dir = java.nio.file.Files.createTempDirectory("graft-aqp").toString
+    val dir = tempDir("graft-aqp").toString
     (1 to 320).map(i => (i.toLong, i, 5.0, "A", "F"))
       .toDF("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_linestatus")
       .write.parquet(s"$dir/lineitem.parquet")
@@ -1204,7 +1204,7 @@ class CurationAuditSpec extends SparkSpec {
     // that touch both first and last credit
     import spark.implicits._
     val day = "2024-01-0"
-    val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
+    val dir = tempDir("graft-attr").toString
     Seq(
       (1L, s"${day}1 10:00:00", 1L, "click", 0.0),
       (2L, s"${day}1 11:00:00", 1L, "view", 0.0),

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.util.Random
 
 import graft.ops.Dedup
@@ -33,7 +31,7 @@ class DedupQualitySpec extends SparkSpec {
       exactCopies.map { case (id, toks) => (id, toks.mkString(" ")) }
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-dedupq").toString
+    val dir = tempDir("graft-dedupq").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("gen"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -82,7 +80,7 @@ class DedupQualitySpec extends SparkSpec {
   }
 
   test("q30 on an empty documents table is (0, 0, 0, null)") {
-    val dir = Files.createTempDirectory("graft-q30-empty").toString
+    val dir = tempDir("graft-q30-empty").toString
     graft.sources.Tables.documents(spark, sfDir).limit(0).write.parquet(s"$dir/documents.parquet")
     val Seq(r) = Dedup.q30DedupExact.run(spark, dir).collect().toSeq
     assert(r.toSeq == Seq(0L, 0L, 0L, null))

@@ -100,7 +100,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("q245: planted edit kinds land in the right buckets; fixture total equals brute-force levenshtein") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-fastss").toString
+    val dir = tempDir("graft-fastss").toString
     // subs: (abc,abd) pos 3, (ab,aa) pos 2; indels: (aa,a) deletable at
     // either position → MIN(i) = 1, (ab,a) pos 2, (abc,ab) and (abd,ab)
     // pos 3; xyz isolated

@@ -130,7 +130,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("q243: planted frequent-core triangle counts and clustering coefficients, hand-computed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tri").toString
+    val dir = tempDir("graft-tri").toString
     // orders 1,2 each hold parts {1,2,3} → support-2 edges (1,2)(1,3)(2,3);
     // orders 3,4 each hold {1,4} → edge (1,4), no triangle; orders 5 holds
     // {5,6} once → below support, no edge
@@ -178,6 +178,10 @@ class GraphSpec extends SparkSpec {
       Graph.pagerank(e, rounds = 2).collect().map(_.toString).sorted.toSeq,
       Graph.labelPropagation(e, rounds = 2).collect().map(_.toString).sorted.toSeq,
       Graph.bfsDistances(e, seeds, maxHops = 3).collect().map(_.toString).sorted.toSeq,
+      Graph.bfsPerSeed(e, Seq(1L, 4L).toDF("seed"), maxHops = 3)
+        .collect().map(_.toString).sorted.toSeq,
+      Graph.transitiveClosureFixpoint(e.unionByName(dirE))
+        .collect().map(_.toString).sorted.toSeq,
       Graph.pagerankDirected(dirE, rounds = 2).collect().map(_.toString).sorted.toSeq,
       Graph.hits(dirE, rounds = 2).collect().map(_.toString).sorted.toSeq,
       Graph.walkCorpus(e, steps = 3, seedMod = 1).collect().map(_.toString).sorted.toSeq,
@@ -191,16 +195,91 @@ class GraphSpec extends SparkSpec {
       Graph.walkCoverage(e, Seq(1L).toDF("node"),
           Graph.walkCorpus(e, steps = 3, seedMod = 1), maxStep = 3, nNodes = 5)
         .collect().map(_.toString).sorted.toSeq)
-    val key = "spark.graft.graph.broadcastNodeBudget"
-    val saved = spark.conf.getOption(key)
     val hinted = all()
-    try {
-      spark.conf.set(key, "0")
+    withConf(BudgetKey -> "0") {
       assert(all() == hinted, "shuffle-path walkers must equal the broadcast-path walkers")
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
+  }
+
+  private val BudgetKey = "spark.graft.graph.broadcastNodeBudget"
+
+  test("every round loop and edge pin keeps its job count on both plan paths") {
+    // Small fixed graphs; every entry runs from an empty cache, so its
+    // count is the loop's own: rounds × the jobs per round, the pin's
+    // co-partition jobs over budget, and the caller's collect.
+    val e = edges((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (3L, 7L), (7L, 8L),
+      (6L, 9L), (9L, 10L), (10L, 6L))
+    val dirE = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 4L),
+      (6L, 1L), (5L, 7L), (8L, 8L)).toDF("src", "dst")
+    val core = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (4L, 5L), (5L, 6L), (5L, 7L), (6L, 7L), (7L, 8L)).toDF("a", "b")
+    val seeds = Seq(1L, 8L).toDF("seed")
+    val ccNodes = (0L to 30L).toDF("doc_id")
+    val ccPairs = (Seq((10L, 11L), (11L, 12L), (20L, 21L)) ++
+      (0L until 6L).map(i => (i, i + 1))).toDF("doc_a", "doc_b")
+    val loops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "kcoreEdges" -> (() => Graph.kcoreEdges(core, k = 3, rounds = 5)),
+      "bfsDistances capped" -> (() => Graph.bfsDistances(e, seeds, maxHops = 2)),
+      "bfsDistances drained" -> (() => Graph.bfsDistances(e, seeds, maxHops = 10)),
+      "bfsPerSeed capped" -> (() => Graph.bfsPerSeed(e, seeds, maxHops = 2)),
+      "bfsPerSeed drained" -> (() => Graph.bfsPerSeed(e, seeds, maxHops = 10)),
+      "transitiveClosureFixpoint" -> (() => Graph.transitiveClosureFixpoint(dirE)),
+      "sccCyclic" -> (() => Graph.sccCyclic(dirE)),
+      "misByHash" -> (() => Graph.misByHash(e)),
+      "pagerank" -> (() => Graph.pagerank(e, rounds = 2)),
+      "labelPropagation" -> (() => Graph.labelPropagation(e, rounds = 2)),
+      "pagerankDirected" -> (() => Graph.pagerankDirected(dirE, rounds = 2)),
+      "hits" -> (() => Graph.hits(dirE, rounds = 2)),
+      "betweennessSampled" -> (() => Graph.betweennessSampled(e, seeds)),
+      "wlColors" -> (() => Graph.wlColors(e, rounds = 2)),
+      "connectedComponents propagation" -> (() =>
+        graft.ops.Dedup.connectedComponents(ccNodes, ccPairs, localEdgeThreshold = 0)),
+      "connectedComponentsStar" -> (() =>
+        graft.ops.Dedup.connectedComponentsStar(ccNodes, ccPairs)))
+    def measure(): Map[String, Int] = loops.map { case (name, run) =>
+      graft.ops.releaseStageBoundaries()
+      name -> countJobs(run().collect())._2
+    }.toMap
+    val hinted = measure()
+    val shuffled = withConf(BudgetKey -> "0")(measure())
+    val want = Map(
+      "kcoreEdges" -> 11,
+      "bfsDistances capped" -> 13,
+      "bfsDistances drained" -> 37,
+      "bfsPerSeed capped" -> 13,
+      "bfsPerSeed drained" -> 42,
+      "transitiveClosureFixpoint" -> 40,
+      "sccCyclic" -> 66,
+      "misByHash" -> 14,
+      "pagerank" -> 15,
+      "labelPropagation" -> 12,
+      "pagerankDirected" -> 35,
+      "hits" -> 40,
+      "betweennessSampled" -> 25,
+      "wlColors" -> 15,
+      "connectedComponents propagation" -> 47,
+      "connectedComponentsStar" -> 50)
+    // over budget the pin adds its co-partition jobs and the gated
+    // joins plan as shuffles
+    val wantShuffled = want ++ Map(
+      "bfsDistances capped" -> 17,
+      "bfsDistances drained" -> 46,
+      "bfsPerSeed capped" -> 17,
+      "bfsPerSeed drained" -> 46,
+      "sccCyclic" -> 75,
+      "pagerank" -> 19,
+      "labelPropagation" -> 16,
+      "pagerankDirected" -> 39,
+      "hits" -> 52,
+      "betweennessSampled" -> 29,
+      "wlColors" -> 19)
+    // hits runs one job fewer in some runs of the same code, on either
+    // path; every other count is exact
+    def matches(got: Map[String, Int], want: Map[String, Int]) =
+      (got - "hits") == (want - "hits") &&
+        got.get("hits").exists(n => n == want("hits") || n == want("hits") - 1)
+    assert(matches(hinted, want) && matches(shuffled, wantShuffled),
+      s"broadcast path: $hinted; budget-0 path: $shuffled")
   }
 
   test("directed PageRank: dangling chain 1->2->3, hand-computed round 1") {

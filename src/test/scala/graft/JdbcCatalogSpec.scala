@@ -279,7 +279,7 @@ class JdbcCatalogSpec extends SparkSpec {
   }
 
   test("parquet catalog snapshot round-trips and lints identically (--parquet path)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cat").toString
+    val dir = tempDir("graft-cat").toString
     Catalog.writeParquet(SchemaLint.fixtureCatalog(spark), dir)
     val viaParquet = Rules.all(Catalog.fromParquet(spark, dir)).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq

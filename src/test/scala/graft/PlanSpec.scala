@@ -98,13 +98,9 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
     // lineage through the stage boundaries, so the band relation's own
     // plan is in q31's
-    val old = spark.conf.getOption(graft.ops.StageBoundaryModeKey)
-    spark.conf.set(graft.ops.StageBoundaryModeKey, "none")
-    val plan = try Dedup.q31MinhashLsh.run(spark, sfDir).queryExecution.sparkPlan
-      finally old match {
-        case Some(m) => spark.conf.set(graft.ops.StageBoundaryModeKey, m)
-        case None => spark.conf.unset(graft.ops.StageBoundaryModeKey)
-      }
+    val plan = withConf(graft.ops.StageBoundaryModeKey -> "none") {
+      Dedup.q31MinhashLsh.run(spark, sfDir).queryExecution.sparkPlan
+    }
     def kernelCalls(p: SparkPlan): Int =
       p.expressions.map(_.collect { case m: graft.functions.MinHash => m }.size).sum
     // the band explode: one per self-join side
@@ -214,14 +210,11 @@ class PlanSpec extends SparkSpec {
     // broadcast the dim, so the test pins the *mechanism* with thresholds
     // lowered and broadcast disabled.
     import org.apache.spark.sql.functions.{col, count, lit}
-    val confs = Seq(
+    withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB") {
       val o = graft.sources.Tables.orders(spark, sfDir)
         .filter(col("o_totalprice") > 450000)
       val l = graft.sources.Tables.lineitem(spark, sfDir)
@@ -230,9 +223,6 @@ class PlanSpec extends SparkSpec {
           .groupBy(col("o_orderkey")).agg(count(lit(1)).as("n")))
       assert(p.contains("might_contain") || p.contains("BloomFilter"),
         s"expected an injected runtime bloom filter on the lineitem side:\n$p")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -307,15 +297,13 @@ class PlanSpec extends SparkSpec {
   test("q112: the bucketed fact-fact join subtree contains ZERO exchanges") {
     // the whole point of the layout: both sides arrive hash-distributed
     // on the join key, so the join is shuffle-free
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ path
       val join = graft.ops.Layout.bucketedJoin(spark, sfDir)
       val p = planOf(join)
       assert(p.contains("SortMergeJoin"), p)
       assert(!p.contains("Exchange"), s"bucketed join must not shuffle:\n$p")
       assert(p.contains("Bucketed: true"), p)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   test("q113: the lang predicate is a planning-time PartitionFilter, " +
@@ -808,23 +796,15 @@ class PlanSpec extends SparkSpec {
     val e = (1L to 40L).flatMap(i => Seq((i, i % 40 + 1), (i % 40 + 1, i)))
       .toDF("src", "dst")
     val budgetKey = "spark.graft.graph.broadcastNodeBudget"
-    val abtKey = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = Seq(budgetKey, abtKey).map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(abtKey, "-1")
-    try {
-      spark.conf.set(budgetKey, "1000000")
-      val hinted = planOf(graft.ops.Graph.pagerank(e, rounds = 1))
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val hinted = withConf(budgetKey -> "1000000")(planOf(graft.ops.Graph.pagerank(e, rounds = 1)))
       assert(hinted.contains("BroadcastHashJoin"),
         s"under the budget the rank relation must ride the hint:\n$hinted")
-      spark.conf.set(budgetKey, "0")
-      val shuffled = planOf(graft.ops.Graph.pagerank(e, rounds = 1))
+      val shuffled = withConf(budgetKey -> "0")(planOf(graft.ops.Graph.pagerank(e, rounds = 1)))
       assert(!shuffled.contains("BroadcastHashJoin") && !shuffled.contains("BroadcastExchange"),
         s"over the budget no node relation may be force-broadcast:\n$shuffled")
       assert(shuffled.contains("SortMergeJoin") || shuffled.contains("ShuffledHashJoin"),
         s"the fallback is a key-partitioned shuffle join:\n$shuffled")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -155,7 +155,7 @@ class RulesSpec extends SparkSpec {
   }
 
   test("csv sink writes a single FILE with header and all rows (app.py:135)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString
+    val dir = tempDir("graft-csv").toString
     val path = Report.writeCsv(SchemaLint.report(spark), dir, "ecommerce_db")
     assert(path.endsWith("ecommerce_db_schema_issues.csv"))
     val f = new java.io.File(new java.net.URI(path).getPath)
@@ -193,7 +193,7 @@ class RulesSpec extends SparkSpec {
   }
 
   test(".env file loading: file fallback, env precedence, dotenv syntax (app.py:8 load_dotenv)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dotenv")
+    val dir = tempDir("graft-dotenv")
     val f = dir.resolve(".env")
     java.nio.file.Files.writeString(f,
       """# connection settings

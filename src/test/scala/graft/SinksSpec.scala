@@ -9,7 +9,7 @@ import graft.sources.{Sinks, Tables}
 class SinksSpec extends SparkSpec {
 
   test("partitioned parquet write prunes partitions on read") {
-    val dir = Files.createTempDirectory("graft-part").toString + "/orders"
+    val dir = tempDir("graft-part").toString + "/orders"
     val orders = Tables.orders(spark, sfDir).withColumn("status", col("o_orderstatus"))
     Sinks.writePartitioned(orders, dir, "status")
     val back = spark.read.parquet(dir).filter(col("status") === "F")
@@ -36,14 +36,14 @@ class SinksSpec extends SparkSpec {
   }
 
   test("json round-trip preserves rows") {
-    val dir = Files.createTempDirectory("graft-json").toString + "/out"
+    val dir = tempDir("graft-json").toString + "/out"
     val df = Tables.nation(spark, sfDir)
     Sinks.writeJson(df, dir)
     assert(Sinks.readJson(spark, dir).count() == 25)
   }
 
   test("orc round-trip preserves rows and pushes filters into the ORC scan") {
-    val dir = Files.createTempDirectory("graft-orc").toString + "/lineitem"
+    val dir = tempDir("graft-orc").toString + "/lineitem"
     val li = Tables.lineitem(spark, sfDir)
     Sinks.writeOrc(li, dir)
     val back = Sinks.readOrc(spark, dir)
@@ -57,7 +57,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("csv round-trip with explicit schema preserves typed rows") {
-    val dir = Files.createTempDirectory("graft-csv-src").toString + "/nation"
+    val dir = tempDir("graft-csv-src").toString + "/nation"
     val df = Tables.nation(spark, sfDir)
     Sinks.writeCsv(df, dir)
     val back = Sinks.readCsv(spark, dir,
@@ -69,7 +69,7 @@ class SinksSpec extends SparkSpec {
   test("malformed JSON: PERMISSIVE quarantines corrupt records, FAILFAST throws") {
     // ingest-side data quality: a 100 TB crawl WILL contain garbage
     // lines; the pipeline must quarantine them, not die or silently drop
-    val dir = Files.createTempDirectory("graft-badjson").toString
+    val dir = tempDir("graft-badjson").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/part.json"),
       """{"id": 1, "v": "ok"}
         |{"id": 2, "v": "also ok"}
@@ -95,7 +95,7 @@ class SinksSpec extends SparkSpec {
   test("schema evolution: mergeSchema unions old and new parquet batches") {
     // day-1 batch: two columns; day-2 batch adds a column — the standard
     // append-only evolution a long-lived dataset accumulates
-    val dir = Files.createTempDirectory("graft-evolve").toString + "/t"
+    val dir = tempDir("graft-evolve").toString + "/t"
     import spark.implicits._
     Seq((1L, "a"), (2L, "b")).toDF("id", "name")
       .write.mode("append").parquet(dir)
@@ -114,7 +114,7 @@ class SinksSpec extends SparkSpec {
 
   test("z-order layout: range-partitioned files have disjoint zkey ranges") {
     import graft.ops.Analytics
-    val dir = Files.createTempDirectory("graft-zorder").toString + "/events"
+    val dir = tempDir("graft-zorder").toString + "/events"
     Analytics.zorderKeyed(Tables.events(spark, sfDir))
       .repartitionByRange(4, col("zkey"))
       .sortWithinPartitions(col("zkey"))

@@ -68,30 +68,25 @@ class SkewJoinSpec extends SparkSpec {
     val l = Tables.lineitem(spark, sfDir)
     val o = Tables.orders(spark, sfDir)
     // disable auto-broadcast so the shuffle partitioning is visible
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = SkewJoin.saltedJoin(l, o, "l_orderkey", "o_orderkey",
         saltSource = col("l_linenumber"), saltFactor = 8,
         hotKeys = Some(someHotKeys(3)))
         .queryExecution.executedPlan.toString
       assert(plan.contains("__salt"), s"salt must be part of the join keys:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("AQE splits a synthetic hot key at runtime (skew=true in the final plan)") {
     val s = spark
-    val confs = Seq(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32k",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32k",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> scala.util.Try(s.conf.get(k)).toOption }
-    try {
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // 90% of 200k rows share key 0 → one shuffle partition dwarfs the rest
       val left = s.range(0, 200000).select(
         when(col("id") % 10 < 9, lit(0L)).otherwise(pmod(col("id"), lit(1000))).as("k"),
@@ -102,8 +97,7 @@ class SkewJoinSpec extends SparkSpec {
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE should have split the hot partition (skew=true):\n$plan")
-    } finally prev.foreach { case (k, vOpt) =>
-      vOpt.fold(s.conf.unset(k))(v => s.conf.set(k, v)) }
+    }
   }
 
   test("AQE switches a shuffle join to broadcast at runtime when the built " +
@@ -111,14 +105,10 @@ class SkewJoinSpec extends SparkSpec {
     val s = spark
     // static planner must NOT broadcast (size stats say 'big'); only the
     // RUNTIME shuffle statistics reveal the filtered side is tiny
-    val confs = Seq(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10m")
-    val prev = confs.map { case (k, _) =>
-      k -> scala.util.Try(s.conf.get(k)).toOption.filter(_ != null) }
-    try {
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10m") {
       val small = Tables.orders(s, sfDir)
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), col("o_custkey"))
@@ -129,8 +119,7 @@ class SkewJoinSpec extends SparkSpec {
       assert(plan.contains("isFinalPlan=true"), plan)
       assert(plan.contains("BroadcastHashJoin"),
         s"AQE should have re-planned SMJ -> BHJ from runtime sizes:\n$plan")
-    } finally prev.foreach { case (k, vOpt) =>
-      vOpt.fold(s.conf.unset(k))(v => s.conf.set(k, v)) }
+    }
   }
 
   test("dynamic partition pruning: a selective dim filter prunes the " +
@@ -145,20 +134,17 @@ class SkewJoinSpec extends SparkSpec {
     // the dim must be FILE-backed: on a LocalRelation the filter constant-
     // folds away before the PartitionPruning rule looks for a selective
     // predicate, and no DPP subquery is inserted
-    val dimDir = java.nio.file.Files.createTempDirectory("graft-dpp-dim").toString
+    val dimDir = tempDir("graft-dpp-dim").toString
     Seq(("en", "keep"), ("de", "drop"), ("es", "drop"), ("fr", "drop"))
       .toDF("lang_key", "action").write.mode("overwrite").parquet(dimDir)
     val dim = s.read.parquet(dimDir).filter(col("action") === "keep")
-    val saved = scala.util.Try(s.conf.get("spark.sql.optimizer.dynamicPartitionPruning.enabled")).toOption
-    try {
-      s.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
+    withConf("spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "true") {
       val j = fact.join(dim, col("lang") === col("lang_key"))
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.toLowerCase.contains("dynamicpruning"),
         s"fact scan should carry a dynamic pruning subquery:\n$plan")
       // and the pruned result is exactly the en partition
       assert(j.count() == fact.filter(col("lang") === "en").count())
-    } finally saved.fold(s.conf.unset("spark.sql.optimizer.dynamicPartitionPruning.enabled"))(
-      v => s.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", v))
+    }
   }
 }

@@ -1,12 +1,46 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp directory named `prefix...`, deleted with everything
+    * under it when the suite ends. */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    finally super.afterAll()
+
+  /** Runs `body` with each conf key set to its value, then puts every key
+    * back as it was: its prior session value, or unset if it had none. */
+  def withConf[A](kvs: (String, String)*)(body: => A): A =
+    scopedConf(kvs.map { case (k, v) => k -> Some(v) })(body)
+
+  /** Runs `body` with each conf key unset, then restores it like
+    * [[withConf]]. */
+  def withoutConf[A](keys: String*)(body: => A): A =
+    scopedConf(keys.map(_ -> None))(body)
+
+  private def scopedConf[A](kvs: Seq[(String, Option[String])])(body: => A): A = {
+    def put(k: String, v: Option[String]): Unit = v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    kvs.foreach { case (k, v) => put(k, v) }
+    try body finally prior.foreach { case (k, v) => put(k, v) }
+  }
 
   /** Runs `body` and returns the job group (`spark.jobGroup.id`) of every
     * Spark job started while it ran. Listener events arrive

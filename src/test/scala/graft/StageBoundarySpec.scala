@@ -19,23 +19,8 @@ class StageBoundarySpec extends SparkSpec {
 
   private def df = spark.range(0, 100).select(col("id"), (col("id") % 7).as("k"))
 
-  private def withMode[A](mode: Option[String])(body: => A): A = {
-    val old = spark.conf.getOption(StageBoundaryModeKey)
-    mode match {
-      case Some(m) => spark.conf.set(StageBoundaryModeKey, m)
-      case None => spark.conf.unset(StageBoundaryModeKey)
-    }
-    try body
-    finally {
-      old match {
-        case Some(m) => spark.conf.set(StageBoundaryModeKey, m)
-        case None => spark.conf.unset(StageBoundaryModeKey)
-      }
-    }
-  }
-
   test("default (local) mode truncates the plan to a LogicalRDD and keeps the rows") {
-    withMode(None) {
+    withoutConf(StageBoundaryModeKey) {
       val out = df.stageBoundary
       assert(out.queryExecution.logical.isInstanceOf[
         org.apache.spark.sql.execution.LogicalRDD])
@@ -44,7 +29,7 @@ class StageBoundarySpec extends SparkSpec {
   }
 
   test("reliable mode checkpoints to the reliable dir and keeps the rows") {
-    withMode(Some("reliable")) {
+    withConf(StageBoundaryModeKey -> "reliable") {
       val out = df.stageBoundary
       // a reliable checkpoint also reads back as a truncated leaf plan
       assert(out.queryExecution.optimizedPlan.collectLeaves().size == 1)
@@ -55,7 +40,7 @@ class StageBoundarySpec extends SparkSpec {
   }
 
   test("none mode is the identity (lineage flows through)") {
-    withMode(Some("none")) {
+    withConf(StageBoundaryModeKey -> "none") {
       val in = df
       val out = in.stageBoundary
       assert(out eq in)
@@ -63,7 +48,7 @@ class StageBoundarySpec extends SparkSpec {
   }
 
   test("releaseStageBoundaries drops the checkpointed blocks") {
-    withMode(None) {
+    withoutConf(StageBoundaryModeKey) {
       val sc = spark.sparkContext
       releaseStageBoundaries() // drain anything earlier suites queued
       val before = sc.getPersistentRDDs.keySet
@@ -82,19 +67,21 @@ class StageBoundarySpec extends SparkSpec {
 
   for (mode <- Seq("local", "reliable", "none"))
     test(s"stageBoundaryRows returns the count() row count in $mode mode") {
-      withMode(Some(mode)) {
+      withConf(StageBoundaryModeKey -> mode) {
         val in = df.filter(col("k") =!= 3)
         val (out, rows) = in.stageBoundaryRows
         assert(rows == in.count())
         assert(out.count() == rows)
         assert(out.collect().map(_.getLong(0)).sorted.toSeq ==
           (0L until 100L).filter(_ % 7 != 3))
+        val (outK0, k0) = in.stageBoundaryRowsWhere(col("k") === 0)
+        assert(k0 == 15L && outK0.count() == rows, "the filtered count keeps every row")
         releaseStageBoundaries()
       }
     }
 
   test("stageBoundaryRows launches exactly one job in local mode") {
-    withMode(Some("local")) {
+    withConf(StageBoundaryModeKey -> "local") {
       val in = df.filter(col("k") =!= 3)
       val ((_, rows), jobs) = countJobs(in.stageBoundaryRows)
       assert(rows == 86L)
@@ -107,7 +94,7 @@ class StageBoundarySpec extends SparkSpec {
   }
 
   test("releaseStageBoundaries deletes reliable-mode checkpoint files") {
-    withMode(Some("reliable")) {
+    withConf(StageBoundaryModeKey -> "reliable") {
       releaseStageBoundaries()
       val out = df.stageBoundary
       val file = out.queryExecution.logical match {
@@ -125,7 +112,7 @@ class StageBoundarySpec extends SparkSpec {
   }
 
   test("q253's lazy boundary is registered: release frees every RDD it pinned") {
-    withMode(None) {
+    withoutConf(StageBoundaryModeKey) {
       val sc = spark.sparkContext
       releaseStageBoundaries()
       val before = sc.getPersistentRDDs.keySet

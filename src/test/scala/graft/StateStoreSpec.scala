@@ -54,7 +54,7 @@ class StateStoreSpec extends SparkSpec {
   /** A fresh parquet copy of `df` in its own temp dir: a path no earlier
     * key has fingerprinted. */
   private def freshParquet(df: DataFrame): String = {
-    val path = new File(Files.createTempDirectory("graft-memo").toFile, "t.parquet").getPath
+    val path = new File(tempDir("graft-memo").toFile, "t.parquet").getPath
     df.write.parquet(path)
     path
   }
@@ -73,7 +73,7 @@ class StateStoreSpec extends SparkSpec {
   }
 
   test("memo: two builds of q120's quantized input share one fingerprint, lambdas and all") {
-    val dir = Files.createTempDirectory("graft-memo").toFile
+    val dir = tempDir("graft-memo").toFile
     FileUtils.copyFile(new File(sfDir, "embeddings.parquet"), new File(dir, "embeddings.parquet"))
     def input = Similarity.quantizeVectors(Tables.embeddings(spark, dir.getPath))
     val (first, coldJobs) = countJobs(StateStore.key("ivf", input))
@@ -116,7 +116,7 @@ class StateStoreSpec extends SparkSpec {
     val path = freshParquet(base)
     val warm = StateStore.key("t", Tables.parquet(spark, path))
     val tmpdir = System.getProperty("java.io.tmpdir")
-    val moved = Files.createTempDirectory("graft-moved").toFile
+    val moved = tempDir("graft-moved").toFile
     System.setProperty("java.io.tmpdir", moved.getPath)
     val (cold, jobs) = try countJobs(StateStore.key("t", Tables.parquet(spark, path)))
       finally System.setProperty("java.io.tmpdir", tmpdir)
@@ -158,7 +158,7 @@ class StateStoreSpec extends SparkSpec {
 
   /** Runs `body` on a fresh snapshot root, deleted afterwards. */
   private def withRoot(body: File => Unit): Unit = {
-    val root = Files.createTempDirectory("graft-snapshot").toFile
+    val root = tempDir("graft-snapshot").toFile
     try body(root) finally FileUtils.deleteDirectory(root)
   }
 
@@ -219,7 +219,7 @@ class StateStoreSpec extends SparkSpec {
   }
 
   test("q114's hot-key memo is keyed by lineitem content, not by session or path") {
-    val work = Files.createTempDirectory("graft-hotkeys").toFile
+    val work = tempDir("graft-hotkeys").toFile
     try {
       FileUtils.copyFile(new File(sfDir, "lineitem.parquet"), new File(work, "lineitem.parquet"))
       def probe(li: DataFrame): Seq[Any] = li.groupBy(col("l_orderkey")).count()
@@ -256,7 +256,7 @@ class StateStoreSpec extends SparkSpec {
   test("no stale state: a fixture rewritten in place changes every state-backed answer") {
     val queries = Seq(Dedup.q108IncrementalDedup, Layout.q112BucketedJoin,
       Layout.q113PartitionPruning, TextOps.q136Bm25)
-    val work = Files.createTempDirectory("graft-stale").toFile
+    val work = tempDir("graft-stale").toFile
     val fixture = new File(work, "sf")
     FileUtils.copyDirectory(new File(sfDir), fixture)
     try {

@@ -26,7 +26,7 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.attribute.FileTime.fromMillis(stageClock.addAndGet(2000)))
 
   private def stageEvents(): String = {
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream").toString
     Files.copy(
       Paths.get(s"$sfDir/events.parquet"),
       Paths.get(s"$dir/events.parquet"),
@@ -96,7 +96,7 @@ class StreamingSpec extends SparkSpec {
 
   test("watermark drops rows arriving later than the threshold") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-late").toString
+    val dir = tempDir("graft-late").toString
     def write(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
       rows.toDF("event_id", "tss", "user_id", "event_type", "value", "props")
         .select(col("event_id"), timestamp_seconds(col("tss")).as("ts"), col("user_id"),
@@ -260,11 +260,7 @@ class StreamingSpec extends SparkSpec {
   test("RocksDB state store backend produces the same tumbling counts") {
     // the production state backend at 100 TB (bounded executor memory,
     // incremental checkpoints) — prove the operators are backend-agnostic
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbProvider) {
       val got = runToMemory(
         StreamingOps.tumblingCounts(StreamingOps.eventsStream(spark, stageEvents())),
         "t_rocksdb", "complete")
@@ -272,11 +268,11 @@ class StreamingSpec extends SparkSpec {
       val want = StreamingOps.q40EventsTumbling.run(spark, sfDir)
         .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
       assert(got == want)
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
+
+  private val RocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   test("checkpointed restart resumes after the last committed batch (no reprocessing)") {
     import org.apache.spark.sql.streaming.Trigger
@@ -285,10 +281,10 @@ class StreamingSpec extends SparkSpec {
     // fixture has shipped both nanos and micros generations) so restaged
     // files look exactly like the driver parquet the stream source expects
     val raw = Tables.withNanosAsLong(spark)(spark.read.parquet(s"$sfDir/events.parquet"))
-    val srcDir = Files.createTempDirectory("graft-ckpt-src")
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val srcDir = tempDir("graft-ckpt-src")
+    val ckpt = tempDir("graft-ckpt").toString
     def stage(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-stage").toString
+      val tmp = tempDir("graft-stage").toString
       raw.filter(col("event_id") >= lo && col("event_id") < hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -326,10 +322,10 @@ class StreamingSpec extends SparkSpec {
     val corpus = graft.ops.Dedup.buildCorpusState(docs.filter(col("doc_id") % 10 =!= 0))
     // the q108 batch docs arrive as THREE separate files → three
     // micro-batches against the same corpus state
-    val srcDir = Files.createTempDirectory("graft-dedup-src")
+    val srcDir = tempDir("graft-dedup-src")
     val batchDocs = docs.filter(col("doc_id") % 10 === 0)
     def stage(k: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-dedup-stage").toString
+      val tmp = tempDir("graft-dedup-stage").toString
       batchDocs.filter(col("doc_id") % 30 === k * 10)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -361,9 +357,9 @@ class StreamingSpec extends SparkSpec {
   test("streaming packing continues the global offset across triggers and equals the batch layout") {
     import scala.collection.concurrent.TrieMap
     val docs = Tables.documents(spark, sfDir)
-    val srcDir = Files.createTempDirectory("graft-pack-src")
+    val srcDir = tempDir("graft-pack-src")
     def stage(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-pack-stage").toString
+      val tmp = tempDir("graft-pack-stage").toString
       docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -373,7 +369,7 @@ class StreamingSpec extends SparkSpec {
     }
     stage(0, 170, "a.parquet"); stage(170, 340, "b.parquet")
     stage(340, Long.MaxValue, "c.parquet")
-    val stateDir = Files.createTempDirectory("graft-pack-state")
+    val stateDir = tempDir("graft-pack-state")
       .resolve("offsets").toString
     val perBatch = TrieMap.empty[Long, Array[(Long, Long, Long, Long)]]
     val q = StreamingOps.packingStream(spark, srcDir.toString, stateDir) { (id, packed) =>
@@ -404,9 +400,9 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     // docs arrive as three files in doc_id order — the arrival order
     // under which first-seen dedup equals the batch's keep-lowest-id
-    val srcDir = Files.createTempDirectory("graft-build-src")
+    val srcDir = tempDir("graft-build-src")
     def stage(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-build-stage").toString
+      val tmp = tempDir("graft-build-stage").toString
       docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -416,7 +412,7 @@ class StreamingSpec extends SparkSpec {
     }
     stage(0, 170, "a.parquet"); stage(170, 340, "b.parquet")
     stage(340, Long.MaxValue, "c.parquet")
-    val stateDir = Files.createTempDirectory("graft-build-state")
+    val stateDir = tempDir("graft-build-state")
       .resolve("hashes").toString
     val perBatch = TrieMap.empty[Long, Array[(Long, String, String, Long)]]
     val q = StreamingOps.corpusBuildStream(
@@ -453,12 +449,12 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 170).select(cols: _*)
     val evalDocs = Tables.documents(spark, sfDir).filter(col("doc_id") % 50 === 0)
       .select(col("doc_id"), col("text"))
-    val stateDir = Files.createTempDirectory("graft-restart-state")
+    val stateDir = tempDir("graft-restart-state")
       .resolve("hashes").toString
 
     def stageTo(df: DataFrame, name: String): java.nio.file.Path = {
-      val srcDir = Files.createTempDirectory("graft-restart-src")
-      val tmp = Files.createTempDirectory("graft-restart-stage").toString
+      val srcDir = tempDir("graft-restart-src")
+      val tmp = tempDir("graft-restart-stage").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath
@@ -496,10 +492,10 @@ class StreamingSpec extends SparkSpec {
     import scala.collection.concurrent.TrieMap
     import graft.ops.Analytics
     val orders = Tables.orders(spark, sfDir)
-    val stateDir = Files.createTempDirectory("graft-mv-state").resolve("mv").toString
-    val srcDir = Files.createTempDirectory("graft-mv-src")
+    val stateDir = tempDir("graft-mv-state").resolve("mv").toString
+    val srcDir = tempDir("graft-mv-src")
     def stage(df: DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-mv-stage").toString
+      val tmp = tempDir("graft-mv-stage").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath
@@ -541,9 +537,9 @@ class StreamingSpec extends SparkSpec {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"))
       .localCheckpoint(true)
-    val srcDir = Files.createTempDirectory("graft-wm-src")
+    val srcDir = tempDir("graft-wm-src")
     def stage(df: DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-wm-stage").toString
+      val tmp = tempDir("graft-wm-stage").toString
       df.select(col("event_id"), col("ts")).coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath
@@ -595,10 +591,10 @@ class StreamingSpec extends SparkSpec {
     import graft.ops.Analytics
     val orders = Tables.orders(spark, sfDir)
     val cust = Tables.customer(spark, sfDir)
-    val stateDir = Files.createTempDirectory("graft-jmv-state").resolve("mv").toString
-    val srcDir = Files.createTempDirectory("graft-jmv-src")
+    val stateDir = tempDir("graft-jmv-state").resolve("mv").toString
+    val srcDir = tempDir("graft-jmv-src")
     def stage(df: DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-jmv-stage").toString
+      val tmp = tempDir("graft-jmv-stage").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath
@@ -634,10 +630,10 @@ class StreamingSpec extends SparkSpec {
   test("bloom stream: BIT_OR state equals the batch words; a replayed file is a no-op without any file log") {
     import scala.collection.concurrent.TrieMap
     val orders = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_custkey"))
-    val stateDir = Files.createTempDirectory("graft-bloom-state").resolve("w").toString
-    val srcDir = Files.createTempDirectory("graft-bloom-src")
+    val stateDir = tempDir("graft-bloom-state").resolve("w").toString
+    val srcDir = tempDir("graft-bloom-src")
     def stage(df: DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-bloom-stage").toString
+      val tmp = tempDir("graft-bloom-stage").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath
@@ -670,10 +666,10 @@ class StreamingSpec extends SparkSpec {
   test("kmv stream: min-fold state equals the batch sketch; replay is a no-op without any file log") {
     import scala.collection.concurrent.TrieMap
     val orders = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_custkey"))
-    val stateDir = Files.createTempDirectory("graft-kmv-state").resolve("s").toString
-    val srcDir = Files.createTempDirectory("graft-kmv-src")
+    val stateDir = tempDir("graft-kmv-state").resolve("s").toString
+    val srcDir = tempDir("graft-kmv-src")
     def stage(df: DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-kmv-stage").toString
+      val tmp = tempDir("graft-kmv-stage").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath
@@ -704,10 +700,10 @@ class StreamingSpec extends SparkSpec {
   test("freshness stream: MAX-fold marks equal the batch high-water marks; replay leaves marks AND counts unchanged") {
     import scala.collection.concurrent.TrieMap
     val ev = Tables.events(spark, sfDir)
-    val stateDir = Files.createTempDirectory("graft-fresh-state").resolve("m").toString
-    val srcDir = Files.createTempDirectory("graft-fresh-src")
+    val stateDir = tempDir("graft-fresh-state").resolve("m").toString
+    val srcDir = tempDir("graft-fresh-src")
     def stage(df: DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-fresh-stage").toString
+      val tmp = tempDir("graft-fresh-stage").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath
@@ -743,10 +739,10 @@ class StreamingSpec extends SparkSpec {
   test("top-k stream: merged MG summaries obey the sketch guarantee; replay leaves the board unchanged") {
     import scala.collection.concurrent.TrieMap
     val docs = Tables.documents(spark, sfDir)
-    val stateDir = Files.createTempDirectory("graft-topk-state").resolve("m").toString
-    val srcDir = Files.createTempDirectory("graft-topk-src")
+    val stateDir = tempDir("graft-topk-state").resolve("m").toString
+    val srcDir = tempDir("graft-topk-src")
     def stage(df: DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-topk-stage").toString
+      val tmp = tempDir("graft-topk-stage").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath
@@ -787,12 +783,12 @@ class StreamingSpec extends SparkSpec {
     // the round-6 state schema gained a fname column; an old snapshot's
     // counts are un-attributed to files and CANNOT be migrated exactly —
     // the stream must refuse the restart with the remedy in the message
-    val stateDir = Files.createTempDirectory("graft-fresh-v1state").resolve("m").toString
+    val stateDir = tempDir("graft-fresh-v1state").resolve("m").toString
     // hand-write a v_0 snapshot in the PREVIOUS schema (no fname)
     spark.sql("SELECT 'click' AS event_type, 100L AS last_us, 5L AS n_events")
       .write.parquet(s"$stateDir/v_0")
-    val srcDir = Files.createTempDirectory("graft-fresh-v1src")
-    val tmp = Files.createTempDirectory("graft-fresh-v1stage").toString
+    val srcDir = tempDir("graft-fresh-v1src")
+    val tmp = tempDir("graft-fresh-v1stage").toString
     Tables.events(spark, sfDir).limit(10).coalesce(1)
       .write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
@@ -816,9 +812,9 @@ class StreamingSpec extends SparkSpec {
     val base = Similarity.quantizeVectors(emb.filter(col("vec_id") % 10 =!= 9))
     val cents = Similarity.kmeansCentroids(base, k = 8, iters = 2)
     // arrivals staged as three micro-batch files
-    val srcDir = Files.createTempDirectory("graft-drift-src")
+    val srcDir = tempDir("graft-drift-src")
     def stage(k: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-drift-stage").toString
+      val tmp = tempDir("graft-drift-stage").toString
       emb.filter(col("vec_id") % 10 === 9 && col("vec_id") % 3 === k)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -827,7 +823,7 @@ class StreamingSpec extends SparkSpec {
       stampStaged(srcDir.resolve(name))
     }
     stage(0, "a.parquet"); stage(1, "b.parquet"); stage(2, "c.parquet")
-    val stateDir = Files.createTempDirectory("graft-drift-state").toString + "/log"
+    val stateDir = tempDir("graft-drift-state").toString + "/log"
     val rec = TrieMap.empty[Long, Seq[(Long, Long)]]
     val q = StreamingOps.driftStream(spark, srcDir.toString, stateDir, cents) {
       (id, counts) => rec(id) = counts
@@ -864,9 +860,9 @@ class StreamingSpec extends SparkSpec {
     val init = emb.filter(col("vec_id") < 8).orderBy(col("vec_id")).collect()
       .map(r => r.getLong(0) -> quant(r.getSeq[Float](1))).toSeq
     // remaining vectors arrive as three micro-batch files
-    val srcDir = Files.createTempDirectory("graft-km-src")
+    val srcDir = tempDir("graft-km-src")
     def stage(k: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-km-stage").toString
+      val tmp = tempDir("graft-km-stage").toString
       emb.filter(col("vec_id") >= 8 && col("vec_id") % 3 === k)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -916,11 +912,7 @@ class StreamingSpec extends SparkSpec {
 
   test("transformWithState running stats converge to batch counts (RocksDB)") {
     // transformWithState requires the RocksDB state store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbProvider) {
       val got = runToMemory(
         StreamingOps.runningUserStatsTws(spark, StreamingOps.eventsStream(spark, stageEvents())),
         "t_tws", "update")
@@ -929,9 +921,6 @@ class StreamingSpec extends SparkSpec {
       val want = Tables.events(spark, sfDir).groupBy(col("user_id")).count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(finalCounts == want)
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -950,13 +939,13 @@ class StreamingSpec extends SparkSpec {
   test("streaming interval union: closed islands equal batch islands minus each user's open one") {
     // stage the fixture events as TWO time-halves so island state must
     // survive a trigger boundary (stamped mtimes pin the replay order)
-    val dir = Files.createTempDirectory("graft-iu").toString
+    val dir = tempDir("graft-iu").toString
     val ev = Tables.events(spark, sfDir).orderBy(col("ts"), col("event_id"))
       .localCheckpoint(true)
     val mid = ev.selectExpr("percentile_approx(unix_micros(ts), 0.5)").head().getLong(0)
     Seq(("a", s"unix_micros(ts) <= ${mid}L"), ("b", s"unix_micros(ts) > ${mid}L"))
       .foreach { case (half, pred) =>
-        val p = Files.createTempDirectory("graft-iu-w")
+        val p = tempDir("graft-iu-w")
         ev.filter(expr(pred)).coalesce(1).write.mode("overwrite").parquet(p.toString)
         val one = Option(p.toFile.listFiles()).get
           .filter(_.getName.endsWith(".parquet")).head.toPath
@@ -985,9 +974,9 @@ class StreamingSpec extends SparkSpec {
   test("streaming admission cap consumes quota in arrival order, across a restart") {
     import scala.collection.concurrent.TrieMap
     val docs = Tables.documents(spark, sfDir)
-    val srcDir = Files.createTempDirectory("graft-adm-src")
+    val srcDir = tempDir("graft-adm-src")
     def stage(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-adm-stage").toString
+      val tmp = tempDir("graft-adm-stage").toString
       docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -996,7 +985,7 @@ class StreamingSpec extends SparkSpec {
       stampStaged(srcDir.resolve(name))
     }
     stage(0, 150, "a.parquet"); stage(150, 300, "b.parquet")
-    val stateDir = Files.createTempDirectory("graft-adm-state")
+    val stateDir = tempDir("graft-adm-state")
       .resolve("log").toString
     val cap = 10
     val perBatch = TrieMap.empty[Long, Array[(String, Long)]]
@@ -1046,9 +1035,9 @@ class StreamingSpec extends SparkSpec {
     val log = TextOps.commitLog(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // stage one file per log version, in version order
-    val srcDir = Files.createTempDirectory("graft-logtail-src")
+    val srcDir = tempDir("graft-logtail-src")
     (0L to 5L).foreach { v =>
-      val tmp = Files.createTempDirectory("graft-logtail-stage").toString
+      val tmp = tempDir("graft-logtail-stage").toString
       log.filter(col("version") === v).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -1056,7 +1045,7 @@ class StreamingSpec extends SparkSpec {
       Files.copy(part, srcDir.resolve(s"v$v.parquet"), StandardCopyOption.REPLACE_EXISTING)
       stampStaged(srcDir.resolve(s"v$v.parquet"))
     }
-    val stateDir = Files.createTempDirectory("graft-logtail-state").toString + "/snap"
+    val stateDir = tempDir("graft-logtail-state").toString + "/snap"
     val rec = TrieMap.empty[Long, Seq[(Long, Long)]]
     val q = StreamingOps.logTailStream(spark, srcDir.toString, stateDir) {
       (id, live) => rec(id) = live
@@ -1085,9 +1074,9 @@ class StreamingSpec extends SparkSpec {
   test("postings stream: the streamed index equals one batch build, and a restart replay changes nothing") {
     import scala.collection.concurrent.TrieMap
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val srcDir = Files.createTempDirectory("graft-postings-src")
+    val srcDir = tempDir("graft-postings-src")
     (0 until 3).foreach { k =>
-      val tmp = Files.createTempDirectory("graft-postings-stage").toString
+      val tmp = tempDir("graft-postings-stage").toString
       docs.filter(col("doc_id") % 3 === k).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -1095,7 +1084,7 @@ class StreamingSpec extends SparkSpec {
       Files.copy(part, srcDir.resolve(s"b$k.parquet"), StandardCopyOption.REPLACE_EXISTING)
       stampStaged(srcDir.resolve(s"b$k.parquet"))
     }
-    val stateDir = Files.createTempDirectory("graft-postings-state").toString + "/idx"
+    val stateDir = tempDir("graft-postings-state").toString + "/idx"
     val rec = TrieMap.empty[Long, (Long, Long)]
     val q = StreamingOps.postingsStream(spark, srcDir.toString, stateDir) {
       (id, n, v) => rec(id) = (n, v)
@@ -1131,10 +1120,10 @@ class StreamingSpec extends SparkSpec {
   test("republished stream state keeps at most 2 versions after every trigger") {
     import scala.collection.concurrent.TrieMap
     val orders = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_custkey"))
-    val stateDir = Files.createTempDirectory("graft-evict-state").resolve("s")
-    val srcDir = Files.createTempDirectory("graft-evict-src")
+    val stateDir = tempDir("graft-evict-state").resolve("s")
+    val srcDir = tempDir("graft-evict-src")
     (0 until 4).foreach { k =>
-      val tmp = Files.createTempDirectory("graft-evict-stage").toString
+      val tmp = tempDir("graft-evict-stage").toString
       orders.filter(col("o_orderkey") % 4 === k).coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.Tables
 
 /** The one parquet read path: its schema memo saves the inference job on
@@ -10,7 +8,7 @@ import graft.sources.Tables
 class TablesSpec extends SparkSpec {
 
   private def freshPath(): String =
-    Files.createTempDirectory("graft-tables-spec").resolve("t.parquet").toString
+    tempDir("graft-tables-spec").resolve("t.parquet").toString
 
   test("the second read of an unchanged path resolves its schema without a job") {
     val path = freshPath()
@@ -38,28 +36,23 @@ class TablesSpec extends SparkSpec {
     val path = freshPath()
     spark.range(4).selectExpr("id").write.parquet(path)
     Tables.parquet(spark, path)
-    val key = "spark.sql.parquet.binaryAsString"
-    val old = setting(key)
-    spark.conf.set(key, "true")
-    try {
+    withConf("spark.sql.parquet.binaryAsString" -> "true") {
       val (_, jobs) = countJobs(Tables.parquet(spark, path))
       assert(jobs >= 1, "a conf change must invalidate the memo")
-    } finally restore(key, old)
+    }
   }
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
   /** A conf's session setting: None when it is not set on the session. */
   private def setting(key: String): Option[String] = spark.conf.getAll.get(key)
-  private def restore(key: String, v: Option[String]): Unit =
-    v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
 
   test("loading events leaves the session's nanosAsLong setting as it was") {
-    val saved = setting(NanosAsLong)
-    try for (before <- Seq(None, Some("false"))) {
-      restore(NanosAsLong, before)
+    def check(before: Option[String]): Unit = {
       assert(Tables.events(spark, sfDir).count() > 0)
       assert(setting(NanosAsLong) == before, s"events changed $NanosAsLong from $before")
-    } finally restore(NanosAsLong, saved)
+    }
+    withoutConf(NanosAsLong)(check(None))
+    withConf(NanosAsLong -> "false")(check(Some("false")))
   }
 
   test("a TIMESTAMP(NANOS) events file loads with ts as a timestamp") {
@@ -70,13 +63,11 @@ class TablesSpec extends SparkSpec {
     //     'events.parquet')"
     val dir = new java.io.File(getClass.getResource("/nanos/events.parquet").toURI).getParent
     val vectorized = "spark.sql.parquet.enableVectorizedReader"
-    val saved = setting(vectorized)
-    try for (reader <- Seq("true", "false")) {
-      spark.conf.set(vectorized, reader)
+    for (reader <- Seq("true", "false")) withConf(vectorized -> reader) {
       val df = Tables.events(spark, dir)
       assert(df.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
       val micros = df.orderBy("event_id").selectExpr("unix_micros(ts)").collect().map(_.getLong(0))
       assert(micros.toSeq == Seq(1704067200123456L, 1704153600000001L), s"vectorized=$reader")
-    } finally restore(vectorized, saved)
+    }
   }
 }

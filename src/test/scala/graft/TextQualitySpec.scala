@@ -343,7 +343,7 @@ class TextQualitySpec extends SparkSpec {
     val filler = (0 until 40).map(i =>
       (i.toLong, Seq.fill(60)(vocab(rnd.nextInt(vocab.length))).mkString(" ")))
     val planted = (100 until 108).map(i => (i.toLong, "zeta omega"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-colloc").toString
+    val dir = tempDir("graft-colloc").toString
     (filler ++ planted).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("gen"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -526,7 +526,7 @@ class TextQualitySpec extends SparkSpec {
   private def writeDocs(rows: Seq[(Long, String, String)], prefix: String): String = {
     import org.apache.spark.sql.functions.{col, length, lit}
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val dir = tempDir(prefix).toString
     rows.toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length(col("text")).cast("long"))
