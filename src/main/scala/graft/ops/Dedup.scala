@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{StateStore, Tables}
@@ -840,16 +840,16 @@ object Dedup {
     * `cluster_id` plus the component `cluster_size`. Exposed for property
     * testing (q85 wires in the verified near-dup pairs).
     *
-    * Strategy, sized to the EDGE COUNT (measured at sf0.1: the
-    * distributed loop's ~0.4 s/round fixed cost dominated q85 while the
-    * label frame held a few hundred rows):
-    *   1. Edge sets within broadcast budget (≤ [[localEdgeThreshold]],
-    *      ~16 MB of longs — the same size class Spark collects for a
-    *      broadcast join build) are solved by one driver-side union-find
-    *      pass: exact, O(E α(E)), no per-round job overhead. Near-dup
-    *      pair graphs of a DEDUPLICATED corpus are tiny relative to the
-    *      corpus, so production mostly lands here too.
-    *   2. Above the threshold: semi-naive min-label propagation — rounds
+    * Strategy, sized to the EDGE COUNT observed at the pairs' boundary
+    * (measured at sf0.1: the distributed loop's ~0.4 s/round fixed cost
+    * dominated q85 while the label frame held a few hundred rows):
+    *   1. Edge sets within the broadcast budget (the k-core's driver
+    *      finish, [[Graph.driverRows]]: the size class Spark collects for
+    *      a broadcast join build) are solved by one driver-side
+    *      union-find pass: exact, O(E α(E)), no per-round job overhead.
+    *      Near-dup pair graphs of a DEDUPLICATED corpus are tiny
+    *      relative to the corpus, so production mostly lands here too.
+    *   2. Above the budget: semi-naive min-label propagation — rounds
     *      bounded by the largest component's DIAMETER (shallow for
     *      near-dup graphs), one join + one agg per round over the labels
     *      that dropped the round before.
@@ -860,11 +860,18 @@ object Dedup {
     *      round count is logarithmic in component SIZE regardless of
     *      diameter. */
   def connectedComponents(nodes: DataFrame, pairs0: DataFrame,
-                          propagationRounds: Int = 20,
-                          localEdgeThreshold: Long = 1L << 20): DataFrame = {
-    val pairs = pairs0.cachedStageBoundary
-    if (pairs.count() <= localEdgeThreshold)
-      return finishLabels(nodes, unionFindLabels(pairs))
+                          propagationRounds: Int = 20): DataFrame = {
+    val pairs = Graph.counted(pairs0)
+    val ids = pairs.df.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+    finishLabels(nodes, Graph.driverRows(pairs.copy(df = ids)) match {
+      case Some(rows) => unionFindLabels(pairs.df.sparkSession, rows)
+      case None => propagatedLabels(pairs.df, propagationRounds)
+    })
+  }
+
+  /** The distributed labels: semi-naive min-label propagation, with the
+    * large-star/small-star fallback when the round cap cuts it off. */
+  private def propagatedLabels(pairs: DataFrame, propagationRounds: Int): DataFrame = {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))).cachedStageBoundary
     // semi-naive: only the labels that dropped last round are offered to
@@ -890,13 +897,12 @@ object Dedup {
         Graph.Seen(Graph.Counted(labels, seen.all.rows),
           Graph.Counted(merged.filter(dropped).select(col("doc_id"), col("cluster_id")), nDropped))
     }
-    val labels = if (fp.converged) fp.state.all.df else {
+    if (fp.converged) fp.state.all.df else {
       System.err.println(s"[dedup] min-label propagation NOT converged after " +
         s"$propagationRounds rounds (component diameter exceeds cap) — " +
         "switching to large-star/small-star contraction")
       starLabels(pairs)
     }
-    finishLabels(nodes, labels)
   }
 
   /** Large-star/small-star alternating contraction (Kiveris et al.,
@@ -908,22 +914,20 @@ object Dedup {
                               maxRounds: Int = 60): DataFrame =
     finishLabels(nodes, starLabels(pairs0, maxRounds))
 
-  /** Broadcast-budget path: collect the (bounded) edge list and label
+  /** Broadcast-budget path: label the collected (bounded) edge list's
     * components with one union-find pass on the driver — the same
     * size-gated collect a broadcast join build performs, exchanged for
     * zero per-round distributed jobs. */
-  private def unionFindLabels(pairs: DataFrame): DataFrame = {
-    val s = pairs.sparkSession
+  private def unionFindLabels(s: SparkSession, rows: Array[Row]): DataFrame = {
     import s.implicits._
-    val edges = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .collect().map { r =>
-        // getLong on a null reads 0 — a null/non-castable id would silently
-        // merge unrelated nodes into doc 0's component; fail loudly instead
-        // (the distributed paths handle such ids via plain join semantics)
-        require(!r.isNullAt(0) && !r.isNullAt(1),
-          "connectedComponents: edge with null or non-numeric doc id")
-        (r.getLong(0), r.getLong(1))
-      }
+    val edges = rows.map { r =>
+      // getLong on a null reads 0 — a null/non-castable id would silently
+      // merge unrelated nodes into doc 0's component; fail loudly instead
+      // (the distributed paths handle such ids via plain join semantics)
+      require(!r.isNullAt(0) && !r.isNullAt(1),
+        "connectedComponents: edge with null or non-numeric doc id")
+      (r.getLong(0), r.getLong(1))
+    }
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       parent.getOrElseUpdate(x, x)

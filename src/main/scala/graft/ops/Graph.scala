@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 import graft.sources.{StateStore, Tables}
 
@@ -133,6 +136,16 @@ object Graph {
     val (out, rows) = df.stageBoundaryRows
     Counted(out, rows)
   }
+
+  /** THE driver finish: the rows of a boundary whose observed count fits
+    * [[broadcastNodeBudget]] — the size class a broadcast join build
+    * already collects to the driver — so the caller finishes there with
+    * no per-round job; `None` above the budget, where the caller runs its
+    * distributed plan on the same boundary. Per-job scheduling cost, not
+    * data, dominates a round loop over a few thousand rows (McSherry et
+    * al., "Scalability! But at what COST?", HotOS 2015). */
+  private[graft] def driverRows(c: Counted): Option[Array[Row]] =
+    if (c.rows <= broadcastNodeBudget(c.df.sparkSession)) Some(c.df.collect()) else None
 
   /** Where a capped loop stopped: its last state, and whether its exit
     * test held there (false: the cap cut it off). */
@@ -1094,16 +1107,72 @@ object Graph {
     * the fixed-budget peel's, which RobustStatsSpec pins. The counts come
     * from the boundaries themselves ([[converge]]), so the exit test
     * adds no job. Per round: one degree aggregate + two semi-joins,
-    * only the shrinking edge relation moves. */
+    * only the shrinking edge relation moves. This is the distributed
+    * loop at any size; [[kcore]] is the size-gated entry point. */
   def kcoreEdges(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    converge(counted(edges.select(col("a"), col("b"))), rounds) { (e, _) =>
-      val keep = e.df.select(col("a").as("v")).unionAll(e.df.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("v"))
+    peel(counted(edges.select(col("a"), col("b"))), k, rounds)
+
+  private def peel(e0: Counted, k: Int, rounds: Int): DataFrame =
+    converge(e0, rounds) { (e, _) =>
+      val keep = endpointDegrees(e.df).filter(col("d") >= k).select(col("v"))
       e.df.join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
     }.state.df
+
+  /** (v, d): each endpoint of `e(a, b)` with its multiset degree. */
+  private def endpointDegrees(e: DataFrame): DataFrame =
+    e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
+      .groupBy(col("v")).agg(count(lit(1)).as("d"))
+
+  /** The k-core's members, each with its within-core degree: `(v,
+    * core_degree)` ordered by `v`, after the [[kcoreEdges]] peel. The
+    * edge relation is counted once at its boundary; when it fits the
+    * broadcast budget ([[driverRows]]) the peel and the degree tally run
+    * on the driver — the same rounds, fixpoint exit and round cap — and
+    * return a local frame already in order (a Spark sort over a local
+    * relation would cost 3 jobs). Above the budget, [[kcoreEdges]]'
+    * distributed loop runs on that same boundary. Both paths keep the
+    * relational semantics and the same schema: an edge's null endpoint
+    * counts toward nothing and matches no semi-join, so the edge adds to
+    * its other endpoint's degree in the round and then drops; duplicate
+    * edges count in the multiset degree. */
+  def kcore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+    val e0 = counted(edges.select(col("a"), col("b")))
+    def tally(e: DataFrame) = endpointDegrees(e).withColumnRenamed("d", "core_degree")
+    val schema = tally(e0.df).schema
+    val vType = schema("v").dataType
+    driverRows(Counted(e0.df.select(col("a").cast(vType), col("b").cast(vType)), e0.rows)) match {
+      case Some(rows) => e0.df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(peelOnDriver(rows, k, rounds, vType): _*), schema)
+      case None => tally(peel(e0, k, rounds)).orderBy(col("v"))
+    }
+  }
+
+  /** [[peel]] and the degree tally over collected edges, in Spark's
+    * semantics: keys compare as Catalyst values (its grouping equality
+    * and sort order), a null endpoint is a degree group of its own but
+    * survives no round, and the rows come out ordered by `v`, nulls
+    * first. */
+  private def peelOnDriver(rows: Array[Row], k: Int, rounds: Int, vType: DataType): Seq[Row] = {
+    val in = CatalystTypeConverters.createToCatalystConverter(vType)
+    val out = CatalystTypeConverters.createToScalaConverter(vType)
+    def degrees(e: Seq[(Any, Any)]) = e.flatMap { case (a, b) => Seq(a, b) }
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+    var settled = rows.isEmpty
+    val core = iterate(rows.toSeq.map(r => (in(r.get(0)), in(r.get(1)))), rounds)(_ => settled) {
+      (e, _) =>
+        val d = degrees(e)
+        def live(v: Any) = v != null && d(v) >= k
+        val next = e.filter { case (a, b) => live(a) && live(b) }
+        settled = next.isEmpty || next.size == e.size
+        next
+    }.state
+    val byV = PhysicalDataType.ordering(vType)
+    degrees(core).toSeq
+      .sortWith { case ((x, _), (y, _)) => if (x == null) y != null else y != null && byV.lt(x, y) }
+      .map { case (v, d) => Row(out(v), d) }
+  }
 
   /** One unrolled oracle peel round r over CTEs e{r-1} at threshold k. */
   private def kcoreRoundSql(r: Int, k: Int): String = {
@@ -1119,7 +1188,7 @@ object Graph {
        |        JOIN k$r x ON x.v = e.a JOIN k$r y ON y.v = e.b)""".stripMargin
   }
 
-  /** Contract face of [[kcoreEdges]]: the 3-core of the frequent
+  /** Contract face of [[kcore]]: the 3-core of the frequent
     * co-purchase graph after 4 peel rounds — the "stable bundle nucleus"
     * (every surviving part co-sells with ≥ 3 other survivors; the
     * clustering-coefficient view is q243, the cohesion view is this).
@@ -1142,11 +1211,7 @@ object Graph {
       .select(col("part_a").as("a"), col("part_b").as("b"))
     val e0 = pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select(col("a"), col("b"))
-    val core = kcoreEdges(e0, k = 3, rounds = 4)
-    core.select(col("a").as("v")).unionAll(core.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).cast("long").as("core_degree"))
-      .select(col("v").as("part"), col("core_degree"))
-      .orderBy(col("part"))
+    kcore(e0, k = 3, rounds = 4).select(col("v").as("part"), col("core_degree"))
   }
 
   /** Walker convergence audit: the L1 and max rank movement of each
@@ -1834,8 +1899,8 @@ object Graph {
     * degree. */
   def hits(edges: DataFrame, rounds: Int): DataFrame = {
     val raw = edges.cachedStageBoundary
-    val (nodes, nV) = raw.select(col("src").as("part"))
-      .unionAll(raw.select(col("dst").as("part")))
+    // one read of the cached edges, not one per union leg
+    val (nodes, nV) = raw.select(explode(array(col("src"), col("dst"))).as("part"))
       .distinct()
       .stageBoundaryRows // node-sized; seeds both score vectors
     val pin = new EdgePin(raw, "src", "dst")

@@ -13,6 +13,8 @@ import graft.ops.Dedup
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
 
+  private val BudgetKey = "spark.graft.graph.broadcastNodeBudget"
+
   private def nodesDf(ids: Seq[Long]): DataFrame = ids.toDF("doc_id")
   private def pairsDf(ps: Seq[(Long, Long)]): DataFrame =
     ps.toDF("doc_a", "doc_b")
@@ -52,9 +54,9 @@ class ConnectedComponentsSpec extends SparkSpec {
       // default: edge count under the broadcast budget → driver union-find
       val local = labelsOf(Dedup.connectedComponents(nodesDf(nodes), pairsDf(pairs))
         .select("doc_id", "cluster_id"))
-      // threshold 0 forces the distributed propagation path
-      val prop = labelsOf(Dedup.connectedComponents(nodesDf(nodes), pairsDf(pairs),
-        localEdgeThreshold = 0).select("doc_id", "cluster_id"))
+      // budget 0 forces the distributed propagation path
+      val prop = withConf(BudgetKey -> "0")(labelsOf(Dedup.connectedComponents(
+        nodesDf(nodes), pairsDf(pairs)).select("doc_id", "cluster_id")))
       val star = labelsOf(Dedup.connectedComponentsStar(nodesDf(nodes), pairsDf(pairs))
         .select("doc_id", "cluster_id"))
       assert(local == expect, s"driver union-find disagrees with oracle (trial $trial)")
@@ -75,10 +77,10 @@ class ConnectedComponentsSpec extends SparkSpec {
     "unconverged labels when the diameter beats the propagation cap") {
     val nodes = (0L until 120L).toSeq
     val chain = nodes.sliding(2).map(s => (s(0), s(1))).toSeq
-    // threshold 0 forces the distributed path; cap of 3 rounds cannot
+    // budget 0 forces the distributed path; cap of 3 rounds cannot
     // propagate across a 120-node chain
-    val got = labelsOf(Dedup.connectedComponents(nodesDf(nodes), pairsDf(chain),
-      propagationRounds = 3, localEdgeThreshold = 0).select("doc_id", "cluster_id"))
+    val got = withConf(BudgetKey -> "0")(labelsOf(Dedup.connectedComponents(
+      nodesDf(nodes), pairsDf(chain), propagationRounds = 3).select("doc_id", "cluster_id")))
     assert(got.values.toSet == Set(0L), "fallback must deliver the true fixpoint")
   }
 
@@ -91,8 +93,8 @@ class ConnectedComponentsSpec extends SparkSpec {
     val err = new java.io.ByteArrayOutputStream()
     val stderr = System.err
     System.setErr(new java.io.PrintStream(err, true))
-    val prop = try labelsOf(Dedup.connectedComponents(nodesDf(nodes), pairsDf(pairs),
-        propagationRounds = 8, localEdgeThreshold = 0).select("doc_id", "cluster_id"))
+    val prop = try withConf(BudgetKey -> "0")(labelsOf(Dedup.connectedComponents(
+        nodesDf(nodes), pairsDf(pairs), propagationRounds = 8).select("doc_id", "cluster_id")))
       finally System.setErr(stderr)
     assert(!err.toString.contains("NOT converged"), "propagation must converge under its cap")
     val star = labelsOf(Dedup.connectedComponentsStar(nodesDf(nodes), pairsDf(pairs))

@@ -219,6 +219,7 @@ class GraphSpec extends SparkSpec {
       (0L until 6L).map(i => (i, i + 1))).toDF("doc_a", "doc_b")
     val loops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "kcoreEdges" -> (() => Graph.kcoreEdges(core, k = 3, rounds = 5)),
+      "kcore" -> (() => Graph.kcore(core, k = 3, rounds = 5)),
       "bfsDistances capped" -> (() => Graph.bfsDistances(e, seeds, maxHops = 2)),
       "bfsDistances drained" -> (() => Graph.bfsDistances(e, seeds, maxHops = 10)),
       "bfsPerSeed capped" -> (() => Graph.bfsPerSeed(e, seeds, maxHops = 2)),
@@ -232,8 +233,7 @@ class GraphSpec extends SparkSpec {
       "hits" -> (() => Graph.hits(dirE, rounds = 2)),
       "betweennessSampled" -> (() => Graph.betweennessSampled(e, seeds)),
       "wlColors" -> (() => Graph.wlColors(e, rounds = 2)),
-      "connectedComponents propagation" -> (() =>
-        graft.ops.Dedup.connectedComponents(ccNodes, ccPairs, localEdgeThreshold = 0)),
+      "connectedComponents" -> (() => graft.ops.Dedup.connectedComponents(ccNodes, ccPairs)),
       "connectedComponentsStar" -> (() =>
         graft.ops.Dedup.connectedComponentsStar(ccNodes, ccPairs)))
     def measure(): Map[String, Int] = loops.map { case (name, run) =>
@@ -244,6 +244,7 @@ class GraphSpec extends SparkSpec {
     val shuffled = withConf(BudgetKey -> "0")(measure())
     val want = Map(
       "kcoreEdges" -> 11,
+      "kcore" -> 2,
       "bfsDistances capped" -> 13,
       "bfsDistances drained" -> 37,
       "bfsPerSeed capped" -> 13,
@@ -254,14 +255,17 @@ class GraphSpec extends SparkSpec {
       "pagerank" -> 15,
       "labelPropagation" -> 12,
       "pagerankDirected" -> 35,
-      "hits" -> 40,
+      "hits" -> 39,
       "betweennessSampled" -> 25,
       "wlColors" -> 15,
-      "connectedComponents propagation" -> 47,
+      "connectedComponents" -> 8,
       "connectedComponentsStar" -> 50)
-    // over budget the pin adds its co-partition jobs and the gated
-    // joins plan as shuffles
+    // over budget the pin adds its co-partition jobs, the gated joins
+    // plan as shuffles, and k-core and connected components run their
+    // distributed loops instead of the driver finish
     val wantShuffled = want ++ Map(
+      "kcore" -> 14,
+      "connectedComponents" -> 45,
       "bfsDistances capped" -> 17,
       "bfsDistances drained" -> 46,
       "bfsPerSeed capped" -> 17,
@@ -270,7 +274,7 @@ class GraphSpec extends SparkSpec {
       "pagerank" -> 19,
       "labelPropagation" -> 16,
       "pagerankDirected" -> 39,
-      "hits" -> 52,
+      "hits" -> 50,
       "betweennessSampled" -> 29,
       "wlColors" -> 19)
     // hits runs one job fewer in some runs of the same code, on either
@@ -280,6 +284,53 @@ class GraphSpec extends SparkSpec {
         got.get("hits").exists(n => n == want("hits") || n == want("hits") - 1)
     assert(matches(hinted, want) && matches(shuffled, wantShuffled),
       s"broadcast path: $hinted; budget-0 path: $shuffled")
+  }
+
+  test("kcore: the driver finish equals the distributed peel, rows and schema alike") {
+    // the same frame on both paths: the default budget peels these few
+    // edges on the driver; budget 0 runs the distributed loop, except on
+    // an empty edge set, which fits even budget 0 (-1 forces it there)
+    def bothPaths(e: org.apache.spark.sql.DataFrame, k: Int, rounds: Int): Unit = {
+      def isLocal(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      val local = Graph.kcore(e, k, rounds)
+      val (dist, distRows) = withConf(BudgetKey -> (if (e.isEmpty) "-1" else "0")) {
+        val d = Graph.kcore(e, k, rounds)
+        (d, d.collect().toSeq)
+      }
+      assert(isLocal(local) && !isLocal(dist))
+      assert(local.schema == dist.schema, s"k=$k rounds=$rounds")
+      assert(local.collect().toSeq == distRows, s"k=$k rounds=$rounds")
+    }
+    val rnd = new scala.util.Random(11)
+    for (trial <- 1 to 4) {
+      val n = 12 + rnd.nextInt(20)
+      // drawn with replacement: duplicate edges and self-loops occur
+      val es = Seq.fill(3 * n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      bothPaths(es.toDF("a", "b"), k = 2 + trial % 3, rounds = 1 + rnd.nextInt(6))
+    }
+    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
+    bothPaths((k4 ++ k4.take(2) :+ ((4L, 5L)) :+ ((4L, 5L)) :+ ((5L, 6L))).toDF("a", "b"),
+      k = 3, rounds = 4)
+    // an edge with a null endpoint lifts node 5 to degree 3 in round 1,
+    // then drops; a null-null edge counts toward nothing that survives
+    bothPaths((k4.map { case (a, b) => (Option(a), Option(b)) } ++
+        Seq((Some(4L), Some(5L)), (Some(5L), Some(6L)), (Some(5L), None), (None, Some(1L)),
+          (None, None))).toDF("a", "b"), k = 3, rounds = 1)
+    bothPaths(Seq.empty[(Long, Long)].toDF("a", "b"), k = 2, rounds = 4)
+    // the round cap binds: a chain hanging off a triangle peels one node
+    // per round
+    val chain = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L))
+    for (rounds <- Seq(1, 2)) bothPaths(chain.toDF("a", "b"), k = 2, rounds)
+    // the key keeps its type: int vertex ids stay int on both paths
+    bothPaths(Seq((1, 2), (2, 3), (1, 3), (3, 4)).toDF("a", "b"), k = 2, rounds = 3)
+  }
+
+  test("q282 peels on the driver at sf0.001: at most 5 Spark jobs") {
+    graft.ops.releaseStageBoundaries()
+    val (rows, jobs) = countJobs(Graph.q282KCore.run(spark, sfDir).collect())
+    assert(rows.nonEmpty)
+    assert(jobs <= 5, s"q282 ran $jobs jobs")
   }
 
   test("directed PageRank: dangling chain 1->2->3, hand-computed round 1") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Contracts, Graph, Temporal}
@@ -290,6 +291,8 @@ class RobustStatsSpec extends SparkSpec {
     val core = Graph.kcoreEdges(e, k = 2, rounds = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(core == Set((1L, 2L), (2L, 3L), (1L, 3L)))
+    kcoreOnBothPaths(e, k = 2, rounds = 4)
+      .foreach(got => assert(got == degreesOf(fixedRoundPeel(pairsOf(e), 2, 4))))
   }
 
   test("kcore: extra rounds past the fixpoint change nothing (idempotent peel)") {
@@ -299,7 +302,27 @@ class RobustStatsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(edges(6) == edges(8))
     assert(edges(6) == Set((1L, 2L), (2L, 3L), (1L, 3L))) // the 6-chain fully unravels
+    for (rounds <- Seq(6, 8)) kcoreOnBothPaths(e, k = 2, rounds)
+      .foreach(got => assert(got == degreesOf(fixedRoundPeel(pairsOf(e), 2, rounds))))
   }
+
+  private val BudgetKey = "spark.graft.graph.broadcastNodeBudget"
+
+  private def pairsOf(e: DataFrame): Set[(Long, Long)] =
+    e.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** `Graph.kcore`'s (v, core_degree) rows in their order, from the
+    * driver finish (the default budget) and from the distributed peel
+    * (budget 0). */
+  private def kcoreOnBothPaths(e: DataFrame, k: Int, rounds: Int): Seq[Seq[(Long, Long)]] = {
+    def run() = Graph.kcore(e, k, rounds).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    Seq(run(), withConf(BudgetKey -> "0")(run()))
+  }
+
+  /** Each endpoint of `e` with its degree, ordered by node. */
+  private def degreesOf(e: Set[(Long, Long)]): Seq[(Long, Long)] =
+    e.toSeq.flatMap { case (a, b) => Seq(a, b) }.groupBy(identity)
+      .map { case (v, vs) => v -> vs.size.toLong }.toSeq.sorted
 
   /** The pre-fixpoint-exit peel: exactly `rounds` rounds, always. */
   private def fixedRoundPeel(e: Set[(Long, Long)], k: Int, rounds: Int): Set[(Long, Long)] =
@@ -321,6 +344,8 @@ class RobustStatsSpec extends SparkSpec {
     // past the fixpoint the budget costs no further rounds
     val (_, jobsAt4) = peel(4)
     assert(jobsAt10 == jobsAt4, s"budget 10 ran $jobsAt10 jobs, budget 4 ran $jobsAt4")
+    for (rounds <- Seq(4, 10)) kcoreOnBothPaths(e, k = 2, rounds)
+      .foreach(got => assert(got == degreesOf(fixedRoundPeel(pairs.toSet, 2, rounds))))
   }
 
   test("kcore: when the round budget binds, the result equals the fixed-round peel") {
@@ -332,6 +357,8 @@ class RobustStatsSpec extends SparkSpec {
     val want = fixedRoundPeel(pairs.toSet, 2, 2)
     assert(got == want)
     assert(want != fixedRoundPeel(pairs.toSet, 2, 10), "the budget must bind on this graph")
+    kcoreOnBothPaths(pairs.toDF("a", "b"), k = 2, rounds = 2)
+      .foreach(got => assert(got == degreesOf(want)))
   }
 
   test("q284 face: stationary mass stays within the flooring leak, alphabet complete") {
