@@ -4,17 +4,19 @@
 Run from the repository root, with the parent commit in its own directory
 (`git clone` or `git archive`, not `git worktree`):
 
-    python3 dev/ab.py <parent-dir> <workload> <seed>... [--claim pass_s] [--seconds 8]
+    python3 dev/ab.py <parent-dir> <workload> <seed>... [--claim pass_s]
 
-Each seed is one pair of `perfbench/run.py --trace 0` runs with the same
-`--seconds`: pair i runs the parent first when i is even and this
-checkout first when i is odd, so drift on the box falls on both sides.
+Each seed is one pair of `perfbench/run.py --trace 0` runs, both at the
+`run_seconds` that `BENCHMARK.json` sets: pair i runs the parent first
+when i is even and this checkout first when i is odd, so drift on the
+box falls on both sides.
 For every end-to-end metric in `BENCHMARK.json` it prints each side's
 median and quartiles, the pairs this checkout won, and the gate verdict:
 
-- a claimed metric (`--claim`, repeatable) must win at least 9 of 10
-  pairs, and its median must beat the parent's by more than the parent's
-  interquartile range;
+- a claimed metric (`--claim`, repeatable) needs at least 10 seeds, must
+  win at least 9 in 10 of the pairs run (a pair missing the metric counts
+  as lost), and its median must beat the parent's by more than the
+  parent's interquartile range;
 - every other metric's median must stay within the metric's `bound`
   (relative) of the parent's median.
 
@@ -76,7 +78,6 @@ def main():
     ap.add_argument("seeds", nargs="+", type=int)
     ap.add_argument("--claim", action="append", default=[],
                     help="an end-to-end metric this checkout claims to improve")
-    ap.add_argument("--seconds", type=float)
     a = ap.parse_args()
     parent = os.path.abspath(a.parent)
     with open(os.path.join(HERE, "BENCHMARK.json")) as f:
@@ -85,7 +86,7 @@ def main():
     unknown = set(a.claim) - {m["name"] for m in metrics}
     if unknown:
         sys.exit(f"unknown claimed metric(s): {', '.join(sorted(unknown))}")
-    seconds = a.seconds if a.seconds is not None else bench.get("run_seconds", 8)
+    seconds = bench["run_seconds"]
     share_fixtures(parent, HERE)
 
     sides = {"parent": parent, "change": HERE}
@@ -106,7 +107,7 @@ def main():
 
     n = len(a.seeds)
     gate_ok = True
-    print(f"{a.workload}: {n} pairs, seeds {a.seeds[0]}..{a.seeds[-1]}, --seconds {seconds}")
+    print(f"{a.workload}: {n} pairs, seeds {a.seeds[0]}..{a.seeds[-1]}, run_seconds {seconds}")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         pairs = [(p.get(name), c.get(name)) for p, c in zip(results["parent"], results["change"])]
@@ -121,8 +122,9 @@ def main():
         iqr = quantile(ps, .75) - quantile(ps, .25)
         gain = (pm - cm) if lower else (cm - pm)
         if name in a.claim:
-            ok = won >= 0.9 * len(pairs) and gain > iqr
-            rule = f"claim: won {won}/{len(pairs)} (need 90%), margin {gain:+.3f} vs parent IQR {iqr:.3f}"
+            ok = n >= 10 and won >= 0.9 * n and gain > iqr
+            rule = (f"claim: won {won}/{n} (need 10+ pairs, 90% won), "
+                    f"margin {gain:+.3f} vs parent IQR {iqr:.3f}")
         else:
             limit = pm * (1 + m["bound"]) if lower else pm * (1 - m["bound"])
             ok = cm <= limit if lower else cm >= limit
@@ -130,7 +132,7 @@ def main():
         gate_ok &= ok
         print(f"  {name} [{m['unit']}]: parent {pm:.3f} (q1 {quantile(ps, .25):.3f}, "
               f"q3 {quantile(ps, .75):.3f}) | change {cm:.3f} (q1 {quantile(cs, .25):.3f}, "
-              f"q3 {quantile(cs, .75):.3f}) | {(cm - pm) / pm:+.1%} | won {won}/{len(pairs)} "
+              f"q3 {quantile(cs, .75):.3f}) | {(cm - pm) / pm:+.1%} | won {won}/{n} "
               f"| {'PASS' if ok else 'FAIL'} ({rule})")
     if bad:
         print("FAILED RUNS (correct false, failed > 0, or no result): "

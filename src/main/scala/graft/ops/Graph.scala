@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types._
 
 import graft.sources.{StateStore, Tables}
 
@@ -139,13 +139,24 @@ object Graph {
 
   /** THE driver finish: the rows of a boundary whose observed count fits
     * [[broadcastNodeBudget]] — the size class a broadcast join build
-    * already collects to the driver — so the caller finishes there with
-    * no per-round job; `None` above the budget, where the caller runs its
-    * distributed plan on the same boundary. Per-job scheduling cost, not
-    * data, dominates a round loop over a few thousand rows (McSherry et
-    * al., "Scalability! But at what COST?", HotOS 2015). */
+    * already collects to the driver — and [[DriverFinishRows]], so the
+    * caller finishes there with no per-round job; `None` above either,
+    * where the caller runs its distributed plan on the same boundary.
+    * Per-job scheduling cost, not data, dominates a round loop over a few
+    * thousand rows (McSherry et al., "Scalability! But at what COST?",
+    * HotOS 2015). */
   private[graft] def driverRows(c: Counted): Option[Array[Row]] =
-    if (c.rows <= broadcastNodeBudget(c.df.sparkSession)) Some(c.df.collect()) else None
+    if (c.rows <= math.min(broadcastNodeBudget(c.df.sparkSession), DriverFinishRows))
+      Some(c.df.collect())
+    else None
+
+  /** The driver finish's row ceiling, whatever the broadcast budget: the
+    * finishers expand each collected row into boxed values, tuples and a
+    * per-round hash map, far more than a broadcast relation's 48 B a row,
+    * so `autoBroadcastJoinThreshold=-1` (budget 4M rows) must not raise
+    * what the driver holds. 2^20 edges is the edge count the driver
+    * union-find was sized and measured at (SCALE.md). */
+  private[graft] val DriverFinishRows = 1L << 20
 
   /** Where a capped loop stopped: its last state, and whether its exit
     * test held there (false: the cap cut it off). */
@@ -1128,10 +1139,11 @@ object Graph {
   /** The k-core's members, each with its within-core degree: `(v,
     * core_degree)` ordered by `v`, after the [[kcoreEdges]] peel. The
     * edge relation is counted once at its boundary; when it fits the
-    * broadcast budget ([[driverRows]]) the peel and the degree tally run
+    * driver finish ([[driverRows]]) and its key type
+    * [[groupsByValue]], the peel and the degree tally run
     * on the driver — the same rounds, fixpoint exit and round cap — and
     * return a local frame already in order (a Spark sort over a local
-    * relation would cost 3 jobs). Above the budget, [[kcoreEdges]]'
+    * relation would cost 3 jobs). Otherwise [[kcoreEdges]]'
     * distributed loop runs on that same boundary. Both paths keep the
     * relational semantics and the same schema: an edge's null endpoint
     * counts toward nothing and matches no semi-join, so the edge adds to
@@ -1142,18 +1154,30 @@ object Graph {
     def tally(e: DataFrame) = endpointDegrees(e).withColumnRenamed("d", "core_degree")
     val schema = tally(e0.df).schema
     val vType = schema("v").dataType
-    driverRows(Counted(e0.df.select(col("a").cast(vType), col("b").cast(vType)), e0.rows)) match {
+    val onDriver = if (!groupsByValue(vType)) None
+      else driverRows(Counted(e0.df.select(col("a").cast(vType), col("b").cast(vType)), e0.rows))
+    onDriver match {
       case Some(rows) => e0.df.sparkSession.createDataFrame(
         java.util.Arrays.asList(peelOnDriver(rows, k, rounds, vType): _*), schema)
       case None => tally(peel(e0, k, rounds)).orderBy(col("v"))
     }
   }
 
+  /** Whether Catalyst values of `t` group by their JVM equality exactly
+    * as Spark groups and joins them. Not so for binary (arrays compare by
+    * reference), float and double (Spark folds -0.0 into 0.0), collated
+    * strings or complex types; those keys take the distributed path. */
+  private def groupsByValue(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType | DateType |
+         TimestampType | TimestampNTZType | StringType | _: DecimalType => true
+    case _ => false
+  }
+
   /** [[peel]] and the degree tally over collected edges, in Spark's
-    * semantics: keys compare as Catalyst values (its grouping equality
-    * and sort order), a null endpoint is a degree group of its own but
-    * survives no round, and the rows come out ordered by `v`, nulls
-    * first. */
+    * semantics for a key type that [[groupsByValue]]: keys compare as
+    * Catalyst values (Spark's grouping equality and sort order), a null
+    * endpoint is a degree group of its own but survives no round, and
+    * the rows come out ordered by `v`, nulls first. */
   private def peelOnDriver(rows: Array[Row], k: Int, rounds: Int, vType: DataType): Seq[Row] = {
     val in = CatalystTypeConverters.createToCatalystConverter(vType)
     val out = CatalystTypeConverters.createToScalaConverter(vType)

@@ -290,7 +290,10 @@ class GraphSpec extends SparkSpec {
     // the same frame on both paths: the default budget peels these few
     // edges on the driver; budget 0 runs the distributed loop, except on
     // an empty edge set, which fits even budget 0 (-1 forces it there)
-    def bothPaths(e: org.apache.spark.sql.DataFrame, k: Int, rounds: Int): Unit = {
+    // (`driver = false`: a key type the driver cannot group as Spark
+    // does, which the default budget must also send to the loop)
+    def bothPaths(e: org.apache.spark.sql.DataFrame, k: Int, rounds: Int,
+                  driver: Boolean = true): Unit = {
       def isLocal(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
       val local = Graph.kcore(e, k, rounds)
@@ -298,7 +301,7 @@ class GraphSpec extends SparkSpec {
         val d = Graph.kcore(e, k, rounds)
         (d, d.collect().toSeq)
       }
-      assert(isLocal(local) && !isLocal(dist))
+      assert(isLocal(local) == driver && !isLocal(dist))
       assert(local.schema == dist.schema, s"k=$k rounds=$rounds")
       assert(local.collect().toSeq == distRows, s"k=$k rounds=$rounds")
     }
@@ -324,6 +327,30 @@ class GraphSpec extends SparkSpec {
     for (rounds <- Seq(1, 2)) bothPaths(chain.toDF("a", "b"), k = 2, rounds)
     // the key keeps its type: int vertex ids stay int on both paths
     bothPaths(Seq((1, 2), (2, 3), (1, 3), (3, 4)).toDF("a", "b"), k = 2, rounds = 3)
+    // keys whose JVM equality is not Spark's: binary ids (arrays compare
+    // by reference) and a double id written both 0.0 and -0.0 (Spark
+    // groups them as one node, so the triangle is a 2-core)
+    val bytes = Seq((Array[Byte](1), Array[Byte](2)), (Array[Byte](2), Array[Byte](3)),
+      (Array[Byte](1), Array[Byte](3)), (Array[Byte](3), Array[Byte](4)))
+    bothPaths(bytes.toDF("a", "b"), k = 2, rounds = 3, driver = false)
+    val signedZero = Seq((0.0, 1.0), (1.0, 2.0), (2.0, -0.0))
+    bothPaths(signedZero.toDF("a", "b"), k = 2, rounds = 3, driver = false)
+    assert(Graph.kcore(signedZero.toDF("a", "b"), k = 2, rounds = 3).count() == 3)
+  }
+
+  test("the driver finish's row ceiling holds when the broadcast threshold is off") {
+    // threshold -1 lifts the broadcast budget to 4M rows; the driver
+    // finish still stops at its own ceiling (a white-box count: no
+    // million-row input is built)
+    val e = Seq((1L, 2L)).toDF("a", "b")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(Graph.broadcastNodeBudget(spark) > Graph.DriverFinishRows)
+      assert(Graph.driverRows(Graph.Counted(e, Graph.DriverFinishRows)).isDefined)
+      assert(Graph.driverRows(Graph.Counted(e, Graph.DriverFinishRows + 1)).isEmpty)
+    }
+    withConf(BudgetKey -> "0") {
+      assert(Graph.driverRows(Graph.Counted(e, 1)).isEmpty)
+    }
   }
 
   test("q282 peels on the driver at sf0.001: at most 5 Spark jobs") {
